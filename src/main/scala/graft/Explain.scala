@@ -8,7 +8,7 @@ package graft
   * Usage: runMain graft.Explain [sfDir] [name1,name2,...] [noaqe]
   *
   * `noaqe` prints the STATIC physical plan (adaptive disabled) — the
-  * regime Bench's serial registry phase executes, and the only dump in
+  * regime a pinned prepared re-execution runs, and the only dump in
   * which cross-subtree ReusedExchange is statically visible (an AQE
   * initial plan hides runtime stage reuse — the r20 mem1 evidence gap).
   */

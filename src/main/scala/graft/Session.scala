@@ -486,9 +486,7 @@ final class Session(val id: String, val spark: SparkSession,
   // ANALYZED plan: parse + catalog resolution are amortized across
   // executions; the optimizer and physical planning re-run per execution
   // (fresh stages, query-time functions re-fold), with adaptive
-  // execution pinned off per the shared per-plan policy — the SAME
-  // regime Bench.scala measures, so the headline throughput now
-  // describes the code path the server ships.
+  // execution pinned off per the shared per-plan policy.
   private[graft] val planCacheHits = new AtomicLong()
   private[graft] val planCacheMisses = new AtomicLong()
   private val cacheableVerbs = Set("SELECT", "WITH", "VALUES", "TABLE", "FROM")
@@ -547,7 +545,7 @@ final class Session(val id: String, val spark: SparkSession,
   // the plan shape, but whether AQE's ~110 ms re-planning overhead pays
   // for itself depends on runtime cardinalities statics cannot see
   // (q18's 300-row HAVING set vs q21's 100k-row co-partitioned
-  // aggregate — BenchLab pinpolicy ledger). A handle that proves HOT
+  // aggregate — measured per regime at sf0.1). A handle that proves HOT
   // (2nd cache hit) gets ONE background calibration: both regimes
   // execute once on a CLONED session (conf isolation; the analyzed-plan
   // transplant is the same trick syncViews uses), timed to completion

@@ -24,58 +24,6 @@ object SparkEntry {
       operators.Sketches.queries ++
       operators.Warehouse.queries
 
-  /** Queries whose BUILDER launches Spark jobs at DataFrame-construction
-    * time (bounded driver tiers: collects, eager localCheckpoints,
-    * per-iteration top-1 aggregates). For these, construction IS
-    * execution phase 1, so a prepared-re-execution measurement that
-    * builds once and re-runs the final DataFrame would skip it — they
-    * must rebuild from scratch every measured run. The flag lives HERE,
-    * next to the registry, not inside the bench: VERDICT r20 #4 found
-    * the bench's hand-maintained copy had drifted from the operators
-    * (cc1 composes the same bounded union-find as dd7 but was missing).
-    * DriverSteppedSpec asserts BOTH directions against the real builders
-    * with a job listener, so a new driver-tier operator cannot silently
-    * escape the rebuild tier again.
-    */
-  val driverStepped: Set[String] = Set(
-    "dd7_duplicate_clusters", "dd8_dedup_keep_list",
-    "sim4_ann_ivf_topk", "pct1_price_percentiles",
-    "pipe1_corpus_manifest", "pipe2_training_mix", // compose dd8's union-find stage
-    "ivf2_posting_balance", // sim4's centroid tier at construction
-    "pq1_product_quantization", // codebook collect at construction
-    "bpe2_merge_training", // per-iteration top-pair collect at construction
-    "tok5_bpe_encode", // consumes bpe2's merge table at construction
-    "sim11_diverse_select", // per-round argmax collect at construction
-    "kcore1_knn_core", // bounded driver peel (collect) at construction
-    "fld2_cluster_split", // dd7's eager union-find engine at construction
-    "ts8_theil_sen_trend", // bounded per-day aggregate collected at construction
-    "ts9_mann_kendall", // same bounded per-day collect as ts8
-    "ts1_hourly_grid", // eager localCheckpoint of the cell aggregate
-    "dd17_multitier_clusters", // dd7's eager components engine at construction
-    "cc1_knn_components", // same union-find engine (the r20 #4 gap)
-    "lm3_kneser_ney", // eager localCheckpoint + one-scalar count at construction
-    "ev25_markov_stationary", // k×k transition matrix collected at construction
-    "corr4_kendall_daily", // same bounded per-day collect as ts9
-    "priv3_t_closeness", // eager localCheckpoint of the bounded QI counts
-    "drift2_psi_monthly", // eager localCheckpoint of the bounded month counts
-    "dq4_cramers_v", // eager localCheckpoint of the bounded contingency cells
-    "lm5_stupid_backoff", // eager 5-row checkpoint of the top unigrams
-    "ev27_kaplan_meier", // bounded duration table collected; KM product in the driver
-    "bs2_jackknife_se", // eager localCheckpoint of the 32-bucket aggregate
-    "bsk2_association_rules") // brand-domain token counts collected; rule tail in the driver (found by DriverSteppedSpec, same drift class as cc1)
-
-  /** The subset of [[driverStepped]] whose driver tier is a documented
-    * module-level memo keyed on the (write-once) data dir — pq1's
-    * codebook, sim4/ivf2's centroid tier, pipe1/2's manifest. Their
-    * FIRST construction in a JVM launches the bounded collect; later
-    * constructions reuse it by contract. DriverSteppedSpec exempts only
-    * these from the "flagged must launch jobs" direction, so an
-    * operator cannot silently grow a memo without declaring it here.
-    */
-  val driverSteppedMemo: Set[String] = Set(
-    "sim4_ann_ivf_topk", "ivf2_posting_balance",
-    "pq1_product_quantization", "pipe1_corpus_manifest", "pipe2_training_mix")
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -3358,46 +3358,6 @@ object Analytics {
       })
   }
 
-  val spearmanDailySql: String =
-    s"""WITH ev AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-       |    SUM(CAST(${Exact.sqlMicros("value")} AS HUGEINT)) AS xv
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |  HAVING SUM(CAST(${Exact.sqlMicros("value")} AS HUGEINT)) IS NOT NULL),
-       |orr AS (
-       |  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS day,
-       |    SUM(CAST(${Exact.sqlMicros("o_totalprice")} AS HUGEINT)) AS yv
-       |  FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
-       |  HAVING SUM(CAST(${Exact.sqlMicros("o_totalprice")} AS HUGEINT)) IS NOT NULL),
-       |j AS (SELECT ev.day, xv, yv FROM ev JOIN orr ON ev.day = orr.day),
-       |ranked AS (
-       |  SELECT day,
-       |    CAST(2 * rank() OVER (ORDER BY xv) + COUNT(*) OVER (PARTITION BY xv) - 1 AS BIGINT) AS rx,
-       |    CAST(2 * rank() OVER (ORDER BY yv) + COUNT(*) OVER (PARTITION BY yv) - 1 AS BIGINT) AS ry
-       |  FROM j),
-       |agg AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-       |    CAST(SUM(rx) AS BIGINT) AS sx, CAST(SUM(ry) AS BIGINT) AS sy,
-       |    CAST(SUM(rx * ry) AS BIGINT) AS sxy,
-       |    CAST(SUM(rx * rx) AS BIGINT) AS sxx,
-       |    CAST(SUM(ry * ry) AS BIGINT) AS syy
-       |  FROM ranked)
-       |SELECT n_days,
-       |  CASE WHEN n_days < 2
-       |         OR CAST(n_days AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0
-       |         OR CAST(n_days AS DOUBLE) * CAST(syy AS DOUBLE)
-       |            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) = 0.0
-       |    THEN NULL ELSE ${Exact.sqlDround(
-           """(CAST(n_days AS DOUBLE) * CAST(sxy AS DOUBLE)
-       |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-       |       / (sqrt(CAST(n_days AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-       |          * sqrt(CAST(n_days AS DOUBLE) * CAST(syy AS DOUBLE)
-       |                 - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))""".stripMargin, 9)}
-       |  END AS spearman_rho
-       |FROM agg""".stripMargin
-
   /** corr3 registry siting (r19, the corr4 discipline): the
     * events×orders day join is EMPTY on the testdata calendars
     * (2025-era event timestamps vs 1992–1998 order dates), so the
@@ -3556,7 +3516,7 @@ object Analytics {
           col("v") === col("pv"), "left")
         .agg(coalesce(sum(col("cnt")), lit(0L)).as("child_rows"),
           count(lit(1)).as("child_types"),
-          sum(when(col("pv").isNull, 1L).otherwise(0L)).as("orphan_types"))
+          coalesce(sum(when(col("pv").isNull, 1L).otherwise(0L)), lit(0L)).as("orphan_types"))
         .select(lit(s"$ct.$cc -> $pt.$pc").as("dep"),
           col("child_rows").cast(LongType).as("child_rows"),
           col("child_types").cast(LongType).as("child_types"),
@@ -3565,8 +3525,10 @@ object Analytics {
     perPair.reduce(_.union(_))
       .select(col("dep"), col("child_rows"), col("child_types"), col("orphan_types"),
         (col("orphan_types") === 0L).as("contained"),
+        // no child values: 0/0 is NULL, as in the oracle (ANSI would throw)
         Exact.dround(lit(1.0) - col("orphan_types").cast(DoubleType)
-          / col("child_types").cast(DoubleType), 9).as("containment_ratio"))
+          / when(col("child_types") =!= 0L, col("child_types").cast(DoubleType)), 9)
+          .as("containment_ratio"))
       .orderedSmall(col("dep"))
   }
 
@@ -3715,7 +3677,6 @@ object Analytics {
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
     val wAll = Window.partitionBy()
-    val wPrio = Window.partitionBy(col("prio"))
     val wGrp = Window.partitionBy(col("n_name"), col("c_mktsegment"), col("order_year"))
     // zero-fill grid: every QI group × every sensitive value (a missing
     // cell is a REAL 0-vs-global divergence the EMD must see)
@@ -3881,39 +3842,6 @@ object Analytics {
         .toSeq.asJava, baseSchema)
     kendallOf(base).drop("m")
   }
-
-  val kendallDailySql: String =
-    s"""WITH ev AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-       |    SUM(CAST(${Exact.sqlMicros("value")} AS HUGEINT)) AS xv
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |  HAVING SUM(CAST(${Exact.sqlMicros("value")} AS HUGEINT)) IS NOT NULL),
-       |orr AS (
-       |  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS day,
-       |    SUM(CAST(${Exact.sqlMicros("o_totalprice")} AS HUGEINT)) AS yv
-       |  FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
-       |  HAVING SUM(CAST(${Exact.sqlMicros("o_totalprice")} AS HUGEINT)) IS NOT NULL),
-       |j AS (SELECT ev.day, xv, yv FROM ev JOIN orr ON ev.day = orr.day),
-       |sp AS (
-       |  SELECT COALESCE(SUM(
-       |    (CASE WHEN b.xv > a.xv THEN 1 WHEN b.xv < a.xv THEN -1 ELSE 0 END)
-       |    * (CASE WHEN b.yv > a.yv THEN 1 WHEN b.yv < a.yv THEN -1 ELSE 0 END)), 0) AS s_stat
-       |  FROM j a JOIN j b ON a.day < b.day),
-       |tx AS (SELECT COALESCE(SUM(tt*(tt-1)), 0) AS tx2
-       |       FROM (SELECT COUNT(*) AS tt FROM j GROUP BY xv)),
-       |ty AS (SELECT COALESCE(SUM(tt*(tt-1)), 0) AS ty2
-       |       FROM (SELECT COUNT(*) AS tt FROM j GROUP BY yv)),
-       |nn AS (SELECT COUNT(*) AS n FROM j),
-       |v AS (SELECT n, s_stat, tx2, ty2,
-       |        n*(n-1) - tx2 AS d1, n*(n-1) - ty2 AS d2
-       |      FROM nn CROSS JOIN sp CROSS JOIN tx CROSS JOIN ty)
-       |SELECT CAST(n AS BIGINT) AS n_days, CAST(s_stat AS BIGINT) AS s_stat,
-       |  CAST(tx2 / 2 AS BIGINT) AS tie_pairs_x, CAST(ty2 / 2 AS BIGINT) AS tie_pairs_y,
-       |  CASE WHEN d1 <= 0 OR d2 <= 0 THEN NULL
-       |       ELSE ${Exact.sqlDround(
-             "CAST(s_stat AS DOUBLE) * 2.0 / sqrt(CAST(d1 AS DOUBLE) * CAST(d2 AS DOUBLE))", 9)}
-       |  END AS kendall_tau
-       |FROM v WHERE n >= 2""".stripMargin
 
   /** corr4 registry siting (VERDICT r18 #2): [[kendallDaily]]'s
     * events×orders day join is EMPTY on the testdata calendars

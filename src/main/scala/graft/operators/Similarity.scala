@@ -188,19 +188,6 @@ object Similarity {
        |  FROM lcg GROUP BY 1)""".stripMargin
   }
 
-  /** Sign-bit signature for one table: bit p = 1 iff v . plane_{t,p} >= 0.
-    * Each projection is one codegen'd vec_dot against a plane literal.
-    */
-  def lshSignature(v: Column, table: Int, nPlanes: Int = lshPlanes): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val plane = allPlanes(table * nPlanes + p)
-      val planeLit = array(plane.map(lit(_)): _*)
-      val proj = graft.functions.VectorFunctions.vecDot(v, planeLit)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_.bitwiseOR(_))
-  }
-
   /** (table, bucket) rows per vector — the multi-table LSH index.
     * `tables * planes` must stay <= maxPlanes.
     *

@@ -369,7 +369,7 @@ object Tpch {
     //    exchanges are the plan that survives 100 TB.
     val smallSupplier = t(s, dir, "supplier")
       .queryExecution.optimizedPlan.stats.sizeInBytes <= (64L << 20)
-    // Ledger closing the floor hunt (warm TimeOne rebuilds, sf0.1, min
+    // Ledger closing the floor hunt (warm rebuilds, sf0.1, min
     // of 8): this plan 0.40 s. (a) explicit repartition on the group
     // keys pre-aggregation: 0.43 s — a full-row exchange of the joined
     // 75k rows replaces the partial collect_set's 215-group set

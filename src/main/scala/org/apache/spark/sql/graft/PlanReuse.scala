@@ -23,21 +23,6 @@ object PlanReuse {
     Dataset.ofRows(cs, df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed)
   }
 
-  /** Fresh executable DataFrame over `df`'s OPTIMIZED plan — the closer
-    * analog of DuckDB's prepared statements, which cache the optimized
-    * plan and only re-run physical execution per EXECUTE
-    * (prepared.rs:344-372 re-binds values, not plans). Physical planning,
-    * codegen lookup, and every stage still run from scratch (fresh RDD
-    * lineage — no shuffle-output reuse); only the already-fixpointed
-    * optimizer rules are amortized. The optimizer DOES re-traverse the
-    * tree once per batch, but on a converged tree each batch exits after
-    * one iteration.
-    */
-  def reoptimized(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cs = spark.asInstanceOf[ClassicSparkSession]
-    Dataset.ofRows(cs, df.asInstanceOf[ClassicDataFrame].queryExecution.optimizedPlan)
-  }
-
   /** Optimized logical plan of a DataFrame (forces optimization NOW). */
   def optimizedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[ClassicDataFrame].queryExecution.optimizedPlan

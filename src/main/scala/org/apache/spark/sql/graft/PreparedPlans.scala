@@ -29,7 +29,7 @@ object PreparedPlans {
     *
     * AQE's per-execution cost on an OLTP-sized re-execution is one
     * extra job submission + a stage-stats round per shuffle (~110 ms
-    * measured on q16-class plans, BenchLab q16floor) — pure overhead
+    * measured on q16-class plans at sf0.1) — pure overhead
     * when the static plan is already the right one. But AQE's runtime
     * stats are the ONLY way a join whose build side is a GROUPED
     * aggregate can be broadcast: the static size estimate of a grouped
@@ -111,7 +111,7 @@ object PreparedPlans {
     * aggregate is ~100 k rows co-partitioned with its join (AQE can
     * change nothing: 421 vs 471 ms), q15 wins from AQE's partition
     * coalescing across four tiny exchanges (198 vs 242 ms) — all
-    * measured at sf0.1, BenchLab `pinpolicy`. The same comparison made
+    * measured at sf0.1. The same comparison made
     * at 100 TB would keep AQE wherever re-planning still pays, which
     * is the scale-safe direction. [[pinnable]] is the prior used until
     * a measurement exists.

@@ -24,11 +24,4 @@ object bridge {
     */
   def unresolvedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
-
-  /** Drain the listener bus (private[spark]) — lets DriverSteppedSpec
-    * observe every job a DataFrame CONSTRUCTION launched before it
-    * asserts on the count.
-    */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
 }

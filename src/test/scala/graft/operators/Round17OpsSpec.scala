@@ -29,7 +29,8 @@ class Round17OpsSpec extends SparkTestBase {
     assert(row.getDouble(2) >= 0.0 && row.getDouble(3) <= 1.0)
   }
 
-  test("fd3: hand-built warehouse with one violated and one satisfied dependency") {
+  /** The hand-built fd3 warehouse; `events` is the one table the cases vary. */
+  private def fd3Warehouse(events: org.apache.spark.sql.DataFrame): String = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("fd3").toString
     def save(name: String, df: org.apache.spark.sql.DataFrame): Unit =
@@ -42,8 +43,15 @@ class Round17OpsSpec extends SparkTestBase {
     save("orders", Seq((40L, 10L), (41L, 10L), (42L, 99L)).toDF("o_orderkey", "o_custkey")) // 99 orphan
     save("lineitem", Seq((40L, 30L, 20L), (41L, 30L, 20L))
       .toDF("l_orderkey", "l_partkey", "l_suppkey"))
-    save("events", Seq((1L, 10L, 1000000000L), (2L, 11L, 2000000000L), (3L, 77L, 3000000000L))
-      .toDF("event_id", "user_id", "ts")) // 77 orphan vs customer
+    save("events", events)
+    dir
+  }
+
+  test("fd3: hand-built warehouse with one violated and one satisfied dependency") {
+    import spark.implicits._
+    val dir = fd3Warehouse(
+      Seq((1L, 10L, 1000000000L), (2L, 11L, 2000000000L), (3L, 77L, 3000000000L))
+        .toDF("event_id", "user_id", "ts")) // 77 orphan vs customer
     val rows = Analytics.inclusionDeps(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getBoolean(4), r.getDouble(5))).toMap
@@ -56,6 +64,20 @@ class Round17OpsSpec extends SparkTestBase {
       ((3L, 2L, 1L, false, 0.5)), rows("orders.o_custkey -> customer.c_custkey").toString)
     assert(rows("events.user_id -> customer.c_custkey")._3 == 1L) // 77
     assert(rows("supplier.s_nationkey -> nation.n_nationkey") == ((2L, 2L, 1L, false, 0.5)))
+  }
+
+  test("fd3: an all-NULL child column has no orphans and is contained") {
+    import spark.implicits._
+    // zero non-NULL child values: the oracle's COUNT(*) over no orphans
+    // is 0, so the dependency holds vacuously; the ratio is 0/0 -> NULL
+    val dir = fd3Warehouse(
+      Seq((1L, Option.empty[Long], 1000000000L), (2L, Option.empty[Long], 2000000000L))
+        .toDF("event_id", "user_id", "ts"))
+    val r = Analytics.inclusionDeps(spark, dir).collect()
+      .find(_.getString(0) == "events.user_id -> customer.c_custkey").get
+    assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4)) == ((0L, 0L, 0L, true)),
+      r.toString)
+    assert(r.isNullAt(5), r.toString)
   }
 
   test("fd3: the TPC-H FK edges are contained on the generated data") {
