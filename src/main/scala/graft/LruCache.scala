@@ -1,7 +1,7 @@
 package graft
 
-/** Tiny synchronized access-ordered LRU used by the prepared fast
-  * paths' plan caches (point-read scans, DML discovery scans).
+/** Tiny synchronized access-ordered LRU of compiled plans (the planned
+  * DML discovery scans).
   *
   * `compute` runs OUTSIDE the lock on purpose: a racing duplicate build
   * is benign — both values are equivalent compiled plans over immutable
@@ -21,12 +21,4 @@ private[graft] final class LruCache[K, V](max: Int) {
         synchronized(m.put(key, v))
         v
     }
-
-  /** Drop every entry whose key matches `p` — used when a prepared
-    * statement closes to release its cached physical scans.
-    */
-  def removeIf(p: K => Boolean): Unit = synchronized {
-    val it = m.keySet().iterator()
-    while (it.hasNext) if (p(it.next())) it.remove()
-  }
 }

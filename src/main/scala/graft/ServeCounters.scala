@@ -1,0 +1,33 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+/** Engine-wide counters of the serving paths a prepared statement can
+  * take, served on `status.json`: how many key reads the driver answered
+  * and why the others declined to the planned path, how often a cached
+  * prepared plan was reused, and how many DML statements the driver-side
+  * copy-on-write rewrite applied. The row cache reports its own
+  * occupancy (graft.sources.RowCache).
+  */
+object ServeCounters {
+
+  /** Why a prepared key read went to the planned path. */
+  val declineReasons: Seq[String] = Seq(
+    "null_param",       // a NULL parameter: native NULL-comparison semantics
+    "unmanaged_table",  // not a micro-lake table
+    "param_type",       // a parameter that does not bind exactly to the key type
+    "shape",            // a projection or key name the analyzer must resolve
+    "unsupported_type", // a column type or file layout the driver codec lacks
+    "over_bound")       // more candidate rows than the driver-side bound
+
+  val pointReadHits = new AtomicLong()
+  private val declines: Map[String, AtomicLong] =
+    declineReasons.map(_ -> new AtomicLong()).toMap
+
+  def decline(reason: String): Unit = declines(reason).incrementAndGet()
+  def declined(reason: String): Long = declines(reason).get()
+
+  val planCacheHits = new AtomicLong()
+  val planCacheMisses = new AtomicLong()
+  val driverRewrites = new AtomicLong()
+}

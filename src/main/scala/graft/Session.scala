@@ -165,8 +165,9 @@ final class Session(val id: String, val spark: SparkSession,
 
   // === prepared statements (A12/A21) =======================================
   /** Canonical key-read shapes, detected once at prepare time so each
-    * execution can take the plan-cached fast path ([[pointReadFast]]):
-    * `SELECT <cols|*> FROM t WHERE k = ?` (range = false) and
+    * execution can be answered on the driver ([[pointReadFast]]):
+    * `SELECT <cols|*> FROM t WHERE k = ?`, `… WHERE k IN (?, …)`
+    * (`inList` placeholders) and
     * `SELECT <cols|*> FROM t WHERE k BETWEEN ? AND ? [ORDER BY k [ASC|DESC]]`
     * (range = true; `sortDesc` records the ORDER BY direction).
     */
@@ -240,12 +241,8 @@ final class Session(val id: String, val spark: SparkSession,
       // session's lifetime). 1024 live handles is far past any driver's
       // statement pool; beyond it the OLDEST statement evicts — its
       // later execution fails with unknown-handle, the same contract as
-      // an explicit close, and its cached point scans release with it.
-      while (prepared.size > maxPreparedPerSession) {
-        val (oldest, _) = prepared.head
-        prepared.remove(oldest)
-        pointScans.removeIf(_._1 == oldest)
-      }
+      // an explicit close.
+      while (prepared.size > maxPreparedPerSession) prepared.remove(prepared.head._1)
     }
     p
   }
@@ -295,19 +292,23 @@ final class Session(val id: String, val spark: SparkSession,
     runPrepared(p, params)
   }
 
-  // === point-read fast path ================================================
-  // The YCSB/OLTP hot shape through the gateway: a prepared PK-equality
-  // SELECT against a managed table. The generic prepared path pays
-  // parse + analysis + optimization + plan construction on EVERY
-  // execution (~45 ms of a ~60 ms point read measured at round 15) —
-  // exactly what a real engine's prepared statements exist to avoid
-  // (the reference re-binds values into a cached plan,
-  // prepared.rs:344-372). Here: candidate files come from manifest
-  // stats (driver-side math, no plan), the optimized logical plan is
-  // cached per (handle, snapshot version, candidate set), and each
-  // execution re-binds ONLY the key literal before physical execution.
-  // Falls back to the generic path whenever anything is unusual — the
-  // fast path must never change semantics, only skip recomputation.
+  // === prepared key reads ==================================================
+  // The YCSB/OLTP hot shape through the gateway — a prepared key SELECT
+  // (`k = ?`, `k IN (?, …)`, `k BETWEEN ? AND ? [ORDER BY k]`) against a
+  // managed table — is answered on the driver with no Spark job, no
+  // parquet scan to plan and no codegen (the reference likewise re-binds
+  // values into a plan it already has and reads in process,
+  // prepared.rs:344-372): manifest stats prune the candidate files of
+  // the snapshot (the transaction's staged one inside a transaction),
+  // the micro-lake's row cache holds their decoded rows, Catalyst's
+  // interpreted eval applies the bound key predicate
+  // (MutableTable.readMatching), and the matches are ordered and
+  // projected into a driver-local `PointRead` answer. Measured on 4
+  // vCPUs of a shared VM over a 1000-row table: in process, a read and
+  // its Arrow encoding take ~4 ms p50, of which the cached-row filter is
+  // under 0.1 ms; a cache miss adds one parquet-mr decode, 15-21 ms for
+  // that file. Anything the driver cannot answer exactly declines, by a
+  // counted reason (ServeCounters), to the fully planned path.
 
   private val pointReadRe =
     ("(?is)^\\s*SELECT\\s+(\\*|[A-Za-z_][\\w]*(?:\\s*,\\s*[A-Za-z_][\\w]*)*)\\s+" +
@@ -341,82 +342,52 @@ final class Session(val id: String, val spark: SparkSession,
     }
   }
 
-  // Per-session LRU of physically-planned candidate scans, keyed by the
-  // candidate FILE LIST (not the snapshot version): data files are
-  // immutable once adopted, so a scan over a given file set stays valid
-  // across versions — a DML that rewrote OTHER files must not evict the
-  // scans a point read needs two ops later (keying by version measured a
-  // near-zero hit rate under the YCSB mix, whose 45% DML share bumps the
-  // version every couple of ops). Entries are plans (an RDD lineage +
-  // attributes), not data.
-  private val pointScans =
-    new LruCache[(String, Seq[String]), org.apache.spark.sql.graft.PointReadExec.CachedScan](64)
-
-  // Above this many candidate rows the fast path declines and the
-  // fully-planned path runs instead — IT keeps parquet row-group
-  // pushdown for the key predicate, which wins once a candidate scan is
-  // big enough to span row groups (cluster-sized 128-512 MB files); the
-  // plan-free path wins below it by skipping ~25-45 ms of per-execution
-  // planning measured on this engine.
-  private val pointReadMaxRows = 500000L
-  // 24: the micro-lake's small-file compaction (MutableTable) triggers
-  // at 16 tiny files, so a point-insert workload's live set hovers just
-  // under ~20 — a cap of 8 dropped most BETWEEN scans onto the planned
-  // path right before each compaction (round-16 YCSB: scan avg 115 ms
-  // planned vs ~40 ms fast-path)
-  private val pointReadMaxFiles = 24
-
   private def pointReadFast(p: Prepared, values: Seq[Any]): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, GreaterThanOrEqual, In, LessThanOrEqual}
     val pr = p.pointRead.getOrElse(return None)
-    if (values.exists(_ == null)) return None // native NULL-comparison semantics, rare
-    val cat = catalog.getOrElse(return None)
-    val t = cat.get(pr.table).getOrElse(return None) // not managed -> native path
+    def decline(reason: String): Option[DataFrame] = { ServeCounters.decline(reason); None }
+    if (values.exists(_ == null)) return decline("null_param")
+    val t = catalog.flatMap(_.get(pr.table)).getOrElse(return decline("unmanaged_table"))
     val keyField = t.schema.fields
-      .find(_.name.equalsIgnoreCase(pr.keyCol)).getOrElse(return None)
-    val lits =
-      try values.map(v => Literal.create(v, keyField.dataType))
-      catch { case _: Exception => return None } // unconvertible param: native path errors properly
-    // projection must resolve to distinct table columns, else the native
+      .find(_.name.equalsIgnoreCase(pr.keyCol)).getOrElse(return decline("shape"))
+    val lits = values.map(v => keyLiteral(v, keyField.dataType).getOrElse(return decline("param_type")))
+    // the projection must name distinct table columns, else the planned
     // path raises the proper analysis error
-    val projCols = pr.projection.map(_.map(c =>
-      t.schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(return None)))
-    if (projCols.exists(cs => cs.distinct.size != cs.size)) return None
-    // read-your-writes inside a transaction: resolve the session's
-    // staged snapshot of the table, like syncViews does
+    val outCols = pr.projection.map(_.map(c =>
+      t.schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(return decline("shape"))))
+      .getOrElse(t.schema.fieldNames.toSeq)
+    if (outCols.distinct.size != outCols.size) return decline("shape")
+    // read-your-writes inside a transaction: the session's staged
+    // snapshot of the table, as syncViews resolves it
     val version = txn.flatMap(_.stagedVersion(pr.table)).getOrElse(t.currentVersion)
-    val attr = UnresolvedAttribute(keyField.name)
+    val key = AttributeReference(keyField.name, keyField.dataType, nullable = true)()
     val cond =
-      if (pr.range) And(GreaterThanOrEqual(attr, lits(0)), LessThanOrEqual(attr, lits(1)))
-      else if (pr.inList > 0) In(attr, lits)
-      else EqualTo(attr, lits.head)
-    val candidates = t.candidateFilesExpr(version, cond)
-    if (candidates.size > pointReadMaxFiles) return None
-    val candidateRows = candidates.map(f =>
-      t.statsFor(f).values.headOption.map(_.rows).getOrElse(return None))
-    if (candidateRows.exists(_ < 0) || candidateRows.sum > pointReadMaxRows) return None
-    // result column order = projection order (or the table schema for *)
-    val outCols = projCols.getOrElse(t.schema.fieldNames.toSeq)
-    if (candidates.isEmpty) {
-      val outSchema = StructType(outCols.map(c => t.schema(t.schema.fieldIndex(c))))
-      return Some(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), outSchema))
+      if (pr.range) And(GreaterThanOrEqual(key, lits(0)), LessThanOrEqual(key, lits(1)))
+      else if (pr.inList > 0) In(key, lits)
+      else EqualTo(key, lits.head)
+    t.readMatching(version, cond) match {
+      case Left(reason) => decline(reason)
+      case Right(rows) =>
+        ServeCounters.pointReadHits.incrementAndGet()
+        Some(org.apache.spark.sql.graft.PointRead.answer(
+          spark, t.schema, rows, t.schema.fieldIndex(keyField.name), pr.sortDesc, outCols))
     }
-    // the cached scan reads projection + key (column pruning in the
-    // plan); the per-execution projection drops the key again when the
-    // SELECT list did not ask for it
-    val key = (p.handle, candidates)
-    val scan = pointScans.getOrElseUpdate(key) {
-      val scanCols = (outCols :+ keyField.name).distinct
-      val df = spark.read.schema(t.schema).parquet(candidates.map(t.dataFilePath): _*)
-        .select(scanCols.map(org.apache.spark.sql.functions.col): _*)
-      org.apache.spark.sql.graft.PointReadExec.prepareScan(df)
-    }
-    Some(org.apache.spark.sql.graft.PointReadExec.execute(
-      spark, scan, keyField.name, lits,
-      if (outCols.size == scan.output.size) None else Some(outCols),
-      sortDesc = pr.sortDesc, inList = pr.inList > 0))
+  }
+
+  /** A parameter as a literal of the key's type: exactly, or by the
+    * numeric up-cast the analyzer's coercion applies to that pair. None
+    * for anything else (a string for a number, a narrowing, a decimal
+    * that needs rounding) — the planned path then binds it.
+    */
+  private def keyLiteral(v: Any, dt: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.catalyst.expressions.Literal] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.types.NumericType
+    val l = try Literal(v) catch { case scala.util.control.NonFatal(_) => return None }
+    if (l.dataType == dt) Some(l)
+    else if (l.dataType.isInstanceOf[NumericType] && dt.isInstanceOf[NumericType] &&
+        Cast.canUpCast(l.dataType, dt)) Some(Literal(Cast(l, dt).eval(), dt))
+    else None
   }
 
   // stmtLock: prepared executions serialize with sql()/begin()/commit()
@@ -433,9 +404,9 @@ final class Session(val id: String, val spark: SparkSession,
     // vacuum race) must poison an open txn exactly like the planned path.
     // take(n): the native binder consumes exactly the placeholder count
     // and IGNORES extra params — handing a longer list to the fast path
-    // instead changed semantics (review r16: 'k = ?' with two params hit
-    // PointReadExec's two-literal BETWEEN branch; equality silently
-    // became a range read)
+    // instead changed semantics (review r16: 'k = ?' with two params was
+    // read as a BETWEEN's two literals; equality silently became a range
+    // read)
     val fast =
       if (n == expectedParams && p.pointRead.isDefined)
         abortTxnOnError(pointReadFast(p, padded.take(n)))
@@ -513,6 +484,7 @@ final class Session(val id: String, val spark: SparkSession,
     p.plan match {
       case Some(cp) if cp.fingerprint == fp && cp.params == bound =>
         planCacheHits.incrementAndGet()
+        ServeCounters.planCacheHits.incrementAndGet()
         maybeCalibrate(cp)
         Some(abortTxnOnError {
           ensureCatalogViews() // steady-state: one version compare per table
@@ -520,6 +492,7 @@ final class Session(val id: String, val spark: SparkSession,
         })
       case _ =>
         planCacheMisses.incrementAndGet()
+        ServeCounters.planCacheMisses.incrementAndGet()
         val df = abortTxnOnError {
           ensureCatalogViews()
           if (bound.nonEmpty) spark.sql(p.sql, bound.toArray) else spark.sql(p.sql)
@@ -584,9 +557,6 @@ final class Session(val id: String, val spark: SparkSession,
 
   def closePrepared(handle: String): Unit = prepared.synchronized {
     prepared.remove(handle)
-    // release the handle's cached physical scans with it (review catch:
-    // the plan cache held the closed statement's scans until LRU churn)
-    pointScans.removeIf(_._1 == handle)
     if (lastHandle.contains(handle)) lastHandle = prepared.keys.lastOption
   }
 
@@ -769,6 +739,10 @@ object SqlParams {
     case d: java.math.BigDecimal  => d.toString
     case d: java.time.Duration    => s"INTERVAL '${d.getSeconds}' SECOND" // day-time interval (types.rs:292-326)
     case p: java.time.Period      => s"INTERVAL '${p.toTotalMonths}' MONTH" // year-month interval
+    // NaN and the infinities have no numeric literal: a bare `NaN` parses
+    // as a column name
+    case d: Double if d.isNaN || d.isInfinite => s"CAST('$d' AS DOUBLE)"
+    case f: Float if f.isNaN || f.isInfinite  => s"CAST('$f' AS FLOAT)"
     case x @ (_: Byte | _: Short | _: Int | _: Long | _: Float | _: Double) => x.toString
     case other => throw new IllegalArgumentException(
       s"unsupported parameter type: ${other.getClass.getName}") // types.rs:349 UnsupportedParameter

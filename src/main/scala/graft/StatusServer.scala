@@ -16,7 +16,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * The JSON payload mirrors the reference's `StatusPayload`
   * (status.rs:18-23): a metrics snapshot (uptime, totals, in-flight,
   * latency percentiles, slow-query and error rings — metrics.rs:66-77)
-  * and a session-registry snapshot (registry.rs:36-42). Serialization is
+  * and a session-registry snapshot (registry.rs:36-42), plus `serve`:
+  * which prepared-statement paths served requests (key reads answered
+  * on the driver and their decline reasons, plan-cache reuse, driver-side
+  * DML rewrites) and the micro-lake row cache's occupancy. Serialization is
   * a hand-rolled writer over the JDK's built-in `HttpServer` — the
   * status page must not pull a web framework onto the executor
   * classpath, and the payload is small and flat.
@@ -120,7 +123,31 @@ object StatusServer {
         "max_sessions" -> num(snap.maxSessions.toLong),
         "session_timeout_seconds" -> num(snap.sessionTimeoutSeconds),
         "oldest_idle_ms" -> num(snap.oldestIdleMs),
-        "average_idle_ms" -> num(snap.averageIdleMs)))
+        "average_idle_ms" -> num(snap.averageIdleMs)),
+      "serve" -> serveJson)
+  }
+
+  /** The serving paths' counters (graft.ServeCounters) and the
+    * micro-lake row cache's occupancy; a hit rate with no lookups yet is
+    * null.
+    */
+  private def serveJson: String = {
+    val rc = graft.sources.RowCache.shared
+    val lookups = rc.hits + rc.misses
+    obj(
+      "point_read" -> obj(
+        "hits" -> num(ServeCounters.pointReadHits.get()),
+        "declines" -> obj(ServeCounters.declineReasons.map(r =>
+          r -> num(ServeCounters.declined(r))): _*)),
+      "plan_cache" -> obj(
+        "hits" -> num(ServeCounters.planCacheHits.get()),
+        "misses" -> num(ServeCounters.planCacheMisses.get())),
+      "driver_dml_rewrites" -> num(ServeCounters.driverRewrites.get()),
+      "row_cache" -> obj(
+        "entries" -> num(rc.entries.toLong),
+        "bytes" -> num(rc.bytes),
+        "max_bytes" -> num(rc.maxBytes),
+        "hit_rate" -> dbl(if (lookups == 0) Double.NaN else rc.hits.toDouble / lookups)))
   }
 
   private def str(s: String): String = {

@@ -72,9 +72,13 @@ case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
 /** Session extensions, injected via `spark.sql.extensions` in
   * [[graft.Engine.newSession]] — conf-based registration applies to
-  * every `newSession()` clone, so per-client gateway sessions prune too.
+  * every `newSession()` clone, so per-client gateway sessions prune too,
+  * and plan the driver-served key-read answer as its own `PointRead`
+  * leaf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(StatsPruneRule.apply)
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.PointReadStrategy)
+  }
 }

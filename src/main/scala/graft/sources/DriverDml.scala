@@ -139,7 +139,7 @@ private[sources] object DriverDml {
     * HERE are written back verbatim and must NOT be normalized). A
     * semantic fix to either loop must be weighed against the other.
     */
-  def readRows(file: Path, schema: StructType): Option[Seq[Array[Any]]] = {
+  def readRows(file: Path, schema: StructType): Option[IndexedSeq[Array[Any]]] = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -201,7 +201,7 @@ private[sources] object DriverDml {
           g = reader.read()
         }
       } finally reader.close()
-      Some(out.toSeq)
+      Some(out.toIndexedSeq)
     } catch { case _: Exception => None }
   }
 
@@ -456,20 +456,25 @@ private[sources] object DriverDml {
     Some(bound)
   }
 
-  /** External row -> InternalRow for expression eval (strings become
-    * UTF8String; everything else is already the internal shape).
+  /** External row viewed as an InternalRow for expression eval: a
+    * string becomes a UTF8String only when read, so a key predicate
+    * over a cached file converts the key column and nothing else.
     */
-  def toInternal(row: Array[Any]): org.apache.spark.sql.catalyst.InternalRow = {
-    val vs = new Array[Any](row.length)
-    var i = 0
-    while (i < row.length) {
-      vs(i) = row(i) match {
-        case s: String => UTF8String.fromString(s)
-        case other => other
-      }
-      i += 1
+  def toInternal(row: Array[Any]): org.apache.spark.sql.catalyst.InternalRow =
+    new ExternalRowView(row)
+
+  private final class ExternalRowView(row: Array[Any])
+      extends org.apache.spark.sql.catalyst.expressions.BaseGenericInternalRow {
+    override protected def genericGet(i: Int): Any = row(i) match {
+      case s: String => UTF8String.fromString(s)
+      case other => other
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vs)
+    override def numFields: Int = row.length
+    override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException("read-only row")
+    override def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException("read-only row")
+    override def copy(): org.apache.spark.sql.catalyst.expressions.GenericInternalRow =
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array.tabulate[Any](row.length)(genericGet))
   }
 
   /** Fold a SET-clause expression to an external value of the column's

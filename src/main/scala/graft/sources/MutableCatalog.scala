@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.StructType
   * mutate parquet v1 tables (SURVEY §7.4).
   *
   * Every managed table is also registered as a temp view of its current
-  * snapshot, so reads are plain Spark SQL; the view refreshes after each
-  * mutation (snapshot isolation: a running query keeps scanning the file
-  * list it planned against).
+  * snapshot, so reads are plain Spark SQL; the view refreshes on each
+  * publish of the table (snapshot isolation: a running query keeps
+  * scanning the file list it planned against).
   */
 final class MutableCatalog(spark: SparkSession, root: Path) {
 
@@ -32,8 +32,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
   def create(name: String, schema: StructType, primaryKey: Option[String] = None,
       txn: Option[CatalogTxn] = None): MutableTable = {
     val t = MutableTable.create(spark, root.resolve(name).toString, schema, primaryKey)
-    tables(name.toLowerCase) = t
-    refresh(name)
+    register(name, t)
     // DDL is immediately visible (the reference's DuckDB behaves the same
     // for cross-connection catalog changes); the txn records the creation
     // so ROLLBACK can drop it
@@ -78,6 +77,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     // like the pre-reclaim behavior, and the name stays unusable until
     // then, surfacing on create() as before.
     removed.foreach { t =>
+      RowCache.shared.removeTable(t.cacheKey)
       val lc = name.toLowerCase
       val busy = liveTxns.synchronized {
         val it = liveTxns.keySet().iterator()
@@ -195,7 +195,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
           // tables (the monitors release as the exception unwinds)
           locked.foreach { case (n, t, v) =>
             failBeforePublish(n)
-            t.publish(v); refresh(n)
+            t.publish(v)
           }
         }
         bad
@@ -297,8 +297,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
           val dir = root.resolve(name)
           if (Files.exists(dir.resolve("_version"))) {
             val t = MutableTable.load(spark, dir.toString)
-            tables(name.toLowerCase) = t
-            refresh(name)
+            register(name, t)
             Some(t)
           } else None
         }
@@ -307,7 +306,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
             // roll FORWARD only: never regress a pointer a later commit
             // already advanced past the crashed one
             if (t.currentVersion >= version) ()
-            else if (t.hasManifest(version)) { t.publish(version); refresh(name) }
+            else if (t.hasManifest(version)) t.publish(version)
             else {
               // pointer behind AND the staged manifest is gone: the
               // record CANNOT complete — keep it and surface, instead of
@@ -343,14 +342,33 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
   private val syncedBySession = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, mutable.Map[String, Long]]())
 
+  /** Add a table to the registry and expose its snapshot as a view that
+    * follows every publish — whoever moves the pointer (a routed DML, a
+    * transaction's commit, checkpoint, restore), the view and the
+    * plan-cache clock move with it. The hook runs after the pointer swap,
+    * so it must not throw: a failed view registration is logged, and
+    * sessions still re-sync off the bumped clock.
+    */
+  private def register(name: String, t: MutableTable): Unit = {
+    tables(name.toLowerCase) = t
+    t.onPublish = () =>
+      if (tables.get(name.toLowerCase).contains(t))
+        try refresh(name)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[catalog] view refresh of $name failed: ${e.getMessage}")
+        }
+    refresh(name)
+  }
+
   private def refresh(name: String): Unit = {
+    viewVersions(name.toLowerCase) = versionClock.incrementAndGet()
     val t0 = System.nanoTime()
     val df = tables(name.toLowerCase).df
     val t1 = System.nanoTime()
     df.createOrReplaceTempView(name)
     if (graft.Engine.dmlTrace)
       System.err.println(f"[dml-trace] refresh df=${(t1 - t0) / 1e6}%.0f view=${(System.nanoTime() - t1) / 1e6}%.0f ms")
-    viewVersions(name.toLowerCase) = versionClock.incrementAndGet()
   }
 
   /** Register each managed table's current snapshot as a temp view in
@@ -408,10 +426,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
       val shaped = BatchAlign.shapeParamBatch(spark, batch, t.schema, explicitCols)
       txn match {
         case Some(x) => stageInTxn(name, t, x)(bv => t.stageInsert(bv, shaped))
-        case None =>
-          val n = t.insert(shaped)
-          refresh(name)
-          n
+        case None => t.insert(shaped)
       }
     }
 
@@ -486,7 +501,6 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
               DriverDml.utcSession(spark))
               .flatMap(t.insertRowsDirect) match {
               case Some(n) =>
-                refresh(table)
                 if (graft.Engine.dmlTrace)
                   System.err.println(f"[dml-trace] route-insert-direct total=${(System.nanoTime() - tv0) / 1e6}%.0f ms")
                 return Some(n)
@@ -507,10 +521,8 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
             case Some(x) => stageInTxn(table, t, x)(bv => t.stageInsert(bv, aligned))
             case None    =>
               val n = t.insert(aligned)
-              val tv2 = System.nanoTime()
-              refresh(table)
               if (graft.Engine.dmlTrace)
-                System.err.println(f"[dml-trace] route-insert values=${(tv1 - tv0) / 1e6}%.0f core=${(tv2 - tv1) / 1e6}%.0f refresh=${(System.nanoTime() - tv2) / 1e6}%.0f ms")
+                System.err.println(f"[dml-trace] route-insert values=${(tv1 - tv0) / 1e6}%.0f core=${(System.nanoTime() - tv1) / 1e6}%.0f ms")
               n
           }
         }
@@ -525,10 +537,8 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
             case Some(x) => stageInTxn(table, t, x)(bv => t.stageUpdate(bv, cond, assignments))
             case None    =>
               val n = t.update(cond, assignments)
-              val tv2 = System.nanoTime()
-              refresh(table)
               if (graft.Engine.dmlTrace)
-                System.err.println(f"[dml-trace] route-update parse=${(tv1 - tv0) / 1e6}%.0f core=${(tv2 - tv1) / 1e6}%.0f refresh=${(System.nanoTime() - tv2) / 1e6}%.0f ms")
+                System.err.println(f"[dml-trace] route-update parse=${(tv1 - tv0) / 1e6}%.0f core=${(System.nanoTime() - tv1) / 1e6}%.0f ms")
               n
           }
         }
@@ -537,7 +547,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
           val cond = Option(whereOpt).map(expr).getOrElse(lit(true))
           txn match {
             case Some(x) => stageInTxn(table, t, x)(bv => t.stageDelete(bv, cond))
-            case None    => val n = t.delete(cond); refresh(table); n
+            case None    => t.delete(cond)
           }
         }
       case _ => None

@@ -56,6 +56,19 @@ final class MutableTable private (
     */
   def dataDirKey: String = dataDir.toAbsolutePath.normalize.toString
 
+  /** This table's key in the micro-lake's [[RowCache]]. */
+  private[sources] val cacheKey: String = root.toAbsolutePath.normalize.toString
+
+  /** A data file's decoded rows, through the row cache; None when the
+    * driver codec cannot read the file.
+    */
+  private def cachedRows(f: String): Option[IndexedSeq[Array[Any]]] =
+    RowCache.shared.getOrLoad(cacheKey, f)(DriverDml.readRows(dataDir.resolve(f), schema))
+
+  /** A data file's row count from its stats; -1 when unknown. */
+  private def rowCountOf(f: String): Long =
+    statsFor(f).values.headOption.map(_.rows).getOrElse(-1L)
+
   def currentVersion: Long = new String(Files.readAllBytes(versionFile)).trim.toLong
 
   // In-process writer serialization: concurrent server sessions share
@@ -188,7 +201,14 @@ final class MutableTable private (
     val tmp = root.resolve(s"_version.tmp.${UUID.randomUUID()}")
     Files.write(tmp, version.toString.getBytes)
     Files.move(tmp, versionFile, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    onPublish()
   }
+
+  /** Runs after every publish, under the writer monitor; it must not
+    * throw, since the pointer has already moved. The catalog hangs its
+    * view refresh here (MutableCatalog.register).
+    */
+  @volatile private[sources] var onPublish: () => Unit = () => ()
 
   // Version allocator: staged (transactional) manifests are written
   // WITHOUT moving the pointer, so `currentVersion + 1` can collide with
@@ -360,9 +380,10 @@ final class MutableTable private (
     * aligned+coerced to the schema land via one parquet-mr write — no
     * Spark job, no planning. The pk in-batch check runs over the
     * in-memory rows (same canonicalization as the planned path); the
-    * clash-vs-table check rides the staged file's own footer bounds and
-    * only falls to the planned aggregate when bounds actually overlap.
-    * None = schema unsupported (caller falls back); DuplicateKeyException
+    * clash-vs-table check prunes table files by the staged file's own
+    * footer bounds, reads the overlapping ones' keys from the row cache,
+    * and falls to the planned aggregate only past the driver bound.
+    * The written rows enter the row cache. None = schema unsupported (caller falls back); DuplicateKeyException
     * propagates like the planned path's.
     */
   def insertRowsDirect(rows: Seq[Array[Any]]): Option[Long] = writeLock.synchronized {
@@ -381,11 +402,7 @@ final class MutableTable private (
       val seen = new java.util.HashSet[Any]()
       var nullSeen = false
       rows.foreach { r =>
-        val v = r(pi) match {
-          case d: Double => d + 0.0d
-          case f: Float => f + 0.0f
-          case other => other
-        }
+        val v = MutableTable.canonicalKey(r(pi))
         if (v == null) {
           if (nullSeen) throw new DuplicateKeyException(s"duplicate key in batch: $pk=null")
           nullSeen = true
@@ -400,52 +417,110 @@ final class MutableTable private (
       fileStats(name) = FileStats.fromFooter(dest)
     } catch {
       case _: Exception => // codec hiccup: clean up, planned path decides
-        fileStats.remove(name); Files.deleteIfExists(dest)
+        dropStaged(Seq(name))
         return None
     }
+    RowCache.shared.put(cacheKey, name, rows.toIndexedSeq) // write-through
     try {
       primaryKey.foreach { pk =>
-        // bounds overlap vs the table: the in-batch check is done, so an
-        // empty candidate set finishes the enforcement; any overlap (or
-        // unusable bounds — e.g. a NULL pk in the batch) takes the same
-        // planned aggregate the staged-file path uses
+        // clash vs the table: the in-batch check is done, so only files
+        // whose bounds overlap the batch's can clash (all of them when
+        // the bounds are unusable — e.g. a NULL pk in the batch). Their
+        // key column is checked over the row cache within the driver
+        // bound; beyond it, the planned aggregate decides. In YCSB the
+        // connections interleave key ranges, so a new key routinely
+        // falls inside the compacted file's bounds: the aggregate cost
+        // 227-296 ms p50 per such insert (4-core host) against 49-55 ms
+        // for a non-overlapping one.
         val nb = statsFor(name).get(pk)
         val boundsKnown = nb.exists(s => s.min.isDefined && s.max.isDefined && s.nulls == 0)
-        val overlap =
-          if (!boundsKnown) true
-          else readManifest(base).exists { f =>
-            statsFor(f).get(pk) match {
-              case Some(s) if s.min.isDefined && s.max.isDefined =>
-                FileStats.compare(s.kind, nb.get.min.get, s.max.get) <= 0 &&
-                  FileStats.compare(s.kind, nb.get.max.get, s.min.get) >= 0
-              case _ => true
-            }
-          }
-        if (overlap) pkCheck(base, Seq(name), pk)
+        val overlapping = readManifest(base).filter { f =>
+          !boundsKnown || (statsFor(f).get(pk) match {
+            case Some(s) if s.min.isDefined && s.max.isDefined =>
+              FileStats.compare(s.kind, nb.get.min.get, s.max.get) <= 0 &&
+                FileStats.compare(s.kind, nb.get.max.get, s.min.get) >= 0
+            case _ => true
+          })
+        }
+        if (overlapping.nonEmpty && !pkClashDriverSide(overlapping, rows, pk))
+          pkCheck(base, Seq(name), pk)
       }
       val (manifest, compactFile) = compactSmallDriverSide(readManifest(base) :+ name)
       try commit(allocVersion(), manifest)
       catch {
         case e: Throwable => // failed commit never referenced the merge
-          compactFile.foreach { cf =>
-            fileStats.remove(cf); Files.deleteIfExists(dataDir.resolve(cf))
-          }
+          dropStaged(compactFile.toSeq)
           throw e
       }
       Some(rows.size.toLong)
     } catch {
       case e: Throwable =>
-        fileStats.remove(name)
-        Files.deleteIfExists(dest)
+        dropStaged(Seq(name))
         throw e
     }
+  }
+
+  /** Primary-key clash check of a driver-side batch against table
+    * `files`, over the row cache: true when it ran to the end (a clash
+    * throws), false when the files exceed the driver bound or the codec
+    * cannot read one — the planned aggregate then decides. Verdicts
+    * match that aggregate's: a NULL key never clashes with a table row
+    * (join semantics), and keys compare canonicalized like
+    * [[pkCheckDriverSide]] (-0.0 = 0.0, NaN = NaN).
+    */
+  private def pkClashDriverSide(files: Seq[String], batch: Seq[Array[Any]], pk: String): Boolean = {
+    val counts = files.map(rowCountOf)
+    if (counts.exists(_ < 0) || counts.sum > driverRewriteMaxRows) return false
+    val pi = schema.fieldIndex(pk)
+    val keys = new java.util.HashSet[Any]()
+    batch.foreach { r =>
+      val k = MutableTable.canonicalKey(r(pi))
+      if (k != null) keys.add(k)
+    }
+    files.foreach { f =>
+      cachedRows(f).getOrElse(return false).foreach { r =>
+        val k = MutableTable.canonicalKey(r(pi))
+        if (k != null && keys.contains(k))
+          throw new DuplicateKeyException(s"duplicate key violates primary key: $pk=$k")
+      }
+    }
+    true
+  }
+
+  /** Rows of `version` matching `cond` — a resolved predicate over this
+    * table's columns (AttributeReferences by name) — evaluated on the
+    * driver: candidate files are pruned by manifest stats, their rows
+    * come from the row cache, and the predicate is bound and evaluated
+    * exactly as the driver-side rewrite does. The rows are in schema
+    * order, as InternalRows. Left(reason) when the driver cannot serve
+    * the read (`unsupported_type`: a column type or file layout the
+    * codec lacks; `over_bound`: candidate rows past the driver-side DML
+    * bound, or unknown) — the caller then runs the planned read.
+    */
+  def readMatching(version: Long,
+      cond: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Either[String, IndexedSeq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    if (!DriverDml.supported(schema)) return Left("unsupported_type")
+    val bound = DriverDml.bind(cond, schema).getOrElse(return Left("unsupported_type"))
+    val candidates = candidateFilesExpr(version, cond)
+    val counts = candidates.map(rowCountOf)
+    if (counts.exists(_ < 0) || counts.sum > driverRewriteMaxRows) return Left("over_bound")
+    val out = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
+    candidates.foreach { f =>
+      cachedRows(f).getOrElse(return Left("unsupported_type")).foreach { r =>
+        val row = DriverDml.toInternal(r)
+        if (bound.eval(row) == true) out += row
+      }
+    }
+    Right(out.toIndexedSeq)
   }
 
   /** Driver-side copy-on-write UPDATE/DELETE (VERDICT r15 #3): when the
     * stats-pruned candidate set is small, every column type is codec-
     * supported, the predicate micro-resolves, and (for UPDATE) every
     * assignment folds to a literal — discovery, rewrite, and commit all
-    * run in-process: read candidates via parquet-mr, evaluate the BOUND
+    * run in-process: read candidates through the row cache (parquet-mr
+    * on a miss), evaluate the BOUND
     * predicate per row (Spark's own expression eval, so semantics are
     * Catalyst's — three-valued logic included), write the replacement
     * file, swap the manifest. ~15 ms where the planned path pays ~200 ms
@@ -459,7 +534,10 @@ final class MutableTable private (
   private def driverRewrite(base: Long, cond: Column,
       set: Option[Map[String, Column]], publishNow: Boolean): Option[(Long, Long)] = {
     val r = driverRewriteImpl(base, cond, set, publishNow)
-    if (r.isDefined) driverRewriteHits.incrementAndGet()
+    if (r.isDefined) {
+      driverRewriteHits.incrementAndGet()
+      graft.ServeCounters.driverRewrites.incrementAndGet()
+    }
     r
   }
 
@@ -484,14 +562,14 @@ final class MutableTable private (
     }
     val candidates = all.filter(f => FileStats.mayMatch(statsFor(f), resolved))
     if (candidates.isEmpty) return Some((base, 0L))
-    val candRows = candidates.map(f => statsFor(f).values.headOption.map(_.rows).getOrElse(-1L))
+    val candRows = candidates.map(rowCountOf)
     if (candRows.exists(_ < 0) || candRows.sum > driverRewriteMaxRows) return None
     val t0 = System.nanoTime()
     var matched = 0L
     val outRows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
     val affected = scala.collection.mutable.ArrayBuffer.empty[String]
     candidates.foreach { f =>
-      val rows = DriverDml.readRows(dataDir.resolve(f), schema).getOrElse(return None)
+      val rows = cachedRows(f).getOrElse(return None)
       var fileMatches = 0L
       val fileOut = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
       rows.foreach { r =>
@@ -517,9 +595,10 @@ final class MutableTable private (
           fileStats(name) = FileStats.fromFooter(dest)
         } catch {
           case _: Exception =>
-            fileStats.remove(name); Files.deleteIfExists(dest)
+            dropStaged(Seq(name))
             return None
         }
+        RowCache.shared.put(cacheKey, name, outRows.toIndexedSeq) // write-through
         Seq(name)
       }
     val nv = allocVersion()
@@ -556,14 +635,14 @@ final class MutableTable private (
   // the insert catch otherwise leaked the file + its fileStats entry).
   private def compactSmallDriverSide(files: Seq[String]): (Seq[String], Option[String]) = {
     if (!DriverDml.supported(schema)) return (files, None)
-    val withRows = files.map(f => f -> statsFor(f).values.headOption.map(_.rows).getOrElse(-1L))
+    val withRows = files.map(f => f -> rowCountOf(f))
     val small = withRows.filter { case (_, r) => r >= 0 && r <= compactSmallRows }
     if (small.size < compactTriggerFiles) return (files, None)
     if (small.map(_._2).sum > driverRewriteMaxRows) return (files, None)
     val t0 = System.nanoTime()
     val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
     small.foreach { case (f, _) =>
-      DriverDml.readRows(dataDir.resolve(f), schema) match {
+      cachedRows(f) match {
         case Some(rs) => rows ++= rs
         case None => return (files, None) // unreadable driver-side: keep as-is
       }
@@ -575,9 +654,10 @@ final class MutableTable private (
       fileStats(name) = FileStats.fromFooter(dest)
     } catch {
       case _: Exception =>
-        fileStats.remove(name); Files.deleteIfExists(dest)
+        dropStaged(Seq(name))
         return (files, None)
     }
+    RowCache.shared.put(cacheKey, name, rows.toIndexedSeq) // write-through
     if (graft.Engine.dmlTrace)
       System.err.println(f"[dml-trace] micro-compact ${small.size} files, ${rows.size} rows, ${(System.nanoTime() - t0) / 1e6}%.0f ms")
     val smallSet = small.map(_._1).toSet
@@ -789,9 +869,6 @@ final class MutableTable private (
     files.filter(f => FileStats.mayMatch(statsFor(f), cond))
   }
 
-  /** Absolute path of a live data file (for direct candidate reads). */
-  def dataFilePath(name: String): String = dataDir.resolve(name).toString
-
   /** Files (by name) containing at least one row matching `cond` in
     * version `base`, PLUS the total match count — one scan answers both
     * (the match count rides the same per-file aggregate), so a DML
@@ -833,7 +910,7 @@ final class MutableTable private (
   // the set changed, even when the targeted file had not). Entries are
   // plans, not data.
   private val discoveryScans =
-    new graft.LruCache[(String, Seq[String]), org.apache.spark.sql.graft.PointReadExec.CachedScan](64)
+    new graft.LruCache[(String, Seq[String]), org.apache.spark.sql.graft.DiscoveryScan.CachedScan](64)
 
   /** Plan-free DML discovery: bind the resolved predicate to the UNION
     * of the candidates' cached per-file scans and run ONE per-file
@@ -861,7 +938,7 @@ final class MutableTable private (
         misses += 1
         val df = dmlSession.read.schema(schema).parquet(dataDir.resolve(f).toString)
           .select(refNames.map(col) :+ input_file_name().as("__file"): _*)
-        org.apache.spark.sql.graft.PointReadExec.prepareScan(df)
+        org.apache.spark.sql.graft.DiscoveryScan.prepareScan(df)
       }
     }
     if (graft.Engine.dmlTrace)
@@ -875,9 +952,9 @@ final class MutableTable private (
         if (i < 0) return None // scan shape drifted: fall back
         BoundReference(i, a.dataType, a.nullable)
     }
-    val unioned = org.apache.spark.sql.graft.PointReadExec.CachedScan(
+    val unioned = org.apache.spark.sql.graft.DiscoveryScan.CachedScan(
       spark.sparkContext.union(scans.map(_.rdd)), output)
-    val counts = org.apache.spark.sql.graft.PointReadExec.matchCountsByFile(
+    val counts = org.apache.spark.sql.graft.DiscoveryScan.matchCountsByFile(
       spark, unioned, bound, output.length - 1)
     val affected = candidates.filter(f =>
       counts.keysIterator.exists(h => h.endsWith("/" + f) || h.endsWith(f)))
@@ -1069,6 +1146,7 @@ final class MutableTable private (
   private def dropStaged(files: Seq[String]): Unit =
     files.foreach { f =>
       fileStats.remove(f)
+      RowCache.shared.remove(cacheKey, f)
       try Files.deleteIfExists(dataDir.resolve(f))
       catch { case _: Throwable => }
     }
@@ -1236,7 +1314,12 @@ final class MutableTable private (
       }
     var removed = 0
     listDir(dataDir).foreach { p =>
-      if (!live.contains(p.getFileName.toString)) { Files.delete(p); removed += 1 }
+      val name = p.getFileName.toString
+      if (!live.contains(name)) {
+        Files.delete(p)
+        RowCache.shared.remove(cacheKey, name)
+        removed += 1
+      }
     }
     removed
   }
@@ -1251,6 +1334,15 @@ final class MutableTable private (
 }
 
 object MutableTable {
+
+  /** A primary-key value as the planned check groups it: -0.0 folds
+    * into 0.0 (boxed equality already treats NaN as one value).
+    */
+  private[sources] def canonicalKey(v: Any): Any = v match {
+    case d: Double => d + 0.0d
+    case f: Float => f + 0.0f
+    case other => other
+  }
 
   /** Files.list with the stream CLOSED: the returned java Stream holds
     * an open DirectoryStream until close(), so iterating it bare leaks

@@ -123,13 +123,20 @@ object ArrowWire {
     */
   private def wavedRowIterator(df: DataFrame,
       wavePartitions: Int): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    // a driver-served key read already holds its ordered, projected
+    // rows: running Spark's optimizer and planner over that one leaf
+    // took an in-process read plus its encoding from ~4 to ~7 ms p50
+    // (measured over a 1000-row table)
+    df.queryExecution.logical match {
+      case r: PointReadRelation => return r.rows.iterator
+      case _ =>
+    }
     val topLimited = df.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit => true
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalLimit => true
-      // already-local results (the prepared point-read fast path answers
-      // a LocalRelation): executeCollect is driver-local — launching a
-      // parallelize job to re-fetch rows the driver already holds would
-      // dominate a point read's latency
+      // already-local results: executeCollect is driver-local —
+      // launching a parallelize job to re-fetch rows the driver already
+      // holds would dominate a small answer's latency
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
       // SHOW/DESCRIBE/DDL answers: CommandResult already holds its rows
       // on the driver — doExecute would parallelize them into a

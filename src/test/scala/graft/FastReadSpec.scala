@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.{JobGroups, PointReadExec}
+import org.apache.spark.sql.types._
 
-/** The prepared key-read fast path (Session.pointReadFast): PK-equality
-  * and BETWEEN range shapes execute from a cached physical scan with a
-  * re-bound literal — these legs pin that its answers are IDENTICAL to
-  * the native SQL path across values, DML churn, projections, ORDER BY
-  * directions, and transactions (read-your-writes), and that unusual
+/** The prepared key-read fast path (Session.pointReadFast): equality,
+  * IN and BETWEEN shapes are answered on the driver over the
+  * micro-lake's row cache — these legs pin that its answers are
+  * IDENTICAL to the planned SQL path across key types, values, DML
+  * churn, projections, ORDER BY directions, and transactions
+  * (read-your-writes), that it starts no Spark job, and that unusual
   * shapes fall back rather than change semantics.
   */
 class FastReadSpec extends SparkTestBase {
@@ -165,5 +168,174 @@ class FastReadSpec extends SparkTestBase {
     assert(sess.executePrepared(p.handle, Seq(7L)).collect()(0).getString(0) == "s7",
       "after rollback the published snapshot is back")
     catalog.drop("fr_txn")
+  }
+
+  // === driver answer vs planned answer, per key type =======================
+
+  private def bd(s: String) = new java.math.BigDecimal(s)
+  private def date(s: String) = java.sql.Date.valueOf(s)
+  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
+  /** One key type's fixture: keys written by a Spark job (read back by a
+    * row-cache miss) and keys written driver-side (cached write-through),
+    * NULL and repeated keys included — the table has no primary key —
+    * plus the probes each shape runs with.
+    */
+  private final case class KeyCase(name: String, dt: DataType,
+      sparkKeys: Seq[Any], driverKeys: Seq[Any],
+      points: Seq[Any], ins: Seq[Seq[Any]], ranges: Seq[(Any, Any)])
+
+  private val keyCases = Seq(
+    KeyCase("long", LongType,
+      Seq(-5L, 0L, 3L, null, 100L), Seq(7L, Long.MaxValue, 3L, null),
+      Seq(3L, 7L, 42L, Long.MaxValue, 7), // 7: an INT param for a BIGINT key
+      Seq(Seq(3L, 3L, 42L), Seq(-5L, 7L, 100L)),
+      Seq((0L, 7L), (-10L, Long.MaxValue), (50L, 40L))),
+    KeyCase("int", IntegerType,
+      Seq(-2, 0, 9, null), Seq(1, 42, 9),
+      Seq(9, -2, 5), Seq(Seq(0, 42, 42), Seq(77, 1)), Seq((-2, 9), (10, 100))),
+    // UTF-8 byte order differs from java.lang.String order for
+    // supplementary characters: U+1F600 sorts after U+FFFD and U+FF5A
+    // in bytes, before them in UTF-16
+    KeyCase("string", StringType,
+      Seq("a", "é", "😀", null, "z"), Seq("�", "ｚ", "", "a"),
+      Seq("a", "😀", "", "missing"),
+      Seq(Seq("�", "�", "nope"), Seq("z", "é")),
+      Seq(("a", "😁"), ("", "￿"), ("b", "y"))),
+    // -0.0 = 0.0 and NaN = NaN, NaN largest: Spark's double semantics
+    KeyCase("double", DoubleType,
+      Seq(-0.0, 1.5, Double.NaN, null, -3.25, Double.PositiveInfinity), Seq(0.0, 2.0, 1.5),
+      Seq(0.0, -0.0, Double.NaN, 1.5, 7.0),
+      Seq(Seq(Double.NaN, -0.0, 9.0)),
+      Seq((-0.0, 2.0), (-10.0, Double.NaN), (1.0, Double.PositiveInfinity), (Double.NaN, Double.NaN))),
+    KeyCase("decimal", DecimalType(10, 2),
+      Seq(bd("-1.50"), bd("0.00"), null, bd("99999999.99")), Seq(bd("2.25"), bd("0.00")),
+      Seq(bd("0"), bd("2.25"), bd("2.2"), bd("-1.5")),
+      Seq(Seq(bd("2.25"), bd("-1.50"), bd("7"))),
+      Seq((bd("-2"), bd("3")), (bd("0.00"), bd("0.00")))),
+    KeyCase("date", DateType,
+      Seq(date("2020-01-01"), date("1999-12-31"), null), Seq(date("2024-02-29"), date("2020-01-01")),
+      Seq(date("2020-01-01"), date("2024-02-29"), date("2001-01-01")),
+      Seq(Seq(date("1999-12-31"), date("2024-02-29"))),
+      Seq((date("2000-01-01"), date("2030-01-01")), (date("1900-01-01"), date("2020-01-01")))),
+    KeyCase("timestamp", TimestampType,
+      Seq(ts("2020-01-01 10:00:00.123456"), null, ts("1970-01-01 00:00:00")),
+      Seq(ts("2021-06-30 23:59:59.999999")),
+      Seq(ts("2020-01-01 10:00:00.123456"), ts("2020-01-01 10:00:00")),
+      Seq(Seq(ts("1970-01-01 00:00:00"), ts("2021-06-30 23:59:59.999999"))),
+      Seq((ts("1970-01-01 00:00:00"), ts("2020-12-31 00:00:00")))))
+
+  test("every shape and key type: the driver answer equals the planned answer, with no Spark job") {
+    var plannedJobsSeen = 0
+    keyCases.foreach { kc =>
+      val catalog = sources.MutableCatalog(spark)
+      val sess = new Session("fastread-types", spark.newSession(), Some(catalog))
+      // the planned reference binds parameters as SQL text, read in the
+      // session time zone; java.sql timestamps and dates are JVM-zone
+      sess.spark.conf.set("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
+      val name = s"fr_${kc.name}"
+      val schema = StructType(Seq(StructField("k", kc.dt), StructField("v", StringType),
+        StructField("n", LongType)))
+      val t = catalog.create(name, schema)
+      t.insert(spark.createDataFrame(java.util.Arrays.asList(
+        kc.sparkKeys.zipWithIndex.map { case (k, i) => Row(k, s"s$i", i.toLong) }: _*), schema))
+      sess.sql(s"INSERT INTO $name VALUES " + kc.driverKeys.zipWithIndex.map { case (k, i) =>
+        Seq(k, s"d$i", 100L + i).map(SqlParams.literal).mkString("(", ", ", ")")
+      }.mkString(", "))
+      assert(t.fileCount == 2, s"${kc.name}: one Spark-written and one driver-written file")
+
+      val shapes: Seq[(String, Seq[Seq[Any]], Boolean)] =
+        Seq((s"SELECT * FROM $name WHERE k = ?", kc.points.map(Seq(_)), false),
+          (s"SELECT n, k FROM $name WHERE k = ?", kc.points.map(Seq(_)), false)) ++
+        kc.ins.map(ks => (s"SELECT * FROM $name WHERE k IN (${ks.map(_ => "?").mkString(", ")})",
+          Seq(ks), false)) ++
+        Seq((s"SELECT * FROM $name WHERE k BETWEEN ? AND ?", kc.ranges.map(r => Seq(r._1, r._2)), false),
+          (s"SELECT k, v FROM $name WHERE k BETWEEN ? AND ? ORDER BY k", kc.ranges.map(r => Seq(r._1, r._2)), true),
+          (s"SELECT v, k FROM $name WHERE k BETWEEN ? AND ? ORDER BY k DESC", kc.ranges.map(r => Seq(r._1, r._2)), true))
+      shapes.foreach { case (sql, paramSets, ordered) =>
+        val p = sess.createPrepared(sql)
+        assert(p.pointRead.isDefined, s"not detected as a key read: $sql")
+        paramSets.foreach { params =>
+          val (fast, jobs) = JobGroups.jobsDuring(spark) {
+            val df = sess.executePrepared(p.handle, params)
+            val wire = org.apache.spark.sql.graft.ArrowWire.readIpc(
+              org.apache.spark.sql.graft.ArrowWire.toIpcStream(df))._2
+            (df.queryExecution.executedPlan, df.collect(), wire)
+          }
+          val (planned, plannedJobs) = JobGroups.jobsDuring(spark) {
+            sess.sql(SqlParams.bind(sql, params)).collect()
+          }
+          val what = s"${kc.name}: $sql with ${params.mkString("[", ", ", "]")}"
+          assert(fast._1.isInstanceOf[PointReadExec], s"$what declined to ${fast._1.nodeName}")
+          assert(jobs == 0, s"$what started $jobs Spark jobs")
+          plannedJobsSeen += plannedJobs
+          val keyAt = fast._2.headOption.map(_.schema.fieldIndex("k")).getOrElse(0)
+          if (ordered)
+            assert(fast._2.map(r => String.valueOf(r.get(keyAt))).toSeq ==
+              planned.map(r => String.valueOf(r.get(keyAt))).toSeq, s"$what: key order")
+          assert(fast._2.map(_.toString).sorted.toSeq == planned.map(_.toString).sorted.toSeq, what)
+          assert(fast._3.map(_.toString).toSeq == fast._2.map(_.toString).toSeq, s"$what: Arrow wire")
+        }
+      }
+      catalog.drop(name)
+    }
+    assert(plannedJobsSeen > 0, "the planned references run as jobs: the counter sees jobs")
+  }
+
+  test("declines go to the planned path, counted by reason") {
+    val (sess, catalog) = freshSession()
+    load(catalog, "fr_decl")
+    def declined(reason: String) = ServeCounters.declined(reason)
+    val nulls0 = declined("null_param")
+    val p = sess.createPrepared("SELECT s FROM fr_decl WHERE k = ?")
+    assert(sess.executePrepared(p.handle, Seq(null)).collect().isEmpty)
+    assert(declined("null_param") == nulls0 + 1)
+    // a string for a BIGINT key binds through the analyzer's coercion
+    val types0 = declined("param_type")
+    val r = sess.executePrepared(p.handle, Seq("250")).collect()
+    assert(r.map(_.getString(0)).toSeq == Seq("s250"))
+    assert(declined("param_type") == types0 + 1)
+    // a table outside the micro-lake
+    sess.spark.range(3).createOrReplaceTempView("fr_plain")
+    val unmanaged0 = declined("unmanaged_table")
+    val q = sess.createPrepared("SELECT id FROM fr_plain WHERE id = ?")
+    assert(sess.executePrepared(q.handle, Seq(2L)).collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(declined("unmanaged_table") == unmanaged0 + 1)
+    // a column type the driver codec lacks
+    val wide = catalog.create("fr_wide", StructType(Seq(StructField("k", LongType),
+      StructField("b", BinaryType))))
+    wide.insert(spark.range(4).selectExpr("id AS k", "CAST(CAST(id AS STRING) AS BINARY) AS b"))
+    val unsupported0 = declined("unsupported_type")
+    val w = sess.createPrepared("SELECT k FROM fr_wide WHERE k = ?")
+    assert(sess.executePrepared(w.handle, Seq(3L)).collect().map(_.getLong(0)).toSeq == Seq(3L))
+    assert(declined("unsupported_type") == unsupported0 + 1)
+    // more candidate rows than the driver-side bound
+    val big = catalog.create("fr_big", StructType(Seq(StructField("k", LongType))))
+    big.insert(spark.range(60000).toDF("k"))
+    val bound0 = declined("over_bound")
+    val b = sess.createPrepared("SELECT k FROM fr_big WHERE k BETWEEN ? AND ?")
+    assert(sess.executePrepared(b.handle, Seq(10L, 12L)).collect().length == 3)
+    assert(declined("over_bound") == bound0 + 1)
+    Seq("fr_decl", "fr_wide", "fr_big").foreach(catalog.drop)
+  }
+
+  test("row cache: evicts least recently used files down to its byte bound") {
+    val rows = IndexedSeq.fill(10)(Array[Any](1L, "x" * 50))
+    val one = sources.RowCache.estimateBytes(rows)
+    val c = new sources.RowCache(3 * one)
+    (1 to 3).foreach(i => c.put("root", s"f$i", rows))
+    assert(c.entries == 3 && c.bytes == 3 * one)
+    assert(c.getOrLoad("root", "f1")(fail("f1 is cached")).isDefined) // f2 is now eldest
+    c.put("root", "f4", rows)
+    assert(c.entries == 3 && c.bytes == 3 * one && c.bytes <= c.maxBytes)
+    assert(c.getOrLoad("root", "f2")(None).isEmpty, "the least recently used file is evicted")
+    Seq("f1", "f3", "f4").foreach(f => assert(c.getOrLoad("root", f)(fail(s"$f is cached")).isDefined))
+    // a file bigger than the whole bound is never cached
+    c.put("root", "huge", rows ++ rows ++ rows ++ rows)
+    assert(c.getOrLoad("root", "huge")(None).isEmpty && c.bytes <= c.maxBytes)
+    c.put("other", "f1", rows)
+    c.removeTable("root")
+    assert(c.entries == 1 && c.bytes == one)
+    assert(c.hits == 4 && c.misses == 2)
   }
 }

@@ -1,13 +1,14 @@
 package graft
 
 import org.scalacheck.Gen
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based tests (SURVEY §5: "we add ScalaCheck for type
-  * round-trips & batch alignment") over the pure layers: ticket codec,
-  * parameter escaping, statement splitting, and the type bridge.
+  * round-trips & batch alignment") over the pure layers — ticket codec,
+  * parameter escaping, statement splitting, the type bridge — and a
+  * model test of the micro-lake's driver-served reads against random
+  * DML, transaction and maintenance sequences (fixed seeds).
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkTestBase {
 
   /** Minimal forAll: sample the generator N times (scalatestplus bridge
     * is not in the offline cache; raw sampling keeps the properties).
@@ -109,6 +110,57 @@ class PropertySpec extends AnyFunSuite {
       val tuple = Seq.fill(w)("?").mkString("(", ", ", ")")
       val sql = s"INSERT INTO t VALUES ${Seq.fill(r)(tuple).mkString(", ")}"
       assert(SqlShim.insertSourceIsPureParams(sql), sql)
+    }
+  }
+
+  test("micro-lake model: prepared key and range reads equal the planned read after every step") {
+    import org.apache.spark.sql.graft.PointReadExec
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // one random step against the table; errors (duplicate keys,
+    // commit conflicts) are part of the model — the reads after them
+    // must still agree
+    final case class Step(what: String, run: (Session, sources.MutableTable, Seq[Long]) => Unit)
+    def stmt(sql: String) = Step(sql, (s, _, _) => s.sql(sql))
+    val key = Gen.chooseNum(0L, 24L)
+    val step: Gen[Step] = Gen.frequency(
+      5 -> key.map(k => stmt(s"INSERT INTO prop_lake VALUES ($k, 'i$k')")),
+      3 -> (for (k <- key; w <- Gen.chooseNum(0L, 4L))
+        yield stmt(s"UPDATE prop_lake SET v = 'u$k' WHERE k BETWEEN $k AND ${k + w}")),
+      3 -> key.map(k => stmt(s"DELETE FROM prop_lake WHERE k = $k")),
+      2 -> Gen.const(stmt("BEGIN")),
+      2 -> Gen.const(stmt("COMMIT")),
+      1 -> Gen.const(stmt("ROLLBACK")),
+      1 -> Gen.const(Step("checkpoint", (_, t, _) => t.checkpoint())),
+      1 -> Gen.const(Step("vacuum", (_, t, _) => t.vacuum())),
+      1 -> Gen.chooseNum(0, 20).map(back => Step(s"restore -$back", (_, t, published) =>
+        t.restore(published(math.max(0, published.size - 1 - back))))))
+    (1L to 6L).foreach { seed =>
+      val steps = Gen.listOfN(14, step).pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+      val probes = Gen.listOfN(steps.size, for (k <- key; lo <- key; w <- Gen.chooseNum(0L, 8L))
+        yield (k, lo, lo + w)).pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(-seed))
+      val catalog = sources.MutableCatalog(spark)
+      val sess = new Session(s"prop-lake-$seed", spark.newSession(), Some(catalog))
+      val t = catalog.create("prop_lake", StructType(Seq(StructField("k", LongType),
+        StructField("v", StringType))), primaryKey = Some("k"))
+      sess.sql("INSERT INTO prop_lake VALUES (1, 'a'), (5, 'b'), (9, 'c'), (20, 'd')")
+      val read = sess.createPrepared("SELECT * FROM prop_lake WHERE k = ?")
+      val scan = sess.createPrepared("SELECT k, v FROM prop_lake WHERE k BETWEEN ? AND ? ORDER BY k")
+      val published = scala.collection.mutable.ArrayBuffer(t.currentVersion)
+      steps.zip(probes).zipWithIndex.foreach { case ((st, (k, lo, hi)), i) =>
+        try st.run(sess, t, published.toSeq)
+        catch { case scala.util.control.NonFatal(_) => () }
+        published += t.currentVersion
+        Seq((read, Seq[Any](k)), (scan, Seq[Any](lo, hi))).foreach { case (p, params) =>
+          val df = sess.executePrepared(p.handle, params)
+          val where = s"seed $seed, step $i (${st.what}), ${p.sql} with $params"
+          assert(df.queryExecution.executedPlan.isInstanceOf[PointReadExec], s"$where: declined")
+          val fast = df.collect().toSeq
+          val planned = sess.sql(SqlParams.bind(p.sql, params)).collect().toSeq
+          assert(fast == planned, s"$where: driver $fast, planned $planned")
+        }
+      }
+      if (sess.inTransaction) sess.rollback()
+      catalog.drop("prop_lake")
     }
   }
 }

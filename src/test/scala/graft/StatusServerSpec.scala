@@ -59,6 +59,43 @@ class StatusServerSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("status.json serves the prepared-path counters and the row cache") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val catalog = sources.MutableCatalog(spark)
+    val sess = new Session("status-serve", spark.newSession(), Some(catalog))
+    catalog.create("st_serve", StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType))), primaryKey = Some("k"))
+    sess.sql("INSERT INTO st_serve VALUES (1, 'a'), (2, 'b')")
+    sess.sql("UPDATE st_serve SET v = 'c' WHERE k = 2") // a driver-side rewrite
+    val p = sess.createPrepared("SELECT v FROM st_serve WHERE k = ?")
+    sess.executePrepared(p.handle, Seq(2L)).collect() // answered on the driver
+    sess.executePrepared(p.handle, Seq(null)).collect() // declined: NULL parameter
+    val q = sess.createPrepared("SELECT count(*) FROM st_serve")
+    (1 to 2).foreach(_ => sess.executePrepared(q.handle, Seq.empty).collect()) // plan-cache miss, hit
+    val before = Map(
+      "point_read" -> ServeCounters.pointReadHits.get(),
+      "null_param" -> ServeCounters.declined("null_param"),
+      "plan_cache" -> ServeCounters.planCacheHits.get(),
+      "misses" -> ServeCounters.planCacheMisses.get(),
+      "driver_dml_rewrites" -> ServeCounters.driverRewrites.get())
+    val srv = StatusServer.start(new Metrics(), new SessionRegistry(spark)).get
+    try {
+      val (jc, jb) = get(srv.boundPort, "/status.json")
+      assert(jc == 200)
+      // the counter following `key` in the payload
+      def after(key: String): Double =
+        ("\"" + java.util.regex.Pattern.quote(key) + "\":(?:\\{\"hits\":)?([0-9.]+)").r
+          .findFirstMatchIn(jb).map(_.group(1).toDouble)
+          .getOrElse(fail(s"no $key in $jb"))
+      assert(jb.contains("\"serve\":{\"point_read\":{\"hits\":"))
+      before.foreach { case (k, v) => assert(v > 0 && after(k) >= v, s"$k: $jb") }
+      ServeCounters.declineReasons.foreach(r => assert(jb.contains(s"\"$r\":"), r))
+      assert(after("entries") >= 1 && after("bytes") > 0 && after("max_bytes") > 0)
+      val rate = after("hit_rate")
+      assert(rate >= 0 && rate <= 1)
+    } finally { srv.stop(); catalog.drop("st_serve") }
+  }
+
   test("registry snapshot aggregates idle ages (registry.rs:36-42)") {
     val reg = new SessionRegistry(spark, maxSessions = 5, idleTimeoutMillis = 900000)
     val now = System.currentTimeMillis()

@@ -216,6 +216,39 @@ class DriverDmlSpec extends SparkTestBase {
     assert(tt.df.count() == 0)
   }
 
+  test("an INSERT inside a file's key bounds checks the pk over the row cache, starting no job") {
+    import org.apache.spark.sql.graft.JobGroups
+    val t = mk()
+    assert(t.insertRowsDirect(Seq(Array[Any](1L, "a", 1.0), Array[Any](5L, "e", 5.0),
+      Array[Any](9L, "i", 9.0))) == Some(3L))
+    val (ok, okJobs) = JobGroups.jobsDuring(spark)(t.insertRowsDirect(Seq(Array[Any](3L, "c", 3.0))))
+    assert(ok == Some(1L) && okJobs == 0, s"overlapping insert started $okJobs jobs")
+    val (clash, clashJobs) = JobGroups.jobsDuring(spark)(
+      intercept[Exception](t.insertRowsDirect(Seq(Array[Any](5L, "dup", 0.0)))))
+    assert(clash.getMessage.contains("violates primary key: id=5") && clashJobs == 0)
+    // a NULL key never clashes with a table row, as in the planned check
+    assert(t.insertRowsDirect(Seq(Array[Any](null, "n1", 0.0))) == Some(1L))
+    assert(t.insertRowsDirect(Seq(Array[Any](null, "n2", 0.0), Array[Any](4L, "d", 4.0))) == Some(2L))
+    assert(t.df.count() == 7)
+    // a Spark-written file is decoded once into the cache, then checked
+    val t2 = mk()
+    t2.insert(rowsDf((10L, "a", 0.0), (20L, "b", 0.0), (30L, "c", 0.0)))
+    val (clash2, jobs2) = JobGroups.jobsDuring(spark)(
+      intercept[Exception](t2.insertRowsDirect(Seq(Array[Any](15L, "x", 0.0), Array[Any](20L, "y", 0.0)))))
+    assert(clash2.getMessage.contains("violates primary key: id=20") && jobs2 == 0)
+    assert(t2.df.count() == 3)
+    // signed zeros and NaN compare as the planned aggregate groups them
+    val dbl = StructType(Seq(StructField("d", DoubleType), StructField("k", LongType)))
+    val td = MutableTable.create(spark,
+      Files.createTempDirectory("graft_ddml").resolve("d").toString, dbl, Some("d"))
+    assert(td.insertRowsDirect(Seq(Array[Any](0.0, 1L), Array[Any](Double.NaN, 2L), Array[Any](-5.0, 3L))) == Some(3L))
+    assert(intercept[Exception](td.insertRowsDirect(Seq(Array[Any](-0.0, 4L))))
+      .getMessage.contains("violates primary key"))
+    assert(intercept[Exception](td.insertRowsDirect(Seq(Array[Any](Double.NaN, 5L))))
+      .getMessage.contains("violates primary key"))
+    assert(td.insertRowsDirect(Seq(Array[Any](-1.0, 6L))) == Some(1L))
+  }
+
   test("r17 types: codec round-trip + Spark read-back + stats kinds for date/ts/decimal") {
     import org.apache.spark.sql.types.Decimal
     val s = StructType(Seq(
