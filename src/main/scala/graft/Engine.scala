@@ -13,13 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Per-phase DML tracing flag, read ONCE: the env cannot change after
-    * JVM start, and `sys.env` copies the whole environment map per call
-    * — 3-5 of those sat on the per-statement DML hot path (review
-    * finding, round 16).
-    */
-  private[graft] val dmlTrace: Boolean = sys.env.contains("GRAFT_DML_TRACE")
-
   /** All driver-provided test tables (see TESTDATA.md). */
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -24,11 +24,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object ParamInference {
 
-  def inferParameterSchema(spark: SparkSession, sql: String): StructType = {
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(sql)
-      catch { case _: Exception => return fallback(countPlaceholders(sql)) }
-
+  def inferParameterSchema(spark: SparkSession, plan: LogicalPlan): StructType = {
     // position-in-text → column name (when associated)
     val assoc = mutable.SortedMap.empty[Int, Option[String]]
 
@@ -92,31 +88,7 @@ object ParamInference {
     }
   }
 
-  /** Placeholder count via the quote-aware scan (engine prepare's
-    * parameter_count, connection.rs:104-106).
-    */
-  def countPlaceholders(sql: String): Int = {
-    var i = 0; var n = 0; var state = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      state match {
-        case 0 => c match {
-          case '\'' => state = 1
-          case '"'  => state = 2
-          case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' => state = 3; i += 1
-          case '?' => n += 1
-          case _ =>
-        }
-        case 1 => if (c == '\'') state = 0
-        case 2 => if (c == '"') state = 0
-        case 3 => if (c == '\n') state = 0
-        case _ =>
-      }
-      i += 1
-    }
-    n
-  }
-
-  private def fallback(n: Int): StructType =
+  /** `n` untyped Utf8 `$n` parameters, for text Spark cannot parse. */
+  def untyped(n: Int): StructType =
     StructType((1 to n).map(i => StructField(s"$$$i", StringType, nullable = true)))
 }

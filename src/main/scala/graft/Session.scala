@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** One client session: an isolated `SparkSession.newSession()` plus the
@@ -164,19 +165,7 @@ final class Session(val id: String, val spark: SparkSession,
   }
 
   // === prepared statements (A12/A21) =======================================
-  /** Canonical key-read shapes, detected once at prepare time so each
-    * execution can be answered on the driver ([[pointReadFast]]):
-    * `SELECT <cols|*> FROM t WHERE k = ?`, `… WHERE k IN (?, …)`
-    * (`inList` placeholders) and
-    * `SELECT <cols|*> FROM t WHERE k BETWEEN ? AND ? [ORDER BY k [ASC|DESC]]`
-    * (range = true; `sortDesc` records the ORDER BY direction).
-    */
-  final case class PointRead(table: String, keyCol: String,
-      projection: Option[Seq[String]], range: Boolean = false,
-      sortDesc: Option[Boolean] = None, inList: Int = 0) {
-    /** Placeholders the shape binds per execution. */
-    def paramCount: Int = if (range) 2 else if (inList > 0) inList else 1
-  }
+  import Session.PointRead
 
   /** One cached prepared plan: the ANALYZED logical plan (parse +
     * catalog resolution amortized; the optimizer still runs per
@@ -192,7 +181,7 @@ final class Session(val id: String, val spark: SparkSession,
   final case class CachedPlan(
       fingerprint: (Long, Long),
       params: Seq[Any],
-      analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      analyzed: LogicalPlan,
       @volatile var keepAqe: Boolean) {
     // hits served so far; the pin is CALIBRATED (measured, not the
     // structural prior) once the handle proves hot — see calibratePlan
@@ -206,6 +195,7 @@ final class Session(val id: String, val spark: SparkSession,
       sql: String,
       schema: Option[StructType],
       ephemeral: Boolean,
+      paramCount: Int,
       paramSchema: StructType = new StructType(),
       var pendingParams: Option[Seq[Any]] = None,
       pointRead: Option[PointRead] = None) {
@@ -222,17 +212,25 @@ final class Session(val id: String, val spark: SparkSession,
     touch()
     val clean = SqlShim.stripSelectLocks(sqlText.trim)
     val handle = s"$id-stmt-${handleCounter.incrementAndGet()}"
+    // counted by the scanner that binds them, so count and binding agree
+    val paramCount = SqlParams.count(clean)
     val schema =
-      if (SqlShim.statementCount(clean) == 1 && SqlShim.isQuery(clean) && !clean.contains("?"))
+      if (paramCount == 0 && SqlShim.statementCount(clean) == 1 && SqlShim.isQuery(clean))
         scala.util.Try(schemaForQuery(clean)).toOption
       else None
-    // typed parameter schema via the AST walk (A12, parser.rs:103-221)
+    // a statement with placeholders is parsed once; the typed parameter
+    // schema (A12, parser.rs:103-221) and the key-read shape both come
+    // from that tree. Text Spark cannot parse (a script) gets untyped
+    // parameters and no shape.
+    val parsed =
+      if (paramCount == 0) None
+      else scala.util.Try(spark.sessionState.sqlParser.parsePlan(clean)).toOption
     val paramSchema =
-      if (ParamInference.countPlaceholders(clean) > 0)
-        ParamInference.inferParameterSchema(spark, clean)
-      else new StructType()
-    val p = Prepared(handle, clean, schema, ephemeral, paramSchema,
-      pointRead = detectPointRead(clean))
+      if (paramCount == 0) new StructType()
+      else parsed.map(ParamInference.inferParameterSchema(spark, _))
+        .getOrElse(ParamInference.untyped(paramCount))
+    val p = Prepared(handle, clean, schema, ephemeral, paramCount, paramSchema,
+      pointRead = parsed.flatMap(Session.keyRead))
     prepared.synchronized {
       prepared(handle) = p
       lastHandle = Some(handle)
@@ -293,10 +291,13 @@ final class Session(val id: String, val spark: SparkSession,
   }
 
   // === prepared key reads ==================================================
-  // The YCSB/OLTP hot shape through the gateway — a prepared key SELECT
+  // The YCSB/OLTP hot shape through the gateway is a prepared key SELECT
   // (`k = ?`, `k IN (?, …)`, `k BETWEEN ? AND ? [ORDER BY k]`) against a
-  // managed table — is answered on the driver with no Spark job, no
-  // parquet scan to plan and no codegen (the reference likewise re-binds
+  // managed table. Its shape is read once, from the statement's parse at
+  // prepare time (Session.keyRead), so every spelling Spark parses to the
+  // same tree takes the same path. Each execution is answered on the
+  // driver with no Spark job, no parquet scan to plan and no codegen
+  // (the reference likewise re-binds
   // values into a plan it already has and reads in process,
   // prepared.rs:344-372): manifest stats prune the candidate files of
   // the snapshot (the transaction's staged one inside a transaction),
@@ -309,38 +310,6 @@ final class Session(val id: String, val spark: SparkSession,
   // under 0.1 ms; a cache miss adds one parquet-mr decode, 15-21 ms for
   // that file. Anything the driver cannot answer exactly declines, by a
   // counted reason (ServeCounters), to the fully planned path.
-
-  private val pointReadRe =
-    ("(?is)^\\s*SELECT\\s+(\\*|[A-Za-z_][\\w]*(?:\\s*,\\s*[A-Za-z_][\\w]*)*)\\s+" +
-      "FROM\\s+([A-Za-z_][\\w]*)\\s+WHERE\\s+([A-Za-z_][\\w]*)\\s*=\\s*\\?\\s*;?\\s*$").r
-  private val rangeReadRe =
-    ("(?is)^\\s*SELECT\\s+(\\*|[A-Za-z_][\\w]*(?:\\s*,\\s*[A-Za-z_][\\w]*)*)\\s+" +
-      "FROM\\s+([A-Za-z_][\\w]*)\\s+WHERE\\s+([A-Za-z_][\\w]*)\\s+BETWEEN\\s+\\?\\s+AND\\s+\\?" +
-      "(?:\\s+ORDER\\s+BY\\s+([A-Za-z_][\\w]*)(\\s+ASC|\\s+DESC)?)?\\s*;?\\s*$").r
-  // batch key lookup: `WHERE k IN (?, ?, ..., ?)` — all placeholders
-  private val inReadRe =
-    ("(?is)^\\s*SELECT\\s+(\\*|[A-Za-z_][\\w]*(?:\\s*,\\s*[A-Za-z_][\\w]*)*)\\s+" +
-      "FROM\\s+([A-Za-z_][\\w]*)\\s+WHERE\\s+([A-Za-z_][\\w]*)\\s+IN\\s*" +
-      "\\(\\s*\\?(?:\\s*,\\s*\\?)*\\s*\\)\\s*;?\\s*$").r
-
-  private def detectPointRead(sql: String): Option[PointRead] = {
-    def proj(cols: String) =
-      if (cols.trim == "*") None else Some(cols.split(",").map(_.trim).toSeq)
-    sql match {
-      case pointReadRe(cols, table, key) => Some(PointRead(table, key, proj(cols)))
-      case inReadRe(cols, table, key) =>
-        Some(PointRead(table, key, proj(cols), inList = sql.count(_ == '?')))
-      case rangeReadRe(cols, table, key, orderCol, dir) =>
-        val sortDesc = Option(orderCol) match {
-          case None => Some(None) // no ORDER BY: unsorted
-          case Some(oc) if oc.equalsIgnoreCase(key) =>
-            Some(Some(Option(dir).exists(_.trim.equalsIgnoreCase("DESC"))))
-          case _ => None // ORDER BY a different column: native path
-        }
-        sortDesc.map(sd => PointRead(table, key, proj(cols), range = true, sortDesc = sd))
-      case _ => None
-    }
-  }
 
   private def pointReadFast(p: Prepared, values: Seq[Any]): Option[DataFrame] = {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, GreaterThanOrEqual, In, LessThanOrEqual}
@@ -397,7 +366,7 @@ final class Session(val id: String, val spark: SparkSession,
   // CatalogTxn (acknowledged but never published). The monitor is
   // reentrant, so the native-path fallback through sql() below is safe.
   private def runPrepared(p: Prepared, params: Seq[Any]): DataFrame = stmtLock.synchronized {
-    val n = ParamInference.countPlaceholders(p.sql)
+    val n = p.paramCount
     val padded = params.padTo(n, null)
     val expectedParams = p.pointRead.map(_.paramCount).getOrElse(1)
     // abortTxnOnError: a fast-path failure (e.g. file vanished under a
@@ -428,12 +397,8 @@ final class Session(val id: String, val spark: SparkSession,
         // catalog-managed DML binds literals engine-side and routes
         // (connection.rs:279-295 Value binding); everything else uses
         // Spark's native parameterized-SQL path
-        val tr0 = System.nanoTime()
         catalog.flatMap(_.route(SqlParams.bind(p.sql, padded), txn)) match {
-          case Some(count) =>
-            if (graft.Engine.dmlTrace)
-              System.err.println(f"[dml-trace] session route=${(System.nanoTime() - tr0) / 1e6}%.0f ms")
-            affectedDf(count)
+          case Some(count) => affectedDf(count)
           case None =>
             ensureCatalogViews()
             spark.sql(p.sql, padded.toArray)
@@ -547,12 +512,8 @@ final class Session(val id: String, val spark: SparkSession,
   private[graft] def calibrateNow(cp: CachedPlan): Unit = {
     val clone = spark.newSession()
     catalog.foreach(_.syncViews(clone, None)) // published snapshots only
-    val (keep, pinnedMs, keptMs) =
-      org.apache.spark.sql.graft.PreparedPlans.calibrate(clone, cp.analyzed)
-    cp.keepAqe = keep
+    cp.keepAqe = org.apache.spark.sql.graft.PreparedPlans.calibrate(clone, cp.analyzed)
     cp.calibrated = true
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[pin-calibrate] keepAqe=$keep pinned=$pinnedMs%.0f ms kept=$keptMs%.0f ms")
   }
 
   def closePrepared(handle: String): Unit = prepared.synchronized {
@@ -667,19 +628,107 @@ object Session {
       t.setDaemon(true)
       t
     })
+
+  /** A prepared key read's shape, answered by `pointReadFast`: the key
+    * column, the projected columns (None = `*`), and which filter binds
+    * the placeholders — `k = ?`, `k IN (?, …)` (`inList` placeholders)
+    * or `k BETWEEN ? AND ?` (range = true). `sortDesc` is the direction
+    * of an ORDER BY on the key, None when unsorted.
+    */
+  final case class PointRead(table: String, keyCol: String,
+      projection: Option[Seq[String]], range: Boolean = false,
+      sortDesc: Option[Boolean] = None, inList: Int = 0) {
+    /** Placeholders the shape binds per execution. */
+    def paramCount: Int = if (range) 2 else if (inList > 0) inList else 1
+  }
+
+  /** The key-read shape of a parsed statement: a projection of columns
+    * or `*` (optionally under an ORDER BY of the key) over a filter on
+    * one single-name relation, optionally aliased, where the filter is
+    * `k = ?`, `? = k`, `k IN (?, …)` or `k BETWEEN ? AND ?`. Columns
+    * match by name parts, bare or qualified by the table (its alias when
+    * aliased). Anything else — LIMIT, DISTINCT, another sort, a computed
+    * bound, NOT, OR — is None and takes the planned path. Whether the
+    * relation is a managed table is decided per execution.
+    */
+  private[graft] def keyRead(plan: LogicalPlan): Option[PointRead] = {
+    import org.apache.spark.sql.catalyst.analysis.{PosParameter, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
+    import org.apache.spark.sql.catalyst.expressions.{Descending, EqualTo, Expression, In}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Sort, SubqueryAlias}
+    val (order, body) = plan match {
+      case s: Sort if s.global => (Some(s.order), s.child)
+      case other => (None, other)
+    }
+    val (project, cond, table, qualifier) = body match {
+      case Project(list, Filter(c, r: UnresolvedRelation)) =>
+        (list, c, r.multipartIdentifier, r.multipartIdentifier)
+      case Project(list, Filter(c, SubqueryAlias(alias, r: UnresolvedRelation))) =>
+        (list, c, r.multipartIdentifier, alias.qualifier :+ alias.name)
+      case _ => return None
+    }
+    if (table.size != 1) return None
+    def column(e: Expression): Option[String] = e match {
+      case a: UnresolvedAttribute =>
+        val q = a.nameParts.init
+        if (q.isEmpty || q.map(_.toLowerCase) == qualifier.map(_.toLowerCase)) Some(a.nameParts.last)
+        else None
+      case _ => None
+    }
+    val projection = project match {
+      case Seq(UnresolvedStar(None)) => None
+      case cols => Some(cols.map(c => column(c).getOrElse(return None)))
+    }
+    val shape = cond match {
+      case EqualTo(k, _: PosParameter) => column(k).map(PointRead(table.head, _, projection))
+      case EqualTo(_: PosParameter, k) => column(k).map(PointRead(table.head, _, projection))
+      case In(k, ps) if ps.nonEmpty && ps.forall(_.isInstanceOf[PosParameter]) =>
+        column(k).map(PointRead(table.head, _, projection, inList = ps.size))
+      case f: UnresolvedFunction if f.nameParts.map(_.toLowerCase) == Seq("between") &&
+          !f.isDistinct && f.filter.isEmpty =>
+        f.arguments match {
+          case Seq(k, _: PosParameter, _: PosParameter) =>
+            column(k).map(PointRead(table.head, _, projection, range = true))
+          case _ => None
+        }
+      case _ => None
+    }
+    // matched keys are never NULL, so NULLS FIRST/LAST cannot matter
+    order match {
+      case None => shape
+      case Some(Seq(o)) => shape.filter(pr => column(o.child).exists(_.equalsIgnoreCase(pr.keyCol)))
+        .map(_.copy(sortDesc = Some(o.direction == Descending)))
+      case Some(_) => None
+    }
+  }
 }
 
-/** Positional-parameter literal binding: replace each top-level `?` with
-  * an escaped SQL literal. The scan is quote/comment-aware so `?` inside
-  * strings is never touched. Missing parameters bind NULL, matching
-  * `push_params` (engine/connection.rs:286-292).
+/** Positional parameters: the one scanner that finds the top-level `?`
+  * placeholders — outside '…', "…" and `…` quotes and -- and /* */
+  * comments — for both the prepare-time count and the binding. Binding
+  * replaces each placeholder with an escaped SQL literal; missing
+  * parameters bind NULL, matching `push_params`
+  * (engine/connection.rs:286-292).
   */
 object SqlParams {
 
+  /** Placeholder count (engine prepare's parameter_count,
+    * connection.rs:104-106).
+    */
+  def count(sql: String): Int = placeholders(sql).size
+
   def bind(sql: String, params: Seq[Any]): String = {
-    val out = new StringBuilder(sql.length + 32)
+    val out = new java.lang.StringBuilder(sql.length + 32)
+    var from = 0
+    placeholders(sql).zipWithIndex.foreach { case (at, k) =>
+      out.append(sql, from, at).append(literal(if (k < params.length) params(k) else null))
+      from = at + 1
+    }
+    out.append(sql, from, sql.length).toString
+  }
+
+  private def placeholders(sql: String): IndexedSeq[Int] = {
+    val at = IndexedSeq.newBuilder[Int]
     var i = 0
-    var nextParam = 0
     var state = 0 // 0 bare, 1 '…', 2 "…", 3 `…`, 4 --, 5 /*
     val n = sql.length
     while (i < n) {
@@ -687,34 +736,26 @@ object SqlParams {
       state match {
         case 0 =>
           c match {
-            case '\'' => state = 1; out += c
-            case '"'  => state = 2; out += c
-            case '`'  => state = 3; out += c
-            case '-' if i + 1 < n && sql.charAt(i + 1) == '-' => state = 4; out += c
-            case '/' if i + 1 < n && sql.charAt(i + 1) == '*' => state = 5; out += c
-            case '?' =>
-              out ++= literal(if (nextParam < params.length) params(nextParam) else null)
-              nextParam += 1
-            case _ => out += c
+            case '\'' => state = 1
+            case '"'  => state = 2
+            case '`'  => state = 3
+            case '-' if i + 1 < n && sql.charAt(i + 1) == '-' => state = 4; i += 1
+            case '/' if i + 1 < n && sql.charAt(i + 1) == '*' => state = 5; i += 1
+            case '?'  => at += i
+            case _ =>
           }
-        case 1 =>
-          out += c
-          // Spark's default parser treats backslash as an escape inside
-          // literals: skip the escaped char so \' does not close the string
-          if (c == '\\' && i + 1 < n) { out += sql.charAt(i + 1); i += 1 }
-          else if (c == '\'') { if (i + 1 < n && sql.charAt(i + 1) == '\'') { out += '\''; i += 1 } else state = 0 }
-        case 2 =>
-          out += c
-          if (c == '\\' && i + 1 < n) { out += sql.charAt(i + 1); i += 1 }
-          else if (c == '"') state = 0
-        case 3 => out += c; if (c == '`') state = 0
-        case 4 => out += c; if (c == '\n') state = 0
-        case 5 => out += c; if (c == '*' && i + 1 < n && sql.charAt(i + 1) == '/') { out += '/'; state = 0; i += 1 }
-        case _ =>
+        // Spark's default parser treats backslash as an escape inside
+        // literals: skip the escaped char so \' does not close the string
+        // ('' doubling needs no case: it closes and reopens)
+        case 1 => if (c == '\\') i += 1 else if (c == '\'') state = 0
+        case 2 => if (c == '\\') i += 1 else if (c == '"') state = 0
+        case 3 => if (c == '`') state = 0
+        case 4 => if (c == '\n') state = 0
+        case _ => if (c == '*' && i + 1 < n && sql.charAt(i + 1) == '/') { state = 0; i += 1 }
       }
       i += 1
     }
-    out.toString
+    at.result()
   }
 
   /** SQL literal for a parameter value, single-quote-escaped. Covers the

@@ -102,7 +102,7 @@ object SqlGateway {
     try {
       val p = registry.getOrCreate(peerKey(ex, sessionKey)).createPrepared(sql)
       respond(ex, 200, "application/json",
-        s"""{"handle":${jstr(p.handle)},"param_count":${ParamInference.countPlaceholders(p.sql)}}"""
+        s"""{"handle":${jstr(p.handle)},"param_count":${p.paramCount}}"""
           .getBytes(StandardCharsets.UTF_8))
     } catch { case t: Throwable => respondError(ex, metrics, sql, t) }
   }
@@ -307,10 +307,7 @@ object SqlGateway {
       val (l, df) = mk()
       label = l
       if (wantArrow) {
-        val tm0 = System.nanoTime()
         val write = org.apache.spark.sql.graft.ArrowWire.prepareIpcStream(df)
-        if (graft.Engine.dmlTrace)
-          System.err.println(f"[dml-trace] gateway mk=${(tm0 - t0) / 1e6}%.0f prepIpc=${(System.nanoTime() - tm0) / 1e6}%.0f ms")
         ex.getResponseHeaders.set("Content-Type", arrowContentType)
         ex.sendResponseHeaders(200, 0)
         headersSent = true

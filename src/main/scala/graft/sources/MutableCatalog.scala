@@ -6,7 +6,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
 /** SQL front for mutable tables: routes the DML the reference accepts
@@ -363,12 +363,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
 
   private def refresh(name: String): Unit = {
     viewVersions(name.toLowerCase) = versionClock.incrementAndGet()
-    val t0 = System.nanoTime()
-    val df = tables(name.toLowerCase).df
-    val t1 = System.nanoTime()
-    df.createOrReplaceTempView(name)
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[dml-trace] refresh df=${(t1 - t0) / 1e6}%.0f view=${(System.nanoTime() - t1) / 1e6}%.0f ms")
+    tables(name.toLowerCase).df.createOrReplaceTempView(name)
   }
 
   /** Register each managed table's current snapshot as a temp view in
@@ -452,15 +447,12 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     n
   }
 
+  // INSERT … VALUES keeps this regex and DriverDml's hand reader of the
+  // VALUES list: on the YCSB load statement (1000 rows, about 1 MB of
+  // text, 4 vCPUs of a shared VM) they took 42-70 ms, Spark's parser
+  // 56-190 ms warm and 1.6 s on first use
   private val insertRe =
     "(?is)^\\s*INSERT\\s+INTO\\s+([A-Za-z_][\\w]*)\\s*(\\([^)]*\\))?\\s*VALUES\\s*(.+?);?\\s*$".r
-  // the SET tail is captured WHOLE and split on the top-level WHERE by
-  // a quote-aware scanner (r19 review: the lazy regex split matched a
-  // ' where ' INSIDE a string literal, failing valid statements)
-  private val updateRe =
-    "(?is)^\\s*UPDATE\\s+([A-Za-z_][\\w]*)\\s+SET\\s+(.+?);?\\s*$".r
-  private val deleteRe =
-    "(?is)^\\s*DELETE\\s+FROM\\s+([A-Za-z_][\\w]*)(?:\\s+WHERE\\s+(.+?))?;?\\s*$".r
 
   /** Route a DML statement against a managed table. Returns the affected
     * row count, or None when the statement doesn't target a managed
@@ -470,136 +462,119 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     * touch) and records the new staged version in the txn instead of
     * publishing — invisible to every other session until `commitTxn`.
     */
-  def route(sql: String, txn: Option[CatalogTxn] = None): Option[Long] = {
+  def route(sql: String, txn: Option[CatalogTxn] = None): Option[Long] =
     // Within-txn mutations chain off the session's own staged version
     // (snapshot taken on first touch) — the whole base-read/stage/record
     // sequence runs under the txn lock (stageInTxn). NON-txn mutations
     // go through the table's atomic mutators — read-stage-publish under
     // ONE writeLock hold, so concurrent autocommit writers never lose an
     // update.
-    sql match {
-      case insertRe(table, colsOpt, values) =>
-        get(table).map { t =>
-          val tv0 = System.nanoTime()
-          // strip identifier backticks HERE (r19 review: the planned
-          // path's batch.toDF named columns with LITERAL backticks, so
-          // alignToSchema matched nothing and NULL-filled every target
-          // column — an all-NULL row committed instead of the values)
-          // split on commas OUTSIDE backticks (r19 advice class: a
-          // backticked column name containing ',' split mid-identifier)
-          val explicitFast = Option(colsOpt).map(c =>
-            splitIdentList(c.stripPrefix("(").stripSuffix(")")))
-          // driver-side literal fast path (VERDICT r15 #3): a pure-
-          // literal VALUES batch into a supported-schema table skips the
-          // SQL parse, the alignment analysis, and the Spark write job —
-          // one parquet-mr write + pointer swap. Any gate failure (an
-          // expression in VALUES, a type that doesn't coerce naturally,
-          // an unsupported column type) falls through to the planned
-          // path below; DuplicateKeyException propagates identically.
-          if (txn.isEmpty) {
-            DriverDml.parseValuesAligned(values, t.schema, explicitFast,
-              DriverDml.utcSession(spark))
-              .flatMap(t.insertRowsDirect) match {
-              case Some(n) =>
-                if (graft.Engine.dmlTrace)
-                  System.err.println(f"[dml-trace] route-insert-direct total=${(System.nanoTime() - tv0) / 1e6}%.0f ms")
-                return Some(n)
-              case None => // fall through to the planned path
+    graft.SqlShim.leadingKeyword(sql) match {
+      case "INSERT" => routeInsert(sql, txn)
+      case "UPDATE" | "DELETE" => routeParsed(sql, txn)
+      case _ => None
+    }
+
+  private def routeInsert(sql: String, txn: Option[CatalogTxn]): Option[Long] = sql match {
+    case insertRe(table, colsOpt, values) =>
+      get(table).map { t =>
+        // strip identifier backticks HERE (r19 review: the planned
+        // path's batch.toDF named columns with LITERAL backticks, so
+        // alignToSchema matched nothing and NULL-filled every target
+        // column — an all-NULL row committed instead of the values)
+        // split on commas OUTSIDE backticks (r19 advice class: a
+        // backticked column name containing ',' split mid-identifier)
+        val explicit = Option(colsOpt).map(c =>
+          splitIdentList(c.stripPrefix("(").stripSuffix(")")))
+        // driver-side literal fast path (VERDICT r15 #3): a pure-
+        // literal VALUES batch into a supported-schema table skips the
+        // SQL parse, the alignment analysis, and the Spark write job —
+        // one parquet-mr write + pointer swap. Any gate failure (an
+        // expression in VALUES, a type that doesn't coerce naturally,
+        // an unsupported column type) falls through to the planned
+        // path below; DuplicateKeyException propagates identically.
+        if (txn.isEmpty) {
+          DriverDml.parseValuesAligned(values, t.schema, explicit,
+            DriverDml.utcSession(spark))
+            .flatMap(t.insertRowsDirect)
+            .foreach(n => return Some(n))
+        }
+        val batch = spark.sql(s"SELECT * FROM (VALUES $values)")
+        // name the incoming columns after the target list (or table
+        // prefix) so alignment matches the appender path (A8)
+        val named = explicit match {
+          case Some(cols) => batch.toDF(cols: _*)
+          case None => batch.toDF(t.schema.fieldNames.take(batch.schema.length).toIndexedSeq: _*)
+        }
+        val aligned = BatchAlign.alignToSchema(named, t.schema, explicit)
+        txn match {
+          case Some(x) => stageInTxn(table, t, x)(bv => t.stageInsert(bv, aligned))
+          case None    => t.insert(aligned)
+        }
+      }
+    case _ => None
+  }
+
+  /** UPDATE and DELETE, read from Spark's parse of the statement: the
+    * target table (optionally aliased), the SET assignments and the
+    * WHERE condition, handed to the table as columns. A column qualified
+    * by the table — by its alias when aliased — drops the qualifier,
+    * since the table's own rows resolve it. A parse failure, or a target
+    * outside the catalog, is None: Spark then reports its own error.
+    */
+  private def routeParsed(sql: String, txn: Option[CatalogTxn]): Option[Long] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, SubqueryAlias, UpdateTable}
+    import org.apache.spark.sql.graft.bridge.column
+    val plan =
+      try spark.sessionState.sqlParser.parsePlan(sql)
+      catch { case scala.util.control.NonFatal(_) => return None }
+    // (table name, the qualifier its columns may carry). The parser
+    // reads `DELETE FROM t WHERE` (nothing after WHERE) as t aliased
+    // WHERE with no condition, which would delete every row: that alias
+    // is not routed, so Spark rejects the statement
+    def target(rel: LogicalPlan): Option[(String, Seq[String])] = rel match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+        Some((r.multipartIdentifier.head, r.multipartIdentifier))
+      case SubqueryAlias(alias, r: UnresolvedRelation)
+          if r.multipartIdentifier.size == 1 && !alias.name.equalsIgnoreCase("WHERE") =>
+        Some((r.multipartIdentifier.head, alias.qualifier :+ alias.name))
+      case _ => None
+    }
+    def unqualified(q: Seq[String])(e: Expression): Expression = e.transform {
+      case a: UnresolvedAttribute if a.nameParts.size > q.size &&
+          a.nameParts.take(q.size).map(_.toLowerCase) == q.map(_.toLowerCase) =>
+        UnresolvedAttribute(a.nameParts.drop(q.size))
+    }
+    plan match {
+      case UpdateTable(rel, assignments, cond) =>
+        for ((name, q) <- target(rel); t <- get(name)) yield {
+          val unq = unqualified(q) _
+          val set = assignments.map { a =>
+            val key = unq(a.key) match {
+              case u: UnresolvedAttribute if u.nameParts.size == 1 =>
+                t.schema.fieldNames.find(_.equalsIgnoreCase(u.nameParts.head)).getOrElse(u.nameParts.head)
+              case other => other.sql // not a column: updateCore rejects it
             }
-          }
-          val batch = spark.sql(s"SELECT * FROM (VALUES $values)")
-          val explicit = explicitFast
-          // name the incoming columns after the target list (or table
-          // prefix) so alignment matches the appender path (A8)
-          val named = explicit match {
-            case Some(cols) => batch.toDF(cols: _*)
-            case None => batch.toDF(t.schema.fieldNames.take(batch.schema.length).toIndexedSeq: _*)
-          }
-          val aligned = BatchAlign.alignToSchema(named, t.schema, explicit)
-          val tv1 = System.nanoTime()
+            key -> column(unq(a.value))
+          }.toMap
+          val where = cond.map(c => column(unq(c))).getOrElse(lit(true))
           txn match {
-            case Some(x) => stageInTxn(table, t, x)(bv => t.stageInsert(bv, aligned))
-            case None    =>
-              val n = t.insert(aligned)
-              if (graft.Engine.dmlTrace)
-                System.err.println(f"[dml-trace] route-insert values=${(tv1 - tv0) / 1e6}%.0f core=${(System.nanoTime() - tv1) / 1e6}%.0f ms")
-              n
+            case Some(x) => stageInTxn(name, t, x)(bv => t.stageUpdate(bv, where, set))
+            case None    => t.update(where, set)
           }
         }
-      case updateRe(table, setTail) =>
-        get(table).map { t =>
-          val tv0 = System.nanoTime()
-          val (setClause, whereOpt) = splitSetWhere(setTail)
-          val assignments = splitAssignments(setClause).map { case (k, v) => k -> expr(v) }.toMap
-          val cond = whereOpt.map(expr).getOrElse(lit(true))
-          val tv1 = System.nanoTime()
+      case DeleteFromTable(rel, cond) =>
+        for ((name, q) <- target(rel); t <- get(name)) yield {
+          val where = column(unqualified(q)(cond))
           txn match {
-            case Some(x) => stageInTxn(table, t, x)(bv => t.stageUpdate(bv, cond, assignments))
-            case None    =>
-              val n = t.update(cond, assignments)
-              if (graft.Engine.dmlTrace)
-                System.err.println(f"[dml-trace] route-update parse=${(tv1 - tv0) / 1e6}%.0f core=${(System.nanoTime() - tv1) / 1e6}%.0f ms")
-              n
-          }
-        }
-      case deleteRe(table, whereOpt) =>
-        get(table).map { t =>
-          val cond = Option(whereOpt).map(expr).getOrElse(lit(true))
-          txn match {
-            case Some(x) => stageInTxn(table, t, x)(bv => t.stageDelete(bv, cond))
-            case None    => t.delete(cond)
+            case Some(x) => stageInTxn(name, t, x)(bv => t.stageDelete(bv, where))
+            case None    => t.delete(where)
           }
         }
       case _ => None
     }
-  }
-
-  /** Advance past position `i` inside a single-quoted literal: handles
-    * the backslash escape (Spark's default parser mode accepts `\'`)
-    * and the SQL-standard `''` doubling (r19 review: the old scanners
-    * treated `\'` as the terminator, mis-splitting valid statements).
-    * Returns the index AFTER the consumed char(s); `inStr` semantics
-    * live in the callers.
-    */
-  private def scanLiteralChar(s: String, i: Int): (Int, Boolean) = {
-    val c = s.charAt(i)
-    if (c == '\\' && i + 1 < s.length) (i + 2, true) // escaped char: stay in string
-    else if (c == '\'') {
-      if (i + 1 < s.length && s.charAt(i + 1) == '\'') (i + 2, true) // '' doubling
-      else (i + 1, false) // terminator
-    } else (i + 1, true)
-  }
-
-  /** Split an UPDATE's post-SET tail into (assignments, whereOpt) at the
-    * TOP-LEVEL `WHERE` keyword — quote/paren-aware with word boundaries.
-    */
-  private def splitSetWhere(tail: String): (String, Option[String]) = {
-    var depth = 0; var inStr = false; var inTick = false; var i = 0
-    while (i < tail.length) {
-      if (inStr) { val (ni, still) = scanLiteralChar(tail, i); i = ni; inStr = still }
-      else if (inTick) { if (tail.charAt(i) == '`') inTick = false; i += 1 }
-      else {
-        val c = tail.charAt(i)
-        c match {
-          case '\'' => inStr = true; i += 1
-          // backtick-quoted identifiers can contain ' where ' (r19
-          // advice: the scanner tracked only single-quoted spans, so a
-          // backticked column name split inside the identifier)
-          case '`' => inTick = true; i += 1
-          case '(' => depth += 1; i += 1
-          case ')' => depth -= 1; i += 1
-          case 'w' | 'W' if depth == 0 &&
-              tail.regionMatches(true, i, "WHERE", 0, 5) &&
-              (i == 0 || Character.isWhitespace(tail.charAt(i - 1))) &&
-              // '(' is a valid right boundary: `UPDATE t SET a=1 WHERE(k=1)`
-              (i + 5 >= tail.length || Character.isWhitespace(tail.charAt(i + 5)) ||
-                tail.charAt(i + 5) == '(') =>
-            return (tail.substring(0, i).trim, Some(tail.substring(i + 5).trim))
-          case _ => i += 1
-        }
-      }
-    }
-    (tail.trim, None)
   }
 
   /** Split a column-identifier list on commas outside backticks and
@@ -618,35 +593,6 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     }
     parts += s.substring(start)
     parts.toSeq.map(_.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty)
-  }
-
-  /** Split `a = 1, b = 'x,y'` on top-level commas (quote-aware,
-    * escape-aware — see [[scanLiteralChar]]).
-    */
-  private def splitAssignments(s: String): Seq[(String, String)] = {
-    val parts = mutable.Buffer.empty[String]
-    var depth = 0; var inStr = false; var inTick = false; var start = 0; var i = 0
-    while (i < s.length) {
-      if (inStr) { val (ni, still) = scanLiteralChar(s, i); i = ni; inStr = still }
-      else if (inTick) { if (s.charAt(i) == '`') inTick = false; i += 1 }
-      else {
-        s.charAt(i) match {
-          case '\'' => inStr = true
-          case '`' => inTick = true // backticked names can contain ','
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case ',' if depth == 0 => parts += s.substring(start, i); start = i + 1
-          case _ =>
-        }
-        i += 1
-      }
-    }
-    parts += s.substring(start)
-    parts.toSeq.map { a =>
-      val eq = a.indexOf('=')
-      require(eq > 0, s"malformed assignment: $a")
-      (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"), a.substring(eq + 1).trim)
-    }
   }
 
   // Complete any multi-table commit a previous process died inside of

@@ -347,13 +347,9 @@ final class MutableTable private (
     // manifest even right after a restart (writeManifest persists only
     // what the in-memory map holds — review finding, round 15)
     loadStats(base)
-    val ti0 = System.nanoTime()
     val newFiles = stageWrite(data)
-    val ti1 = System.nanoTime()
     try {
       primaryKey.foreach(pk => pkCheck(base, newFiles, pk))
-      if (graft.Engine.dmlTrace)
-        System.err.println(f"[dml-trace] insert write=${(ti1 - ti0) / 1e6}%.0f pkcheck=${(System.nanoTime() - ti1) / 1e6}%.0f ms")
       // row count straight off the footers — no counting job
       val n = newFiles.map(f =>
         statsFor(f).values.headOption.map(_.rows).getOrElse(-1L)) match {
@@ -564,7 +560,6 @@ final class MutableTable private (
     if (candidates.isEmpty) return Some((base, 0L))
     val candRows = candidates.map(rowCountOf)
     if (candRows.exists(_ < 0) || candRows.sum > driverRewriteMaxRows) return None
-    val t0 = System.nanoTime()
     var matched = 0L
     val outRows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
     val affected = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -604,8 +599,6 @@ final class MutableTable private (
     val nv = allocVersion()
     val files = all.filterNot(affected.contains) ++ replacement
     if (publishNow) commit(nv, files) else writeManifest(nv, files)
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[dml-trace] driver-rewrite files=${affected.size} rows=${outRows.size} ${(System.nanoTime() - t0) / 1e6}%.0f ms")
     Some((nv, matched))
   }
 
@@ -639,7 +632,6 @@ final class MutableTable private (
     val small = withRows.filter { case (_, r) => r >= 0 && r <= compactSmallRows }
     if (small.size < compactTriggerFiles) return (files, None)
     if (small.map(_._2).sum > driverRewriteMaxRows) return (files, None)
-    val t0 = System.nanoTime()
     val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
     small.foreach { case (f, _) =>
       cachedRows(f) match {
@@ -658,8 +650,6 @@ final class MutableTable private (
         return (files, None)
     }
     RowCache.shared.put(cacheKey, name, rows.toIndexedSeq) // write-through
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[dml-trace] micro-compact ${small.size} files, ${rows.size} rows, ${(System.nanoTime() - t0) / 1e6}%.0f ms")
     val smallSet = small.map(_._1).toSet
     (files.filterNot(smallSet) :+ name, Some(name))
   }
@@ -931,18 +921,13 @@ final class MutableTable private (
         !e.isInstanceOf[AttributeReference]))
       return None
     val refNames = resolved.collect { case a: AttributeReference => a.name }.distinct.sorted
-    val tScan0 = System.nanoTime()
-    var misses = 0
     val scans = candidates.map { f =>
       discoveryScans.getOrElseUpdate((f, refNames)) {
-        misses += 1
         val df = dmlSession.read.schema(schema).parquet(dataDir.resolve(f).toString)
           .select(refNames.map(col) :+ input_file_name().as("__file"): _*)
         org.apache.spark.sql.graft.DiscoveryScan.prepareScan(df)
       }
     }
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[dml-trace] fastAffected scans=${candidates.size} misses=$misses build=${(System.nanoTime() - tScan0) / 1e6}%.0f ms")
     // per-file scans of one schema share the output SHAPE (names, types,
     // ordinals); binding is ordinal-based, so the union is sound
     val output = scans.head.output
@@ -1228,10 +1213,8 @@ final class MutableTable private (
     // has no check, so those updates take the planned path below
     val touchesPk = primaryKey.exists(set.contains)
     if (!touchesPk) driverRewrite(base, cond, Some(set), publishNow).foreach(return _)
-    val t0 = System.nanoTime()
     val all = readManifest(base)
     val (affected, updated) = affectedStats(base, cond)
-    val t1 = System.nanoTime()
     if (affected.isEmpty) return (base, 0L)
     val affectedDf = dmlSession.read.schema(schema)
       .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
@@ -1256,12 +1239,9 @@ final class MutableTable private (
           throw e
       }
     }
-    val t2 = System.nanoTime()
     val nv = allocVersion()
     val files = untouched ++ replacement
     commitOrClean(nv, files, publishNow)
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[dml-trace] update discovery=${(t1 - t0) / 1e6}%.0f rewrite=${(t2 - t1) / 1e6}%.0f commit=${(System.nanoTime() - t2) / 1e6}%.0f ms")
     (nv, updated)
   }
 

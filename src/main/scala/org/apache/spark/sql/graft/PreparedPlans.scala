@@ -101,8 +101,8 @@ object PreparedPlans {
     df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed
 
   /** MEASURED pin calibration: time full re-executions of the plan
-    * under both regimes and return (keepAqe, pinnedMs, keptMs) by the
-    * min over `reps` interleaved samples per regime.
+    * under both regimes and return whether to keep AQE, by the min over
+    * `reps` interleaved samples per regime.
     *
     * Why measure instead of trusting [[pinnable]]: whether AQE earns
     * its ~110 ms re-planning overhead depends on runtime cardinalities
@@ -120,8 +120,7 @@ object PreparedPlans {
     * execution without driver-side result materialization, so
     * calibrating a wide SELECT cannot OOM the driver.
     */
-  def calibrate(spark: SparkSession, plan: LogicalPlan, reps: Int = 2)
-      : (Boolean, Double, Double) = {
+  def calibrate(spark: SparkSession, plan: LogicalPlan, reps: Int = 2): Boolean = {
     def run(keepAqe: Boolean): Double = {
       val t0 = System.nanoTime()
       reexec(spark, plan, keepAqe).asInstanceOf[ClassicDataFrame]
@@ -138,7 +137,7 @@ object PreparedPlans {
       if (pinned) pinnedMs = math.min(pinnedMs, run(keepAqe = false))
       else keptMs = math.min(keptMs, run(keepAqe = true))
     }
-    (keepDecision(pinnedMs, keptMs), pinnedMs, keptMs)
+    keepDecision(pinnedMs, keptMs)
   }
 
   /** THE keep-AQE policy, shared by [[calibrate]] (the server's

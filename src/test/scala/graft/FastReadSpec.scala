@@ -114,6 +114,45 @@ class FastReadSpec extends SparkTestBase {
     catalog.drop("fr_fb")
   }
 
+  test("equivalent spellings of a key read take the driver path; other shapes stay planned") {
+    val (sess, catalog) = freshSession()
+    load(catalog, "fr_sp")
+    // the planned reference reads the same text with its values bound in
+    def check(sql: String, params: Seq[Any], fast: Boolean): Unit = {
+      val p = sess.createPrepared(sql)
+      assert(p.pointRead.isDefined == fast, s"detected=${p.pointRead}: $sql")
+      val hits0 = ServeCounters.pointReadHits.get()
+      val ((plan, got), jobs) = JobGroups.jobsDuring(spark) {
+        val df = sess.executePrepared(p.handle, params)
+        (df.queryExecution.executedPlan, df.collect().map(_.toString).toSeq)
+      }
+      val planned = sess.sql(SqlParams.bind(sql, params)).collect().map(_.toString).toSeq
+      if (sql.contains("ORDER BY")) assert(got == planned, s"$sql with $params")
+      else assert(got.sorted == planned.sorted, s"$sql with $params")
+      assert(planned.nonEmpty, s"$sql: the fixture answers rows")
+      if (fast) {
+        assert(plan.isInstanceOf[PointReadExec], s"$sql declined to ${plan.nodeName}")
+        assert(jobs == 0, s"$sql started $jobs Spark jobs")
+        assert(ServeCounters.pointReadHits.get() == hits0 + 1, s"$sql: no counted hit")
+      } else assert(!plan.isInstanceOf[PointReadExec], s"$sql was served on the driver")
+    }
+    check("SELECT * FROM fr_sp WHERE ? = k", Seq(250L), fast = true)
+    check("SELECT u.k, u.s FROM fr_sp AS u WHERE u.k = ?", Seq(42L), fast = true)
+    check("SELECT `s`, `k` FROM `fr_sp` WHERE `k` = ?", Seq(7L), fast = true)
+    check("SELECT s FROM fr_sp /* key read */ WHERE k = ?", Seq(8L), fast = true)
+    check("SELECT s FROM fr_sp -- key read\nWHERE k = ?", Seq(9L), fast = true)
+    check("select k, v\n  from fr_sp\n where k in (?, ?)\n", Seq(3L, 300L), fast = true)
+    check("SELECT k, s FROM fr_sp WHERE k BETWEEN ? AND ? ORDER BY k DESC NULLS LAST",
+      Seq(95L, 105L), fast = true)
+    // ORDER BY another column, LIMIT, NOT BETWEEN, a computed bound, OR
+    check("SELECT k, v FROM fr_sp WHERE k BETWEEN ? AND ? ORDER BY s", Seq(95L, 105L), fast = false)
+    check("SELECT k FROM fr_sp WHERE k BETWEEN ? AND ? ORDER BY k LIMIT 3", Seq(95L, 105L), fast = false)
+    check("SELECT k FROM fr_sp WHERE k NOT BETWEEN ? AND ? ORDER BY k", Seq(5L, 495L), fast = false)
+    check("SELECT s FROM fr_sp WHERE k = ? + 1", Seq(41L), fast = false)
+    check("SELECT s FROM fr_sp WHERE k = ? OR k = ?", Seq(41L, 43L), fast = false)
+    catalog.drop("fr_sp")
+  }
+
   test("concurrent fast-path reads racing autocommit DML always see a consistent snapshot") {
     val (readerSess, catalog) = freshSession()
     val writerSess = new Session("fastread-writer", spark.newSession(), Some(catalog))

@@ -92,6 +92,33 @@ class SqlGatewaySpec extends SparkTestBase {
     }
   }
 
+  test("/prepare answers the placeholder count that binding uses") {
+    withGateway { (port, _) =>
+      def paramCount(sql: String): Int = {
+        val conn = new URL(s"http://127.0.0.1:$port/prepare")
+          .openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestMethod("POST")
+        conn.setDoOutput(true)
+        conn.getOutputStream.write(sql.getBytes(StandardCharsets.UTF_8))
+        val body = new String(conn.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
+        conn.disconnect()
+        """"param_count":(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toInt)
+          .getOrElse(fail(s"no param_count in $body"))
+      }
+      val escaped = "SELECT k FROM gw_pc_v WHERE s = 'it\\'s' AND k = ?"
+      assert(paramCount(escaped) == 1)
+      assert(paramCount("SELECT /* ? */ ? AS a") == 1)
+      assert(paramCount("SELECT `a?b` FROM (SELECT 1 AS `a?b`) WHERE `a?b` = ?") == 1)
+      assert(paramCount("SELECT 'why?' AS q") == 0)
+      // the escaped statement executes with its one argument
+      val client = new HttpSqlClient(s"http://127.0.0.1:$port")
+      client.query("CREATE OR REPLACE TEMP VIEW gw_pc_v AS " +
+        "SELECT * FROM VALUES (1L, 'it\\'s'), (2L, 'its') AS v(k, s)")
+      val h = client.prepare(escaped)
+      assert(client.executeQuery(h, Seq(1L)).rows.map(_.getLong(0)).toSeq == Seq(1L))
+    }
+  }
+
   test("Nth gateway /exec of one handle serves from the session's plan cache (VERDICT r19 #1)") {
     val catalog = sources.MutableCatalog(spark)
     val registry = new SessionRegistry(spark, catalog = Some(catalog))

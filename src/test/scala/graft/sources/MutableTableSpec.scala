@@ -170,6 +170,51 @@ class MutableTableSpec extends SparkTestBase {
     cat.drop("bt_t")
   }
 
+  test("UPDATE and DELETE route from Spark's parse: comments, case, backticks, qualifiers") {
+    val cat = MutableCatalog(spark)
+    cat.create("rt_p", StructType(Seq(
+      StructField("k", LongType), StructField("s", StringType), StructField("n", LongType))))
+    assert(cat.route("INSERT INTO rt_p VALUES (1, 'a', 1), (2, 'b', 2), (3, 'c', 3), (4, 'd', 4)")
+      .contains(4L))
+    def row(k: Long) = spark.table("rt_p").where(col("k") === k).collect().map(r =>
+      (r.getString(1), r.getLong(2))).headOption
+    assert(cat.route("/* note */ UPDATE rt_p SET s = 'x' WHERE k = 1").contains(1L))
+    assert(row(1) == Some(("x", 1L)))
+    assert(cat.route("update rt_p\n  set n = n + 10\n  where k = 2").contains(1L))
+    assert(row(2) == Some(("b", 12L)))
+    assert(cat.route("UPDATE `rt_p` SET `s` = 'y' WHERE `k` = 3").contains(1L))
+    assert(row(3) == Some(("y", 3L)))
+    assert(cat.route("UPDATE rt_p SET rt_p.s = 'q' WHERE rt_p.k = 4").contains(1L))
+    assert(row(4) == Some(("q", 4L)))
+    assert(cat.route("UPDATE rt_p AS u SET u.n = 7 WHERE u.k = 4").contains(1L))
+    assert(row(4) == Some(("q", 7L)))
+    assert(cat.route("-- note\ndelete from rt_p where k = 1").contains(1L))
+    assert(row(1).isEmpty)
+    assert(cat.route("DELETE FROM rt_p").contains(3L))
+    assert(spark.table("rt_p").count() == 0)
+    cat.drop("rt_p")
+  }
+
+  test("UPDATE on an unmanaged or unparsable target is not routed: Spark reports its own error") {
+    val cat = MutableCatalog(spark)
+    cat.create("rt_e", StructType(Seq(StructField("k", LongType), StructField("s", StringType))))
+    val sess = new graft.Session("route-errors", spark.newSession(), Some(cat))
+    sess.spark.range(3).createOrReplaceTempView("rt_plain")
+    Seq("UPDATE rt_plain SET id = 1 WHERE id = 2", "DELETE FROM rt_plain WHERE id = 2",
+        "UPDATE rt_e SET s = WHERE k = 1", "DELETE FROM rt_e WHERE k =",
+        // parses, with WHERE as the table's alias: routed, it deleted every row
+        "DELETE FROM rt_e WHERE").foreach { stmt =>
+      assert(cat.route(stmt).isEmpty, stmt)
+      val routed = intercept[Exception](sess.sql(stmt))
+      val spark0 = intercept[Exception](sess.spark.sql(stmt).collect())
+      assert(routed.getClass == spark0.getClass, s"$stmt: $routed vs $spark0")
+      assert(graft.ErrorMapping.classify(routed) == graft.ErrorMapping.classify(spark0), stmt)
+    }
+    assert(graft.ErrorMapping.classify(intercept[Exception](sess.sql("UPDATE rt_e SET s = WHERE k = 1")))
+      == graft.ErrorMapping.InvalidArgument)
+    cat.drop("rt_e")
+  }
+
   test("drop defers directory reclaim while a live txn has staged DML (r19 advice)") {
     val cat = MutableCatalog(spark)
     val t = cat.create("defer_t", schema, primaryKey = Some("id"))
