@@ -42,15 +42,15 @@ final class Session(val id: String, val spark: SparkSession,
       size() > schemaCacheMax
   }
 
-  /** Plan-only schema for a query (A4, engine/connection.rs:56-65), LRU
-    * cached by trimmed SQL text.
-    */
   /** Expose the micro-lake's current snapshots in THIS session's view
     * namespace before planning against Spark SQL (newSession isolates
     * temp views; the catalog's views live on the root session).
     */
   private[graft] def ensureCatalogViews(): Unit = catalog.foreach(_.syncViews(spark, txn))
 
+  /** Plan-only schema for a query (A4, engine/connection.rs:56-65), LRU
+    * cached by trimmed SQL text.
+    */
   def schemaForQuery(sql: String): StructType = {
     val key = sql.trim
     schemaCache.synchronized {
@@ -176,19 +176,14 @@ final class Session(val id: String, val spark: SparkSession,
     * INTO the plan (they were literals at analysis), so a changed
     * value re-plans — the price of letting the optimizer constant-fold
     * and push the literals into parquet scans, which a value-agnostic
-    * plan template could never do.
+    * plan template could never do. `keepAqe` is fixed when the entry is
+    * built, from the plan's shape (`PreparedPlans.pinnable`).
     */
   final case class CachedPlan(
       fingerprint: (Long, Long),
       params: Seq[Any],
       analyzed: LogicalPlan,
-      @volatile var keepAqe: Boolean) {
-    // hits served so far; the pin is CALIBRATED (measured, not the
-    // structural prior) once the handle proves hot — see calibratePlan
-    val hits = new AtomicLong()
-    @volatile var calibrated: Boolean = false
-    @volatile var calibrationQueued: Boolean = false
-  }
+      keepAqe: Boolean)
 
   final case class Prepared(
       handle: String,
@@ -422,7 +417,7 @@ final class Session(val id: String, val spark: SparkSession,
   // ANALYZED plan: parse + catalog resolution are amortized across
   // executions; the optimizer and physical planning re-run per execution
   // (fresh stages, query-time functions re-fold), with adaptive
-  // execution pinned off per the shared per-plan policy.
+  // execution pinned off per plan, decided once at the cache miss.
   private[graft] val planCacheHits = new AtomicLong()
   private[graft] val planCacheMisses = new AtomicLong()
   private val cacheableVerbs = Set("SELECT", "WITH", "VALUES", "TABLE", "FROM")
@@ -438,7 +433,7 @@ final class Session(val id: String, val spark: SparkSession,
     * the generic execution and then populates the cache from its plans.
     */
   private def cachedQuery(p: Prepared, bound: Seq[Any]): Option[DataFrame] = {
-    import org.apache.spark.sql.graft.{PlanReuse, PreparedPlans}
+    import org.apache.spark.sql.graft.PreparedPlans
     // bypass: read-your-writes inside a txn with staged DML resolves
     // views to the session's STAGED snapshots — fingerprints track only
     // published state; and information_schema views recompute per query
@@ -450,7 +445,6 @@ final class Session(val id: String, val spark: SparkSession,
       case Some(cp) if cp.fingerprint == fp && cp.params == bound =>
         planCacheHits.incrementAndGet()
         ServeCounters.planCacheHits.incrementAndGet()
-        maybeCalibrate(cp)
         Some(abortTxnOnError {
           ensureCatalogViews() // steady-state: one version compare per table
           PreparedPlans.reexec(spark, cp.analyzed, cp.keepAqe)
@@ -467,53 +461,11 @@ final class Session(val id: String, val spark: SparkSession,
         // memoized QueryExecution, so nothing is planned twice). A
         // params vector holding arrays (binary) never compares equal —
         // it just re-plans, which is slower, never wrong.
-        try {
-          val analyzed = PreparedPlans.analyzedPlan(df)
-          if (PreparedPlans.cacheable(analyzed)) {
-            val keepAqe = !PreparedPlans.pinnable(PlanReuse.optimizedPlan(df))
-            p.plan = Some(CachedPlan(fp, bound, analyzed, keepAqe))
-          }
+        try PreparedPlans.planToCache(df).foreach { case (analyzed, keepAqe) =>
+          p.plan = Some(CachedPlan(fp, bound, analyzed, keepAqe))
         } catch { case scala.util.control.NonFatal(_) => () } // caching must never fail the query
         Some(df)
     }
-  }
-
-  // === pin calibration ======================================================
-  // The structural prior (PreparedPlans.pinnable) guesses the pin from
-  // the plan shape, but whether AQE's ~110 ms re-planning overhead pays
-  // for itself depends on runtime cardinalities statics cannot see
-  // (q18's 300-row HAVING set vs q21's 100k-row co-partitioned
-  // aggregate — measured per regime at sf0.1). A handle that proves HOT
-  // (2nd cache hit) gets ONE background calibration: both regimes
-  // execute once on a CLONED session (conf isolation; the analyzed-plan
-  // transplant is the same trick syncViews uses), timed to completion
-  // without driver-side materialization, and the faster regime is fixed
-  // — off the request path, so no client ever pays for it. Bounded: one
-  // calibration per CachedPlan instance, capped sessions-wide by the
-  // single calibration thread; invalidation (DDL/snapshot) makes a new
-  // CachedPlan, which re-earns calibration by getting hot again.
-  private def maybeCalibrate(cp: CachedPlan): Unit = {
-    if (cp.hits.incrementAndGet() == 2 && Session.autoCalibratePin &&
-        !cp.calibrated && !cp.calibrationQueued) {
-      cp.calibrationQueued = true
-      Session.calibrationPool.submit(new Runnable {
-        override def run(): Unit =
-          try calibrateNow(cp)
-          catch { case scala.util.control.NonFatal(_) => () } // best-effort: the prior stands
-      })
-      ()
-    }
-  }
-
-  /** Synchronous calibration of a cached plan (the background task's
-    * body; specs call it directly for determinism). Runs on a session
-    * CLONE so the conf toggles never race this session's statements.
-    */
-  private[graft] def calibrateNow(cp: CachedPlan): Unit = {
-    val clone = spark.newSession()
-    catalog.foreach(_.syncViews(clone, None)) // published snapshots only
-    cp.keepAqe = org.apache.spark.sql.graft.PreparedPlans.calibrate(clone, cp.analyzed)
-    cp.calibrated = true
   }
 
   def closePrepared(handle: String): Unit = prepared.synchronized {
@@ -611,23 +563,6 @@ object Session {
     * others' plans, which is safe and rare.
     */
   private[graft] val globalDdlEpoch = new AtomicLong()
-
-  /** Auto-calibrate the AQE pin of hot prepared plans in the background
-    * (one measured A/B per hot handle). Off = the structural prior
-    * stands; specs that need deterministic pin state flip this.
-    */
-  @volatile private[graft] var autoCalibratePin: Boolean = true
-
-  /** ONE daemon thread for all sessions' pin calibrations: calibration
-    * is a convergence optimization, never urgent — a single queue
-    * bounds the speculative re-execution load engine-wide.
-    */
-  private[graft] lazy val calibrationPool =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-pin-calibration")
-      t.setDaemon(true)
-      t
-    })
 
   /** A prepared key read's shape, answered by `pointReadFast`: the key
     * column, the projected columns (None = `*`), and which filter binds

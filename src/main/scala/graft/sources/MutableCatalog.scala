@@ -401,7 +401,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
       val marker = stagedV.map(v => -(v + 1)).getOrElse(viewVersions.getOrElse(name, 0L))
       if (!seen.synchronized(seen.get(name).contains(marker))) {
         val snapshot = stagedV.map(t.asOf).getOrElse(t.df)
-        org.apache.spark.sql.graft.PlanReuse.reanalyzed(target, snapshot)
+        org.apache.spark.sql.graft.PreparedPlans.reanalyzed(target, snapshot)
           .createOrReplaceTempView(name)
         seen.synchronized(seen(name) = marker)
       }
@@ -489,27 +489,27 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
         // driver-side literal fast path (VERDICT r15 #3): a pure-
         // literal VALUES batch into a supported-schema table skips the
         // SQL parse, the alignment analysis, and the Spark write job —
-        // one parquet-mr write + pointer swap. Any gate failure (an
+        // one parquet-mr write + manifest (pointer swap, or a staged
+        // manifest inside a transaction). Any gate failure (an
         // expression in VALUES, a type that doesn't coerce naturally,
         // an unsupported column type) falls through to the planned
-        // path below; DuplicateKeyException propagates identically.
-        if (txn.isEmpty) {
-          DriverDml.parseValuesAligned(values, t.schema, explicit,
-            DriverDml.utcSession(spark))
-            .flatMap(t.insertRowsDirect)
-            .foreach(n => return Some(n))
+        // path; DuplicateKeyException propagates identically.
+        val direct = DriverDml.parseValuesAligned(values, t.schema, explicit,
+          DriverDml.utcSession(spark))
+        def planned(): DataFrame = {
+          val batch = spark.sql(s"SELECT * FROM (VALUES $values)")
+          // name the incoming columns after the target list (or table
+          // prefix) so alignment matches the appender path (A8)
+          val named = explicit match {
+            case Some(cols) => batch.toDF(cols: _*)
+            case None => batch.toDF(t.schema.fieldNames.take(batch.schema.length).toIndexedSeq: _*)
+          }
+          BatchAlign.alignToSchema(named, t.schema, explicit)
         }
-        val batch = spark.sql(s"SELECT * FROM (VALUES $values)")
-        // name the incoming columns after the target list (or table
-        // prefix) so alignment matches the appender path (A8)
-        val named = explicit match {
-          case Some(cols) => batch.toDF(cols: _*)
-          case None => batch.toDF(t.schema.fieldNames.take(batch.schema.length).toIndexedSeq: _*)
-        }
-        val aligned = BatchAlign.alignToSchema(named, t.schema, explicit)
         txn match {
-          case Some(x) => stageInTxn(table, t, x)(bv => t.stageInsert(bv, aligned))
-          case None    => t.insert(aligned)
+          case Some(x) => stageInTxn(table, t, x)(bv =>
+            direct.flatMap(t.stageInsertRows(bv, _)).getOrElse(t.stageInsert(bv, planned())))
+          case None => direct.flatMap(t.insertRowsDirect).getOrElse(t.insert(planned()))
         }
       }
     case _ => None

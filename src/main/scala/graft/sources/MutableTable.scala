@@ -383,12 +383,23 @@ final class MutableTable private (
     * propagates like the planned path's.
     */
   def insertRowsDirect(rows: Seq[Array[Any]]): Option[Long] = writeLock.synchronized {
+    insertRowsCore(currentVersion, rows, publishNow = true).map(_._2)
+  }
+
+  /** Transactional variant of [[insertRowsDirect]]: append on top of
+    * `base` into a new STAGED manifest, like [[stageInsert]]. Returns
+    * (stagedVersion, rowCount), or None when the driver path declines.
+    */
+  def stageInsertRows(base: Long, rows: Seq[Array[Any]]): Option[(Long, Long)] =
+    writeLock.synchronized { insertRowsCore(base, rows, publishNow = false) }
+
+  private def insertRowsCore(base: Long, rows: Seq[Array[Any]],
+      publishNow: Boolean): Option[(Long, Long)] = {
     // row cap (review finding, round 16): a bulk literal batch past the
     // driver bound belongs to the planned path — parallel write, 32 MB
     // file sizing — not a single-threaded one-file parquet-mr write
     if (!DriverDml.supported(schema) || rows.isEmpty ||
       rows.size > driverRewriteMaxRows) return None
-    val base = currentVersion
     loadStats(base)
     // in-batch duplicate check, in memory — canonicalize signed zeros
     // exactly like pkCheckDriverSide so both fast paths match the
@@ -442,13 +453,14 @@ final class MutableTable private (
           pkCheck(base, Seq(name), pk)
       }
       val (manifest, compactFile) = compactSmallDriverSide(readManifest(base) :+ name)
-      try commit(allocVersion(), manifest)
+      val nv = allocVersion()
+      try commitOrClean(nv, manifest, publishNow)
       catch {
         case e: Throwable => // failed commit never referenced the merge
           dropStaged(compactFile.toSeq)
           throw e
       }
-      Some(rows.size.toLong)
+      Some((nv, rows.size.toLong))
     } catch {
       case e: Throwable =>
         dropStaged(Seq(name))
@@ -660,8 +672,8 @@ final class MutableTable private (
     * side is already unique, so any key with total count > 1 involving
     * a staged row is a violation; staged-count > 1 distinguishes the
     * in-batch message (checked first, like the pre-write shape did).
-    */
-  /** `oldOverride`: the table-side file set to clash-check against —
+    *
+    * `oldOverride`: the table-side file set to clash-check against —
     * defaults to the base manifest (INSERT), while an UPDATE that
     * assigns the pk passes the manifest MINUS the rewritten files (the
     * base set would false-clash every unchanged key against its own
@@ -838,18 +850,11 @@ final class MutableTable private (
         }
     } catch { case _: Exception => None }
 
-  /** Analysis-free candidate pruning for the prepared point-read fast
-    * path: files of `version` whose bounds admit `col = lit`. Pure
+  /** Analysis-free candidate pruning: files of `version` whose bounds
+    * admit `cond`, an already-built catalyst tree (the prepared key read
+    * constructs its equality/IN/range predicate directly). Pure
     * driver-side stats math — no Spark plan is built, so it is cheap
     * enough to run per prepared execution.
-    */
-  def candidateFilesFor(version: Long, colName: String,
-      lit: org.apache.spark.sql.catalyst.expressions.Literal): Seq[String] =
-    candidateFilesExpr(version, org.apache.spark.sql.catalyst.expressions.EqualTo(
-      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(colName), lit))
-
-  /** Analysis-free pruning against an already-built catalyst tree (the
-    * prepared fast paths construct Eq/range predicates directly).
     */
   def candidateFilesExpr(version: Long,
       cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {

@@ -2,27 +2,35 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
-import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame}
+import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Prepared-statement plan-cache support: cacheability and the
-  * per-plan adaptive-execution pin policy shared by the served path
-  * ([[graft.Session]]'s handle cache) and the benchmark's prepared
-  * re-executions — so the bench measures exactly the plan regime the
-  * server ships (VERDICT r19 "what's wrong" #1).
+/** Re-execution of analyzed plans: the served prepared-plan cache
+  * ([[graft.Session]]'s handle cache) and the catalog's per-session
+  * snapshot views ([[graft.sources.MutableCatalog.syncViews]]).
   *
   * The reference caches a prepared statement's optimized plan and
   * re-binds values per EXECUTE, never re-planning (prepared.rs:344-372).
   * Spark's nearest safe equivalent caches the ANALYZED plan (parse +
-  * catalog resolution amortized) and re-runs the optimizer + physical
-  * planning per execution: the optimizer pass re-folds
-  * current_timestamp()/current_date() per execution (ComputeCurrentTime
-  * — caching the OPTIMIZED plan would freeze query-time functions at
-  * first execution) and on an already-converged tree each rule batch
-  * exits after one iteration, so the amortization is nearly identical.
+  * catalog resolution amortized) and spins a fresh QueryExecution per
+  * execution, so optimization, physical planning and EVERY stage re-run
+  * (re-collecting one Dataset instance would silently reuse its
+  * materialized shuffle outputs — result caching, not plan reuse). The
+  * optimizer pass re-folds current_timestamp()/current_date() per
+  * execution (ComputeCurrentTime — caching the OPTIMIZED plan would
+  * freeze query-time functions at first execution), and on an
+  * already-converged tree each rule batch exits after one iteration, so
+  * the amortization is nearly identical.
+  *
+  * Lives in org.apache.spark.sql.* because Dataset.ofRows is private[sql].
   */
 object PreparedPlans {
+
+  /** Fresh executable DataFrame over `df`'s analyzed plan. */
+  def reanalyzed(spark: SparkSession, df: DataFrame): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[ClassicSparkSession],
+      df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed)
 
   /** Whether re-executions of this plan should pin adaptive execution
     * OFF (true) or keep it (false).
@@ -56,15 +64,23 @@ object PreparedPlans {
     }
   }
 
-  /** Whether a plan is safe to cache across executions: any
-    * nondeterministic expression (rand(), uuid(), shuffle(), …) has its
-    * seed fixed at analysis time, so re-executing the cached plan would
-    * repeat the first execution's draws instead of re-rolling — the
-    * reference's EXECUTE re-rolls. Walks subquery plans too (a rand()
-    * inside an IN-subquery is just as frozen).
+  /** The plan a cache miss caches: the first execution's analyzed plan
+    * and whether its re-executions keep AQE (`!pinnable` of the
+    * optimized plan, decided once here). None when the plan must not be
+    * cached: any nondeterministic expression (rand(), uuid(), shuffle(),
+    * …) has its seed fixed at analysis time, so re-executing the cached
+    * plan would repeat the first execution's draws instead of
+    * re-rolling — the reference's EXECUTE re-rolls. Forces optimization
+    * now; the caller's collect reuses the same QueryExecution.
     */
-  def cacheable(analyzed: LogicalPlan): Boolean = !hasNondeterminism(analyzed)
+  def planToCache(df: DataFrame): Option[(LogicalPlan, Boolean)] = {
+    val qe = df.asInstanceOf[ClassicDataFrame].queryExecution
+    if (hasNondeterminism(qe.analyzed)) None
+    else Some((qe.analyzed, !pinnable(qe.optimizedPlan)))
+  }
 
+  // walks subquery plans too (a rand() inside an IN-subquery is just as
+  // frozen)
   private def hasNondeterminism(plan: LogicalPlan): Boolean =
     plan.exists(node => node.expressions.exists(exprHasNondeterminism))
 
@@ -77,82 +93,21 @@ object PreparedPlans {
       case x => !x.deterministic
     }.isDefined
 
-  /** Re-execute a prepared plan under the per-plan pin decision: a
-    * fresh QueryExecution over the cached/analyzed plan (every stage
-    * re-runs — no shuffle-output reuse), with adaptive execution
-    * scoped OFF for the physical planning of pinnable plans only. The
-    * physical plan is forced INSIDE the conf scope (the lazy
-    * executedPlan reads the conf when first materialized); the
-    * caller's collect then runs the already-fixed plan.
+  /** Re-execute a cached plan: a fresh QueryExecution over the analyzed
+    * plan (every stage re-runs — no shuffle-output reuse), with adaptive
+    * execution scoped OFF for the physical planning of pinned plans
+    * only. The physical plan is forced INSIDE the conf scope (the lazy
+    * executedPlan reads the conf when first materialized); the caller's
+    * collect then runs the already-fixed plan.
     */
   def reexec(spark: SparkSession, plan: LogicalPlan, keepAqe: Boolean): DataFrame = {
-    val df = PlanReuse.execute(spark, plan)
+    val df = Dataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
     if (!keepAqe) {
       val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try PlanReuse.forcePlanned(df)
+      try df.queryExecution.executedPlan
       finally spark.conf.set("spark.sql.adaptive.enabled", prior)
     }
     df
   }
-
-  /** Analyzed plan of a DataFrame (forces analysis if not yet run). */
-  def analyzedPlan(df: DataFrame): LogicalPlan =
-    df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed
-
-  /** MEASURED pin calibration: time full re-executions of the plan
-    * under both regimes and return whether to keep AQE, by the min over
-    * `reps` interleaved samples per regime.
-    *
-    * Why measure instead of trusting [[pinnable]]: whether AQE earns
-    * its ~110 ms re-planning overhead depends on runtime cardinalities
-    * statics cannot see — q18's HAVING set is ~300 rows (AQE flips the
-    * broadcast to the cheap side: 362 vs 418 ms), q21's per-order
-    * aggregate is ~100 k rows co-partitioned with its join (AQE can
-    * change nothing: 421 vs 471 ms), q15 wins from AQE's partition
-    * coalescing across four tiny exchanges (198 vs 242 ms) — all
-    * measured at sf0.1. The same comparison made
-    * at 100 TB would keep AQE wherever re-planning still pays, which
-    * is the scale-safe direction. [[pinnable]] is the prior used until
-    * a measurement exists.
-    *
-    * The plan executes to completion via `toRdd.count()` — distributed
-    * execution without driver-side result materialization, so
-    * calibrating a wide SELECT cannot OOM the driver.
-    */
-  def calibrate(spark: SparkSession, plan: LogicalPlan, reps: Int = 2): Boolean = {
-    def run(keepAqe: Boolean): Double = {
-      val t0 = System.nanoTime()
-      reexec(spark, plan, keepAqe).asInstanceOf[ClassicDataFrame]
-        .queryExecution.toRdd.count()
-      (System.nanoTime() - t0) / 1e6
-    }
-    var pinnedMs = Double.MaxValue
-    var keptMs = Double.MaxValue
-    // COUNTERBALANCED order (A B B A …): within a naive A,B round the
-    // second regime always runs warmer (JIT/codegen/page cache), which
-    // systematically biased the decision toward whichever ran last
-    (0 until 2 * reps).foreach { i =>
-      val pinned = (i % 4) == 0 || (i % 4) == 3
-      if (pinned) pinnedMs = math.min(pinnedMs, run(keepAqe = false))
-      else keptMs = math.min(keptMs, run(keepAqe = true))
-    }
-    keepDecision(pinnedMs, keptMs)
-  }
-
-  /** THE keep-AQE policy, shared by [[calibrate]] (the server's
-    * background path) and the bench's collect-based calibration: keep
-    * AQE only when it pays a ≥10% margin. A raw keptMs<pinnedMs
-    * comparison flips coin-toss queries to keep-AQE on run noise, and
-    * the two regimes are not symmetric costs: a kept decision pays
-    * AQE's driver-side re-planning on EVERY future re-execution and
-    * contends for the scheduler under concurrent terminals (r20 lab:
-    * serial calibration picked keep-AQE for q16/q21-class plans inside
-    * noise, and the 4-terminal window dropped 19.3 → 14.8 req/s on
-    * that mix). Calibration runs at the deployment's own data scale,
-    * so where AQE genuinely pays (q15's partition coalescing, 18%; a
-    * 100 TB broadcast flip) it clears the margin easily.
-    */
-  def keepDecision(pinnedMs: Double, keptMs: Double): Boolean =
-    keptMs < pinnedMs * 0.9
 }

@@ -142,34 +142,29 @@ class PlanCacheSpec extends SparkTestBase {
       s"cached ANALYZED plan must re-fold query time per execution ($t1 vs $t2)")
   }
 
-  test("hot handles earn a measured pin calibration; results stay identical") {
-    val s = mkSession("pc-cal")
-    s.sql("CREATE OR REPLACE TEMP VIEW pc_cal AS SELECT id, id % 7 AS g FROM RANGE(5000)")
-    val p = s.createPrepared("SELECT g, COUNT(*) AS c FROM pc_cal GROUP BY g ORDER BY g")
-    val first = s.executePrepared(p.handle, Seq.empty).collect().map(_.toString).toSeq
-    val cp = p.plan.getOrElse(fail("plan not cached"))
-    assert(!cp.calibrated && !cp.calibrationQueued, "cold handles are not calibrated")
-    // synchronous body (what the background task runs): fixes a MEASURED
-    // regime and marks the plan calibrated
-    s.calibrateNow(cp)
-    assert(cp.calibrated)
-    val after = s.executePrepared(p.handle, Seq.empty).collect().map(_.toString).toSeq
-    assert(after == first, "the calibrated regime must not change results")
-    // the async trigger queues exactly once, on the 2nd HIT of an
-    // uncalibrated plan
-    val q = s.createPrepared("SELECT COUNT(*) AS c FROM pc_cal WHERE g = 3")
-    s.executePrepared(q.handle, Seq.empty).collect() // miss
-    val cq = q.plan.getOrElse(fail("plan not cached"))
-    s.executePrepared(q.handle, Seq.empty).collect() // hit 1
-    assert(!cq.calibrationQueued)
-    s.executePrepared(q.handle, Seq.empty).collect() // hit 2 -> queue
-    assert(cq.calibrationQueued, "the 2nd hit must queue background calibration")
-    // the single calibration thread completes it shortly (bounded poll)
-    val deadline = System.currentTimeMillis() + 30000
-    while (!cq.calibrated && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(cq.calibrated, "background calibration must land")
-    assert(s.executePrepared(q.handle, Seq.empty).collect()(0).getLong(0) ==
-      5000L / 7 + (if (3 < 5000 % 7) 1 else 0))
+  test("the AQE pin is decided once, at the cache miss, from the plan's shape") {
+    import scala.jdk.CollectionConverters._
+    val s = mkSession("pc-pin")
+    s.sql("CREATE OR REPLACE TEMP VIEW pc_pin AS SELECT id, id % 7 AS g FROM RANGE(5000)")
+    // a join whose side holds a grouped aggregate: the plan shape the
+    // pin rule looks at
+    val p = s.createPrepared(
+      "SELECT a.g, COUNT(*) AS c FROM pc_pin a JOIN " +
+        "(SELECT g FROM pc_pin GROUP BY g HAVING COUNT(*) > 700) b ON a.g = b.g " +
+        "GROUP BY a.g ORDER BY a.g")
+    val firstDf = s.executePrepared(p.handle, Seq.empty)
+    val first = firstDf.collect().map(_.toString).toSeq
+    val keepAqe = !org.apache.spark.sql.graft.PreparedPlans.pinnable(
+      firstDf.queryExecution.optimizedPlan)
+    val h0 = s.planCacheHits.get()
+    (2 to 5).foreach { _ =>
+      assert(s.executePrepared(p.handle, Seq.empty).collect().map(_.toString).toSeq == first)
+    }
+    assert(s.planCacheHits.get() == h0 + 4, "executions 2-5 serve from the cached plan")
+    assert(p.plan.map(_.keepAqe).contains(keepAqe),
+      "the pin stays the plan-shape decision made at the first execution")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-pin-calibration"),
+      "no background execution re-measures a cached plan")
   }
 
   test("multi-statement scripts and commands stay off the cache path") {

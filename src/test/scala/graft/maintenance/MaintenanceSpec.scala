@@ -131,15 +131,17 @@ class MaintenanceSpec extends SparkTestBase {
     // stats survive a restart intact: a fresh load() prunes every live
     // file off the PERSISTED manifest stats (the r15 durability fix under
     // concurrency — a compaction that dropped carried-over stats would
-    // leave candidateFiles unable to prune)
+    // leave candidateFilesExpr unable to prune)
     val reloaded = MutableTable.load(spark, t.root.toString)
     // a key outside every live bound prunes to ZERO files — which can
     // only happen if EVERY live file (compacted and carried-over alike)
     // has persisted stats; one stats-less file would always be kept
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    assert(reloaded.candidateFilesFor(reloaded.currentVersion, "id", Literal(99999L)).isEmpty,
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
+    def idEq(k: Long) = EqualTo(UnresolvedAttribute("id"), Literal(k))
+    assert(reloaded.candidateFilesExpr(reloaded.currentVersion, idEq(99999L)).isEmpty,
       "some live file lost its persisted stats across the storm")
-    assert(reloaded.candidateFilesFor(reloaded.currentVersion, "id", Literal(1005L)).nonEmpty)
+    assert(reloaded.candidateFilesExpr(reloaded.currentVersion, idEq(1005L)).nonEmpty)
     assert(reloaded.df.count() == t.df.count())
   }
 }

@@ -249,6 +249,55 @@ class DriverDmlSpec extends SparkTestBase {
     assert(td.insertRowsDirect(Seq(Array[Any](-1.0, 6L))) == Some(1L))
   }
 
+  test("an INSERT inside a transaction is staged on the driver, starting no job") {
+    import org.apache.spark.sql.graft.{JobGroups, PointReadExec}
+    val cat = MutableCatalog(spark)
+    val t = cat.create("ddml_txn", schema, Some("id"))
+    assert(t.insertRowsDirect(Seq(Array[Any](1L, "a", 1.0), Array[Any](5L, "e", 5.0))) == Some(2L))
+    val s = new graft.Session("ddml-txn", spark.newSession(), Some(cat))
+    val other = new graft.Session("ddml-other", spark.newSession(), Some(cat))
+    def names(sess: graft.Session) =
+      sess.sql("SELECT name FROM ddml_txn ORDER BY id").collect().map(_.getString(0)).toSeq
+    val read = s.createPrepared("SELECT name FROM ddml_txn WHERE id = ?")
+    def readKey(k: Long) = {
+      val df = s.executePrepared(read.handle, Seq(k))
+      assert(df.queryExecution.executedPlan.isInstanceOf[PointReadExec], s"key $k read was planned")
+      df.collect().map(_.getString(0)).toSeq
+    }
+    s.sql("BEGIN")
+    val (affected, jobs) = JobGroups.jobsDuring(spark)(s.sql("INSERT INTO ddml_txn VALUES (3, 'c', 3.0)"))
+    assert(jobs == 0, s"in-transaction insert started $jobs Spark jobs")
+    assert(affected.head().getLong(0) == 1L)
+    assert(readKey(3L) == Seq("c"), "the session reads its staged row on the driver")
+    assert(names(other) == Seq("a", "e"), "another session must not see the staged row")
+    s.sql("COMMIT")
+    assert(names(other) == Seq("a", "c", "e"), "COMMIT publishes the staged row")
+    s.sql("BEGIN")
+    s.sql("INSERT INTO ddml_txn VALUES (4, 'd', 4.0)")
+    assert(readKey(4L) == Seq("d"))
+    s.sql("ROLLBACK")
+    assert(readKey(4L).isEmpty && names(other) == Seq("a", "c", "e"), "ROLLBACK discards the row")
+    // a duplicate key, against the staged chain or the published rows,
+    // raises and aborts the transaction: the next statement rolls back
+    s.sql("BEGIN")
+    s.sql("INSERT INTO ddml_txn VALUES (6, 'f', 6.0)")
+    val dup = intercept[t.DuplicateKeyException](s.sql("INSERT INTO ddml_txn VALUES (6, 'g', 0.0)"))
+    assert(dup.getMessage.contains("id=6"))
+    assert(names(s) == Seq("a", "c", "e") && !s.inTransaction, "the failed transaction rolled back")
+    s.sql("BEGIN")
+    intercept[t.DuplicateKeyException](s.sql("INSERT INTO ddml_txn VALUES (5, 'x', 0.0)"))
+    assert(names(s) == Seq("a", "c", "e") && !s.inTransaction)
+    // enough staged inserts to trigger micro-compaction inside the
+    // transaction: other sessions keep the published files until COMMIT
+    s.sql("BEGIN")
+    (10 until 30).foreach(i => s.sql(s"INSERT INTO ddml_txn VALUES ($i, 'n$i', 0.0)"))
+    assert(names(other) == Seq("a", "c", "e"))
+    s.sql("COMMIT")
+    assert(names(other) == Seq("a", "c", "e") ++ (10 until 30).map(i => s"n$i"))
+    assert(t.fileCount < 20, s"${t.fileCount} files: the staged inserts were not compacted")
+    cat.drop("ddml_txn")
+  }
+
   test("r17 types: codec round-trip + Spark read-back + stats kinds for date/ts/decimal") {
     import org.apache.spark.sql.types.Decimal
     val s = StructType(Seq(
