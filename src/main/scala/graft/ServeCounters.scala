@@ -5,8 +5,9 @@ import java.util.concurrent.atomic.AtomicLong
 /** Engine-wide counters of the serving paths a prepared statement can
   * take, served on `status.json`: how many key reads the driver answered
   * and why the others declined to the planned path, how often a cached
-  * prepared plan was reused, and how many DML statements the driver-side
-  * copy-on-write rewrite applied. The row cache reports its own
+  * prepared plan was reused, how many DML statements the driver-side
+  * copy-on-write rewrite applied, and how long micro-lake writes waited
+  * for and held their table's writer lock. The row cache reports its own
   * occupancy (graft.sources.RowCache).
   */
 object ServeCounters {
@@ -30,4 +31,17 @@ object ServeCounters {
   val planCacheHits = new AtomicLong()
   val planCacheMisses = new AtomicLong()
   val driverRewrites = new AtomicLong()
+
+  /** Micro-lake writes (outermost writer-lock acquisitions) and their
+    * summed lock wait and hold, in nanoseconds.
+    */
+  val lakeWrites = new AtomicLong()
+  val lakeLockWaitNanos = new AtomicLong()
+  val lakeLockHoldNanos = new AtomicLong()
+
+  def lakeWrite(waitNanos: Long, holdNanos: Long): Unit = {
+    lakeWrites.incrementAndGet()
+    lakeLockWaitNanos.addAndGet(waitNanos)
+    lakeLockHoldNanos.addAndGet(holdNanos)
+  }
 }

@@ -127,9 +127,9 @@ object StatusServer {
       "serve" -> serveJson)
   }
 
-  /** The serving paths' counters (graft.ServeCounters) and the
-    * micro-lake row cache's occupancy; a hit rate with no lookups yet is
-    * null.
+  /** The serving paths' counters (graft.ServeCounters), the micro-lake
+    * writes with their summed writer-lock wait and hold, and the row
+    * cache's occupancy; a hit rate with no lookups yet is null.
     */
   private def serveJson: String = {
     val rc = graft.sources.RowCache.shared
@@ -143,6 +143,9 @@ object StatusServer {
         "hits" -> num(ServeCounters.planCacheHits.get()),
         "misses" -> num(ServeCounters.planCacheMisses.get())),
       "driver_dml_rewrites" -> num(ServeCounters.driverRewrites.get()),
+      "lake_writes" -> num(ServeCounters.lakeWrites.get()),
+      "lake_lock_wait_ms" -> dbl(ServeCounters.lakeLockWaitNanos.get() / 1e6),
+      "lake_lock_hold_ms" -> dbl(ServeCounters.lakeLockHoldNanos.get() / 1e6),
       "row_cache" -> obj(
         "entries" -> num(rc.entries.toLong),
         "bytes" -> num(rc.bytes),

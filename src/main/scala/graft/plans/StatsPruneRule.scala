@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.sources.{FileStats, StatsRegistry}
 
@@ -45,10 +45,10 @@ case class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
                   val keep = files.filter(p => FileStats.mayMatch(t.statsFor(baseName(p)), cond))
                   if (keep.length == files.length) f
                   else {
-                    val session = hfs.sparkSession
-                    val pruned = new InMemoryFileIndex(
-                      session, keep.toSeq.map(new Path(_)), Map.empty, Some(hfs.dataSchema))
-                    Filter(cond, rel.copy(relation = hfs.copy(location = pruned)(session)))
+                    // the table's own index: statuses come from its
+                    // cache, no listing of the kept files
+                    val pruned = t.fileIndex(keep.toSeq.map(baseName))
+                    Filter(cond, rel.copy(relation = hfs.copy(location = pruned)(hfs.sparkSession)))
                   }
                 } catch { case _: Exception => f }
               case _ => f

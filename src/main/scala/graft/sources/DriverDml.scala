@@ -11,8 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * A native engine (the reference's shape — connection.rs routes point
   * DML straight into the storage layer) applies a one-row INSERT/UPDATE/
   * DELETE in-process; this module gives the micro-lake the same floor:
-  * parse VALUES literals, read/write parquet via parquet-mr, and
-  * evaluate an already-resolved predicate over in-memory rows — all
+  * parse VALUES literals, read/write parquet via parquet-mr on local
+  * files (NIO streams, no Hadoop file system), and evaluate an
+  * already-resolved predicate over in-memory rows — all
   * strictly GATED (supported primitive types, bounded row counts,
   * foldable assignments) with the planned Spark path as the universal
   * fallback, never a second semantics.
@@ -54,8 +55,16 @@ private[sources] object DriverDml {
     })
 
   // === parquet-mr codec ======================================================
+  // Local files only, through parquet's own NIO streams (LocalOutputFile/
+  // LocalInputFile) and a plain map configuration: no Hadoop file system
+  // is involved, so a write leaves no `.crc` checksum sidecar and forks
+  // no `chmod` (Hadoop's LocalFileSystem does both on every file when no
+  // native Hadoop library is loaded). The configuration is fresh per
+  // file: the example writer stores its schema in it.
 
-  private def hadoopConf = FileStats.hadoopConf
+  private def readOptions: org.apache.parquet.ParquetReadOptions =
+    org.apache.parquet.ParquetReadOptions
+      .builder(new org.apache.parquet.conf.PlainParquetConfiguration()).build()
 
   private def messageType(schema: StructType): org.apache.parquet.schema.MessageType = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -90,17 +99,20 @@ private[sources] object DriverDml {
   /** Write `rows` (external values, schema order) as one parquet file —
     * SNAPPY like Spark's writer, so the file is indistinguishable to
     * every downstream reader (stats kinds, compression, schema name).
+    * Returns the file's column stats, taken from the closed writer's
+    * footer: equal to [[FileStats.fromFooter]] of the written file, with
+    * no second open of it.
     */
-  def writeRows(file: Path, schema: StructType, rows: Seq[Array[Any]]): Unit = {
+  def writeRows(file: Path, schema: StructType, rows: Seq[Array[Any]]): Map[String, ColStats] = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     val mt = messageType(schema)
     val factory = new SimpleGroupFactory(mt)
     val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file.toUri))
+      .builder(new org.apache.parquet.io.LocalOutputFile(file))
       .withType(mt)
-      .withConf(hadoopConf)
+      .withConf(new org.apache.parquet.conf.PlainParquetConfiguration())
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
     try rows.foreach { r =>
@@ -128,6 +140,34 @@ private[sources] object DriverDml {
       }
       writer.write(g)
     } finally writer.close()
+    FileStats.fromMetadata(writer.getFooter)
+  }
+
+  /** Every record of `file` as an example-model Group, projected to the
+    * column `only` when given (its type taken off the file's own footer
+    * schema, so physical types match exactly). Throws when the file or
+    * the column cannot be read; callers fall back.
+    */
+  def foreachRecord(file: Path, only: Option[String] = None)(
+      f: org.apache.parquet.example.data.Group => Unit): Unit = {
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.schema.MessageType
+    val reader = ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(file), readOptions)
+    try {
+      val fileSchema = reader.getFooter.getFileMetaData.getSchema
+      val requested = only.fold(fileSchema)(c =>
+        new MessageType(fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex(c))))
+      reader.setRequestedSchema(requested)
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(requested, fileSchema)
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, new GroupRecordConverter(requested))
+        var n = pages.getRowCount
+        while (n > 0) { f(records.read()); n -= 1 }
+        pages = reader.readNextRowGroup()
+      }
+    } finally reader.close()
   }
 
   /** Read every row of `file` as external values in `schema` order.
@@ -140,67 +180,57 @@ private[sources] object DriverDml {
     * semantic fix to either loop must be weighed against the other.
     */
   def readRows(file: Path, schema: StructType): Option[IndexedSeq[Array[Any]]] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val out = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
     try {
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file.toUri))
-        .withConf(hadoopConf)
-        .build()
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val row = new Array[Any](schema.length)
-          var i = 0
-          while (i < schema.length) {
-            val name = schema.fields(i).name
-            val idx = g.getType.getFieldIndex(name)
-            row(i) =
-              if (g.getFieldRepetitionCount(idx) == 0) null
-              else {
-                // dispatch on the TABLE type, verifying the physical
-                // layout carries it (a Spark INT96 timestamp or a
-                // millis one is NOT micros — decline, planned path):
-                // the schema is the authority on what the value MEANS,
-                // the footer on how it is stored
-                import org.apache.parquet.schema.LogicalTypeAnnotation
-                val pt = g.getType.getType(idx).asPrimitiveType()
-                val phys = pt.getPrimitiveTypeName
-                val ann = pt.getLogicalTypeAnnotation
-                (schema.fields(i).dataType, phys) match {
-                  case (LongType, INT64) => g.getLong(idx, 0)
-                  case (IntegerType, INT32) => g.getInteger(idx, 0)
-                  case (DoubleType, DOUBLE) => g.getDouble(idx, 0)
-                  case (FloatType, FLOAT) => g.getFloat(idx, 0)
-                  case (BooleanType, BOOLEAN) => g.getBoolean(idx, 0)
-                  case (StringType, BINARY) => g.getBinary(idx, 0).toStringUsingUTF8
-                  case (DateType, INT32) => g.getInteger(idx, 0)
-                  case (TimestampType, INT64) => ann match {
-                    case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                        if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-                      g.getLong(idx, 0)
-                    case _ => return None
-                  }
-                  case (d: DecimalType, INT32 | INT64) => ann match {
-                    case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
-                        if a.getScale == d.scale =>
-                      val unscaled =
-                        if (phys == INT32) g.getInteger(idx, 0).toLong else g.getLong(idx, 0)
-                      org.apache.spark.sql.types.Decimal(
-                        java.math.BigDecimal.valueOf(unscaled, d.scale), d.precision, d.scale)
-                    case _ => return None
-                  }
+      foreachRecord(file) { g =>
+        val row = new Array[Any](schema.length)
+        var i = 0
+        while (i < schema.length) {
+          val name = schema.fields(i).name
+          val idx = g.getType.getFieldIndex(name)
+          row(i) =
+            if (g.getFieldRepetitionCount(idx) == 0) null
+            else {
+              // dispatch on the TABLE type, verifying the physical
+              // layout carries it (a Spark INT96 timestamp or a
+              // millis one is NOT micros — decline, planned path):
+              // the schema is the authority on what the value MEANS,
+              // the footer on how it is stored
+              val pt = g.getType.getType(idx).asPrimitiveType()
+              val phys = pt.getPrimitiveTypeName
+              val ann = pt.getLogicalTypeAnnotation
+              (schema.fields(i).dataType, phys) match {
+                case (LongType, INT64) => g.getLong(idx, 0)
+                case (IntegerType, INT32) => g.getInteger(idx, 0)
+                case (DoubleType, DOUBLE) => g.getDouble(idx, 0)
+                case (FloatType, FLOAT) => g.getFloat(idx, 0)
+                case (BooleanType, BOOLEAN) => g.getBoolean(idx, 0)
+                case (StringType, BINARY) => g.getBinary(idx, 0).toStringUsingUTF8
+                case (DateType, INT32) => g.getInteger(idx, 0)
+                case (TimestampType, INT64) => ann match {
+                  case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                      if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
+                    g.getLong(idx, 0)
                   case _ => return None
                 }
+                case (d: DecimalType, INT32 | INT64) => ann match {
+                  case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
+                      if a.getScale == d.scale =>
+                    val unscaled =
+                      if (phys == INT32) g.getInteger(idx, 0).toLong else g.getLong(idx, 0)
+                    org.apache.spark.sql.types.Decimal(
+                      java.math.BigDecimal.valueOf(unscaled, d.scale), d.precision, d.scale)
+                  case _ => return None
+                }
+                case _ => return None
               }
-            i += 1
-          }
-          out += row
-          g = reader.read()
+            }
+          i += 1
         }
-      } finally reader.close()
+        out += row
+      }
       Some(out.toIndexedSeq)
     } catch { case _: Exception => None }
   }

@@ -19,10 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the discovery scan is the DML bottleneck; YCSB measured the symptom
   * as delete 341 ms vs read 77 ms).
   *
-  * Stats are read from the parquet FOOTER of each file right after the
-  * lake writer stages it — no extra Spark job; the writer task already
-  * computed them — and persisted inside the manifest, so a restarted
-  * process prunes without re-reading footers.
+  * Stats come from the parquet FOOTER of each file as the lake writer
+  * stages it — no extra Spark job; the writer already computed them: the
+  * driver-side writer hands over its closed footer, a Spark-written file
+  * has its footer read back — and are persisted inside the manifest, so a
+  * restarted process prunes without re-reading footers.
   *
   * [[ColStats]] carries min/max in a canonical string form tagged by a
   * comparison kind; [[FileStats.mayMatch]] is the conservative
@@ -56,64 +57,78 @@ object FileStats {
   // === footer reading ========================================================
 
   /** Merged per-column stats for one parquet file, straight off its
-    * footer (driver-local metadata read, no job). Columns whose physical
-    * type has no total order we trust (INT96, fixed decimals, nested)
-    * are omitted — absent stats mean "never prune", the safe default.
+    * footer (driver-local metadata read, no job), read through parquet's
+    * own NIO input file — no Hadoop file system.
     */
-  // one shared Configuration: constructing one per footer read costs
-  // more than the read itself (XML resource scan), and reads off a
-  // built Configuration are thread-safe. Shared with DriverDml's codec
-  // for the same reason.
-  private[sources] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
-
   def fromFooter(file: Path): Map[String, ColStats] = {
+    import org.apache.parquet.ParquetReadOptions
+    import org.apache.parquet.conf.PlainParquetConfiguration
     import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(file),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
+    try fromMetadata(reader.getFooter) finally reader.close()
+  }
+
+  /** Merged per-column stats from a parquet footer: read back from a file
+    * ([[fromFooter]]) or taken from a just-closed writer. Columns whose
+    * physical type has no total order we trust (INT96, fixed decimals,
+    * nested) are omitted — absent stats mean "never prune", the safe
+    * default.
+    */
+  def fromMetadata(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Map[String, ColStats] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri), hadoopConf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val perCol = scala.collection.mutable.Map.empty[String, ColStats]
-      blocks.flatMap(_.getColumns.asScala).foreach { chunk =>
-        val pathParts = chunk.getPath.toArray
-        if (pathParts.length == 1) {
-          val name = pathParts(0)
-          val pt = chunk.getPrimitiveType
-          val kind: Option[Char] = pt.getPrimitiveTypeName match {
-            case INT32 | INT64
-                if !pt.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] &&
-                  // UINT32/UINT64 footers carry raw signed bits; signed compare would mis-prune
-                  (pt.getLogicalTypeAnnotation match {
-                    case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-                    case _ => true
-                  }) => Some('L')
-            case FLOAT | DOUBLE => Some('D')
-            case BOOLEAN => Some('B')
-            case BINARY
-                if pt.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] => Some('S')
-            case _ => None
-          }
-          kind.foreach { k =>
-            val st = chunk.getStatistics
-            val nulls = if (st != null && st.isNumNullsSet) st.getNumNulls else -1L
-            val (mn, mx) =
-              if (st != null && st.hasNonNullValue)
-                (canonical(k, st.genericGetMin), canonical(k, st.genericGetMax))
-              else (None, None)
-            val blockStats = ColStats(k, rows, nulls, mn, mx)
-            perCol(name) = perCol.get(name) match {
-              case None => blockStats
-              case Some(prev) => merge(prev, blockStats)
-            }
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    val perCol = scala.collection.mutable.Map.empty[String, ColStats]
+    blocks.flatMap(_.getColumns.asScala).foreach { chunk =>
+      val pathParts = chunk.getPath.toArray
+      if (pathParts.length == 1) {
+        val name = pathParts(0)
+        val pt = chunk.getPrimitiveType
+        val kind: Option[Char] = pt.getPrimitiveTypeName match {
+          case INT32 | INT64
+              if !pt.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] &&
+                // UINT32/UINT64 footers carry raw signed bits; signed compare would mis-prune
+                (pt.getLogicalTypeAnnotation match {
+                  case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+                  case _ => true
+                }) => Some('L')
+          case FLOAT | DOUBLE => Some('D')
+          case BOOLEAN => Some('B')
+          case BINARY
+              if pt.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] => Some('S')
+          case _ => None
+        }
+        kind.foreach { k =>
+          val st = chunk.getStatistics
+          val nulls = if (st != null && st.isNumNullsSet) st.getNumNulls else -1L
+          val (mn, mx) =
+            if (st == null || !st.hasNonNullValue) (None, None)
+            else if (k == 'D') floatBounds(st.genericGetMin, st.genericGetMax)
+            else (canonical(k, st.genericGetMin), canonical(k, st.genericGetMax))
+          val blockStats = ColStats(k, rows, nulls, mn, mx)
+          perCol(name) = perCol.get(name) match {
+            case None => blockStats
+            case Some(prev) => merge(prev, blockStats)
           }
         }
       }
-      perCol.toMap
-    } finally reader.close()
+    }
+    perCol.toMap
+  }
+
+  /** Float/double bounds as parquet's footer reader rebuilds them (its
+    * statistics builder): a NaN bound drops both, and a zero min reads
+    * as -0.0 and a zero max as +0.0, so no signed zero is ever pruned. A
+    * closed writer's footer holds the raw bounds; applying the same rule
+    * here makes its stats equal the file's read-back ones.
+    */
+  private def floatBounds(min: Any, max: Any): (Option[String], Option[String]) = {
+    val lo = min.asInstanceOf[Number].doubleValue
+    val hi = max.asInstanceOf[Number].doubleValue
+    if (lo.isNaN || hi.isNaN) (None, None)
+    else (canonical('D', if (lo == 0.0) -0.0d else lo), canonical('D', if (hi == 0.0) 0.0d else hi))
   }
 
   /** Canonical string form of a footer min/max value; None for values

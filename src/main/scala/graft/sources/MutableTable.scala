@@ -39,6 +39,20 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Commit protocol: write manifest-v, then atomically swap `_version`.
   * Readers resolve the pointer once and read an immutable file list, so
   * a concurrent commit never yields a torn read.
+  *
+  * Reads are built from the manifest alone. Every frame of the table —
+  * `df`/`asOf` (so the catalog's view refresh on each publish), and the
+  * DML paths' internal scans (`scan`) — is a parquet relation over a
+  * [[ManifestFileIndex]] of exactly the manifest's files: no Hadoop path
+  * check, glob or listing per read. Each data file is stat'ed once over
+  * NIO and its status kept until vacuum drops the file; a snapshot with
+  * a missing file throws when its frame is built, and a frame whose file
+  * vanished later fails at scan, so a read is never partial.
+  *
+  * Writes hold the table's writer monitor. The driver-side paths write
+  * through [[DriverDml]]'s NIO parquet codec and take the new file's
+  * column stats from the writer's own footer; only the planned
+  * (Spark-job) paths re-read a footer from disk.
   */
 final class MutableTable private (
     val spark: SparkSession,
@@ -78,6 +92,22 @@ final class MutableTable private (
   // writes remain the documented single-writer assumption (the
   // reference's Postgres advisory lock, maintenance/mod.rs).
   private val writeLock = new Object
+
+  /** Run `body` holding the writer monitor. The outermost acquisition on
+    * a thread is one lake write on `status.json` (with its wait for the
+    * lock and its hold of it); a reentrant one — `publish` inside a
+    * mutator or a catalog commit — runs inside the write that holds it.
+    */
+  private def locked[T](body: => T): T =
+    if (Thread.holdsLock(writeLock)) body
+    else {
+      val asked = System.nanoTime()
+      writeLock.synchronized {
+        val got = System.nanoTime()
+        try body
+        finally graft.ServeCounters.lakeWrite(got - asked, System.nanoTime() - got)
+      }
+    }
 
   // Isolated session for the INTERNAL DML frames (discovery aggregate,
   // PK check, rewrite): AQE's shuffle-stage materialization costs one
@@ -196,7 +226,7 @@ final class MutableTable private (
     * commit: every staged manifest becomes visible with ONE pointer swap
     * per table.
     */
-  def publish(version: Long): Unit = writeLock.synchronized {
+  def publish(version: Long): Unit = locked {
     require(Files.exists(manifestPath(version)), s"unknown version $version")
     val tmp = root.resolve(s"_version.tmp.${UUID.randomUUID()}")
     Files.write(tmp, version.toString.getBytes)
@@ -237,7 +267,7 @@ final class MutableTable private (
     * interval keeps working. Requires the target manifest's files to
     * still exist (i.e. no intervening `vacuum`).
     */
-  def restore(version: Long): Long = writeLock.synchronized {
+  def restore(version: Long): Long = locked {
     require(Files.exists(manifestPath(version)), s"unknown version $version")
     val v = currentVersion
     if (version == v) v
@@ -249,15 +279,32 @@ final class MutableTable private (
     }
   }
 
-  /** Current table contents (empty-schema DataFrame when no files). */
+  /** Current table contents. */
   def df: DataFrame = asOf(currentVersion)
 
-  /** Snapshot read of any retained version. */
-  def asOf(version: Long): DataFrame = {
-    val files = readManifest(version).map(f => dataDir.resolve(f).toString)
-    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
-  }
+  /** Snapshot read of any retained version. Throws when one of its data
+    * files is gone (vacuumed): a snapshot is never read partially.
+    */
+  def asOf(version: Long): DataFrame = scan(readManifest(version), spark)
+
+  // Data files' statuses, stat'ed once: a data file never changes after
+  // it is adopted, and vacuum/dropStaged drop the entry with the file.
+  private val fileStatuses =
+    scala.collection.concurrent.TrieMap.empty[String, org.apache.hadoop.fs.FileStatus]
+
+  /** The index over data files `files` (names) — the relation every
+    * frame of this table scans, and the one the optimizer's scan-prune
+    * rule narrows. Throws NoSuchFileException for a missing file.
+    */
+  private[graft] def fileIndex(files: Seq[String]): ManifestFileIndex =
+    new ManifestFileIndex(files.map(f =>
+      fileStatuses.getOrElseUpdate(f, ManifestFileIndex.stat(dataDir.resolve(f)))))
+
+  /** A parquet scan of data files `files` in `session` (by default the
+    * internal DML session), built from the file list alone.
+    */
+  private def scan(files: Seq[String], session: SparkSession = dmlSession): DataFrame =
+    fileIndex(files).frame(session, schema)
 
   /** Move the part files of a staged spark write into data/, returning
     * their new (unique) names.
@@ -318,7 +365,7 @@ final class MutableTable private (
   /** Append rows; enforces the primary key when declared — duplicates in
     * the batch or against existing rows error, nothing is committed.
     */
-  def insert(data: DataFrame): Long = writeLock.synchronized {
+  def insert(data: DataFrame): Long = locked {
     val (v, n) = insertCore(currentVersion, data, publishNow = true)
     n
   }
@@ -327,7 +374,7 @@ final class MutableTable private (
     * manifest — written to disk but not published, so no other reader
     * sees it until [[publish]]. Returns (stagedVersion, rowCount).
     */
-  def stageInsert(base: Long, data: DataFrame): (Long, Long) = writeLock.synchronized {
+  def stageInsert(base: Long, data: DataFrame): (Long, Long) = locked {
     insertCore(base, data, publishNow = false)
   }
 
@@ -356,8 +403,7 @@ final class MutableTable private (
         case rs if rs.nonEmpty && rs.forall(_ >= 0) => rs.sum
         case _ =>
           if (newFiles.isEmpty) 0L
-          else dmlSession.read.schema(schema)
-            .parquet(newFiles.map(f => dataDir.resolve(f).toString): _*).count()
+          else scan(newFiles).count()
       }
       val nv = allocVersion()
       commitOrClean(nv, readManifest(base) ++ newFiles, publishNow)
@@ -382,7 +428,7 @@ final class MutableTable private (
     * The written rows enter the row cache. None = schema unsupported (caller falls back); DuplicateKeyException
     * propagates like the planned path's.
     */
-  def insertRowsDirect(rows: Seq[Array[Any]]): Option[Long] = writeLock.synchronized {
+  def insertRowsDirect(rows: Seq[Array[Any]]): Option[Long] = locked {
     insertRowsCore(currentVersion, rows, publishNow = true).map(_._2)
   }
 
@@ -391,7 +437,7 @@ final class MutableTable private (
     * (stagedVersion, rowCount), or None when the driver path declines.
     */
   def stageInsertRows(base: Long, rows: Seq[Array[Any]]): Option[(Long, Long)] =
-    writeLock.synchronized { insertRowsCore(base, rows, publishNow = false) }
+    locked { insertRowsCore(base, rows, publishNow = false) }
 
   private def insertRowsCore(base: Long, rows: Seq[Array[Any]],
       publishNow: Boolean): Option[(Long, Long)] = {
@@ -419,10 +465,8 @@ final class MutableTable private (
     }
     val name = s"part-${UUID.randomUUID()}.parquet"
     val dest = dataDir.resolve(name)
-    try {
-      DriverDml.writeRows(dest, schema, rows)
-      fileStats(name) = FileStats.fromFooter(dest)
-    } catch {
+    try fileStats(name) = DriverDml.writeRows(dest, schema, rows)
+    catch {
       case _: Exception => // codec hiccup: clean up, planned path decides
         dropStaged(Seq(name))
         return None
@@ -597,10 +641,8 @@ final class MutableTable private (
       else {
         val name = s"part-${UUID.randomUUID()}.parquet"
         val dest = dataDir.resolve(name)
-        try {
-          DriverDml.writeRows(dest, schema, outRows.toSeq)
-          fileStats(name) = FileStats.fromFooter(dest)
-        } catch {
+        try fileStats(name) = DriverDml.writeRows(dest, schema, outRows.toSeq)
+        catch {
           case _: Exception =>
             dropStaged(Seq(name))
             return None
@@ -653,10 +695,8 @@ final class MutableTable private (
     }
     val name = s"part-${UUID.randomUUID()}.parquet"
     val dest = dataDir.resolve(name)
-    try {
-      DriverDml.writeRows(dest, schema, rows.toSeq)
-      fileStats(name) = FileStats.fromFooter(dest)
-    } catch {
+    try fileStats(name) = DriverDml.writeRows(dest, schema, rows.toSeq)
+    catch {
       case _: Exception =>
         dropStaged(Seq(name))
         return (files, None)
@@ -711,14 +751,10 @@ final class MutableTable private (
         statsFor(f).values.headOption.map(_.rows).getOrElse(Long.MaxValue)).sum
       if (stagedRows <= 100000 && pkCheckDriverSide(newFiles, pk)) return
     }
-    val newDf = dmlSession.read.schema(schema)
-      .parquet(newFiles.map(f => dataDir.resolve(f).toString): _*)
-      .select(col(pk), lit(1L).as("__new"))
+    val newDf = scan(newFiles).select(col(pk), lit(1L).as("__new"))
     val unioned =
       if (oldCandidates.isEmpty) newDf
-      else newDf.unionAll(dmlSession.read.schema(schema)
-        .parquet(oldCandidates.map(f => dataDir.resolve(f).toString): _*)
-        .select(col(pk), lit(0L).as("__new")))
+      else newDf.unionAll(scan(oldCandidates).select(col(pk), lit(0L).as("__new")))
     // NULL keys: SQL joins never match NULLs, and the pre-aggregate
     // clash check (left_semi) inherited that — a staged NULL pk beside
     // an existing NULL row is NOT a clash; only two STAGED nulls are an
@@ -831,9 +867,8 @@ final class MutableTable private (
       .orElse(resolveCond(cond))
 
   /** Resolve a predicate Column to a catalyst tree by ANALYZING a
-    * filter over a schema-only empty relation (no job, no file listing
-    * — the real snapshot read would pay a directory listing just to
-    * resolve names): Spark 4 columns are lazy ColumnNode wrappers until
+    * filter over a schema-only empty relation (no job, no file access):
+    * Spark 4 columns are lazy ColumnNode wrappers until
     * analysis, and resolution also validates the predicate against the
     * schema. None when analysis fails (exotic predicates — subqueries
     * over session-private views, etc): pruning and the discovery fast
@@ -887,8 +922,7 @@ final class MutableTable private (
     }
     if (candidates.isEmpty) return (Seq.empty, 0L)
     resolved.flatMap(c => fastAffected(candidates, c)).getOrElse {
-      val perFile = dmlSession.read.schema(schema).parquet(candidates.map(f => dataDir.resolve(f).toString): _*)
-        .filter(cond)
+      val perFile = scan(candidates).filter(cond)
         .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
         .collect()
       val hit = perFile.map(_.getString(0)).toSet
@@ -928,8 +962,7 @@ final class MutableTable private (
     val refNames = resolved.collect { case a: AttributeReference => a.name }.distinct.sorted
     val scans = candidates.map { f =>
       discoveryScans.getOrElseUpdate((f, refNames)) {
-        val df = dmlSession.read.schema(schema).parquet(dataDir.resolve(f).toString)
-          .select(refNames.map(col) :+ input_file_name().as("__file"): _*)
+        val df = scan(Seq(f)).select(refNames.map(col) :+ input_file_name().as("__file"): _*)
         org.apache.spark.sql.graft.DiscoveryScan.prepareScan(df)
       }
     }
@@ -968,55 +1001,33 @@ final class MutableTable private (
     * way (the caller falls back; never weakens the check).
     */
   private def pkCheckDriverSide(newFiles: Seq[String], pk: String): Boolean = {
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val seen = new java.util.HashSet[Any]()
     var nullSeen = false
     try {
-      // project the read to the pk column (taken off the first file's
-      // own footer schema, so physical types match exactly): without
-      // the requested-schema conf the example reader decodes EVERY
-      // column of the staged rows
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val firstPath = new org.apache.hadoop.fs.Path(dataDir.resolve(newFiles.head).toUri)
-      val fileSchema = {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(firstPath, conf))
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
-      val projection = new org.apache.parquet.schema.MessageType(
-        fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex(pk)))
-      conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
+      // the read is projected to the pk column: without it the example
+      // reader decodes EVERY column of the staged rows
       newFiles.foreach { f =>
-        val reader = ParquetReader
-          .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(dataDir.resolve(f).toUri))
-          .withConf(conf)
-          .build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            val idx = g.getType.getFieldIndex(pk)
-            val v: Any =
-              if (g.getFieldRepetitionCount(idx) == 0) null
-              else g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 => g.getLong(idx, 0)
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 => g.getInteger(idx, 0)
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY => g.getBinary(idx, 0).toStringUsingUTF8
-                // +0.0 collapses -0.0 so boxed-HashSet equality matches Spark's
-                // grouping-key semantics (NormalizeFloatingNumbers) on the planned path
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.DOUBLE => g.getDouble(idx, 0) + 0.0d
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT => g.getFloat(idx, 0) + 0.0f
-                case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BOOLEAN => g.getBoolean(idx, 0)
-                case _ => return false // unsupported pk physical type: planned path
-              }
-            if (v == null) {
-              if (nullSeen) throw new DuplicateKeyException(s"duplicate key in batch: $pk=null")
-              nullSeen = true
-            } else if (!seen.add(v))
-              throw new DuplicateKeyException(s"duplicate key in batch: $pk=$v")
-            g = reader.read()
-          }
-        } finally reader.close()
+        DriverDml.foreachRecord(dataDir.resolve(f), only = Some(pk)) { g =>
+          val v: Any =
+            if (g.getFieldRepetitionCount(0) == 0) null
+            else g.getType.getType(0).asPrimitiveType().getPrimitiveTypeName match {
+              case INT64 => g.getLong(0, 0)
+              case INT32 => g.getInteger(0, 0)
+              case BINARY => g.getBinary(0, 0).toStringUsingUTF8
+              // +0.0 collapses -0.0 so boxed-HashSet equality matches Spark's
+              // grouping-key semantics (NormalizeFloatingNumbers) on the planned path
+              case DOUBLE => g.getDouble(0, 0) + 0.0d
+              case FLOAT => g.getFloat(0, 0) + 0.0f
+              case BOOLEAN => g.getBoolean(0, 0)
+              case _ => return false // unsupported pk physical type: planned path
+            }
+          if (v == null) {
+            if (nullSeen) throw new DuplicateKeyException(s"duplicate key in batch: $pk=null")
+            nullSeen = true
+          } else if (!seen.add(v))
+            throw new DuplicateKeyException(s"duplicate key in batch: $pk=$v")
+        }
       }
       true
     } catch {
@@ -1028,12 +1039,12 @@ final class MutableTable private (
   /** Copy-on-write DELETE: rewrite only files containing matches; returns
     * the number of rows deleted.
     */
-  def delete(cond: Column): Long = writeLock.synchronized {
+  def delete(cond: Column): Long = locked {
     deleteCore(currentVersion, cond, publishNow = true)._2
   }
 
   /** Transactional variant of [[delete]]: staged, unpublished. */
-  def stageDelete(base: Long, cond: Column): (Long, Long) = writeLock.synchronized {
+  def stageDelete(base: Long, cond: Column): (Long, Long) = locked {
     deleteCore(base, cond, publishNow = false)
   }
 
@@ -1042,8 +1053,7 @@ final class MutableTable private (
     val all = readManifest(base)
     val (affected, deleted) = affectedStats(base, cond)
     if (affected.isEmpty) return (base, 0L)
-    val affectedDf = dmlSession.read.schema(schema)
-      .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
+    val affectedDf = scan(affected)
     // survivors are rows where cond is FALSE **or NULL** — filter(!cond)
     // alone drops NULL-predicate rows from the rewritten file (data loss;
     // SQL three-valued logic: DELETE removes only WHERE-true rows)
@@ -1072,7 +1082,7 @@ final class MutableTable private (
     * rewritten; the only collect is over FILE NAMES, bounded by the
     * manifest size.
     */
-  def deleteKeys(keys: DataFrame, keyCol: String): Long = writeLock.synchronized {
+  def deleteKeys(keys: DataFrame, keyCol: String): Long = locked {
     require(schema.fieldNames.contains(keyCol), s"unknown column: $keyCol")
     val v = currentVersion
     loadStats(v) // keep carried-over stats in the manifest we are about to write
@@ -1094,7 +1104,7 @@ final class MutableTable private (
     * match a table row, so "upsert by NULL" has no meaning). Returns
     * (deletedRows, insertedRows).
     */
-  def upsertKeys(rows: DataFrame, keyCol: String): (Long, Long) = writeLock.synchronized {
+  def upsertKeys(rows: DataFrame, keyCol: String): (Long, Long) = locked {
     require(schema.fieldNames.contains(keyCol), s"unknown column: $keyCol")
     require(primaryKey.forall(_ == keyCol),
       s"upsertKeys requires the key to be the table's primary key (pk=$primaryKey, key=$keyCol)")
@@ -1117,8 +1127,7 @@ final class MutableTable private (
         statsFor(f).values.headOption.map(_.rows).getOrElse(-1L)) match {
         case rs if rs.nonEmpty && rs.forall(_ >= 0) => rs.sum
         case _ if newFiles.isEmpty => 0L
-        case _ => dmlSession.read.schema(schema)
-          .parquet(newFiles.map(f => dataDir.resolve(f).toString): _*).count()
+        case _ => scan(newFiles).count()
       }
       commit(allocVersion(), survivors ++ newFiles)
       (deleted, inserted)
@@ -1136,6 +1145,7 @@ final class MutableTable private (
   private def dropStaged(files: Seq[String]): Unit =
     files.foreach { f =>
       fileStats.remove(f)
+      fileStatuses.remove(f)
       RowCache.shared.remove(cacheKey, f)
       try Files.deleteIfExists(dataDir.resolve(f))
       catch { case _: Throwable => }
@@ -1177,8 +1187,7 @@ final class MutableTable private (
     if (candidates.isEmpty) return (all, 0L, false, Nil)
     // file name must attach AT THE SCAN (input_file_name() evaluated
     // after the join runs outside the file-read task and yields "")
-    val fileDf = dmlSession.read.schema(schema).parquet(candidates.map(f => dataDir.resolve(f).toString): _*)
-      .select(col(keyCol), input_file_name().as("__f"))
+    val fileDf = scan(candidates).select(col(keyCol), input_file_name().as("__f"))
     // one discovery job: per-file match counts give both the affected
     // file set and the deleted-row total (keySet is distinct, so the
     // semi-join hits each matching row exactly once)
@@ -1189,8 +1198,7 @@ final class MutableTable private (
     val deleted = perFile.map(_.getLong(1)).sum
     val affected = all.filter(f => hit.exists(h => h.endsWith("/" + f) || h.endsWith(f)))
     if (affected.isEmpty) return (all, 0L, false, Nil)
-    val affectedDf = dmlSession.read.schema(schema)
-      .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
+    val affectedDf = scan(affected)
     val survivors = affectedDf.join(keySet, Seq(keyCol), "left_anti")
       .select(schema.fieldNames.toSeq.map(col): _*)
     val replacement = if (survivors.isEmpty) Seq.empty else stageWrite(survivors)
@@ -1200,13 +1208,13 @@ final class MutableTable private (
   /** Copy-on-write UPDATE: SET col -> expression for rows matching `cond`;
     * returns the number of rows updated.
     */
-  def update(cond: Column, set: Map[String, Column]): Long = writeLock.synchronized {
+  def update(cond: Column, set: Map[String, Column]): Long = locked {
     updateCore(currentVersion, cond, set, publishNow = true)._2
   }
 
   /** Transactional variant of [[update]]: staged, unpublished. */
   def stageUpdate(base: Long, cond: Column, set: Map[String, Column]): (Long, Long) =
-    writeLock.synchronized { updateCore(base, cond, set, publishNow = false) }
+    locked { updateCore(base, cond, set, publishNow = false) }
 
   private def updateCore(base: Long, cond: Column, set: Map[String, Column],
       publishNow: Boolean): (Long, Long) = {
@@ -1221,8 +1229,7 @@ final class MutableTable private (
     val all = readManifest(base)
     val (affected, updated) = affectedStats(base, cond)
     if (affected.isEmpty) return (base, 0L)
-    val affectedDf = dmlSession.read.schema(schema)
-      .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
+    val affectedDf = scan(affected)
     val rewritten = affectedDf.select(schema.fieldNames.toSeq.map { name =>
       set.get(name) match {
         case Some(e) => when(cond, e.cast(schema(name).dataType)).otherwise(col(name)).as(name)
@@ -1236,13 +1243,7 @@ final class MutableTable private (
     // affected files hold every unchanged key's pre-image)
     if (touchesPk) primaryKey.foreach { pk =>
       try pkCheck(base, replacement, pk, oldOverride = Some(untouched))
-      catch {
-        case e: Throwable =>
-          replacement.foreach { f =>
-            fileStats.remove(f); Files.deleteIfExists(dataDir.resolve(f))
-          }
-          throw e
-      }
+      catch { case e: Throwable => dropStaged(replacement); throw e }
     }
     val nv = allocVersion()
     val files = untouched ++ replacement
@@ -1253,7 +1254,7 @@ final class MutableTable private (
   /** CHECKPOINT ≈ compaction (A26): coalesce the live file set into
     * `targetFiles` files; data unchanged, old versions still readable.
     */
-  def checkpoint(targetFiles: Int = 1): Long = writeLock.synchronized {
+  def checkpoint(targetFiles: Int = 1): Long = locked {
     val v = currentVersion
     val files = readManifest(v)
     if (files.size <= targetFiles) return v
@@ -1272,7 +1273,7 @@ final class MutableTable private (
     * writer, whose own read-stage-publish holds the same monitor.
     * Reentrant: publish() inside f re-enters fine.
     */
-  private[sources] def withWriteLock[T](f: => T): T = writeLock.synchronized(f)
+  private[sources] def withWriteLock[T](f: => T): T = locked(f)
 
   /** Delete a STAGED (never-published) manifest so the data files it
     * references stop counting as live for [[vacuum]] — the rollback
@@ -1280,7 +1281,7 @@ final class MutableTable private (
     * already-absent manifest is the tolerated no-op (commit retires
     * intermediates that rollback may also see).
     */
-  private[sources] def discardStaged(v: Long): Unit = writeLock.synchronized {
+  private[sources] def discardStaged(v: Long): Unit = locked {
     // silently skip the published version: cleanup must never throw
     // (e.g. a drop+recreate raced the rollback into a version collision)
     if (v != currentVersion) Files.deleteIfExists(manifestPath(v))
@@ -1289,7 +1290,7 @@ final class MutableTable private (
   /** Drop data files no longer referenced by ANY retained manifest
     * (vacuum; the reference's checkpoint cleanup).
     */
-  def vacuum(): Int = writeLock.synchronized {
+  def vacuum(): Int = locked {
     val live = mutable.Set.empty[String]
     listDir(root)
       .filter(_.getFileName.toString.startsWith("manifest-"))
@@ -1302,6 +1303,7 @@ final class MutableTable private (
       val name = p.getFileName.toString
       if (!live.contains(name)) {
         Files.delete(p)
+        fileStatuses.remove(name)
         RowCache.shared.remove(cacheKey, name)
         removed += 1
       }

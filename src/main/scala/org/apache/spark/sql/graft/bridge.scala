@@ -8,9 +8,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *
   * Spark 4 wraps columns in `ColumnNode`s and keeps the converters
   * `private[sql]`; this shim (in an org.apache.spark.sql subpackage, the
-  * standard extension-library technique) exposes exactly the two
-  * conversions graft needs to register codegen'd expressions without a
-  * SparkSessionExtensions round-trip.
+  * standard extension-library technique) exposes the conversions graft
+  * needs to register codegen'd expressions without a
+  * SparkSessionExtensions round-trip, and the nullable schema a
+  * file-source relation carries.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -24,4 +25,10 @@ object bridge {
     */
   def unresolvedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** `schema` with every field, element and value nullable — the schema
+    * a file-source read exposes whatever schema it was given.
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
 }

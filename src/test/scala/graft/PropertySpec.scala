@@ -113,12 +113,16 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  test("micro-lake model: prepared key and range reads equal the planned read after every step") {
-    import org.apache.spark.sql.graft.PointReadExec
+  /** Seeded random DML, transaction and maintenance sequences against a
+    * two-column micro-lake table `prop_lake` (k bigint pk, v string),
+    * six seeds of 14 steps; errors (duplicate keys, commit conflicts)
+    * are part of the model. `prepare` runs once per seed, after the
+    * first insert; `check(prepared, session, table, where, probe)` runs
+    * after every step, with a random (key, lo, hi) probe.
+    */
+  private def lakeModel[A](prepare: Session => A)(
+      check: (A, Session, sources.MutableTable, String, (Long, Long, Long)) => Unit): Unit = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    // one random step against the table; errors (duplicate keys,
-    // commit conflicts) are part of the model — the reads after them
-    // must still agree
     final case class Step(what: String, run: (Session, sources.MutableTable, Seq[Long]) => Unit)
     def stmt(sql: String) = Step(sql, (s, _, _) => s.sql(sql))
     val key = Gen.chooseNum(0L, 24L)
@@ -143,24 +147,67 @@ class PropertySpec extends SparkTestBase {
       val t = catalog.create("prop_lake", StructType(Seq(StructField("k", LongType),
         StructField("v", StringType))), primaryKey = Some("k"))
       sess.sql("INSERT INTO prop_lake VALUES (1, 'a'), (5, 'b'), (9, 'c'), (20, 'd')")
-      val read = sess.createPrepared("SELECT * FROM prop_lake WHERE k = ?")
-      val scan = sess.createPrepared("SELECT k, v FROM prop_lake WHERE k BETWEEN ? AND ? ORDER BY k")
+      val prepared = prepare(sess)
       val published = scala.collection.mutable.ArrayBuffer(t.currentVersion)
-      steps.zip(probes).zipWithIndex.foreach { case ((st, (k, lo, hi)), i) =>
+      steps.zip(probes).zipWithIndex.foreach { case ((st, probe), i) =>
         try st.run(sess, t, published.toSeq)
         catch { case scala.util.control.NonFatal(_) => () }
         published += t.currentVersion
-        Seq((read, Seq[Any](k)), (scan, Seq[Any](lo, hi))).foreach { case (p, params) =>
-          val df = sess.executePrepared(p.handle, params)
-          val where = s"seed $seed, step $i (${st.what}), ${p.sql} with $params"
-          assert(df.queryExecution.executedPlan.isInstanceOf[PointReadExec], s"$where: declined")
-          val fast = df.collect().toSeq
-          val planned = sess.sql(SqlParams.bind(p.sql, params)).collect().toSeq
-          assert(fast == planned, s"$where: driver $fast, planned $planned")
-        }
+        check(prepared, sess, t, s"seed $seed, step $i (${st.what})", probe)
       }
       if (sess.inTransaction) sess.rollback()
       catalog.drop("prop_lake")
+    }
+  }
+
+  test("micro-lake model: prepared key and range reads equal the planned read after every step") {
+    import org.apache.spark.sql.graft.PointReadExec
+    lakeModel(sess => (sess.createPrepared("SELECT * FROM prop_lake WHERE k = ?"),
+        sess.createPrepared("SELECT k, v FROM prop_lake WHERE k BETWEEN ? AND ? ORDER BY k"))) {
+      case ((read, scan), sess, _, where, (k, lo, hi)) =>
+        Seq((read, Seq[Any](k)), (scan, Seq[Any](lo, hi))).foreach { case (p, params) =>
+          val df = sess.executePrepared(p.handle, params)
+          val at = s"$where, ${p.sql} with $params"
+          assert(df.queryExecution.executedPlan.isInstanceOf[PointReadExec], s"$at: declined")
+          val fast = df.collect().toSeq
+          val planned = sess.sql(SqlParams.bind(p.sql, params)).collect().toSeq
+          assert(fast == planned, s"$at: driver $fast, planned $planned")
+        }
+    }
+  }
+
+  test("micro-lake model: every retained snapshot's frame equals the listing read of its manifest") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    lakeModel(_ => ()) { case (_, _, t, where, _) =>
+      // the oracle reads the manifest off disk itself: its "files" array
+      // is the first bracket pair
+      val listed = java.nio.file.Files.list(t.root)
+      val manifests = try listed.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.startsWith("manifest-") && n.endsWith(".json")).toList
+        finally listed.close()
+      assert(manifests.nonEmpty, where)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("k"), col("v"), input_file_name().as("f")).collect().toSet
+      val current = t.currentVersion
+      val checked = manifests.map { n =>
+        val v = n.stripPrefix("manifest-").stripSuffix(".json").toLong
+        val txt = new String(java.nio.file.Files.readAllBytes(t.root.resolve(n)))
+        val body = txt.substring(txt.indexOf('[') + 1, txt.indexOf(']')).trim
+        val files = if (body.isEmpty) Seq.empty[String]
+          else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+        val frame = t.asOf(v)
+        val listing =
+          if (files.isEmpty) Set.empty
+          else rows(spark.read.schema(t.schema)
+            .parquet(files.map(f => t.root.resolve("data").resolve(f).toString): _*))
+        assert(rows(frame) == listing, s"$where: version $v")
+        assert(frame.queryExecution.analyzed.sameResult(t.asOf(v).queryExecution.analyzed),
+          s"$where: two frames of version $v")
+        v
+      }
+      assert(checked.contains(current), where)
+      assert(rows(t.df) == rows(t.asOf(current)), s"$where: df vs asOf($current)")
     }
   }
 }

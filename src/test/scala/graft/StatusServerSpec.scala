@@ -96,6 +96,35 @@ class StatusServerSpec extends SparkTestBase {
     } finally { srv.stop(); catalog.drop("st_serve") }
   }
 
+  test("status.json serves the micro-lake writer lock's counters; a routed UPDATE moves all three") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val catalog = sources.MutableCatalog(spark)
+    val sess = new Session("status-lock", spark.newSession(), Some(catalog))
+    catalog.create("st_lock", StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType))), primaryKey = Some("k"))
+    sess.sql("INSERT INTO st_lock VALUES (1, 'a'), (2, 'b')")
+    def counters = (ServeCounters.lakeWrites.get(), ServeCounters.lakeLockWaitNanos.get(),
+      ServeCounters.lakeLockHoldNanos.get())
+    val (writes0, wait0, hold0) = counters
+    sess.sql("UPDATE st_lock SET v = 'c' WHERE k = 2")
+    val (writes1, wait1, hold1) = counters
+    // one write: the publish inside the UPDATE re-enters the lock the
+    // UPDATE holds and is not counted again
+    assert(writes1 == writes0 + 1, s"$writes0 -> $writes1")
+    assert(wait1 > wait0 && hold1 > hold0, s"wait $wait0 -> $wait1, hold $hold0 -> $hold1")
+    val srv = StatusServer.start(new Metrics(), new SessionRegistry(spark)).get
+    try {
+      val (jc, jb) = get(srv.boundPort, "/status.json")
+      assert(jc == 200)
+      def served(key: String): Double =
+        ("\"" + key + "\":([0-9.Ee+-]+)").r.findFirstMatchIn(jb).map(_.group(1).toDouble)
+          .getOrElse(fail(s"no $key in $jb"))
+      assert(served("lake_writes") >= writes1)
+      assert(served("lake_lock_wait_ms") >= wait1 / 1e6 * 0.999)
+      assert(served("lake_lock_hold_ms") >= hold1 / 1e6 * 0.999 && served("lake_lock_hold_ms") > 0)
+    } finally { srv.stop(); catalog.drop("st_lock") }
+  }
+
   test("registry snapshot aggregates idle ages (registry.rs:36-42)") {
     val reg = new SessionRegistry(spark, maxSessions = 5, idleTimeoutMillis = 900000)
     val now = System.currentTimeMillis()

@@ -184,6 +184,61 @@ class DriverDmlSpec extends SparkTestBase {
     assert(st("l").min.contains("-9") && st("l").max.contains("1"))
   }
 
+  test("stats from the writer's footer equal the footer read back from the file") {
+    import org.apache.spark.sql.types.Decimal
+    // every codec type, an all-NULL column, and the edge values whose
+    // footer bounds parquet's reader rewrites (NaN, signed zeros)
+    val s = StructType(Seq(
+      StructField("l", LongType), StructField("i", IntegerType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("b", BooleanType), StructField("s", StringType),
+      StructField("dt", DateType), StructField("ts", TimestampType),
+      StructField("d9", DecimalType(9, 2)), StructField("d18", DecimalType(18, 4)),
+      StructField("nul", LongType)))
+    def dec(v: String, p: Int, sc: Int) = Decimal(new java.math.BigDecimal(v), p, sc)
+    val batches = Seq(
+      "mixed" -> Seq(
+        Array[Any](1L, 2, 3.5, 4.5f, true, "héllo", 19727, 86400000001L,
+          dec("12.34", 9, 2), dec("-5.0001", 18, 4), null),
+        Array[Any](-9L, -8, -0.0, 0.0f, false, "", -10, -1L,
+          dec("-0.01", 9, 2), dec("123456789.9999", 18, 4), null),
+        Array[Any](null, null, null, null, null, null, null, null, null, null, null)),
+      "nan" -> Seq(
+        Array[Any](1L, 1, Double.NaN, Float.NaN, true, "a", 1, 1L, null, null, null),
+        Array[Any](2L, 2, 7.0, -1.5f, true, "b", 2, 2L, null, null, null)),
+      "zeros" -> Seq(
+        Array[Any](0L, 0, 0.0, -0.0f, false, "", 0, 0L, dec("0", 9, 2), dec("0", 18, 4), null),
+        Array[Any](0L, 0, -0.0, 0.0f, false, "", 0, 0L, dec("0", 9, 2), dec("0", 18, 4), null)),
+      "only zero" -> Seq(
+        Array[Any](5L, 5, 0.0, 0.0f, true, "z", 5, 5L, null, null, null)),
+      "all null" -> Seq(
+        Array[Any](null, null, null, null, null, null, null, null, null, null, null)))
+    val dir = Files.createTempDirectory("graft_footer_stats")
+    batches.foreach { case (label, rows) =>
+      val file = dir.resolve(s"${label.replace(' ', '_')}.parquet")
+      val written = DriverDml.writeRows(file, s, rows)
+      assert(written == FileStats.fromFooter(file), s"$label: writer footer vs read-back")
+      assert(written("nul").nulls == rows.size, label)
+    }
+  }
+
+  test("driver-side DML leaves only data files in data/: no .crc or other dot-file") {
+    val t = mk()
+    (1 to 20).foreach { i => // 16 tiny files trigger a micro-compaction
+      assert(t.insertRowsDirect(Seq(Array[Any](i.toLong, s"n$i", i.toDouble))) == Some(1L))
+    }
+    val hits = t.driverRewriteHits.get()
+    assert(t.update(expr("id = 3"), Map("name" -> lit("u"))) == 1L)
+    assert(t.delete(expr("id = 4")) == 1L)
+    assert(t.driverRewriteHits.get() == hits + 2, "UPDATE and DELETE must take the driver rewrite")
+    assert(t.fileCount < 16, "the inserts must have compacted")
+    val names = MutableTable.listDir(t.root.resolve("data")).map(_.getFileName.toString)
+    assert(names.nonEmpty)
+    assert(names.forall(n => n.startsWith("part-") && n.endsWith(".parquet")),
+      s"data/ holds more than data files: ${names.filterNot(_.endsWith(".parquet"))}")
+    assert(t.df.count() == 19)
+  }
+
   // === insert fast path =====================================================
 
   test("insertRowsDirect: append, pk in-batch dup, clash vs table, unsupported schema") {

@@ -317,6 +317,34 @@ class MutableTableSpec extends SparkTestBase {
     assert(t.vacuum() == 0)
   }
 
+  test("a vacuumed snapshot never reads partially: asOf throws, and an older frame fails at scan") {
+    val t = mkTable()
+    t.insert(rows((1L, "a", 1.0), (2L, "b", 2.0)))  // v1: file A
+    t.insert(rows((3L, "c", 3.0)))                  // v2: A + B
+    val early = t.asOf(2)                           // built while A exists
+    assert(early.count() == 3)
+    assert(t.delete(col("id") <= 2L) == 2L)         // v3: B alone
+    // retire v1 and v2 the way an expiry would (their manifests go), so
+    // vacuum reclaims A; then bring the manifests back: v2 is retained
+    // again, but one of its two files is gone
+    val root = t.root
+    val aside = Files.createTempDirectory("graft_mt_aside")
+    Seq(1L, 2L).foreach(v =>
+      Files.move(root.resolve(s"manifest-$v.json"), aside.resolve(s"manifest-$v.json")))
+    assert(t.vacuum() == 1)
+    Seq(1L, 2L).foreach(v =>
+      Files.move(aside.resolve(s"manifest-$v.json"), root.resolve(s"manifest-$v.json")))
+    val built = intercept[java.nio.file.NoSuchFileException](t.asOf(2))
+    assert(built.getMessage.contains("part-"), built.getMessage)
+    intercept[java.nio.file.NoSuchFileException](t.asOf(1))
+    // the frame made before the vacuum still names A: its scan fails
+    // rather than answering from B alone
+    val scanned = intercept[Exception](early.collect())
+    assert(Iterator.iterate[Throwable](scanned)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), scanned.toString)
+    assert(t.df.collect().map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
   test("restore rolls forward to a past version's contents, history intact") {
     val t = mkTable()
     t.insert(rows((1L, "a", 1.0)))           // v1
