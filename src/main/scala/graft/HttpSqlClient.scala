@@ -3,8 +3,8 @@ package graft
 import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets
 
-import graft.flight.ClientPool.{QueryResult, UpdateResult}
 import graft.flight.SqlConnection
+import graft.flight.SqlConnection.{QueryResult, UpdateResult}
 
 /** Remote SQL connection over the HTTP gateway ([[SqlGateway]]) — the
   * network counterpart of the in-proc [[graft.flight.FlightSqlClient]]:

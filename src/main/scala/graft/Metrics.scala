@@ -103,12 +103,4 @@ final class Metrics(
       "p95" -> pct(0.95),
       "p99" -> pct(0.99))
   }
-
-  /** One-line status summary (the reference's status page, status.rs). */
-  def statusLine: String = {
-    val l = latencySummary
-    f"queries=${queries} errors=${errors} in_flight=${inFlight} " +
-      f"avg=${l("avg")}%.1fms p95=${l("p95")}%.1fms p99=${l("p99")}%.1fms " +
-      f"slow=${slowQueries.size} recent_errors=${recentErrors.size}"
-  }
 }

@@ -83,11 +83,6 @@ object SqlShim {
       stripped.startsWith(p + "\n") || stripped.startsWith(p + "\t") || stripped.startsWith(p + "("))
   }
 
-  /** Does any statement in the script return rows?
-    * (`contains_query` scans all statements, sql/parser.rs:57-60.)
-    */
-  def containsQuery(sql: String): Boolean = splitStatements(sql).exists(isQuery)
-
   /** First SQL keyword after leading comments, upper-cased — the same
     * comment-aware view isQuery classifies on, for callers that branch
     * on the statement verb (e.g. the CLI's DML row-count display).

@@ -111,8 +111,4 @@ object VectorFunctions {
   /** Codegen'd L2 norm of a double array. */
   def vecNorm(a: Column): Column =
     bridge.column(L2Norm(bridge.expression(a)))
-
-  /** Cosine similarity built from the native expressions. */
-  def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (vecNorm(a) * vecNorm(b))
 }

@@ -1159,9 +1159,8 @@ object Analytics {
   // === ev21: latest-event-per-key compaction ===============================
   /** The upsert/compaction primitive: the LAST event per (user, day) by
     * (ts, event_id) — one window over one shuffle on the compaction key.
-    * This is the batch face of the streaming dedup/upsert path: at
-    * 100 TB it is the standard log-compaction pass, partition-parallel
-    * on the key with no global ordering.
+    * At 100 TB it is the standard log-compaction pass,
+    * partition-parallel on the key with no global ordering.
     */
   def latestPerKey(s: SparkSession, dir: String): DataFrame = {
     val day = to_date(col("ts")).as("day")

@@ -36,12 +36,10 @@ object Dedup {
   // === exact dedup =========================================================
   /** The dd1 whitespace-normalization content hash — ONE definition per
     * engine (Spark Column + SQL text), shared by every consumer of the
-    * exact tier (dd1/dd8/dd9/dd12/dd17 and the streaming admission
-    * gate): a divergent copy would silently change one consumer's
-    * duplicate groups. NULL-safe: a NULL text hashes to a SENTINEL group
-    * (never NULL — a NULL hash silently drops the document from every
-    * hash-keyed JOIN consumer, which in the streaming gate meant a doc
-    * with neither an admit nor a reject verdict). The sentinel is
+    * exact tier (dd1/dd8/dd9/dd12/dd17): a divergent copy would
+    * silently change one consumer's duplicate groups. NULL-safe: a NULL
+    * text hashes to a SENTINEL group (never NULL — a NULL hash silently
+    * drops the document from every hash-keyed JOIN consumer). The sentinel is
     * tab-delimited: normalization collapses every whitespace run to a
     * single space, so no real document's canonical form can contain a
     * tab — NULL-text docs form their own duplicate group, DISTINCT from
@@ -76,9 +74,8 @@ object Dedup {
       wide: Boolean = false): DataFrame =
     shinglesOf(t(s, dir, "documents"), n, dedup, wide)
 
-  /** DataFrame-based shingling — same definition, usable on a streaming
-    * micro-batch (the incremental-admission ingest) as well as the
-    * corpus table.
+  /** DataFrame-based shingling — same definition over any documents
+    * frame, so [[bandedKeysOf]] shares it with the corpus table.
     *
     * `wide=true` fans the doc scan to MACHINE width instead of shuffle
     * width — for consumers whose downstream per-shingle work is
@@ -345,9 +342,8 @@ object Dedup {
   def bandedKeys(s: SparkSession, dir: String, wide: Boolean = false): DataFrame =
     bandedKeysOf(t(s, dir, "documents"), wide)
 
-  /** DataFrame-based banding — shared with the streaming admission path
-    * (Streams.incrementalAdmission probes a micro-batch's bands against
-    * the persisted corpus band state).
+  /** DataFrame-based banding over any documents frame — the body of
+    * [[bandedKeys]], kept separate from the corpus table read.
     */
   def bandedKeysOf(docs: DataFrame, wide: Boolean = false): DataFrame =
     bandedKeysOfSig(minhashSignatures(shinglesOf(docs, dedup = false, wide = wide)))

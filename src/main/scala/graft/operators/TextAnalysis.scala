@@ -292,8 +292,7 @@ object TextAnalysis {
   // presence. Emits keep/drop plus a reasons bitmask so downstream
   // pipelines can audit WHY a document fell out — single map-only pass.
   /** The txt6 rule mask as a pure column expression over `text` —
-    * map-only, so the streaming quality router applies the IDENTICAL
-    * rules per micro-batch (streaming.Streams.qualityRoute).
+    * map-only, so it applies per row with no shuffle.
     */
   def qualityMask: Column = {
     val toks = tokens(col("text"))

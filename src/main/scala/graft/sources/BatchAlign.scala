@@ -82,17 +82,6 @@ object BatchAlign {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(outFields))
   }
 
-  /** The appender insert (engine/connection.rs:163-196 + session wrapper
-    * session/mod.rs:393-407): align the batch to the target table's schema
-    * and append. `table` must be a saved table (catalog-managed).
-    */
-  def appendAligned(spark: SparkSession, table: String, batch: DataFrame,
-      explicitCols: Option[Seq[String]] = None): Unit = {
-    val target = spark.table(table).schema
-    alignToSchema(batch, target, explicitCols)
-      .write.mode("append").insertInto(table)
-  }
-
   /** DoPut prepared-INSERT ingest — the reference's appender fast path
     * (prepared.rs:429-515 + batch.rs:117-259): reshape a Go-driver
     * one-row positional batch back into rows, bind positional parameter

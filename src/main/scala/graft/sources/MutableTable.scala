@@ -1074,70 +1074,6 @@ final class MutableTable private (
     (nv, deleted)
   }
 
-  /** Copy-on-write DELETE by key set: rows whose `keyCol` appears in
-    * `keys` are removed via a distributed anti-join — nothing about the
-    * key set ever reaches the driver (the isin-predicate form collects
-    * keys and caps out at driver memory; this is the upsert path's
-    * at-scale shape). Only files containing a matching key are
-    * rewritten; the only collect is over FILE NAMES, bounded by the
-    * manifest size.
-    */
-  def deleteKeys(keys: DataFrame, keyCol: String): Long = locked {
-    require(schema.fieldNames.contains(keyCol), s"unknown column: $keyCol")
-    val v = currentVersion
-    loadStats(v) // keep carried-over stats in the manifest we are about to write
-    val (files, deleted, changed, staged) = deleteKeysCore(v, keys, keyCol)
-    try { if (changed) commit(allocVersion(), files) }
-    catch { case e: Throwable => dropStaged(staged); throw e }
-    deleted
-  }
-
-  /** Atomic UPSERT by primary key: the batch's keys are deleted and its
-    * rows inserted in ONE version commit — a reader never observes the
-    * keys-absent intermediate state a delete-then-insert pair publishes,
-    * and a crash anywhere before the commit leaves the previous version
-    * intact (the streaming-sink shape). The key must be the table's
-    * primary key (or the table unkeyed): the delete removes every
-    * matching table row, so PK uniqueness after the combined commit
-    * follows from the batch's own per-key uniqueness — enforced here
-    * with one small aggregate. NULL keys are rejected (they can never
-    * match a table row, so "upsert by NULL" has no meaning). Returns
-    * (deletedRows, insertedRows).
-    */
-  def upsertKeys(rows: DataFrame, keyCol: String): (Long, Long) = locked {
-    require(schema.fieldNames.contains(keyCol), s"unknown column: $keyCol")
-    require(primaryKey.forall(_ == keyCol),
-      s"upsertKeys requires the key to be the table's primary key (pk=$primaryKey, key=$keyCol)")
-    val base = currentVersion
-    loadStats(base)
-    val batch = rows.select(schema.fieldNames.toSeq.map(col): _*)
-    if (!batch.filter(col(keyCol).isNull).isEmpty)
-      throw new IllegalArgumentException(s"NULL key in upsert batch: $keyCol")
-    if (!batch.groupBy(col(keyCol)).agg(count(lit(1)).as("n")).filter(col("n") > 1).isEmpty)
-      throw new DuplicateKeyException(s"duplicate key in upsert batch: $keyCol")
-    val (survivors, deleted, _, replStaged) = deleteKeysCore(base, batch, keyCol)
-    // from here, BOTH staged sets (the delete's survivor replacements and
-    // the fresh insert files) must die together on any failure: the old
-    // cleanup deleted only newFiles, orphaning replStaged on disk with
-    // stale fileStats entries whenever stageWrite or commit threw
-    val newFiles = try stageWrite(batch)
-      catch { case e: Throwable => dropStaged(replStaged); throw e }
-    try {
-      val inserted = newFiles.map(f =>
-        statsFor(f).values.headOption.map(_.rows).getOrElse(-1L)) match {
-        case rs if rs.nonEmpty && rs.forall(_ >= 0) => rs.sum
-        case _ if newFiles.isEmpty => 0L
-        case _ => scan(newFiles).count()
-      }
-      commit(allocVersion(), survivors ++ newFiles)
-      (deleted, inserted)
-    } catch {
-      case e: Throwable =>
-        dropStaged(replStaged ++ newFiles)
-        throw e
-    }
-  }
-
   /** Remove staged-but-never-committed files and their stats entries —
     * failure cleanup shared by the staged-write paths. Never throws (a
     * cleanup failure must not mask the original error).
@@ -1150,60 +1086,6 @@ final class MutableTable private (
       try Files.deleteIfExists(dataDir.resolve(f))
       catch { case _: Throwable => }
     }
-
-  /** Core of [[deleteKeys]]: computes the post-delete file list WITHOUT
-    * committing, so [[upsertKeys]] can fold the delete and its insert
-    * into one atomic version. Returns (files, deletedRows, changed,
-    * stagedReplacements) — the caller owns cleanup of the staged
-    * survivor-replacement files if its commit never happens.
-    */
-  private def deleteKeysCore(base: Long, keys: DataFrame,
-      keyCol: String): (Seq[String], Long, Boolean, Seq[String]) = {
-    val all = readManifest(base)
-    if (all.isEmpty) return (all, 0L, false, Nil)
-    val keySet = keys.select(col(keyCol)).distinct()
-    // STATS PRUNING on the key batch's own bounds (the insert clash
-    // check's trick, upsert-side): one tiny min/max job over the key
-    // frame turns "scan every live file per batch" into "scan the
-    // bound-overlapping files" — at 100 TB an upsert touches its key
-    // range, not the table. NULL keys never join, so bounds ignoring
-    // them is exact; an unbounded batch (all-null or empty bounds)
-    // keeps every file.
-    val kb = keySet.agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi")).head()
-    val candidates =
-      if (kb.isNullAt(0) || kb.isNullAt(1)) all
-      else {
-        import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        import org.apache.spark.sql.catalyst.expressions.{And, GreaterThanOrEqual, LessThanOrEqual, Literal}
-        val dt = schema(schema.fieldIndex(keyCol)).dataType
-        try {
-          val attr = UnresolvedAttribute(keyCol)
-          val overlap = And(
-            GreaterThanOrEqual(attr, Literal.create(kb.get(0), dt)),
-            LessThanOrEqual(attr, Literal.create(kb.get(1), dt)))
-          all.filter(f => FileStats.mayMatch(statsFor(f), overlap))
-        } catch { case _: Exception => all } // pruning never fails the statement
-      }
-    if (candidates.isEmpty) return (all, 0L, false, Nil)
-    // file name must attach AT THE SCAN (input_file_name() evaluated
-    // after the join runs outside the file-read task and yields "")
-    val fileDf = scan(candidates).select(col(keyCol), input_file_name().as("__f"))
-    // one discovery job: per-file match counts give both the affected
-    // file set and the deleted-row total (keySet is distinct, so the
-    // semi-join hits each matching row exactly once)
-    val perFile = fileDf.join(keySet, Seq(keyCol), "left_semi")
-      .groupBy(col("__f")).agg(count(lit(1)).as("n"))
-      .collect()
-    val hit = perFile.map(_.getString(0)).toSet
-    val deleted = perFile.map(_.getLong(1)).sum
-    val affected = all.filter(f => hit.exists(h => h.endsWith("/" + f) || h.endsWith(f)))
-    if (affected.isEmpty) return (all, 0L, false, Nil)
-    val affectedDf = scan(affected)
-    val survivors = affectedDf.join(keySet, Seq(keyCol), "left_anti")
-      .select(schema.fieldNames.toSeq.map(col): _*)
-    val replacement = if (survivors.isEmpty) Seq.empty else stageWrite(survivors)
-    (all.filterNot(affected.contains) ++ replacement, deleted, true, replacement)
-  }
 
   /** Copy-on-write UPDATE: SET col -> expression for rows matching `cond`;
     * returns the number of rows updated.

@@ -395,20 +395,6 @@ class FileStatsSpec extends SparkTestBase {
     assert(ub() == None, "empty prefix matches everything")
   }
 
-  test("deleteKeys prunes the scan to files overlapping the key batch's bounds") {
-    import org.apache.spark.sql.functions._
-    val t = mkTable("delkeys")
-    val before = currentFiles(t)
-    // keys 250..255 overlap only file 2: exactly one file rewritten
-    val n = t.deleteKeys(spark.range(250L, 256L).select(col("id").as("k")), "k")
-    assert(n == 6L)
-    val after = currentFiles(t)
-    assert(before.intersect(after).size == 9, "nine files carry over untouched")
-    assert(t.df.count() == 994)
-    // a batch overlapping nothing is decided by bounds alone
-    assert(t.deleteKeys(spark.range(50000L, 50010L).select(col("id").as("k")), "k") == 0L)
-  }
-
   test("footer stats decode and manifest entries round-trip") {
     val t = mkTable("codec")
     val name = currentFiles(t).head

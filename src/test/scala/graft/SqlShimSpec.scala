@@ -38,11 +38,6 @@ class SqlShimSpec extends AnyFunSuite {
     assert(SqlShim.isQuery("/* c */ SELECT 1"))
   }
 
-  test("containsQuery scans all statements (reference contains_query)") {
-    assert(SqlShim.containsQuery("CREATE TEMP VIEW v AS SELECT 1; SELECT * FROM v; DROP VIEW v"))
-    assert(!SqlShim.containsQuery("CREATE TABLE t (a INT); INSERT INTO t VALUES (1)"))
-  }
-
   test("parseCatalogCmd recognizes ATTACH/DETACH and nothing else") {
     assert(SqlShim.parseCatalogCmd(
       "ATTACH 'ducklake:/tmp/l.db' AS lake (DATA_PATH '/tmp/files')")

@@ -3,7 +3,6 @@ package graft.operators
 import java.sql.Timestamp
 
 import graft.SparkTestBase
-import graft.functions.UuidFunctions
 import org.apache.spark.sql.functions._
 
 class AsOfSpec extends SparkTestBase {
@@ -138,13 +137,4 @@ class AsOfSpec extends SparkTestBase {
     }
   }
 
-  test("uuid canonical text round-trips through binary (table_schema_test.test value)") {
-    val u = "550e8400-e29b-41d4-a716-446655440000"
-    val row = spark.sql(s"SELECT '$u' AS t")
-      .select(UuidFunctions.uuidCanonical(UuidFunctions.uuidToBinary(col("t"))).as("rt"),
-        length(UuidFunctions.uuidToBinary(col("t"))).as("n"))
-      .head
-    assert(row.getString(0) == u)
-    assert(row.getInt(1) == 16)
-  }
 }

@@ -82,16 +82,4 @@ class BatchAlignSpec extends SparkTestBase {
     assert(BatchAlign.reshapePositional(spark, single, 2).collect().toSeq == Seq(Row(1L, 2L)))
   }
 
-  test("appendAligned inserts an aligned batch into a saved table (A7)") {
-    import java.nio.file.Files
-    val wh = Files.createTempDirectory("graft_align").toString
-    spark.sql("DROP TABLE IF EXISTS align_target")
-    spark.sql(s"CREATE TABLE align_target (id BIGINT, name STRING, score DOUBLE) USING parquet LOCATION '$wh/align_target'")
-    val in = df(StructType(Seq(
-      StructField("name", StringType), StructField("id", IntegerType))), Row("z", 42))
-    BatchAlign.appendAligned(spark, "align_target", in)
-    val got = spark.table("align_target").collect()
-    assert(got.toSeq == Seq(Row(42L, "z", null)))
-    spark.sql("DROP TABLE align_target")
-  }
 }

@@ -63,16 +63,6 @@ class MutableTableSpec extends SparkTestBase {
     assert(t.fileCount == 2)
   }
 
-  test("deleteKeys removes matching keys via anti-join and leaves untouched files alone") {
-    val t = mkTable()
-    t.insert(rows((1L, "a", 1.0), (2L, "b", 2.0)))  // file A
-    t.insert(rows((3L, "c", 3.0), (4L, "d", 4.0)))  // file B
-    val keys = rows((3L, "x", 0.0), (9L, "y", 0.0)).select(col("id"))
-    assert(t.deleteKeys(keys, "id") == 1)
-    assert(t.df.orderBy(col("id")).collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 4L))
-    assert(t.fileCount == 2, "file A (no matching keys) must not be rewritten")
-  }
-
   test("delete keeps rows whose predicate is NULL (data-loss regression, ADVICE r2 high)") {
     val t = mkTable()
     val withNull = spark.createDataFrame(
