@@ -1,12 +1,12 @@
 package graft
 
-/** Tiny synchronized access-ordered LRU of compiled plans (the planned
-  * DML discovery scans).
+/** Tiny synchronized access-ordered LRU: the planned DML discovery
+  * scans, and each micro-lake table's parsed manifests.
   *
   * `compute` runs OUTSIDE the lock on purpose: a racing duplicate build
-  * is benign — both values are equivalent compiled plans over immutable
-  * files — and far cheaper than holding a monitor across Spark physical
-  * planning.
+  * is benign — both values are equivalent (compiled plans over immutable
+  * files, or parses of one immutable manifest) — and far cheaper than
+  * holding a monitor across Spark physical planning.
   */
 private[graft] final class LruCache[K, V](max: Int) {
   private val m = new java.util.LinkedHashMap[K, V](max + 8, 0.75f, true) {
@@ -21,4 +21,8 @@ private[graft] final class LruCache[K, V](max: Int) {
         synchronized(m.put(key, v))
         v
     }
+
+  def put(key: K, v: V): Unit = synchronized(m.put(key, v))
+
+  def remove(key: K): Unit = synchronized(m.remove(key))
 }

@@ -6,9 +6,9 @@ import java.util.concurrent.atomic.AtomicLong
   * take, served on `status.json`: how many key reads the driver answered
   * and why the others declined to the planned path, how often a cached
   * prepared plan was reused, how many DML statements the driver-side
-  * copy-on-write rewrite applied, and how long micro-lake writes waited
-  * for and held their table's writer lock. The row cache reports its own
-  * occupancy (graft.sources.RowCache).
+  * path applied, how long micro-lake writes waited for and held their
+  * table's writer lock, and the lake's write amplification. The row
+  * cache reports its own occupancy (graft.sources.RowCache).
   */
 object ServeCounters {
 
@@ -30,6 +30,9 @@ object ServeCounters {
 
   val planCacheHits = new AtomicLong()
   val planCacheMisses = new AtomicLong()
+  /** DML statements the driver-side path applied (served as
+    * `driver_dml_rewrites`).
+    */
   val driverRewrites = new AtomicLong()
 
   /** Micro-lake writes (outermost writer-lock acquisitions) and their
@@ -38,6 +41,15 @@ object ServeCounters {
   val lakeWrites = new AtomicLong()
   val lakeLockWaitNanos = new AtomicLong()
   val lakeLockHoldNanos = new AtomicLong()
+
+  /** Row positions recorded in delete vectors by DELETE and UPDATE. */
+  val lakeRowsDeleted = new AtomicLong()
+
+  /** Rows written again: merged by micro-compaction and `checkpoint`,
+    * and the updated rows an UPDATE appends. An INSERT's rows are not
+    * counted.
+    */
+  val lakeRowsRewritten = new AtomicLong()
 
   def lakeWrite(waitNanos: Long, holdNanos: Long): Unit = {
     lakeWrites.incrementAndGet()

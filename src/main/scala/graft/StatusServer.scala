@@ -19,7 +19,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * and a session-registry snapshot (registry.rs:36-42), plus `serve`:
   * which prepared-statement paths served requests (key reads answered
   * on the driver and their decline reasons, plan-cache reuse, driver-side
-  * DML rewrites) and the micro-lake row cache's occupancy. Serialization is
+  * DML statements), the micro-lake's writes and write amplification, and
+  * its row cache's occupancy. Serialization is
   * a hand-rolled writer over the JDK's built-in `HttpServer` — the
   * status page must not pull a web framework onto the executor
   * classpath, and the payload is small and flat.
@@ -128,8 +129,9 @@ object StatusServer {
   }
 
   /** The serving paths' counters (graft.ServeCounters), the micro-lake
-    * writes with their summed writer-lock wait and hold, and the row
-    * cache's occupancy; a hit rate with no lookups yet is null.
+    * writes with their summed writer-lock wait and hold, the rows they
+    * deleted and rewrote, and the row cache's occupancy; a hit rate with
+    * no lookups yet is null.
     */
   private def serveJson: String = {
     val rc = graft.sources.RowCache.shared
@@ -146,6 +148,8 @@ object StatusServer {
       "lake_writes" -> num(ServeCounters.lakeWrites.get()),
       "lake_lock_wait_ms" -> dbl(ServeCounters.lakeLockWaitNanos.get() / 1e6),
       "lake_lock_hold_ms" -> dbl(ServeCounters.lakeLockHoldNanos.get() / 1e6),
+      "lake_rows_deleted" -> num(ServeCounters.lakeRowsDeleted.get()),
+      "lake_rows_rewritten" -> num(ServeCounters.lakeRowsRewritten.get()),
       "row_cache" -> obj(
         "entries" -> num(rc.entries.toLong),
         "bytes" -> num(rc.bytes),

@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Native Catalyst vector expressions.
+/** Native Catalyst vector expression: the dot product.
   *
   * The generic route for a dot product — `aggregate(zip_with(...))` —
   * runs interpreted (higher-order functions don't participate in
   * whole-stage codegen), which makes all-pairs similarity scans
-  * lambda-bound. These expressions generate a tight primitive loop
+  * lambda-bound. This expression generates a tight primitive loop
   * instead (SURVEY §2.B UDF surface: "a native Catalyst Expression with
   * doGenCode beats a Scala UDF"); the evaluation order is the same
   * sequential left-fold, so results are bit-identical to the fold the
@@ -54,61 +54,8 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** L2 norm as a single pass (sqrt of self-dot). */
-case class L2Norm(child: Expression) extends Expression with ExpectsInputTypes {
-  override def children: Seq[Expression] = Seq(child)
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "vec_norm"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val x = v.asInstanceOf[ArrayData]
-      var s = 0.0
-      var i = 0
-      val n = x.numElements()
-      while (i < n) { val d = x.getDouble(i); s += d * d; i += 1 }
-      math.sqrt(s)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val s = ctx.freshName("s")
-    val d = ctx.freshName("d")
-    ev.copy(code =
-      code"""
-         |${c.code}
-         |boolean ${ev.isNull} = ${c.isNull};
-         |double ${ev.value} = 0.0;
-         |if (!${ev.isNull}) {
-         |  int $n = ${c.value}.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $d = ${c.value}.getDouble($i);
-         |    $s += $d * $d;
-         |  }
-         |  ${ev.value} = java.lang.Math.sqrt($s);
-         |}
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
-}
-
 object VectorFunctions {
   /** Codegen'd dot product of two double arrays. */
   def vecDot(a: Column, b: Column): Column =
     bridge.column(DotProduct(bridge.expression(a), bridge.expression(b)))
-
-  /** Codegen'd L2 norm of a double array. */
-  def vecNorm(a: Column): Column =
-    bridge.column(L2Norm(bridge.expression(a)))
 }

@@ -101,7 +101,10 @@ private[sources] object DriverDml {
     * every downstream reader (stats kinds, compression, schema name).
     * Returns the file's column stats, taken from the closed writer's
     * footer: equal to [[FileStats.fromFooter]] of the written file, with
-    * no second open of it.
+    * no second open of it. Values are plain-encoded, without dictionary
+    * pages: the driver writes point-DML files and compactions of them,
+    * whose string columns are mostly distinct, so a dictionary would be
+    * filled, hashed and then dropped for plain encoding anyway.
     */
   def writeRows(file: Path, schema: StructType, rows: Seq[Array[Any]]): Map[String, ColStats] = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -114,6 +117,7 @@ private[sources] object DriverDml {
       .withType(mt)
       .withConf(new org.apache.parquet.conf.PlainParquetConfiguration())
       .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withDictionaryEncoding(false)
       .build()
     try rows.foreach { r =>
       val g = factory.newGroup()

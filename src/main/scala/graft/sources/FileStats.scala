@@ -238,7 +238,7 @@ object FileStats {
   }
 
   /** Boolean face of [[admits]] — every consumer (candidateFiles, the
-    * driver rewrite, StatsPruneRule) keeps a file unless the bounds
+    * driver DML, StatsPruneRule) keeps a file unless the bounds
     * PROVE it empty for the predicate.
     */
   def mayMatch(stats: Map[String, ColStats], e: Expression): Boolean =

@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** A micro-lake snapshot's data files as a Spark [[FileIndex]]: exactly
@@ -48,15 +49,30 @@ final class ManifestFileIndex(statuses: Seq[FileStatus]) extends FileIndex {
   override def hashCode: Int = paths.hashCode
 
   /** A parquet scan of these files in `session`, columns typed by
-    * `schema` made nullable (as every file-source read is).
+    * `schema` made nullable (as every file-source read is), without the
+    * rows `deletes` names. Only a snapshot with deletes gets the one
+    * filter on `_metadata.file_name` and `_metadata.row_index`: a
+    * delete-free frame is the bare relation.
     */
-  def frame(session: SparkSession, schema: StructType): DataFrame =
-    session.baseRelationToDataFrame(HadoopFsRelation(this, partitionSchema,
+  def frame(session: SparkSession, schema: StructType,
+      deletes: DeleteVectors = DeleteVectors.empty): DataFrame = {
+    val df = session.baseRelationToDataFrame(HadoopFsRelation(this, partitionSchema,
       org.apache.spark.sql.graft.bridge.asNullable(schema), None,
       new ParquetFileFormat, Map.empty)(session))
+    if (deletes.isEmpty) df else df.filter(!ManifestFileIndex.deleted(deletes))
+  }
 }
 
 object ManifestFileIndex {
+
+  /** TRUE for a scanned row that `deletes` names, by the parquet
+    * source's file name and row position metadata.
+    */
+  def deleted(deletes: DeleteVectors): Column = {
+    import org.apache.spark.sql.graft.bridge
+    bridge.column(DeletedRow(bridge.expression(col("_metadata.file_name")),
+      bridge.expression(col("_metadata.row_index")), deletes))
+  }
 
   /** What Hadoop's local file system reports as a file's block size. */
   private val LocalBlockSize = 32L << 20

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * over Flight SQL — `INSERT`, `UPDATE … SET … WHERE`, `DELETE FROM …
   * WHERE` (exercised by scenarios/prepared_statements.rs:47-238 and the
   * YCSB workload mix, tests/benchbase/ycsb-flight-sql.xml:24) — onto the
-  * copy-on-write [[MutableTable]] layer, since Spark SQL itself cannot
+  * merge-on-read [[MutableTable]] layer, since Spark SQL itself cannot
   * mutate parquet v1 tables (SURVEY §7.4).
   *
   * Every managed table is also registered as a temp view of its current

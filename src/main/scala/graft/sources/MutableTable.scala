@@ -9,45 +9,54 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.roaringbitmap.RoaringBitmap
 
 /** Snapshot-versioned mutable parquet table — the Spark re-expression of
   * what DuckLake gives the reference (SURVEY §7.4): ACID-ish
   * UPDATE/DELETE/PK-errors over immutable parquet files.
   *
-  * Layout (a micro-lake: snapshot id + file list, exactly the shape the
-  * survey prescribes):
+  * Layout (a micro-lake: snapshot id + file list + delete vectors, the
+  * shape of DuckLake's catalog tables):
   * {{{
   *   root/data/part-<uuid>.parquet     immutable data files
-  *   root/manifest-<v>.json            file list + schema for version v
+  *   root/manifest-<v>.json            files, delete vectors, stats of version v
   *   root/_version                     current version pointer (atomic swap)
   * }}}
   *
   * - INSERT appends new files and a new manifest — old files untouched.
-  * - DELETE/UPDATE are file-level copy-on-write: only files that contain
-  *   matching rows are rewritten (located via `input_file_name`), the
-  *   rest carry over by reference. At 100 TB with partition-pruned
-  *   predicates this rewrites only the touched partitions, the same
-  *   mechanics as DuckLake/Iceberg/Delta CoW.
+  * - DELETE/UPDATE are merge-on-read: a DELETE records the matched rows'
+  *   positions in its files' delete vectors ([[DeleteVectors]], held in
+  *   the manifest) and writes no data; an UPDATE is that delete plus an
+  *   append of the updated rows. A file whose every row is deleted
+  *   leaves the manifest. Every reader — snapshot frames, the driver-
+  *   served key read, the primary-key checks and DML discovery — skips
+  *   the deleted positions. The same mechanics as DuckLake's delete
+  *   files, Delta's deletion vectors and Iceberg's position deletes.
   * - PRIMARY KEY duplicate inserts raise `DuplicateKeyException`
   *   (tests/sql/error_status.test contract; Spark itself enforces no
   *   keys, so this is the engine-level anti-join check from SURVEY §2.B).
-  * - `checkpoint()` compacts the file set (maintenance/mod.rs:24-223 —
-  *   `CHECKPOINT` ≈ compaction job; the reference's cross-instance
-  *   Postgres advisory lock becomes a single-writer assumption here).
+  * - Whole-file rewriting lives only in micro-compaction (folded into a
+  *   driver-side commit that adds a file) and `checkpoint()`, which
+  *   compacts the file set (maintenance/mod.rs:24-223 — `CHECKPOINT` ≈
+  *   compaction job; the reference's cross-instance Postgres advisory
+  *   lock becomes a single-writer assumption here). Both fold the delete
+  *   vectors of the files they merge back into the new file.
   * - Old manifests remain readable: `asOf(v)` is snapshot time travel.
   *
   * Commit protocol: write manifest-v, then atomically swap `_version`.
-  * Readers resolve the pointer once and read an immutable file list, so
-  * a concurrent commit never yields a torn read.
+  * Readers resolve the pointer once and read an immutable manifest, so
+  * a concurrent commit never yields a torn read. Each manifest is parsed
+  * once while it stays in the table's manifest cache.
   *
   * Reads are built from the manifest alone. Every frame of the table —
   * `df`/`asOf` (so the catalog's view refresh on each publish), and the
   * DML paths' internal scans (`scan`) — is a parquet relation over a
-  * [[ManifestFileIndex]] of exactly the manifest's files: no Hadoop path
-  * check, glob or listing per read. Each data file is stat'ed once over
-  * NIO and its status kept until vacuum drops the file; a snapshot with
-  * a missing file throws when its frame is built, and a frame whose file
-  * vanished later fails at scan, so a read is never partial.
+  * [[ManifestFileIndex]] of exactly the manifest's files, filtered by
+  * its delete vectors when it has any: no Hadoop path check, glob or
+  * listing per read. Each data file is stat'ed once over NIO and its
+  * status kept until vacuum drops the file; a snapshot with a missing
+  * file throws when its frame is built, and a frame whose file vanished
+  * later fails at scan, so a read is never partial.
   *
   * Writes hold the table's writer monitor. The driver-side paths write
   * through [[DriverDml]]'s NIO parquet codec and take the new file's
@@ -59,6 +68,8 @@ final class MutableTable private (
     val root: Path,
     val schema: StructType,
     val primaryKey: Option[String]) {
+
+  import MutableTable.{Compacted, Manifest}
 
   final class DuplicateKeyException(msg: String) extends RuntimeException(msg)
 
@@ -78,6 +89,17 @@ final class MutableTable private (
     */
   private def cachedRows(f: String): Option[IndexedSeq[Array[Any]]] =
     RowCache.shared.getOrLoad(cacheKey, f)(DriverDml.readRows(dataDir.resolve(f), schema))
+
+  /** The rows of data file `f` that `deletes` leaves, in file order,
+    * through the row cache; None when the codec cannot read the file.
+    */
+  private def liveRows(f: String, deletes: DeleteVectors): Option[Iterator[Array[Any]]] =
+    cachedRows(f).map { rows =>
+      deletes.get(f) match {
+        case None => rows.iterator
+        case Some(dead) => rows.iterator.zipWithIndex.collect { case (r, i) if !dead.contains(i) => r }
+      }
+    }
 
   /** A data file's row count from its stats; -1 when unknown. */
   private def rowCountOf(f: String): Long =
@@ -109,8 +131,8 @@ final class MutableTable private (
       }
     }
 
-  // Isolated session for the INTERNAL DML frames (discovery aggregate,
-  // PK check, rewrite): AQE's shuffle-stage materialization costs one
+  // Isolated session for the INTERNAL DML frames (discovery scan, PK
+  // check, planned UPDATE's append): AQE's shuffle-stage materialization costs one
   // extra JOB per aggregate, which on the point-DML path is pure
   // latency — these aggregates move a handful of rows over ≤4
   // partitions, exactly the case runtime re-planning cannot help.
@@ -140,19 +162,9 @@ final class MutableTable private (
   // the stream-closing boilerplate inline)
   private def listDir(p: Path): Seq[Path] = MutableTable.listDir(p)
 
-  private def readManifest(v: Long): Seq[String] = {
-    val txt = new String(Files.readAllBytes(manifestPath(v)))
-    // minimal JSON: {"files": ["a.parquet", ...], "stats": [...]} — the
-    // files array is the FIRST bracket pair (names contain no brackets)
-    val open = txt.indexOf('[')
-    val body = txt.substring(open + 1, txt.indexOf(']', open)).trim
-    if (body.isEmpty) Seq.empty
-    else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-  }
-
   // Per-file column stats, keyed by data-file name. A data file is
   // immutable once adopted, so its stats are too: entries accumulate
-  // from footers read at stage time and from manifests read back after
+  // from footers read at stage time and from manifests parsed back after
   // a restart — any manifest mentioning a file carries the same stats.
   private val fileStats =
     scala.collection.concurrent.TrieMap.empty[String, Map[String, ColStats]]
@@ -169,57 +181,77 @@ final class MutableTable private (
     * [[statsFor]] — a table `load()`ed after a restart has stats only
     * on disk until someone reads them).
     */
-  def ensureStatsLoaded(): Unit = loadStats(currentVersion)
+  def ensureStatsLoaded(): Unit = manifest(currentVersion)
 
-  private val statsLoadedVersions =
-    scala.collection.concurrent.TrieMap.empty[Long, Unit]
+  // Parsed manifests by version. A written manifest never changes and
+  // allocVersion never reuses a number in-process, so an entry is exact
+  // until the manifest is deleted (commitOrClean, discardStaged drop it).
+  private val manifests = new graft.LruCache[Long, Manifest](64)
 
-  /** Merge manifest `v`'s persisted stats into the in-memory map (cheap
-    * and once per version; called by readers about to prune against v).
+  /** Manifest `v`, parsed once while cached. Parsing merges its
+    * persisted stats into [[fileStats]], so a reader of `v` prunes
+    * against them.
     */
-  private def loadStats(v: Long): Unit = {
-    if (statsLoadedVersions.putIfAbsent(v, ()).isDefined) return
-    val txt = new String(Files.readAllBytes(manifestPath(v)))
-    val idx = txt.indexOf("\"stats\"")
-    if (idx < 0) return
-    val open = txt.indexOf('[', idx)
-    if (open < 0) return
-    val body = txt.substring(open + 1, txt.indexOf(']', open)).trim
-    if (body.isEmpty) return
-    body.split(",").toSeq
-      .flatMap(raw => FileStats.decodeEntry(raw.trim.stripPrefix("\"").stripSuffix("\"")))
-      .groupBy(_._1)
-      .foreach { case (file, entries) =>
-        // a manifest always carries a file's complete column set, and a
-        // file's stats never change — first writer wins is exact
-        fileStats.putIfAbsent(file, entries.map(e => e._2 -> e._3).toMap)
+  private def manifest(v: Long): Manifest =
+    manifests.getOrElseUpdate(v)(parseManifest(new String(Files.readAllBytes(manifestPath(v)))))
+
+  // minimal JSON, as writeManifest writes it:
+  //   {"files": ["a.parquet", ...], "deletes": {"a.parquet": "<base64>", ...}, "stats": [...]}
+  // the files array is the FIRST bracket pair (names contain no
+  // brackets), and neither names nor base64 hold quotes, braces or commas
+  private def parseManifest(txt: String): Manifest = {
+    def section(key: String, open: Char, close: Char): Option[String] = {
+      val idx = txt.indexOf("\"" + key + "\"")
+      if (idx < 0) None
+      else {
+        val o = txt.indexOf(open, idx)
+        Some(txt.substring(o + 1, txt.indexOf(close, o)).trim)
       }
+    }
+    val files = section("files", '[', ']').filter(_.nonEmpty)
+      .map(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
+      .getOrElse(Seq.empty)
+    section("stats", '[', ']').filter(_.nonEmpty).foreach { body =>
+      body.split(",").toSeq
+        .flatMap(raw => FileStats.decodeEntry(raw.trim.stripPrefix("\"").stripSuffix("\"")))
+        .groupBy(_._1)
+        .foreach { case (file, entries) =>
+          // a manifest always carries a file's complete column set, and a
+          // file's stats never change — first writer wins is exact
+          fileStats.putIfAbsent(file, entries.map(e => e._2 -> e._3).toMap)
+        }
+    }
+    Manifest(files, section("deletes", '{', '}').map(DeleteVectors.parse).getOrElse(DeleteVectors.empty))
   }
 
-  private def writeManifest(v: Long, files: Seq[String]): Unit = {
+  private def writeManifest(v: Long, files: Seq[String], deletes: DeleteVectors): Unit = {
     val fs = files.map(f => "\"" + f + "\"").mkString("[", ", ", "]")
     val statEntries = FileStats.encodeEntries(
       files.iterator.flatMap(f => fileStats.get(f).map(f -> _)).toMap)
     val st = statEntries.map(e => "\"" + e + "\"").mkString("[", ", ", "]")
-    Files.write(manifestPath(v), s"""{"files": $fs, "stats": $st}""".getBytes)
+    Files.write(manifestPath(v), s"""{"files": $fs, "deletes": ${deletes.json}, "stats": $st}""".getBytes)
+    manifests.put(v, Manifest(files, deletes))
   }
 
-  private def commit(newVersion: Long, files: Seq[String]): Unit = {
-    writeManifest(newVersion, files)
-    publish(newVersion)
-  }
-
-  /** commit/writeManifest with orphan cleanup (r19 review): a publish
-    * that fails AFTER its manifest landed — or a torn manifest write —
-    * must not leave manifest-nv on disk, where it would (a) pin data
-    * files the caller's cleanup is about to delete as "live" against
-    * vacuum and (b) let restore(nv)/asOf(nv) commit a version whose
-    * reads throw. The unpublished manifest is safe to delete: no
-    * pointer references it.
+  /** Write manifest `nv` and, when `publishNow`, publish it — with
+    * orphan cleanup (r19 review): a publish that fails AFTER its
+    * manifest landed — or a torn manifest write — must not leave
+    * manifest-nv on disk, where it would (a) pin data files the caller's
+    * cleanup is about to delete as "live" against vacuum and (b) let
+    * restore(nv)/asOf(nv) commit a version whose reads throw. The
+    * unpublished manifest is safe to delete: no pointer references it.
     */
-  private def commitOrClean(nv: Long, files: Seq[String], publishNow: Boolean): Unit =
-    try { if (publishNow) commit(nv, files) else writeManifest(nv, files) }
-    catch { case e: Throwable => Files.deleteIfExists(manifestPath(nv)); throw e }
+  private def commitOrClean(nv: Long, files: Seq[String], deletes: DeleteVectors,
+      publishNow: Boolean): Unit =
+    try {
+      writeManifest(nv, files, deletes)
+      if (publishNow) publish(nv)
+    } catch {
+      case e: Throwable =>
+        manifests.remove(nv)
+        Files.deleteIfExists(manifestPath(nv))
+        throw e
+    }
 
   /** Atomically swing the version pointer to an already-written manifest
     * — the §7.4 commit point. Used directly by the catalog's transaction
@@ -272,9 +304,9 @@ final class MutableTable private (
     val v = currentVersion
     if (version == v) v
     else {
-      loadStats(version) // restored files keep their persisted stats
+      val m = manifest(version) // restored files keep their persisted stats
       val nv = allocVersion()
-      commit(nv, readManifest(version))
+      commitOrClean(nv, m.files, m.deletes, publishNow = true)
       nv
     }
   }
@@ -285,7 +317,10 @@ final class MutableTable private (
   /** Snapshot read of any retained version. Throws when one of its data
     * files is gone (vacuumed): a snapshot is never read partially.
     */
-  def asOf(version: Long): DataFrame = scan(readManifest(version), spark)
+  def asOf(version: Long): DataFrame = {
+    val m = manifest(version)
+    scan(m.files, m.deletes, spark)
+  }
 
   // Data files' statuses, stat'ed once: a data file never changes after
   // it is adopted, and vacuum/dropStaged drop the entry with the file.
@@ -300,11 +335,13 @@ final class MutableTable private (
     new ManifestFileIndex(files.map(f =>
       fileStatuses.getOrElseUpdate(f, ManifestFileIndex.stat(dataDir.resolve(f)))))
 
-  /** A parquet scan of data files `files` in `session` (by default the
-    * internal DML session), built from the file list alone.
+  /** A parquet scan of data files `files` without the rows `deletes`
+    * names, in `session` (by default the internal DML session), built
+    * from the manifest alone.
     */
-  private def scan(files: Seq[String], session: SparkSession = dmlSession): DataFrame =
-    fileIndex(files).frame(session, schema)
+  private def scan(files: Seq[String], deletes: DeleteVectors = DeleteVectors.empty,
+      session: SparkSession = dmlSession): DataFrame =
+    fileIndex(files).frame(session, schema, deletes)
 
   /** Move the part files of a staged spark write into data/, returning
     * their new (unique) names.
@@ -341,7 +378,7 @@ final class MutableTable private (
     val out = exactFiles match {
       case Some(n) => aligned.repartition(n)
       case None =>
-        // callers that rewrite EXISTING files pass their summed on-disk
+        // callers that copy rows of EXISTING files pass their on-disk
         // size (an fstat per file) — plan-estimated stats would run a
         // whole optimizer pass just to size the output
         val bytes = knownBytes.map(BigInt(_))
@@ -392,11 +429,12 @@ final class MutableTable private (
     // a crash anyway).
     // carried-over files' persisted stats must survive into the new
     // manifest even right after a restart (writeManifest persists only
-    // what the in-memory map holds — review finding, round 15)
-    loadStats(base)
+    // what the in-memory map holds — review finding, round 15): parsing
+    // the base manifest merges them
+    val m = manifest(base)
     val newFiles = stageWrite(data)
     try {
-      primaryKey.foreach(pk => pkCheck(base, newFiles, pk))
+      primaryKey.foreach(pk => pkCheck(newFiles, pk, m.files, m.deletes))
       // row count straight off the footers — no counting job
       val n = newFiles.map(f =>
         statsFor(f).values.headOption.map(_.rows).getOrElse(-1L)) match {
@@ -406,7 +444,7 @@ final class MutableTable private (
           else scan(newFiles).count()
       }
       val nv = allocVersion()
-      commitOrClean(nv, readManifest(base) ++ newFiles, publishNow)
+      commitOrClean(nv, m.files ++ newFiles, m.deletes, publishNow)
       (nv, n)
     } catch {
       case e: Throwable =>
@@ -445,8 +483,8 @@ final class MutableTable private (
     // driver bound belongs to the planned path — parallel write, 32 MB
     // file sizing — not a single-threaded one-file parquet-mr write
     if (!DriverDml.supported(schema) || rows.isEmpty ||
-      rows.size > driverRewriteMaxRows) return None
-    loadStats(base)
+      rows.size > driverMaxRows) return None
+    val m = manifest(base)
     // in-batch duplicate check, in memory — canonicalize signed zeros
     // exactly like pkCheckDriverSide so both fast paths match the
     // planned path's grouping semantics
@@ -463,15 +501,7 @@ final class MutableTable private (
           throw new DuplicateKeyException(s"duplicate key in batch: $pk=$v")
       }
     }
-    val name = s"part-${UUID.randomUUID()}.parquet"
-    val dest = dataDir.resolve(name)
-    try fileStats(name) = DriverDml.writeRows(dest, schema, rows)
-    catch {
-      case _: Exception => // codec hiccup: clean up, planned path decides
-        dropStaged(Seq(name))
-        return None
-    }
-    RowCache.shared.put(cacheKey, name, rows.toIndexedSeq) // write-through
+    val name = writeDriverFile(rows).getOrElse(return None) // codec hiccup: planned path decides
     try {
       primaryKey.foreach { pk =>
         // clash vs the table: the in-batch check is done, so only files
@@ -485,7 +515,7 @@ final class MutableTable private (
         // for a non-overlapping one.
         val nb = statsFor(name).get(pk)
         val boundsKnown = nb.exists(s => s.min.isDefined && s.max.isDefined && s.nulls == 0)
-        val overlapping = readManifest(base).filter { f =>
+        val overlapping = m.files.filter { f =>
           !boundsKnown || (statsFor(f).get(pk) match {
             case Some(s) if s.min.isDefined && s.max.isDefined =>
               FileStats.compare(s.kind, nb.get.min.get, s.max.get) <= 0 &&
@@ -493,23 +523,49 @@ final class MutableTable private (
             case _ => true
           })
         }
-        if (overlapping.nonEmpty && !pkClashDriverSide(overlapping, rows, pk))
-          pkCheck(base, Seq(name), pk)
+        if (overlapping.nonEmpty && !pkClashDriverSide(overlapping, m.deletes, rows, pk))
+          pkCheck(Seq(name), pk, m.files, m.deletes)
       }
-      val (manifest, compactFile) = compactSmallDriverSide(readManifest(base) :+ name)
-      val nv = allocVersion()
-      try commitOrClean(nv, manifest, publishNow)
-      catch {
-        case e: Throwable => // failed commit never referenced the merge
-          dropStaged(compactFile.toSeq)
-          throw e
-      }
-      Some((nv, rows.size.toLong))
+      Some((commitCompacted(m.files :+ name, m.deletes, publishNow), rows.size.toLong))
     } catch {
       case e: Throwable =>
         dropStaged(Seq(name))
         throw e
     }
+  }
+
+  /** Write `rows` as a new data file through the driver codec, keeping
+    * its footer stats and entering its rows in the row cache (write-
+    * through). None when the codec fails; the file is cleaned up.
+    */
+  private def writeDriverFile(rows: Seq[Array[Any]]): Option[String] = {
+    val name = s"part-${UUID.randomUUID()}.parquet"
+    try fileStats(name) = DriverDml.writeRows(dataDir.resolve(name), schema, rows)
+    catch {
+      case _: Exception =>
+        dropStaged(Seq(name))
+        return None
+    }
+    RowCache.shared.put(cacheKey, name, rows.toIndexedSeq)
+    Some(name)
+  }
+
+  /** Commit `files` — the last one a file a driver-side DML just wrote —
+    * and `deletes` as a new version, folding the small files into one
+    * first ([[compactSmallDriverSide]]). Returns the version.
+    */
+  private def commitCompacted(files: Seq[String], deletes: DeleteVectors,
+      publishNow: Boolean): Long = {
+    val c = compactSmallDriverSide(files, deletes)
+    val nv = allocVersion()
+    try commitOrClean(nv, c.files, c.deletes, publishNow)
+    catch {
+      case e: Throwable => // failed commit never referenced the merge
+        dropStaged(c.merged.toSeq)
+        throw e
+    }
+    graft.ServeCounters.lakeRowsRewritten.addAndGet(c.mergedRows)
+    nv
   }
 
   /** Primary-key clash check of a driver-side batch against table
@@ -520,9 +576,10 @@ final class MutableTable private (
     * (join semantics), and keys compare canonicalized like
     * [[pkCheckDriverSide]] (-0.0 = 0.0, NaN = NaN).
     */
-  private def pkClashDriverSide(files: Seq[String], batch: Seq[Array[Any]], pk: String): Boolean = {
+  private def pkClashDriverSide(files: Seq[String], deletes: DeleteVectors,
+      batch: Seq[Array[Any]], pk: String): Boolean = {
     val counts = files.map(rowCountOf)
-    if (counts.exists(_ < 0) || counts.sum > driverRewriteMaxRows) return false
+    if (counts.exists(_ < 0) || counts.sum > driverMaxRows) return false
     val pi = schema.fieldIndex(pk)
     val keys = new java.util.HashSet[Any]()
     batch.foreach { r =>
@@ -530,7 +587,7 @@ final class MutableTable private (
       if (k != null) keys.add(k)
     }
     files.foreach { f =>
-      cachedRows(f).getOrElse(return false).foreach { r =>
+      liveRows(f, deletes).getOrElse(return false).foreach { r =>
         val k = MutableTable.canonicalKey(r(pi))
         if (k != null && keys.contains(k))
           throw new DuplicateKeyException(s"duplicate key violates primary key: $pk=$k")
@@ -542,8 +599,9 @@ final class MutableTable private (
   /** Rows of `version` matching `cond` — a resolved predicate over this
     * table's columns (AttributeReferences by name) — evaluated on the
     * driver: candidate files are pruned by manifest stats, their rows
-    * come from the row cache, and the predicate is bound and evaluated
-    * exactly as the driver-side rewrite does. The rows are in schema
+    * come from the row cache without the positions the version's delete
+    * vectors name, and the predicate is bound and evaluated exactly as
+    * the driver-side DML does. The rows are in schema
     * order, as InternalRows. Left(reason) when the driver cannot serve
     * the read (`unsupported_type`: a column type or file layout the
     * codec lacks; `over_bound`: candidate rows past the driver-side DML
@@ -556,183 +614,173 @@ final class MutableTable private (
     val bound = DriverDml.bind(cond, schema).getOrElse(return Left("unsupported_type"))
     val candidates = candidateFilesExpr(version, cond)
     val counts = candidates.map(rowCountOf)
-    if (counts.exists(_ < 0) || counts.sum > driverRewriteMaxRows) return Left("over_bound")
+    if (counts.exists(_ < 0) || counts.sum > driverMaxRows) return Left("over_bound")
+    val deletes = manifest(version).deletes
     val out = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
     candidates.foreach { f =>
-      cachedRows(f).getOrElse(return Left("unsupported_type")).foreach { r =>
-        val row = DriverDml.toInternal(r)
-        if (bound.eval(row) == true) out += row
+      val rows = cachedRows(f).getOrElse(return Left("unsupported_type"))
+      val dead = deletes.get(f).orNull
+      var i = 0
+      while (i < rows.length) {
+        val row = DriverDml.toInternal(rows(i))
+        if (bound.eval(row) == true && (dead == null || !dead.contains(i))) out += row
+        i += 1
       }
     }
     Right(out.toIndexedSeq)
   }
 
-  /** Driver-side copy-on-write UPDATE/DELETE (VERDICT r15 #3): when the
+  /** Driver-side merge-on-read UPDATE/DELETE (VERDICT r15 #3): when the
     * stats-pruned candidate set is small, every column type is codec-
     * supported, the predicate micro-resolves, and (for UPDATE) every
-    * assignment folds to a literal — discovery, rewrite, and commit all
-    * run in-process: read candidates through the row cache (parquet-mr
-    * on a miss), evaluate the BOUND
-    * predicate per row (Spark's own expression eval, so semantics are
-    * Catalyst's — three-valued logic included), write the replacement
-    * file, swap the manifest. ~15 ms where the planned path pays ~200 ms
-    * of job/planning overhead for the same handful of rows. None = any
-    * gate failed; the caller runs the planned path.
+    * assignment folds to a literal — discovery and commit run
+    * in-process: read candidates through the row cache (parquet-mr on a
+    * miss), evaluate the BOUND predicate per live row (Spark's own
+    * expression eval, so semantics are Catalyst's — three-valued logic
+    * included), and record the matched positions in the delete vectors
+    * ([[commitDml]]); an UPDATE also writes the updated rows as one new
+    * file. No Spark job and no planning. None = any gate failed; the
+    * caller runs the planned path.
     */
   // fast-path hit counter (observability for specs and probes: proves a
-  // statement actually took the in-process rewrite, not the planned path)
-  private[sources] val driverRewriteHits = new java.util.concurrent.atomic.AtomicLong()
+  // statement actually took the in-process path, not the planned one)
+  private[sources] val driverDmlHits = new java.util.concurrent.atomic.AtomicLong()
 
-  private def driverRewrite(base: Long, cond: Column,
-      set: Option[Map[String, Column]], publishNow: Boolean): Option[(Long, Long)] = {
-    val r = driverRewriteImpl(base, cond, set, publishNow)
-    if (r.isDefined) {
-      driverRewriteHits.incrementAndGet()
-      graft.ServeCounters.driverRewrites.incrementAndGet()
-    }
-    r
-  }
-
-  private def driverRewriteImpl(base: Long, cond: Column,
+  private def driverDml(base: Long, cond: Column,
       set: Option[Map[String, Column]], publishNow: Boolean): Option[(Long, Long)] = {
     if (!DriverDml.supported(schema)) return None
-    val all = readManifest(base)
-    if (all.isEmpty) return Some((base, 0L))
-    loadStats(base)
+    val m = manifest(base)
     val resolved = (try quickResolve(org.apache.spark.sql.graft.bridge.unresolvedExpression(cond))
       catch { case _: Exception => None }).getOrElse(return None)
     val bound = DriverDml.bind(resolved, schema).getOrElse(return None)
     // fold SET assignments before any IO (UPDATE only)
     val utc = DriverDml.utcSession(spark) // once per statement, not per SET column
-    val assignments: Option[Seq[(Int, Any)]] = set.map { m =>
-      m.toSeq.map { case (k, c) =>
+    val assignments: Option[Seq[(Int, Any)]] = set.map { sm =>
+      sm.toSeq.map { case (k, c) =>
         val i = schema.fieldIndex(k)
         val e = try org.apache.spark.sql.graft.bridge.unresolvedExpression(c)
           catch { case _: Exception => return None }
         i -> DriverDml.foldAssignment(e, schema.fields(i).dataType, utc).getOrElse(return None)
       }
     }
-    val candidates = all.filter(f => FileStats.mayMatch(statsFor(f), resolved))
-    if (candidates.isEmpty) return Some((base, 0L))
+    val candidates = m.files.filter(f => FileStats.mayMatch(statsFor(f), resolved))
     val candRows = candidates.map(rowCountOf)
-    if (candRows.exists(_ < 0) || candRows.sum > driverRewriteMaxRows) return None
-    var matched = 0L
-    val outRows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-    val affected = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (candRows.exists(_ < 0) || candRows.sum > driverMaxRows) return None
+    val hits = mutable.LinkedHashMap.empty[String, RoaringBitmap]
+    val updated = mutable.ArrayBuffer.empty[Array[Any]]
     candidates.foreach { f =>
       val rows = cachedRows(f).getOrElse(return None)
-      var fileMatches = 0L
-      val fileOut = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      rows.foreach { r =>
-        val hit = bound.eval(DriverDml.toInternal(r)) == true
-        if (hit) fileMatches += 1
-        assignments match {
-          case Some(as) => // UPDATE keeps every row, transformed when hit
-            if (hit) { val nr = r.clone(); as.foreach { case (i, v) => nr(i) = v }; fileOut += nr }
-            else fileOut += r
-          case None => if (!hit) fileOut += r // DELETE keeps non-matching rows
+      val dead = m.deletes.get(f).orNull
+      val hit = new RoaringBitmap()
+      var i = 0
+      while (i < rows.length) {
+        val r = rows(i)
+        if ((dead == null || !dead.contains(i)) && bound.eval(DriverDml.toInternal(r)) == true) {
+          hit.add(i)
+          assignments.foreach { as => val nr = r.clone(); as.foreach { case (c, v) => nr(c) = v }; updated += nr }
         }
+        i += 1
       }
-      if (fileMatches > 0) { matched += fileMatches; affected += f; outRows ++= fileOut }
+      if (!hit.isEmpty) hits(f) = hit
     }
-    if (affected.isEmpty) return Some((base, 0L))
-    val replacement =
-      if (outRows.isEmpty) Seq.empty
+    val nv =
+      if (hits.isEmpty) base
       else {
-        val name = s"part-${UUID.randomUUID()}.parquet"
-        val dest = dataDir.resolve(name)
-        try fileStats(name) = DriverDml.writeRows(dest, schema, outRows.toSeq)
-        catch {
-          case _: Exception =>
-            dropStaged(Seq(name))
-            return None
-        }
-        RowCache.shared.put(cacheKey, name, outRows.toIndexedSeq) // write-through
-        Seq(name)
+        val appended =
+          if (updated.isEmpty) Seq.empty
+          else Seq(writeDriverFile(updated.toSeq).getOrElse(return None))
+        try commitDml(m, hits.toMap, appended, compact = appended.nonEmpty, publishNow)
+        catch { case e: Throwable => dropStaged(appended); throw e }
       }
-    val nv = allocVersion()
-    val files = all.filterNot(affected.contains) ++ replacement
-    if (publishNow) commit(nv, files) else writeManifest(nv, files)
-    Some((nv, matched))
+    driverDmlHits.incrementAndGet()
+    graft.ServeCounters.driverRewrites.incrementAndGet()
+    Some((nv, hits.valuesIterator.map(_.getLongCardinality).sum))
   }
 
-  // Above this many candidate rows the driver rewrite declines: beyond
-  // it the distributed rewrite's parallelism beats the in-process pass
-  // (and driver memory stays bounded). A point DML against a YCSB-shaped
+  /** Commit a DELETE or UPDATE on manifest `m`: the positions `hits`
+    * join the delete vectors, a file whose every row is then deleted
+    * leaves the manifest, and `appended` (an UPDATE's new rows, one per
+    * position) joins it — through micro-compaction when `compact`, for a
+    * driver-written file. Returns the new version.
+    */
+  private def commitDml(m: Manifest, hits: Map[String, RoaringBitmap], appended: Seq[String],
+      compact: Boolean, publishNow: Boolean): Long = {
+    val all = m.deletes.plus(hits)
+    val gone = hits.keySet.filter(f => all.get(f).exists(_.getLongCardinality == rowCountOf(f)))
+    val files = m.files.filterNot(gone) ++ appended
+    val deletes = all.filterFiles(f => !gone(f))
+    val nv =
+      if (compact) commitCompacted(files, deletes, publishNow)
+      else { val v = allocVersion(); commitOrClean(v, files, deletes, publishNow); v }
+    val matched = hits.valuesIterator.map(_.getLongCardinality).sum
+    graft.ServeCounters.lakeRowsDeleted.addAndGet(matched)
+    if (appended.nonEmpty) graft.ServeCounters.lakeRowsRewritten.addAndGet(matched)
+    nv
+  }
+
+  // Above this many candidate rows the driver paths decline: beyond it
+  // the distributed path's parallelism beats the in-process pass (and
+  // driver memory stays bounded). A point DML against a YCSB-shaped
   // table touches a few thousand rows; cluster-sized files take the
   // planned path by construction.
-  private val driverRewriteMaxRows = 50000L
+  private val driverMaxRows = 50000L
 
-  // Small-file micro-compaction, piggybacked on the driver-side insert
-  // commit: a point-insert workload writes one tiny file per statement,
-  // and an uncompacted tail degrades every later scan (the classic lake
-  // small-file problem — table services in Iceberg/Delta exist for it;
-  // the reference's maintenance loop checkpoints the same way,
-  // maintenance/mod.rs:24-223). Once `compactTriggerFiles` live files
-  // are each under `compactSmallRows`, they merge into ONE file inside
-  // the same manifest commit — ~15 ms driver-side every 16 inserts
-  // instead of an unbounded scan-latency slide. Old manifests still
-  // reference the originals (time travel intact; vacuum reclaims).
+  // Small-file micro-compaction, piggybacked on a driver-side commit
+  // that adds a file (INSERT, UPDATE): a point-write workload adds one
+  // tiny file per statement, and an uncompacted tail degrades every
+  // later scan (the classic lake small-file problem — table services in
+  // Iceberg/Delta exist for it; the reference's maintenance loop
+  // checkpoints the same way, maintenance/mod.rs:24-223). Once
+  // `compactTriggerFiles` live files are each under `compactSmallRows`,
+  // their live rows merge into ONE file inside the same manifest commit,
+  // and their delete vectors go with them — ~15 ms driver-side every 16
+  // added files instead of an unbounded scan-latency slide. Old
+  // manifests still reference the originals (time travel intact; vacuum
+  // reclaims).
   private val compactTriggerFiles = 16
   private val compactSmallRows = 5000L
 
-  // Returns the (possibly compacted) manifest plus the name of the
-  // freshly written merge file, if any — the caller owns its cleanup
-  // when the commit that would have referenced it fails (ADVICE r16:
-  // the insert catch otherwise leaked the file + its fileStats entry).
-  private def compactSmallDriverSide(files: Seq[String]): (Seq[String], Option[String]) = {
-    if (!DriverDml.supported(schema)) return (files, None)
+  private def compactSmallDriverSide(files: Seq[String], deletes: DeleteVectors): Compacted = {
+    val unchanged = Compacted(files, deletes, None, 0L)
+    if (!DriverDml.supported(schema)) return unchanged
     val withRows = files.map(f => f -> rowCountOf(f))
     val small = withRows.filter { case (_, r) => r >= 0 && r <= compactSmallRows }
-    if (small.size < compactTriggerFiles) return (files, None)
-    if (small.map(_._2).sum > driverRewriteMaxRows) return (files, None)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
+    if (small.size < compactTriggerFiles) return unchanged
+    if (small.map(_._2).sum > driverMaxRows) return unchanged
+    val rows = mutable.ArrayBuffer.empty[Array[Any]]
     small.foreach { case (f, _) =>
-      cachedRows(f) match {
-        case Some(rs) => rows ++= rs
-        case None => return (files, None) // unreadable driver-side: keep as-is
-      }
+      rows ++= liveRows(f, deletes).getOrElse(return unchanged) // unreadable driver-side: keep as-is
     }
-    val name = s"part-${UUID.randomUUID()}.parquet"
-    val dest = dataDir.resolve(name)
-    try fileStats(name) = DriverDml.writeRows(dest, schema, rows.toSeq)
-    catch {
-      case _: Exception =>
-        dropStaged(Seq(name))
-        return (files, None)
-    }
-    RowCache.shared.put(cacheKey, name, rows.toIndexedSeq) // write-through
+    val name = writeDriverFile(rows.toSeq).getOrElse(return unchanged)
     val smallSet = small.map(_._1).toSet
-    (files.filterNot(smallSet) :+ name, Some(name))
+    Compacted(files.filterNot(smallSet) :+ name, deletes.filterFiles(f => !smallSet(f)),
+      Some(name), rows.size.toLong)
   }
 
   /** Primary-key enforcement over the STAGED (not yet committed) files:
-    * in-batch duplicates and clashes against version `base`, in one
+    * in-batch duplicates and clashes against the table's live rows —
+    * `tableFiles` without the rows `tableDeletes` names — in one
     * aggregate over staged ∪ bound-overlapping table files. The table
     * side is already unique, so any key with total count > 1 involving
     * a staged row is a violation; staged-count > 1 distinguishes the
     * in-batch message (checked first, like the pre-write shape did).
-    *
-    * `oldOverride`: the table-side file set to clash-check against —
-    * defaults to the base manifest (INSERT), while an UPDATE that
-    * assigns the pk passes the manifest MINUS the rewritten files (the
-    * base set would false-clash every unchanged key against its own
-    * pre-image; r19 review).
+    * An INSERT passes its base manifest; an UPDATE that assigns the pk
+    * passes the base files with the updated rows deleted (their
+    * pre-images would otherwise false-clash every unchanged key; r19
+    * review).
     */
-  private def pkCheck(base: Long, newFiles: Seq[String], pk: String,
-      oldOverride: Option[Seq[String]] = None): Unit = {
+  private def pkCheck(newFiles: Seq[String], pk: String,
+      tableFiles: Seq[String], tableDeletes: DeleteVectors): Unit = {
     if (newFiles.isEmpty) return
-    loadStats(base)
     val newBounds = newFiles.map(f => statsFor(f).get(pk))
     // bounds usable only when every staged file has them and none holds
     // a NULL pk (min/max ignore nulls, so a null clash would slip the
     // overlap test — degenerate data falls back to the full check)
     val boundsKnown = newBounds.forall(_.exists(s =>
       s.min.isDefined && s.max.isDefined && s.nulls == 0))
-    val old = oldOverride.getOrElse(readManifest(base))
     val oldCandidates =
-      if (!boundsKnown) old
-      else old.filter { f =>
+      if (!boundsKnown) tableFiles
+      else tableFiles.filter { f =>
         statsFor(f).get(pk) match {
           case Some(s) if s.min.isDefined && s.max.isDefined =>
             newBounds.flatten.exists(nb =>
@@ -754,7 +802,7 @@ final class MutableTable private (
     val newDf = scan(newFiles).select(col(pk), lit(1L).as("__new"))
     val unioned =
       if (oldCandidates.isEmpty) newDf
-      else newDf.unionAll(scan(oldCandidates).select(col(pk), lit(0L).as("__new")))
+      else newDf.unionAll(scan(oldCandidates, tableDeletes).select(col(pk), lit(0L).as("__new")))
     // NULL keys: SQL joins never match NULLs, and the pre-aggregate
     // clash check (left_semi) inherited that — a staged NULL pk beside
     // an existing NULL row is NOT a clash; only two STAGED nulls are an
@@ -780,9 +828,8 @@ final class MutableTable private (
     * construction: a file is dropped only when its bounds PROVE no match.
     */
   private[sources] def candidateFiles(base: Long, cond: Column): Seq[String] = {
-    val files = readManifest(base)
+    val files = manifest(base).files
     if (files.isEmpty) return files
-    loadStats(base)
     resolveCondFast(cond) match {
       case Some(c) => files.filter(f => FileStats.mayMatch(statsFor(f), c))
       case None => files
@@ -892,64 +939,59 @@ final class MutableTable private (
     * enough to run per prepared execution.
     */
   def candidateFilesExpr(version: Long,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {
-    val files = readManifest(version)
-    if (files.isEmpty) return files
-    loadStats(version)
-    files.filter(f => FileStats.mayMatch(statsFor(f), cond))
-  }
+      cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] =
+    manifest(version).files.filter(f => FileStats.mayMatch(statsFor(f), cond))
 
-  /** Files (by name) containing at least one row matching `cond` in
-    * version `base`, PLUS the total match count — one scan answers both
-    * (the match count rides the same per-file aggregate), so a DML
-    * statement pays a single discovery job instead of a
-    * find-files-then-recount pair. The scan covers only the
+  /** The live rows of manifest `m` matching `cond`: per data file, the
+    * positions not yet deleted — one discovery job answers which rows a
+    * DELETE or UPDATE takes, and how many. The scan covers only the
     * stats-pruned CANDIDATE set, and for resolvable predicates it runs
     * PLAN-FREE over a cached candidate scan ([[fastAffected]]) — the
     * per-statement analyzer/optimizer/codegen pipeline was most of a
-    * point DML's discovery latency. The fully-planned aggregate remains
-    * the fallback for anything unusual.
+    * point DML's discovery latency. The fully-planned scan remains the
+    * fallback for anything unusual.
     */
-  private def affectedStats(base: Long, cond: Column): (Seq[String], Long) = {
-    val files = readManifest(base)
-    if (files.isEmpty) return (Seq.empty, 0L)
-    loadStats(base)
+  private def affectedPositions(m: Manifest, cond: Column): Map[String, RoaringBitmap] = {
+    if (m.files.isEmpty) return Map.empty
     // resolve ONCE; pruning and the plan-free discovery share the tree
     val resolved = resolveCondFast(cond)
     val candidates = resolved match {
-      case Some(c) => files.filter(f => FileStats.mayMatch(statsFor(f), c))
-      case None => files
+      case Some(c) => m.files.filter(f => FileStats.mayMatch(statsFor(f), c))
+      case None => m.files
     }
-    if (candidates.isEmpty) return (Seq.empty, 0L)
-    resolved.flatMap(c => fastAffected(candidates, c)).getOrElse {
-      val perFile = scan(candidates).filter(cond)
-        .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
-        .collect()
-      val hit = perFile.map(_.getString(0)).toSet
-      val matches = perFile.map(_.getLong(1)).sum
-      (candidates.filter(f => hit.exists(h => h.endsWith("/" + f) || h.endsWith(f))), matches)
+    if (candidates.isEmpty) return Map.empty
+    val matched = resolved.flatMap(c => fastAffected(candidates, c)).getOrElse {
+      scan(candidates)
+        .select(col("_metadata.file_name").as("__file"), col("_metadata.row_index").as("__pos"), col("*"))
+        .filter(cond).select("__file", "__pos").collect()
+        .groupBy(_.getString(0))
+        .map { case (f, rs) => f -> RoaringBitmap.bitmapOfUnordered(rs.map(_.getLong(1).toInt): _*) }
     }
+    matched.iterator
+      .map { case (f, hit) => f -> m.deletes.get(f).fold(hit)(RoaringBitmap.andNot(hit, _)) }
+      .filter(!_._2.isEmpty).toMap
   }
 
   // Discovery scans cached PER (file, referenced columns) — the finest
   // valid granularity: files are immutable, so a per-file scan stays
-  // valid forever, and a DML that rewrote ONE file only forces planning
-  // for that file's replacement — every other candidate in every later
-  // statement is already compiled (a candidate-SET key missed whenever
-  // the set changed, even when the targeted file had not). Entries are
-  // plans, not data.
+  // valid forever, and a DML that added ONE file only forces planning
+  // for that file — every other candidate in every later statement is
+  // already compiled (a candidate-SET key missed whenever the set
+  // changed, even when the targeted file had not). Entries are plans,
+  // not data.
   private val discoveryScans =
     new graft.LruCache[(String, Seq[String]), org.apache.spark.sql.graft.DiscoveryScan.CachedScan](64)
 
   /** Plan-free DML discovery: bind the resolved predicate to the UNION
-    * of the candidates' cached per-file scans and run ONE per-file
-    * counting job — no analyzer, no optimizer, no codegen per statement
-    * once a file's scan is compiled. None for predicates the fast path
-    * must not touch (unresolvable, non-deterministic, subqueries),
-    * which keep the fully-planned fallback.
+    * of the candidates' cached per-file scans and run ONE job collecting
+    * the matching rows' positions per file — no analyzer, no optimizer,
+    * no codegen per statement once a file's scan is compiled. Deleted
+    * rows are in the scan; the caller drops their positions. None for
+    * predicates the fast path must not touch (unresolvable, non-
+    * deterministic, subqueries), which keep the fully-planned fallback.
     */
   private def fastAffected(candidates: Seq[String],
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression): Option[(Seq[String], Long)] = {
+      resolved: org.apache.spark.sql.catalyst.expressions.Expression): Option[Map[String, RoaringBitmap]] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, PlanExpression}
     if (!resolved.deterministic) return None
     if (resolved.exists(_.isInstanceOf[PlanExpression[_]])) return None
@@ -962,7 +1004,8 @@ final class MutableTable private (
     val refNames = resolved.collect { case a: AttributeReference => a.name }.distinct.sorted
     val scans = candidates.map { f =>
       discoveryScans.getOrElseUpdate((f, refNames)) {
-        val df = scan(Seq(f)).select(refNames.map(col) :+ input_file_name().as("__file"): _*)
+        val df = scan(Seq(f)).select(refNames.map(col) ++ Seq(
+          col("_metadata.file_name").as("__file"), col("_metadata.row_index").as("__pos")): _*)
         org.apache.spark.sql.graft.DiscoveryScan.prepareScan(df)
       }
     }
@@ -977,15 +1020,12 @@ final class MutableTable private (
     }
     val unioned = org.apache.spark.sql.graft.DiscoveryScan.CachedScan(
       spark.sparkContext.union(scans.map(_.rdd)), output)
-    val counts = org.apache.spark.sql.graft.DiscoveryScan.matchCountsByFile(
-      spark, unioned, bound, output.length - 1)
-    val affected = candidates.filter(f =>
-      counts.keysIterator.exists(h => h.endsWith("/" + f) || h.endsWith(f)))
-    Some((affected, counts.valuesIterator.sum))
+    Some(org.apache.spark.sql.graft.DiscoveryScan.matchPositionsByFile(
+      spark, unioned, bound, output.length - 2, output.length - 1))
   }
 
   /** Summed on-disk bytes of live data files (one fstat each) — the
-    * rewrite paths' file-sizing input.
+    * planned UPDATE's file-sizing input.
     */
   private def bytesOf(files: Seq[String]): Long =
     files.map { f =>
@@ -1036,8 +1076,9 @@ final class MutableTable private (
     }
   }
 
-  /** Copy-on-write DELETE: rewrite only files containing matches; returns
-    * the number of rows deleted.
+  /** Merge-on-read DELETE: the matching rows' positions join their
+    * files' delete vectors, and no data file is written; returns the
+    * number of rows deleted.
     */
   def delete(cond: Column): Long = locked {
     deleteCore(currentVersion, cond, publishNow = true)._2
@@ -1048,30 +1089,15 @@ final class MutableTable private (
     deleteCore(base, cond, publishNow = false)
   }
 
+  // SQL three-valued logic holds throughout: a row is taken only where
+  // the predicate is TRUE, so a NULL-predicate row survives
   private def deleteCore(base: Long, cond: Column, publishNow: Boolean): (Long, Long) = {
-    driverRewrite(base, cond, None, publishNow).foreach(return _)
-    val all = readManifest(base)
-    val (affected, deleted) = affectedStats(base, cond)
-    if (affected.isEmpty) return (base, 0L)
-    val affectedDf = scan(affected)
-    // survivors are rows where cond is FALSE **or NULL** — filter(!cond)
-    // alone drops NULL-predicate rows from the rewritten file (data loss;
-    // SQL three-valued logic: DELETE removes only WHERE-true rows)
-    val survivors = affectedDf.filter(!coalesce(cond, lit(false)))
-    // survivor count from manifest stats: affected-file rows minus the
-    // deleted count — saves the isEmpty probe job (and the whole rewrite
-    // when a file is deleted outright); unknown rows fall back to probing
-    val affectedRows = affected.map(f => statsFor(f).values.headOption.map(_.rows).getOrElse(-1L))
-    val anySurvivors =
-      if (affectedRows.forall(_ >= 0)) affectedRows.sum - deleted > 0
-      else !survivors.isEmpty
-    val replacement =
-      if (!anySurvivors) Seq.empty
-      else stageWrite(survivors, knownBytes = Some(bytesOf(affected)))
-    val nv = allocVersion()
-    val files = all.filterNot(affected.contains) ++ replacement
-    commitOrClean(nv, files, publishNow)
-    (nv, deleted)
+    driverDml(base, cond, None, publishNow).foreach(return _)
+    val m = manifest(base)
+    val hits = affectedPositions(m, cond)
+    if (hits.isEmpty) return (base, 0L)
+    (commitDml(m, hits, Seq.empty, compact = false, publishNow),
+      hits.valuesIterator.map(_.getLongCardinality).sum)
   }
 
   /** Remove staged-but-never-committed files and their stats entries —
@@ -1087,8 +1113,9 @@ final class MutableTable private (
       catch { case _: Throwable => }
     }
 
-  /** Copy-on-write UPDATE: SET col -> expression for rows matching `cond`;
-    * returns the number of rows updated.
+  /** Merge-on-read UPDATE: SET col -> expression for rows matching
+    * `cond`, as a delete of those rows plus an append of their updated
+    * copies; returns the number of rows updated.
     */
   def update(cond: Column, set: Map[String, Column]): Long = locked {
     updateCore(currentVersion, cond, set, publishNow = true)._2
@@ -1103,49 +1130,55 @@ final class MutableTable private (
     require(set.nonEmpty, "UPDATE requires at least one assignment")
     set.keys.foreach(k => require(schema.fieldNames.contains(k), s"unknown column: $k"))
     // a PK-ASSIGNING update must re-validate uniqueness (r19 review:
-    // both rewrite paths persisted duplicate PKs — UPDATE t SET k = 5
-    // WHERE k = 6 silently committed two k=5 rows); the driver rewrite
+    // both update paths persisted duplicate PKs — UPDATE t SET k = 5
+    // WHERE k = 6 silently committed two k=5 rows); the driver path
     // has no check, so those updates take the planned path below
     val touchesPk = primaryKey.exists(set.contains)
-    if (!touchesPk) driverRewrite(base, cond, Some(set), publishNow).foreach(return _)
-    val all = readManifest(base)
-    val (affected, updated) = affectedStats(base, cond)
-    if (affected.isEmpty) return (base, 0L)
-    val affectedDf = scan(affected)
-    val rewritten = affectedDf.select(schema.fieldNames.toSeq.map { name =>
-      set.get(name) match {
-        case Some(e) => when(cond, e.cast(schema(name).dataType)).otherwise(col(name)).as(name)
-        case None    => col(name)
-      }
-    }: _*)
-    val replacement = stageWrite(rewritten, knownBytes = Some(bytesOf(affected)))
-    val untouched = all.filterNot(affected.contains)
-    // pk-assigning update: the rewritten files must be unique in-batch
-    // AND against the untouched files (NOT the base manifest, whose
-    // affected files hold every unchanged key's pre-image)
-    if (touchesPk) primaryKey.foreach { pk =>
-      try pkCheck(base, replacement, pk, oldOverride = Some(untouched))
-      catch { case e: Throwable => dropStaged(replacement); throw e }
-    }
-    val nv = allocVersion()
-    val files = untouched ++ replacement
-    commitOrClean(nv, files, publishNow)
-    (nv, updated)
+    if (!touchesPk) driverDml(base, cond, Some(set), publishNow).foreach(return _)
+    val m = manifest(base)
+    val hits = affectedPositions(m, cond)
+    if (hits.isEmpty) return (base, 0L)
+    val updated = hits.valuesIterator.map(_.getLongCardinality).sum
+    val affected = hits.keys.toSeq
+    // exactly the discovered rows, each with its assignments applied
+    val rows = scan(affected).filter(ManifestFileIndex.deleted(DeleteVectors(hits)))
+      .select(schema.fieldNames.toSeq.map { name =>
+        set.get(name) match {
+          case Some(e) => e.cast(schema(name).dataType).as(name)
+          case None    => col(name)
+        }
+      }: _*)
+    // sized by the updated share of the affected files' bytes
+    val affectedRows = affected.map(rowCountOf)
+    val bytes = if (affectedRows.exists(_ <= 0)) bytesOf(affected)
+      else bytesOf(affected) * updated / affectedRows.sum
+    val appended = stageWrite(rows, knownBytes = Some(bytes))
+    try {
+      // pk-assigning update: the appended rows must be unique in-batch
+      // AND against the table's other live rows — the base files with
+      // the updated rows deleted
+      if (touchesPk) primaryKey.foreach(pk => pkCheck(appended, pk, m.files, m.deletes.plus(hits)))
+      (commitDml(m, hits, appended, compact = false, publishNow), updated)
+    } catch { case e: Throwable => dropStaged(appended); throw e }
   }
 
-  /** CHECKPOINT ≈ compaction (A26): coalesce the live file set into
-    * `targetFiles` files; data unchanged, old versions still readable.
+  /** CHECKPOINT ≈ compaction (A26): coalesce the live rows into
+    * `targetFiles` files, folding the delete vectors away; data
+    * unchanged, old versions still readable.
     */
   def checkpoint(targetFiles: Int = 1): Long = locked {
     val v = currentVersion
-    val files = readManifest(v)
-    if (files.size <= targetFiles) return v
+    val m = manifest(v)
+    if (m.files.size <= targetFiles && m.deletes.isEmpty) return v
     val compacted = stageWrite(df, exactFiles = Some(targetFiles))
-    commit(allocVersion(), compacted)
-    currentVersion
+    val nv = allocVersion()
+    try commitOrClean(nv, compacted, DeleteVectors.empty, publishNow = true)
+    catch { case e: Throwable => dropStaged(compacted); throw e }
+    graft.ServeCounters.lakeRowsRewritten.addAndGet(compacted.map(rowCountOf).filter(_ > 0).sum)
+    nv
   }
 
-  def fileCount: Int = readManifest(currentVersion).size
+  def fileCount: Int = manifest(currentVersion).files.size
 
   private[sources] def hasManifest(v: Long): Boolean = Files.exists(manifestPath(v))
 
@@ -1166,7 +1199,10 @@ final class MutableTable private (
   private[sources] def discardStaged(v: Long): Unit = locked {
     // silently skip the published version: cleanup must never throw
     // (e.g. a drop+recreate raced the rollback into a version collision)
-    if (v != currentVersion) Files.deleteIfExists(manifestPath(v))
+    if (v != currentVersion) {
+      manifests.remove(v)
+      Files.deleteIfExists(manifestPath(v))
+    }
   }
 
   /** Drop data files no longer referenced by ANY retained manifest
@@ -1178,7 +1214,7 @@ final class MutableTable private (
       .filter(_.getFileName.toString.startsWith("manifest-"))
       .foreach { m =>
         val v = m.getFileName.toString.stripPrefix("manifest-").stripSuffix(".json").toLong
-        live ++= readManifest(v)
+        live ++= manifest(v).files
       }
     var removed = 0
     listDir(dataDir).foreach { p =>
@@ -1203,6 +1239,18 @@ final class MutableTable private (
 }
 
 object MutableTable {
+
+  /** A manifest's data files (names) and their delete vectors. */
+  private final case class Manifest(files: Seq[String], deletes: DeleteVectors)
+
+  /** A manifest after micro-compaction; `merged` names the freshly
+    * written merge file, if any (its `mergedRows` rows), whose cleanup
+    * the caller owns when the commit that would reference it fails
+    * (ADVICE r16: the insert catch otherwise leaked the file and its
+    * fileStats entry).
+    */
+  private final case class Compacted(files: Seq[String], deletes: DeleteVectors,
+      merged: Option[String], mergedRows: Long)
 
   /** A primary-key value as the planned check groups it: -0.0 folds
     * into 0.0 (boxed equality already treats NaN as one value).
@@ -1232,7 +1280,7 @@ object MutableTable {
     Files.write(root.resolve("schema.json"), schema.json.getBytes)
     primaryKey.foreach(pk => Files.write(root.resolve("pk"), pk.getBytes))
     val t = new MutableTable(spark, root, schema, primaryKey)
-    t.writeManifest(0, Seq.empty)
+    t.writeManifest(0, Seq.empty, DeleteVectors.empty)
     Files.write(root.resolve("_version"), "0".getBytes)
     t
   }

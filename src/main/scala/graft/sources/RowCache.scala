@@ -6,12 +6,13 @@ import java.util.concurrent.atomic.AtomicLong
   * name) and bounded by an estimate of their heap bytes, least recently
   * used first out.
   *
-  * A data file never changes once adopted (copy-on-write: a rewrite
-  * lands under a fresh name), so an entry can never go stale; eviction
+  * A data file never changes once adopted (deletes are recorded in the
+  * manifest's delete vectors, never in the file), so an entry can never
+  * go stale; readers skip the deleted positions themselves. Eviction
   * only saves memory, and `vacuum`/`drop` remove the entries of files
   * that are gone. The driver-side writers fill it with the rows they
   * just wrote (write-through), and every driver-side reader — the
-  * prepared key read, the copy-on-write rewrite, micro-compaction and
+  * prepared key read, the merge-on-read DML, micro-compaction and
   * the primary-key check — reads through it, so a file is decoded at
   * most once while it stays cached.
   *

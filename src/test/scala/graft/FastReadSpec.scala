@@ -321,6 +321,37 @@ class FastReadSpec extends SparkTestBase {
     assert(plannedJobsSeen > 0, "the planned references run as jobs: the counter sees jobs")
   }
 
+  test("a key read over a file with deleted positions equals the planned read") {
+    val (sess, catalog) = freshSession()
+    load(catalog, "fr_del")
+    val t = catalog.get("fr_del").get
+    // deletes inside the files' key ranges, and an UPDATE: its old row
+    // is a deleted position, its new one in an appended file
+    sess.sql("DELETE FROM fr_del WHERE k IN (250, 251)")
+    sess.sql("DELETE FROM fr_del WHERE k BETWEEN 10 AND 20")
+    sess.sql("UPDATE fr_del SET s = 'u' WHERE k = 260")
+    assert(t.fileCount == 6, "the five loaded files stay, with delete vectors, plus the update's")
+    val shapes: Seq[(String, Seq[Seq[Any]], Boolean)] = Seq(
+      ("SELECT * FROM fr_del WHERE k = ?", Seq(Seq(250L), Seq(252L), Seq(260L), Seq(15L), Seq(21L)), false),
+      ("SELECT * FROM fr_del WHERE k IN (?, ?, ?)", Seq(Seq(249L, 250L, 260L), Seq(10L, 20L, 30L)), false),
+      ("SELECT k, s FROM fr_del WHERE k BETWEEN ? AND ? ORDER BY k", Seq(Seq(5L, 30L), Seq(240L, 270L)), true),
+      ("SELECT s, k FROM fr_del WHERE k BETWEEN ? AND ? ORDER BY k DESC", Seq(Seq(0L, 499L)), true))
+    shapes.foreach { case (sql, paramSets, ordered) =>
+      val p = sess.createPrepared(sql)
+      paramSets.foreach { params =>
+        val df = sess.executePrepared(p.handle, params)
+        val what = s"$sql with ${params.mkString("[", ", ", "]")}"
+        assert(df.queryExecution.executedPlan.isInstanceOf[PointReadExec], s"$what declined")
+        val fast = df.collect().map(_.toString).toSeq
+        val planned = sess.sql(SqlParams.bind(sql, params)).collect().map(_.toString).toSeq
+        if (ordered) assert(fast == planned, what)
+        else assert(fast.sorted == planned.sorted, what)
+      }
+    }
+    assert(sess.sql("SELECT count(*) FROM fr_del").head().getLong(0) == 500 - 2 - 11)
+    catalog.drop("fr_del")
+  }
+
   test("declines go to the planned path, counted by reason") {
     val (sess, catalog) = freshSession()
     load(catalog, "fr_decl")

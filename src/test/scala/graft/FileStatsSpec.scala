@@ -50,23 +50,27 @@ class FileStatsSpec extends SparkTestBase {
     assert(t.candidateFiles(t.currentVersion, expr("k BETWEEN 195 AND 310")).size == 3)
     assert(t.candidateFiles(t.currentVersion, expr("k = -5")).isEmpty)
 
-    // behavior pin: a point DELETE rewrites exactly one file — nine of
-    // the ten carry over by reference
+    // behavior pin: a point DELETE records its row in the one candidate
+    // file's delete vector — all ten files carry over by reference, no
+    // file is written, and only the candidate gets a vector
     val filesBefore = currentFiles(t)
     assert(t.delete(expr("k = 250")) == 1L)
     val filesAfter = currentFiles(t)
-    assert(filesBefore.intersect(filesAfter).size == 9,
-      s"nine files must carry over untouched: ${filesBefore.size} -> ${filesAfter.size}")
-    assert((filesAfter -- filesBefore).size == 1)
+    assert(filesAfter == filesBefore,
+      s"all ten files must carry over untouched: ${filesBefore.size} -> ${filesAfter.size}")
+    assert(deletedFiles(t) == t.candidateFiles(t.currentVersion - 1, expr("k = 250")).toSet)
     assert(t.df.count() == 999)
 
-    // same for UPDATE; the rewritten file gets FRESH stats (bounds must
-    // keep pruning correctly after the rewrite)
+    // same for UPDATE, plus one appended file with FRESH stats: the old
+    // row's file keeps its bounds (it only shrank), so k = 777 now has
+    // two candidates, and the new value reads back
     val v0 = t.currentVersion
     assert(t.update(expr("k = 777"), Map("s" -> lit("updated"))) == 1L)
-    assert(currentFiles(t).intersect(filesAfter).size == 9)
-    assert(t.df.filter(col("k") === 777).select("s").head().getString(0) == "updated")
-    assert(t.candidateFiles(t.currentVersion, expr("k = 777")).size == 1)
+    assert(filesAfter.subsetOf(currentFiles(t)))
+    assert((currentFiles(t) -- filesAfter).size == 1, "one appended file")
+    assert(deletedFiles(t).size == 2)
+    assert(t.df.filter(col("k") === 777).select("s").collect().map(_.getString(0)).toSeq == Seq("updated"))
+    assert(t.candidateFiles(t.currentVersion, expr("k = 777")).size == 2)
 
     // a DELETE matching nothing is decided WITHOUT any scan job and
     // commits nothing
@@ -414,4 +418,13 @@ class FileStatsSpec extends SparkTestBase {
 
   private def currentFiles(t: MutableTable): Set[String] =
     t.candidateFiles(t.currentVersion, lit(true)).toSet
+
+  /** Files the current manifest's "deletes" object names. */
+  private def deletedFiles(t: MutableTable): Set[String] = {
+    val m = new String(java.nio.file.Files.readAllBytes(t.root.resolve(s"manifest-${t.currentVersion}.json")))
+    val at = m.indexOf("\"deletes\"")
+    val body = m.substring(m.indexOf('{', at) + 1, m.indexOf('}', at)).trim
+    if (body.isEmpty) Set.empty
+    else body.split(",").map(_.split(":")(0).trim.stripPrefix("\"").stripSuffix("\"")).toSet
+  }
 }

@@ -176,38 +176,87 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  test("micro-lake model: every retained snapshot's frame equals the listing read of its manifest") {
+  /** Versions of every manifest on disk in the micro-lake table's root. */
+  private def retainedVersions(t: sources.MutableTable): List[Long] = {
     import scala.jdk.CollectionConverters._
+    val listed = java.nio.file.Files.list(t.root)
+    try listed.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("manifest-") && n.endsWith(".json"))
+        .map(_.stripPrefix("manifest-").stripSuffix(".json").toLong).toList
+    finally listed.close()
+  }
+
+  test("micro-lake model: every retained snapshot's frame equals the listing read of its manifest") {
     import org.apache.spark.sql.functions.{col, input_file_name}
+    var vectorsSeen = 0
     lakeModel(_ => ()) { case (_, _, t, where, _) =>
-      // the oracle reads the manifest off disk itself: its "files" array
-      // is the first bracket pair
-      val listed = java.nio.file.Files.list(t.root)
-      val manifests = try listed.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("manifest-") && n.endsWith(".json")).toList
-        finally listed.close()
-      assert(manifests.nonEmpty, where)
+      val versions = retainedVersions(t)
+      assert(versions.nonEmpty, where)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select(col("k"), col("v"), input_file_name().as("f")).collect().toSet
       val current = t.currentVersion
-      val checked = manifests.map { n =>
-        val v = n.stripPrefix("manifest-").stripSuffix(".json").toLong
-        val txt = new String(java.nio.file.Files.readAllBytes(t.root.resolve(n)))
+      versions.foreach { v =>
+        // the oracle reads the manifest off disk itself: its "files"
+        // array is the first bracket pair, and its "deletes" object maps
+        // a file name to the base64 RoaringBitmap of deleted positions
+        val txt = new String(java.nio.file.Files.readAllBytes(t.root.resolve(s"manifest-$v.json")))
         val body = txt.substring(txt.indexOf('[') + 1, txt.indexOf(']')).trim
         val files = if (body.isEmpty) Seq.empty[String]
           else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+        val del = txt.indexOf("\"deletes\"")
+        assert(del > 0, s"$where: version $v has no deletes object")
+        val delBody = txt.substring(txt.indexOf('{', del) + 1, txt.indexOf('}', del)).trim
+        val deleted: Map[String, org.roaringbitmap.RoaringBitmap] =
+          if (delBody.isEmpty) Map.empty
+          else delBody.split(",").map { e =>
+            val Array(f, b64) = e.split(":").map(_.trim.stripPrefix("\"").stripSuffix("\""))
+            val b = new org.roaringbitmap.RoaringBitmap()
+            b.deserialize(java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b64)))
+            f -> b
+          }.toMap
+        assert(deleted.keySet.subsetOf(files.toSet), s"$where: version $v deletes from unlisted files")
+        vectorsSeen += deleted.size
         val frame = t.asOf(v)
+        // the listing read keeps a row unless its file's vector holds
+        // its position (the parquet source's row_index)
         val listing =
           if (files.isEmpty) Set.empty
-          else rows(spark.read.schema(t.schema)
-            .parquet(files.map(f => t.root.resolve("data").resolve(f).toString): _*))
+          else spark.read.schema(t.schema)
+            .parquet(files.map(f => t.root.resolve("data").resolve(f).toString): _*)
+            .select(col("k"), col("v"), input_file_name().as("f"),
+              col("_metadata.file_name"), col("_metadata.row_index"))
+            .collect()
+            .filterNot(r => deleted.get(r.getString(3)).exists(_.contains(r.getLong(4).toInt)))
+            .map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2))).toSet
         assert(rows(frame) == listing, s"$where: version $v")
         assert(frame.queryExecution.analyzed.sameResult(t.asOf(v).queryExecution.analyzed),
           s"$where: two frames of version $v")
-        v
       }
-      assert(checked.contains(current), where)
+      assert(versions.contains(current), where)
       assert(rows(t.df) == rows(t.asOf(current)), s"$where: df vs asOf($current)")
+    }
+    assert(vectorsSeen > 0, "the model never read a manifest with a delete vector")
+  }
+
+  test("micro-lake model: the driver read of every retained version equals its planned read") {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.LongType
+    lakeModel(_ => ()) { case (_, _, t, where, (_, lo, hi)) =>
+      val k = AttributeReference("k", LongType)()
+      retainedVersions(t).foreach { v =>
+        Seq[(org.apache.spark.sql.catalyst.expressions.Expression, org.apache.spark.sql.Column)](
+          Literal.TrueLiteral -> org.apache.spark.sql.functions.lit(true),
+          And(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi))) ->
+            col("k").between(lo, hi)).foreach { case (cond, planned) =>
+          val driver = t.readMatching(v, cond)
+            .fold(r => fail(s"$where: version $v declined: $r"), identity)
+            .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getUTF8String(1).toString)).sorted
+          val expected = t.asOf(v).filter(planned).collect()
+            .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+          assert(driver == expected, s"$where: version $v, $cond")
+        }
+      }
     }
   }
 }

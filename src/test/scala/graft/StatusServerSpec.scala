@@ -125,6 +125,34 @@ class StatusServerSpec extends SparkTestBase {
     } finally { srv.stop(); catalog.drop("st_lock") }
   }
 
+  test("status.json serves the write amplification: a routed one-row DELETE deletes 1 row and rewrites none") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val catalog = sources.MutableCatalog(spark)
+    val sess = new Session("status-amp", spark.newSession(), Some(catalog))
+    catalog.create("st_amp", StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType))), primaryKey = Some("k"))
+    sess.sql("INSERT INTO st_amp VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    def counters = (ServeCounters.lakeRowsDeleted.get(), ServeCounters.lakeRowsRewritten.get())
+    val (deleted0, rewritten0) = counters
+    sess.sql("DELETE FROM st_amp WHERE k = 2")
+    val (deleted1, rewritten1) = counters
+    assert(deleted1 == deleted0 + 1, s"lake_rows_deleted $deleted0 -> $deleted1")
+    assert(rewritten1 == rewritten0, s"lake_rows_rewritten $rewritten0 -> $rewritten1")
+    // an UPDATE deletes the old row and writes the new one again
+    sess.sql("UPDATE st_amp SET v = 'z' WHERE k = 3")
+    assert(counters == ((deleted1 + 1, rewritten1 + 1)))
+    val srv = StatusServer.start(new Metrics(), new SessionRegistry(spark)).get
+    try {
+      val (jc, jb) = get(srv.boundPort, "/status.json")
+      assert(jc == 200)
+      def served(key: String): Long =
+        ("\"" + key + "\":([0-9]+)").r.findFirstMatchIn(jb).map(_.group(1).toLong)
+          .getOrElse(fail(s"no $key in $jb"))
+      assert(served("lake_rows_deleted") >= deleted1 + 1)
+      assert(served("lake_rows_rewritten") >= rewritten1 + 1)
+    } finally { srv.stop(); catalog.drop("st_amp") }
+  }
+
   test("registry snapshot aggregates idle ages (registry.rs:36-42)") {
     val reg = new SessionRegistry(spark, maxSessions = 5, idleTimeoutMillis = 900000)
     val now = System.currentTimeMillis()

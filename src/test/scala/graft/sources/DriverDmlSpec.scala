@@ -227,10 +227,10 @@ class DriverDmlSpec extends SparkTestBase {
     (1 to 20).foreach { i => // 16 tiny files trigger a micro-compaction
       assert(t.insertRowsDirect(Seq(Array[Any](i.toLong, s"n$i", i.toDouble))) == Some(1L))
     }
-    val hits = t.driverRewriteHits.get()
+    val hits = t.driverDmlHits.get()
     assert(t.update(expr("id = 3"), Map("name" -> lit("u"))) == 1L)
     assert(t.delete(expr("id = 4")) == 1L)
-    assert(t.driverRewriteHits.get() == hits + 2, "UPDATE and DELETE must take the driver rewrite")
+    assert(t.driverDmlHits.get() == hits + 2, "UPDATE and DELETE must take the driver rewrite")
     assert(t.fileCount < 16, "the inserts must have compacted")
     val names = MutableTable.listDir(t.root.resolve("data")).map(_.getFileName.toString)
     assert(names.nonEmpty)
@@ -412,19 +412,19 @@ class DriverDmlSpec extends SparkTestBase {
     assert(r1(0).getDecimal(3) == new java.math.BigDecimal("12.34"))
     assert(r1(1).getDecimal(3) == new java.math.BigDecimal("5.00"))
     // point UPDATE with a timestamp-typed SET takes the driver rewrite
-    val before = t.driverRewriteHits.get()
+    val before = t.driverDmlHits.get()
     assert(t.update(expr("id = 1"),
       Map("ts" -> expr("TIMESTAMP '2025-02-03 04:05:06'"), "v" -> expr("'u'"))) == 1L)
-    assert(t.driverRewriteHits.get() == before + 1,
+    assert(t.driverDmlHits.get() == before + 1,
       "timestamped tables must not silently lose the ~60 ms DML floor (VERDICT r16 #5)")
     assert(t.df.filter("id = 1").head().getTimestamp(1).toInstant ==
       java.time.Instant.parse("2025-02-03T04:05:06Z"))
     // string-literal SET onto a timestamp column folds via the UTC-pinned cast
     assert(t.update(expr("id = 2"), Map("ts" -> expr("'2025-01-01 00:00:00'"))) == 1L)
-    assert(t.driverRewriteHits.get() == before + 2)
+    assert(t.driverDmlHits.get() == before + 2)
     // timestamp-predicate DELETE rides the rewrite and prunes on 'L' stats
     assert(t.delete(expr("ts < TIMESTAMP '2025-01-15 00:00:00'")) == 1L)
-    assert(t.driverRewriteHits.get() == before + 3)
+    assert(t.driverDmlHits.get() == before + 3)
     assert(t.df.collect().map(_.getLong(0)).toSeq == Seq(1L))
     // fallback parity: the same ops on a twin table via the PLANNED path
     // (non-foldable SET forces it) give identical values
@@ -484,9 +484,9 @@ class DriverDmlSpec extends SparkTestBase {
   test("IN-list point deletes ride the driver rewrite (batch-delete shape)") {
     val t = mk()
     t.insert(rowsDf((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0), (4L, "d", 4.0)))
-    val before = t.driverRewriteHits.get()
+    val before = t.driverDmlHits.get()
     assert(t.delete(expr("id IN (2, 4, 99)")) == 2L)
-    assert(t.driverRewriteHits.get() == before + 1,
+    assert(t.driverDmlHits.get() == before + 1,
       "the IN-list delete must take the in-process rewrite, not the planned path")
     assert(t.df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
     // NOT IN keeps three-valued semantics through the same path

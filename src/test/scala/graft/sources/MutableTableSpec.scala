@@ -253,6 +253,84 @@ class MutableTableSpec extends SparkTestBase {
     assert(t.df.collect().toSeq == Seq(Row(2L, "b", 2.0)))
   }
 
+  test("merge-on-read: DELETE k then INSERT k succeeds on the driver and planned pk paths") {
+    val t = mkTable()
+    t.insert(rows((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
+    val before = t.currentVersion
+    assert(t.delete(col("id") === 1L) == 1L)
+    assert(t.fileCount == 1, "the file stays, with its row 1 deleted")
+    // driver path: the clash check over the row cache skips the deleted
+    // position, and still sees the live ones
+    assert(t.insertRowsDirect(Seq(Array[Any](1L, "d", 4.0))) == Some(1L))
+    intercept[RuntimeException](t.insertRowsDirect(Seq(Array[Any](2L, "dup", 0.0))))
+    // planned path: the aggregate's table side applies the vectors
+    assert(t.delete(col("id") === 2L) == 1L)
+    assert(t.insert(rows((2L, "e", 5.0))) == 1L)
+    intercept[RuntimeException](t.insert(rows((3L, "dup", 0.0))))
+    assert(t.df.orderBy("id").collect().toSeq ==
+      Seq(Row(1L, "d", 4.0), Row(2L, "e", 5.0), Row(3L, "c", 3.0)))
+    // a pk-assigning UPDATE rejects a live key and may take a deleted one
+    val v = t.currentVersion
+    intercept[RuntimeException](t.update(col("id") === 3L, Map("id" -> lit(1L))))
+    assert(t.currentVersion == v, "nothing committed after the refused update")
+    assert(t.delete(col("id") === 1L) == 1L)
+    assert(t.update(col("id") === 3L, Map("id" -> lit(1L))) == 1L)
+    assert(t.df.orderBy("id").collect().toSeq == Seq(Row(1L, "c", 3.0), Row(2L, "e", 5.0)))
+    // time travel: the pre-delete version still returns the rows
+    assert(t.asOf(before).orderBy("id").collect().toSeq ==
+      Seq(Row(1L, "a", 1.0), Row(2L, "b", 2.0), Row(3L, "c", 3.0)))
+  }
+
+  test("merge-on-read: DELETE writes no data file and UPDATE only the updated rows, on every path") {
+    val t = mkTable()
+    t.insert(rows((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0), (4L, "d", 4.0),
+      (5L, "e", 5.0), (6L, "f", 6.0), (7L, "g", 7.0)))
+    def dataFiles = MutableTable.listDir(t.root.resolve("data")).map(_.getFileName.toString).toSet
+    val loaded = dataFiles
+    val hits = t.driverDmlHits.get()
+    // driver path, plan-free discovery (a predicate the micro-resolver
+    // declines), and the planned fallback (a non-deterministic one)
+    assert(t.delete(expr("id = 1")) == 1L)
+    assert(t.driverDmlHits.get() == hits + 1, "the point DELETE takes the driver path")
+    assert(t.delete(expr("concat(name, '') = 'b'")) == 1L)
+    assert(t.delete(expr("id = 3 AND rand() >= 0")) == 1L)
+    assert(dataFiles == loaded, "a DELETE writes no data file")
+    assert(t.fileCount == 1)
+    def appendedRows(f: => Unit): Long = {
+      val was = dataFiles
+      f
+      val added = dataFiles -- was
+      assert(added.size == 1, s"one appended file, got $added")
+      spark.read.parquet(t.root.resolve("data").resolve(added.head).toString).count()
+    }
+    assert(appendedRows(assert(t.update(expr("id = 4"), Map("name" -> lit("D"))) == 1L)) == 1L)
+    assert(t.driverDmlHits.get() == hits + 2, "the point UPDATE takes the driver path")
+    assert(appendedRows(assert(t.update(expr("id >= 6"), Map("name" -> expr("upper(name)"))) == 2L)) == 2L)
+    assert(t.df.orderBy("id").collect().toSeq ==
+      Seq(Row(4L, "D", 4.0), Row(5L, "e", 5.0), Row(6L, "F", 6.0), Row(7L, "G", 7.0)))
+    // checkpoint folds the vectors back into one file
+    t.checkpoint(targetFiles = 1)
+    assert(t.fileCount == 1)
+    assert(t.df.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(4L, 5L, 6L, 7L))
+    val m = new String(Files.readAllBytes(t.root.resolve(s"manifest-${t.currentVersion}.json")))
+    assert(m.contains("\"deletes\": {}"), m)
+  }
+
+  test("a read of a snapshot with deletes still prunes files by their stats") {
+    val t = mkTable()
+    (0 until 4).foreach(i => t.insert(rows((i * 10L, "a", 1.0), (i * 10L + 1, "b", 2.0))))
+    assert(t.delete(col("id") === 20L) == 1L)
+    t.df.createOrReplaceTempView("mt_prune")
+    val df = spark.sql("SELECT * FROM mt_prune WHERE id = 21")
+    val scans = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }
+    assert(scans.map(_.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+      .location.inputFiles.length) == Seq(1), df.queryExecution.optimizedPlan.toString)
+    assert(df.collect().toSeq == Seq(Row(21L, "b", 2.0)))
+    assert(spark.sql("SELECT * FROM mt_prune WHERE id = 20").collect().isEmpty)
+  }
+
   test("checkpoint compacts files without changing data (A26)") {
     val t = mkTable()
     (1 to 5).foreach(i => t.insert(rows((i.toLong, s"r$i", i.toDouble))))
