@@ -19,8 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * fallback, never a second semantics.
   *
   * External value convention: Long/Int/Double/Float/Boolean/String with
-  * null for SQL NULL — the same shapes [[MutableTable.pkCheckDriverSide]]
-  * already reads.
+  * null for SQL NULL (and Catalyst's internal values for the date,
+  * timestamp and decimal types, see [[supported]]) — the shapes
+  * [[readRows]] decodes and [[writeRows]] encodes.
   */
 private[sources] object DriverDml {
 
@@ -147,94 +148,75 @@ private[sources] object DriverDml {
     FileStats.fromMetadata(writer.getFooter)
   }
 
-  /** Every record of `file` as an example-model Group, projected to the
-    * column `only` when given (its type taken off the file's own footer
-    * schema, so physical types match exactly). Throws when the file or
-    * the column cannot be read; callers fall back.
-    */
-  def foreachRecord(file: Path, only: Option[String] = None)(
-      f: org.apache.parquet.example.data.Group => Unit): Unit = {
-    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.schema.MessageType
-    val reader = ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(file), readOptions)
-    try {
-      val fileSchema = reader.getFooter.getFileMetaData.getSchema
-      val requested = only.fold(fileSchema)(c =>
-        new MessageType(fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex(c))))
-      reader.setRequestedSchema(requested)
-      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(requested, fileSchema)
-      var pages = reader.readNextRowGroup()
-      while (pages != null) {
-        val records = io.getRecordReader(pages, new GroupRecordConverter(requested))
-        var n = pages.getRowCount
-        while (n > 0) { f(records.read()); n -= 1 }
-        pages = reader.readNextRowGroup()
-      }
-    } finally reader.close()
-  }
-
   /** Read every row of `file` as external values in `schema` order.
     * None when the file cannot be read this way (caller falls back).
-    *
-    * NOTE: [[MutableTable.pkCheckDriverSide]] carries a projected twin
-    * of this decode loop (pk column only, plus the signed-zero
-    * normalization the COMPARISON semantics there need — values decoded
-    * HERE are written back verbatim and must NOT be normalized). A
-    * semantic fix to either loop must be weighed against the other.
     */
   def readRows(file: Path, schema: StructType): Option[IndexedSeq[Array[Any]]] = {
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val out = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
     try {
-      foreachRecord(file) { g =>
-        val row = new Array[Any](schema.length)
-        var i = 0
-        while (i < schema.length) {
-          val name = schema.fields(i).name
-          val idx = g.getType.getFieldIndex(name)
-          row(i) =
-            if (g.getFieldRepetitionCount(idx) == 0) null
-            else {
-              // dispatch on the TABLE type, verifying the physical
-              // layout carries it (a Spark INT96 timestamp or a
-              // millis one is NOT micros — decline, planned path):
-              // the schema is the authority on what the value MEANS,
-              // the footer on how it is stored
-              val pt = g.getType.getType(idx).asPrimitiveType()
-              val phys = pt.getPrimitiveTypeName
-              val ann = pt.getLogicalTypeAnnotation
-              (schema.fields(i).dataType, phys) match {
-                case (LongType, INT64) => g.getLong(idx, 0)
-                case (IntegerType, INT32) => g.getInteger(idx, 0)
-                case (DoubleType, DOUBLE) => g.getDouble(idx, 0)
-                case (FloatType, FLOAT) => g.getFloat(idx, 0)
-                case (BooleanType, BOOLEAN) => g.getBoolean(idx, 0)
-                case (StringType, BINARY) => g.getBinary(idx, 0).toStringUsingUTF8
-                case (DateType, INT32) => g.getInteger(idx, 0)
-                case (TimestampType, INT64) => ann match {
-                  case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                      if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-                    g.getLong(idx, 0)
-                  case _ => return None
+      val reader = ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(file), readOptions)
+      try {
+        val fileSchema = reader.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(fileSchema)
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = io.getRecordReader(pages, new GroupRecordConverter(fileSchema))
+          var n = pages.getRowCount
+          while (n > 0) {
+            val g = records.read()
+            val row = new Array[Any](schema.length)
+            var i = 0
+            while (i < schema.length) {
+              val idx = g.getType.getFieldIndex(schema.fields(i).name)
+              row(i) =
+                if (g.getFieldRepetitionCount(idx) == 0) null
+                else {
+                  // dispatch on the TABLE type, verifying the physical
+                  // layout carries it (a Spark INT96 timestamp or a
+                  // millis one is NOT micros — decline, planned path):
+                  // the schema is the authority on what the value MEANS,
+                  // the footer on how it is stored
+                  val pt = g.getType.getType(idx).asPrimitiveType()
+                  val phys = pt.getPrimitiveTypeName
+                  val ann = pt.getLogicalTypeAnnotation
+                  (schema.fields(i).dataType, phys) match {
+                    case (LongType, INT64) => g.getLong(idx, 0)
+                    case (IntegerType, INT32) => g.getInteger(idx, 0)
+                    case (DoubleType, DOUBLE) => g.getDouble(idx, 0)
+                    case (FloatType, FLOAT) => g.getFloat(idx, 0)
+                    case (BooleanType, BOOLEAN) => g.getBoolean(idx, 0)
+                    case (StringType, BINARY) => g.getBinary(idx, 0).toStringUsingUTF8
+                    case (DateType, INT32) => g.getInteger(idx, 0)
+                    case (TimestampType, INT64) => ann match {
+                      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                          if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
+                        g.getLong(idx, 0)
+                      case _ => return None
+                    }
+                    case (d: DecimalType, INT32 | INT64) => ann match {
+                      case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
+                          if a.getScale == d.scale =>
+                        val unscaled =
+                          if (phys == INT32) g.getInteger(idx, 0).toLong else g.getLong(idx, 0)
+                        org.apache.spark.sql.types.Decimal(
+                          java.math.BigDecimal.valueOf(unscaled, d.scale), d.precision, d.scale)
+                      case _ => return None
+                    }
+                    case _ => return None
+                  }
                 }
-                case (d: DecimalType, INT32 | INT64) => ann match {
-                  case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
-                      if a.getScale == d.scale =>
-                    val unscaled =
-                      if (phys == INT32) g.getInteger(idx, 0).toLong else g.getLong(idx, 0)
-                    org.apache.spark.sql.types.Decimal(
-                      java.math.BigDecimal.valueOf(unscaled, d.scale), d.precision, d.scale)
-                  case _ => return None
-                }
-                case _ => return None
-              }
+              i += 1
             }
-          i += 1
+            out += row
+            n -= 1
+          }
+          pages = reader.readNextRowGroup()
         }
-        out += row
-      }
+      } finally reader.close()
       Some(out.toIndexedSeq)
     } catch { case _: Exception => None }
   }

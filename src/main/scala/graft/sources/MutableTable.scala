@@ -90,20 +90,39 @@ final class MutableTable private (
   private def cachedRows(f: String): Option[IndexedSeq[Array[Any]]] =
     RowCache.shared.getOrLoad(cacheKey, f)(DriverDml.readRows(dataDir.resolve(f), schema))
 
-  /** The rows of data file `f` that `deletes` leaves, in file order,
-    * through the row cache; None when the codec cannot read the file.
+  /** Visit, in file order and through the row cache, each row of data
+    * file `f` whose position `deletes` leaves and for which `bound` (a
+    * predicate from [[DriverDml.bind]]; every live row when None) is
+    * TRUE — the one driver-side pass over a file's live matching rows.
+    * False when the codec cannot read the file.
     */
-  private def liveRows(f: String, deletes: DeleteVectors): Option[Iterator[Array[Any]]] =
-    cachedRows(f).map { rows =>
-      deletes.get(f) match {
-        case None => rows.iterator
-        case Some(dead) => rows.iterator.zipWithIndex.collect { case (r, i) if !dead.contains(i) => r }
-      }
+  private def foreachLive(f: String, deletes: DeleteVectors,
+      bound: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None)(
+      visit: (Int, Array[Any]) => Unit): Boolean = {
+    val rows = cachedRows(f).getOrElse(return false)
+    val dead = deletes.get(f).orNull
+    val p = bound.orNull
+    var i = 0
+    while (i < rows.length) {
+      if ((dead == null || !dead.contains(i)) &&
+          (p == null || p.eval(DriverDml.toInternal(rows(i))) == true))
+        visit(i, rows(i))
+      i += 1
     }
+    true
+  }
 
   /** A data file's row count from its stats; -1 when unknown. */
   private def rowCountOf(f: String): Long =
     statsFor(f).values.headOption.map(_.rows).getOrElse(-1L)
+
+  /** Do `files` hold a known number of rows within the driver-side
+    * bound? Every driver path declines past it.
+    */
+  private def withinDriverBound(files: Seq[String]): Boolean = {
+    val counts = files.map(rowCountOf)
+    !counts.exists(_ < 0) && counts.sum <= driverMaxRows
+  }
 
   def currentVersion: Long = new String(Files.readAllBytes(versionFile)).trim.toLong
 
@@ -485,9 +504,8 @@ final class MutableTable private (
     if (!DriverDml.supported(schema) || rows.isEmpty ||
       rows.size > driverMaxRows) return None
     val m = manifest(base)
-    // in-batch duplicate check, in memory — canonicalize signed zeros
-    // exactly like pkCheckDriverSide so both fast paths match the
-    // planned path's grouping semantics
+    // in-batch duplicate check, in memory — keys canonicalized so the
+    // verdict matches the planned aggregate's grouping semantics
     primaryKey.foreach { pk =>
       val pi = schema.fieldIndex(pk)
       val seen = new java.util.HashSet[Any]()
@@ -513,18 +531,9 @@ final class MutableTable private (
         // falls inside the compacted file's bounds: the aggregate cost
         // 227-296 ms p50 per such insert (4-core host) against 49-55 ms
         // for a non-overlapping one.
-        val nb = statsFor(name).get(pk)
-        val boundsKnown = nb.exists(s => s.min.isDefined && s.max.isDefined && s.nulls == 0)
-        val overlapping = m.files.filter { f =>
-          !boundsKnown || (statsFor(f).get(pk) match {
-            case Some(s) if s.min.isDefined && s.max.isDefined =>
-              FileStats.compare(s.kind, nb.get.min.get, s.max.get) <= 0 &&
-                FileStats.compare(s.kind, nb.get.max.get, s.min.get) >= 0
-            case _ => true
-          })
-        }
+        val overlapping = pkOverlapping(Seq(name), pk, m.files)
         if (overlapping.nonEmpty && !pkClashDriverSide(overlapping, m.deletes, rows, pk))
-          pkCheck(Seq(name), pk, m.files, m.deletes)
+          pkCheck(Seq(name), pk, overlapping, m.deletes)
       }
       Some((commitCompacted(m.files :+ name, m.deletes, publishNow), rows.size.toLong))
     } catch {
@@ -573,27 +582,23 @@ final class MutableTable private (
     * throws), false when the files exceed the driver bound or the codec
     * cannot read one — the planned aggregate then decides. Verdicts
     * match that aggregate's: a NULL key never clashes with a table row
-    * (join semantics), and keys compare canonicalized like
-    * [[pkCheckDriverSide]] (-0.0 = 0.0, NaN = NaN).
+    * (join semantics), and keys compare canonicalized
+    * ([[MutableTable.canonicalKey]]: -0.0 = 0.0, NaN = NaN).
     */
   private def pkClashDriverSide(files: Seq[String], deletes: DeleteVectors,
       batch: Seq[Array[Any]], pk: String): Boolean = {
-    val counts = files.map(rowCountOf)
-    if (counts.exists(_ < 0) || counts.sum > driverMaxRows) return false
+    if (!withinDriverBound(files)) return false
     val pi = schema.fieldIndex(pk)
     val keys = new java.util.HashSet[Any]()
     batch.foreach { r =>
       val k = MutableTable.canonicalKey(r(pi))
       if (k != null) keys.add(k)
     }
-    files.foreach { f =>
-      liveRows(f, deletes).getOrElse(return false).foreach { r =>
-        val k = MutableTable.canonicalKey(r(pi))
-        if (k != null && keys.contains(k))
-          throw new DuplicateKeyException(s"duplicate key violates primary key: $pk=$k")
-      }
-    }
-    true
+    files.forall(f => foreachLive(f, deletes) { (_, r) =>
+      val k = MutableTable.canonicalKey(r(pi))
+      if (k != null && keys.contains(k))
+        throw new DuplicateKeyException(s"duplicate key violates primary key: $pk=$k")
+    })
   }
 
   /** Rows of `version` matching `cond` — a resolved predicate over this
@@ -613,21 +618,12 @@ final class MutableTable private (
     if (!DriverDml.supported(schema)) return Left("unsupported_type")
     val bound = DriverDml.bind(cond, schema).getOrElse(return Left("unsupported_type"))
     val candidates = candidateFilesExpr(version, cond)
-    val counts = candidates.map(rowCountOf)
-    if (counts.exists(_ < 0) || counts.sum > driverMaxRows) return Left("over_bound")
+    if (!withinDriverBound(candidates)) return Left("over_bound")
     val deletes = manifest(version).deletes
     val out = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
-    candidates.foreach { f =>
-      val rows = cachedRows(f).getOrElse(return Left("unsupported_type"))
-      val dead = deletes.get(f).orNull
-      var i = 0
-      while (i < rows.length) {
-        val row = DriverDml.toInternal(rows(i))
-        if (bound.eval(row) == true && (dead == null || !dead.contains(i))) out += row
-        i += 1
-      }
-    }
-    Right(out.toIndexedSeq)
+    val read = candidates.forall(f =>
+      foreachLive(f, deletes, Some(bound))((_, r) => out += DriverDml.toInternal(r)))
+    if (read) Right(out.toIndexedSeq) else Left("unsupported_type")
   }
 
   /** Driver-side merge-on-read UPDATE/DELETE (VERDICT r15 #3): when the
@@ -650,8 +646,7 @@ final class MutableTable private (
       set: Option[Map[String, Column]], publishNow: Boolean): Option[(Long, Long)] = {
     if (!DriverDml.supported(schema)) return None
     val m = manifest(base)
-    val resolved = (try quickResolve(org.apache.spark.sql.graft.bridge.unresolvedExpression(cond))
-      catch { case _: Exception => None }).getOrElse(return None)
+    val resolved = quickResolve(cond).getOrElse(return None)
     val bound = DriverDml.bind(resolved, schema).getOrElse(return None)
     // fold SET assignments before any IO (UPDATE only)
     val utc = DriverDml.utcSession(spark) // once per statement, not per SET column
@@ -663,24 +658,17 @@ final class MutableTable private (
         i -> DriverDml.foldAssignment(e, schema.fields(i).dataType, utc).getOrElse(return None)
       }
     }
-    val candidates = m.files.filter(f => FileStats.mayMatch(statsFor(f), resolved))
-    val candRows = candidates.map(rowCountOf)
-    if (candRows.exists(_ < 0) || candRows.sum > driverMaxRows) return None
+    val candidates = candidateFilesExpr(base, resolved)
+    if (!withinDriverBound(candidates)) return None
     val hits = mutable.LinkedHashMap.empty[String, RoaringBitmap]
     val updated = mutable.ArrayBuffer.empty[Array[Any]]
     candidates.foreach { f =>
-      val rows = cachedRows(f).getOrElse(return None)
-      val dead = m.deletes.get(f).orNull
       val hit = new RoaringBitmap()
-      var i = 0
-      while (i < rows.length) {
-        val r = rows(i)
-        if ((dead == null || !dead.contains(i)) && bound.eval(DriverDml.toInternal(r)) == true) {
-          hit.add(i)
-          assignments.foreach { as => val nr = r.clone(); as.foreach { case (c, v) => nr(c) = v }; updated += nr }
-        }
-        i += 1
+      val read = foreachLive(f, m.deletes, Some(bound)) { (i, r) =>
+        hit.add(i)
+        assignments.foreach { as => val nr = r.clone(); as.foreach { case (c, v) => nr(c) = v }; updated += nr }
       }
+      if (!read) return None
       if (!hit.isEmpty) hits(f) = hit
     }
     val nv =
@@ -743,62 +731,54 @@ final class MutableTable private (
   private def compactSmallDriverSide(files: Seq[String], deletes: DeleteVectors): Compacted = {
     val unchanged = Compacted(files, deletes, None, 0L)
     if (!DriverDml.supported(schema)) return unchanged
-    val withRows = files.map(f => f -> rowCountOf(f))
-    val small = withRows.filter { case (_, r) => r >= 0 && r <= compactSmallRows }
-    if (small.size < compactTriggerFiles) return unchanged
-    if (small.map(_._2).sum > driverMaxRows) return unchanged
+    val small = files.filter { f => val r = rowCountOf(f); r >= 0 && r <= compactSmallRows }
+    if (small.size < compactTriggerFiles || !withinDriverBound(small)) return unchanged
     val rows = mutable.ArrayBuffer.empty[Array[Any]]
-    small.foreach { case (f, _) =>
-      rows ++= liveRows(f, deletes).getOrElse(return unchanged) // unreadable driver-side: keep as-is
-    }
+    // unreadable driver-side: keep as-is
+    if (!small.forall(f => foreachLive(f, deletes)((_, r) => rows += r))) return unchanged
     val name = writeDriverFile(rows.toSeq).getOrElse(return unchanged)
-    val smallSet = small.map(_._1).toSet
+    val smallSet = small.toSet
     Compacted(files.filterNot(smallSet) :+ name, deletes.filterFiles(f => !smallSet(f)),
       Some(name), rows.size.toLong)
   }
 
-  /** Primary-key enforcement over the STAGED (not yet committed) files:
-    * in-batch duplicates and clashes against the table's live rows —
-    * `tableFiles` without the rows `tableDeletes` names — in one
-    * aggregate over staged ∪ bound-overlapping table files. The table
-    * side is already unique, so any key with total count > 1 involving
-    * a staged row is a violation; staged-count > 1 distinguishes the
-    * in-batch message (checked first, like the pre-write shape did).
-    * An INSERT passes its base manifest; an UPDATE that assigns the pk
-    * passes the base files with the updated rows deleted (their
-    * pre-images would otherwise false-clash every unchanged key; r19
-    * review).
+  /** The table `files` whose `pk` bounds overlap those of `newFiles` —
+    * the only ones a new key can clash with. All of them unless every
+    * new file has bounds and no NULL key (min/max ignore nulls, so a
+    * null clash would slip the overlap test); a table file without
+    * bounds always overlaps.
+    */
+  private def pkOverlapping(newFiles: Seq[String], pk: String, files: Seq[String]): Seq[String] = {
+    val newBounds = newFiles.map(f => statsFor(f).get(pk))
+    if (!newBounds.forall(_.exists(s => s.min.isDefined && s.max.isDefined && s.nulls == 0))) files
+    else files.filter { f =>
+      statsFor(f).get(pk) match {
+        case Some(s) if s.min.isDefined && s.max.isDefined =>
+          newBounds.flatten.exists(nb =>
+            FileStats.compare(s.kind, nb.min.get, s.max.get) <= 0 &&
+              FileStats.compare(s.kind, nb.max.get, s.min.get) >= 0)
+        case _ => true
+      }
+    }
+  }
+
+  /** Primary-key enforcement over the STAGED (not yet committed) files —
+    * the planned check: in-batch duplicates and clashes against the
+    * table's live rows (`tableFiles` without the rows `tableDeletes`
+    * names) in one aggregate job over staged ∪ bound-overlapping table
+    * files. The table side is already unique, so any key with total
+    * count > 1 involving a staged row is a violation; staged-count > 1
+    * distinguishes the in-batch message (checked first, like the
+    * pre-write shape did). An INSERT passes its base manifest; an UPDATE
+    * that assigns the pk passes the base files with the updated rows
+    * deleted (their pre-images would otherwise false-clash every
+    * unchanged key; r19 review). The driver-side INSERT checks in
+    * memory instead and comes here only past the driver bound.
     */
   private def pkCheck(newFiles: Seq[String], pk: String,
       tableFiles: Seq[String], tableDeletes: DeleteVectors): Unit = {
     if (newFiles.isEmpty) return
-    val newBounds = newFiles.map(f => statsFor(f).get(pk))
-    // bounds usable only when every staged file has them and none holds
-    // a NULL pk (min/max ignore nulls, so a null clash would slip the
-    // overlap test — degenerate data falls back to the full check)
-    val boundsKnown = newBounds.forall(_.exists(s =>
-      s.min.isDefined && s.max.isDefined && s.nulls == 0))
-    val oldCandidates =
-      if (!boundsKnown) tableFiles
-      else tableFiles.filter { f =>
-        statsFor(f).get(pk) match {
-          case Some(s) if s.min.isDefined && s.max.isDefined =>
-            newBounds.flatten.exists(nb =>
-              FileStats.compare(s.kind, nb.min.get, s.max.get) <= 0 &&
-                FileStats.compare(s.kind, nb.max.get, s.min.get) >= 0)
-          case _ => true // stat-less table file: must be checked
-        }
-      }
-    // append-only common case (no bound overlap): only in-batch dups are
-    // possible, and a SMALL staged batch checks driver-side off the
-    // files just written — one bounded column read instead of a planned
-    // Spark job (~130 ms of a ~280 ms insert measured). Bigger batches
-    // and overlap cases take the distributed aggregate below.
-    if (oldCandidates.isEmpty && boundsKnown) {
-      val stagedRows = newFiles.map(f =>
-        statsFor(f).values.headOption.map(_.rows).getOrElse(Long.MaxValue)).sum
-      if (stagedRows <= 100000 && pkCheckDriverSide(newFiles, pk)) return
-    }
+    val oldCandidates = pkOverlapping(newFiles, pk, tableFiles)
     val newDf = scan(newFiles).select(col(pk), lit(1L).as("__new"))
     val unioned =
       if (oldCandidates.isEmpty) newDf
@@ -830,7 +810,7 @@ final class MutableTable private (
   private[sources] def candidateFiles(base: Long, cond: Column): Seq[String] = {
     val files = manifest(base).files
     if (files.isEmpty) return files
-    resolveCondFast(cond) match {
+    quickResolve(cond).orElse(resolveCond(cond)) match {
       case Some(c) => files.filter(f => FileStats.mayMatch(statsFor(f), c))
       case None => files
     }
@@ -838,7 +818,7 @@ final class MutableTable private (
 
   /** MICRO-RESOLVER for the common DML predicate shapes (conjunctions /
     * disjunctions of comparisons between a column and a literal, null
-    * tests): binds attributes straight off the table schema and applies
+    * tests, in SQL or DataFrame-API form): binds attributes straight off the table schema and applies
     * the one coercion the analyzer would (up-cast the LITERAL to the
     * column type), in microseconds instead of the analyzer's ~20-30 ms —
     * which a prepared DML workload pays per execution because the router
@@ -847,10 +827,9 @@ final class MutableTable private (
     * `.resolved`, so a shape this resolver mishandles falls back rather
     * than mis-evaluates.
     */
-  private def quickResolve(
-      raw: org.apache.spark.sql.catalyst.expressions.Expression):
-      Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+  private def quickResolve(cond: Column): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute, UnresolvedFunction}
     import org.apache.spark.sql.catalyst.expressions._
     def attr(n: String): Option[AttributeReference] =
       schema.fields.find(_.name.equalsIgnoreCase(n))
@@ -902,25 +881,32 @@ final class MutableTable private (
             if (lits.exists(_.isEmpty)) None else Some(In(a, lits.map(_.get)))
           case _ => None
         }
+      // a DataFrame-API predicate (`col("id") === 1L`, `isin`, `isNull`,
+      // `&&`, `!`) arrives as a function call by name: take it when the
+      // builtin registry maps the name to one of the nodes above
+      case f: UnresolvedFunction if f.nameParts.size == 1 && !f.isDistinct &&
+          f.filter.isEmpty && f.orderingWithinGroup.isEmpty =>
+        scala.util.Try(FunctionRegistry.builtin.lookupFunction(
+            FunctionIdentifier(f.nameParts.head), f.arguments)).toOption
+          .filter {
+            case _: And | _: Or | _: Not | _: IsNull | _: IsNotNull | _: BinaryComparison | _: In => true
+            case _ => false
+          }
+          .flatMap(lift)
       case _ => None
     }
-    lift(raw).filter(_.resolved)
+    try lift(org.apache.spark.sql.graft.bridge.unresolvedExpression(cond)).filter(_.resolved)
+    catch { case _: Exception => None }
   }
-
-  private def resolveCondFast(cond: Column):
-      Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-    (try quickResolve(org.apache.spark.sql.graft.bridge.unresolvedExpression(cond))
-     catch { case _: Exception => None })
-      .orElse(resolveCond(cond))
 
   /** Resolve a predicate Column to a catalyst tree by ANALYZING a
     * filter over a schema-only empty relation (no job, no file access):
     * Spark 4 columns are lazy ColumnNode wrappers until
     * analysis, and resolution also validates the predicate against the
     * schema. None when analysis fails (exotic predicates — subqueries
-    * over session-private views, etc): pruning and the discovery fast
-    * path are OPTIMIZATIONS, so failure here must fall back to the
-    * planned path, never fail the statement early.
+    * over session-private views, etc): pruning is an OPTIMIZATION, so
+    * failure here must fall back to scanning every file, never fail the
+    * statement early.
     */
   private def resolveCond(cond: Column):
       Option[org.apache.spark.sql.catalyst.expressions.Expression] =
@@ -942,86 +928,25 @@ final class MutableTable private (
       cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] =
     manifest(version).files.filter(f => FileStats.mayMatch(statsFor(f), cond))
 
-  /** The live rows of manifest `m` matching `cond`: per data file, the
-    * positions not yet deleted — one discovery job answers which rows a
-    * DELETE or UPDATE takes, and how many. The scan covers only the
-    * stats-pruned CANDIDATE set, and for resolvable predicates it runs
-    * PLAN-FREE over a cached candidate scan ([[fastAffected]]) — the
-    * per-statement analyzer/optimizer/codegen pipeline was most of a
-    * point DML's discovery latency. The fully-planned scan remains the
-    * fallback for anything unusual.
+  /** The live rows of version `base` matching `cond`: per data file, the
+    * positions not yet deleted — one planned discovery job over the
+    * stats-pruned candidates answers which rows a DELETE or UPDATE
+    * takes, and how many. The path for every statement the driver-side
+    * DML declines.
     */
-  private def affectedPositions(m: Manifest, cond: Column): Map[String, RoaringBitmap] = {
-    if (m.files.isEmpty) return Map.empty
-    // resolve ONCE; pruning and the plan-free discovery share the tree
-    val resolved = resolveCondFast(cond)
-    val candidates = resolved match {
-      case Some(c) => m.files.filter(f => FileStats.mayMatch(statsFor(f), c))
-      case None => m.files
-    }
+  private def affectedPositions(base: Long, cond: Column): Map[String, RoaringBitmap] = {
+    val candidates = candidateFiles(base, cond)
     if (candidates.isEmpty) return Map.empty
-    val matched = resolved.flatMap(c => fastAffected(candidates, c)).getOrElse {
-      scan(candidates)
-        .select(col("_metadata.file_name").as("__file"), col("_metadata.row_index").as("__pos"), col("*"))
-        .filter(cond).select("__file", "__pos").collect()
-        .groupBy(_.getString(0))
-        .map { case (f, rs) => f -> RoaringBitmap.bitmapOfUnordered(rs.map(_.getLong(1).toInt): _*) }
-    }
-    matched.iterator
-      .map { case (f, hit) => f -> m.deletes.get(f).fold(hit)(RoaringBitmap.andNot(hit, _)) }
-      .filter(!_._2.isEmpty).toMap
-  }
-
-  // Discovery scans cached PER (file, referenced columns) — the finest
-  // valid granularity: files are immutable, so a per-file scan stays
-  // valid forever, and a DML that added ONE file only forces planning
-  // for that file — every other candidate in every later statement is
-  // already compiled (a candidate-SET key missed whenever the set
-  // changed, even when the targeted file had not). Entries are plans,
-  // not data.
-  private val discoveryScans =
-    new graft.LruCache[(String, Seq[String]), org.apache.spark.sql.graft.DiscoveryScan.CachedScan](64)
-
-  /** Plan-free DML discovery: bind the resolved predicate to the UNION
-    * of the candidates' cached per-file scans and run ONE job collecting
-    * the matching rows' positions per file — no analyzer, no optimizer,
-    * no codegen per statement once a file's scan is compiled. Deleted
-    * rows are in the scan; the caller drops their positions. None for
-    * predicates the fast path must not touch (unresolvable, non-
-    * deterministic, subqueries), which keep the fully-planned fallback.
-    */
-  private def fastAffected(candidates: Seq[String],
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression): Option[Map[String, RoaringBitmap]] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, PlanExpression}
-    if (!resolved.deterministic) return None
-    if (resolved.exists(_.isInstanceOf[PlanExpression[_]])) return None
-    // attributes are Unevaluable until bound below — exclude only OTHER
-    // unevaluable nodes (window specs, unresolved leftovers)
-    if (resolved.exists(e =>
-        e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Unevaluable] &&
-        !e.isInstanceOf[AttributeReference]))
-      return None
-    val refNames = resolved.collect { case a: AttributeReference => a.name }.distinct.sorted
-    val scans = candidates.map { f =>
-      discoveryScans.getOrElseUpdate((f, refNames)) {
-        val df = scan(Seq(f)).select(refNames.map(col) ++ Seq(
-          col("_metadata.file_name").as("__file"), col("_metadata.row_index").as("__pos")): _*)
-        org.apache.spark.sql.graft.DiscoveryScan.prepareScan(df)
+    val deletes = manifest(base).deletes
+    scan(candidates)
+      .select(col("_metadata.file_name").as("__file"), col("_metadata.row_index").as("__pos"), col("*"))
+      .filter(cond).select("__file", "__pos").collect()
+      .groupBy(_.getString(0))
+      .map { case (f, rs) =>
+        val hit = RoaringBitmap.bitmapOfUnordered(rs.map(_.getLong(1).toInt): _*)
+        f -> deletes.get(f).fold(hit)(RoaringBitmap.andNot(hit, _))
       }
-    }
-    // per-file scans of one schema share the output SHAPE (names, types,
-    // ordinals); binding is ordinal-based, so the union is sound
-    val output = scans.head.output
-    val bound = resolved.transform {
-      case a: AttributeReference =>
-        val i = output.indexWhere(_.name.equalsIgnoreCase(a.name))
-        if (i < 0) return None // scan shape drifted: fall back
-        BoundReference(i, a.dataType, a.nullable)
-    }
-    val unioned = org.apache.spark.sql.graft.DiscoveryScan.CachedScan(
-      spark.sparkContext.union(scans.map(_.rdd)), output)
-    Some(org.apache.spark.sql.graft.DiscoveryScan.matchPositionsByFile(
-      spark, unioned, bound, output.length - 2, output.length - 1))
+      .filter(!_._2.isEmpty)
   }
 
   /** Summed on-disk bytes of live data files (one fstat each) — the
@@ -1031,50 +956,6 @@ final class MutableTable private (
     files.map { f =>
       try java.nio.file.Files.size(dataDir.resolve(f)) catch { case _: Exception => 0L }
     }.sum
-
-  /** Driver-side in-batch duplicate check over SMALL staged files
-    * (bounded by the caller; the distributed aggregate remains the path
-    * beyond the bound or when table overlap exists): reads only the pk
-    * column via parquet-mr and errors on the first repeat — the same
-    * verdict the Spark aggregate produces, one in-process read instead
-    * of a planned job. Returns false when the file cannot be read this
-    * way (the caller falls back; never weakens the check).
-    */
-  private def pkCheckDriverSide(newFiles: Seq[String], pk: String): Boolean = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val seen = new java.util.HashSet[Any]()
-    var nullSeen = false
-    try {
-      // the read is projected to the pk column: without it the example
-      // reader decodes EVERY column of the staged rows
-      newFiles.foreach { f =>
-        DriverDml.foreachRecord(dataDir.resolve(f), only = Some(pk)) { g =>
-          val v: Any =
-            if (g.getFieldRepetitionCount(0) == 0) null
-            else g.getType.getType(0).asPrimitiveType().getPrimitiveTypeName match {
-              case INT64 => g.getLong(0, 0)
-              case INT32 => g.getInteger(0, 0)
-              case BINARY => g.getBinary(0, 0).toStringUsingUTF8
-              // +0.0 collapses -0.0 so boxed-HashSet equality matches Spark's
-              // grouping-key semantics (NormalizeFloatingNumbers) on the planned path
-              case DOUBLE => g.getDouble(0, 0) + 0.0d
-              case FLOAT => g.getFloat(0, 0) + 0.0f
-              case BOOLEAN => g.getBoolean(0, 0)
-              case _ => return false // unsupported pk physical type: planned path
-            }
-          if (v == null) {
-            if (nullSeen) throw new DuplicateKeyException(s"duplicate key in batch: $pk=null")
-            nullSeen = true
-          } else if (!seen.add(v))
-            throw new DuplicateKeyException(s"duplicate key in batch: $pk=$v")
-        }
-      }
-      true
-    } catch {
-      case e: DuplicateKeyException => throw e
-      case _: Exception => false // unreadable via the example API: planned path decides
-    }
-  }
 
   /** Merge-on-read DELETE: the matching rows' positions join their
     * files' delete vectors, and no data file is written; returns the
@@ -1093,10 +974,9 @@ final class MutableTable private (
   // the predicate is TRUE, so a NULL-predicate row survives
   private def deleteCore(base: Long, cond: Column, publishNow: Boolean): (Long, Long) = {
     driverDml(base, cond, None, publishNow).foreach(return _)
-    val m = manifest(base)
-    val hits = affectedPositions(m, cond)
+    val hits = affectedPositions(base, cond)
     if (hits.isEmpty) return (base, 0L)
-    (commitDml(m, hits, Seq.empty, compact = false, publishNow),
+    (commitDml(manifest(base), hits, Seq.empty, compact = false, publishNow),
       hits.valuesIterator.map(_.getLongCardinality).sum)
   }
 
@@ -1135,9 +1015,9 @@ final class MutableTable private (
     // has no check, so those updates take the planned path below
     val touchesPk = primaryKey.exists(set.contains)
     if (!touchesPk) driverDml(base, cond, Some(set), publishNow).foreach(return _)
-    val m = manifest(base)
-    val hits = affectedPositions(m, cond)
+    val hits = affectedPositions(base, cond)
     if (hits.isEmpty) return (base, 0L)
+    val m = manifest(base)
     val updated = hits.valuesIterator.map(_.getLongCardinality).sum
     val affected = hits.keys.toSeq
     // exactly the discovered rows, each with its assignments applied

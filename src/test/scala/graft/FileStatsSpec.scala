@@ -327,7 +327,7 @@ class FileStatsSpec extends SparkTestBase {
     assert(dup.getMessage.contains("duplicate key in batch"), dup.getMessage)
   }
 
-  test("string primary keys: driver-side in-batch check and planned clash check") {
+  test("string primary keys: planned in-batch and table clash checks") {
     import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Files.createTempDirectory("graft_fstats_strpk")
     val strSchema = StructType(Seq(
@@ -335,29 +335,30 @@ class FileStatsSpec extends SparkTestBase {
     val t = MutableTable.create(spark, dir.resolve("strpk").toString,
       strSchema, primaryKey = Some("s"))
     t.insert(spark.createDataFrame(Seq(Row("alpha", 1L), Row("beta", 2L)).asJava, strSchema))
-    // in-batch dup on a BINARY(UTF8) key: the driver-side parquet read
-    // path must catch it (disjoint bounds from the live file -> no
-    // overlap -> driver check)
+    // in-batch dup on a BINARY(UTF8) key: a DataFrame insert takes the
+    // planned aggregate even when its bounds are disjoint from the live
+    // file's (no table file overlaps; the staged side alone groups)
     val dup = intercept[Exception](t.insert(spark.createDataFrame(
       Seq(Row("zeta", 3L), Row("zeta", 4L)).asJava, strSchema)))
     assert(dup.getMessage.contains("duplicate key in batch: s=zeta"), dup.getMessage)
-    // clash against the table (overlapping bounds -> planned path)
+    // clash against the table (overlapping bounds: the live file joins
+    // the aggregate)
     val clash = intercept[Exception](t.insert(spark.createDataFrame(
       Seq(Row("beta", 9L)).asJava, strSchema)))
     assert(clash.getMessage.contains("violates primary key: s=beta"), clash.getMessage)
     assert(t.df.count() == 2, "failed inserts must leave nothing behind")
   }
 
-  test("double primary keys: 0.0 and -0.0 clash in-batch on the driver-side path (ADVICE r15)") {
+  test("double primary keys: 0.0 and -0.0 clash in-batch on the planned path (ADVICE r15)") {
     import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Files.createTempDirectory("graft_fstats_dblpk")
     val dblSchema = StructType(Seq(
       StructField("d", DoubleType), StructField("k", LongType)))
     val t = MutableTable.create(spark, dir.resolve("dblpk").toString,
       dblSchema, primaryKey = Some("d"))
-    // empty table -> no bound overlap -> the driver-side in-batch check
-    // runs; Spark's grouping semantics (NormalizeFloatingNumbers) treat
-    // 0.0 and -0.0 as the same key, so the fast path must too
+    // empty table -> a DataFrame insert's planned aggregate over the
+    // staged rows alone; Spark's grouping semantics
+    // (NormalizeFloatingNumbers) treat 0.0 and -0.0 as the same key
     val dup = intercept[Exception](t.insert(spark.createDataFrame(
       Seq(Row(0.0d, 1L), Row(-0.0d, 2L)).asJava, dblSchema)))
     assert(dup.getMessage.contains("duplicate key in batch"), dup.getMessage)

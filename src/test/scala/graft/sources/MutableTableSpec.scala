@@ -288,8 +288,8 @@ class MutableTableSpec extends SparkTestBase {
     def dataFiles = MutableTable.listDir(t.root.resolve("data")).map(_.getFileName.toString).toSet
     val loaded = dataFiles
     val hits = t.driverDmlHits.get()
-    // driver path, plan-free discovery (a predicate the micro-resolver
-    // declines), and the planned fallback (a non-deterministic one)
+    // the driver path, and the planned path (a predicate the micro-
+    // resolver declines, and a non-deterministic one)
     assert(t.delete(expr("id = 1")) == 1L)
     assert(t.driverDmlHits.get() == hits + 1, "the point DELETE takes the driver path")
     assert(t.delete(expr("concat(name, '') = 'b'")) == 1L)
@@ -314,6 +314,72 @@ class MutableTableSpec extends SparkTestBase {
     assert(t.df.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(4L, 5L, 6L, 7L))
     val m = new String(Files.readAllBytes(t.root.resolve(s"manifest-${t.currentVersion}.json")))
     assert(m.contains("\"deletes\": {}"), m)
+  }
+
+  test("a DataFrame-API predicate takes the driver-side DML path") {
+    val t = mkTable()
+    t.insert(rows((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
+    val hits = t.driverDmlHits.get()
+    assert(t.delete(col("id") === 1L) == 1L)
+    assert(t.driverDmlHits.get() == hits + 1, "col === lit takes the driver path, like expr(\"id = 1\")")
+    assert(t.update(col("id") >= 2L && !(col("name") === "c"), Map("name" -> lit("B"))) == 1L)
+    assert(t.driverDmlHits.get() == hits + 2, "&&, ! and >= take the driver path")
+    assert(t.df.orderBy("id").collect().toSeq == Seq(Row(2L, "B", 2.0), Row(3L, "c", 3.0)))
+  }
+
+  test("planned DML discovery deletes exactly the rows and positions the driver path does") {
+    import scala.jdk.CollectionConverters._
+    val wide = StructType(Seq(
+      StructField("id", LongType), StructField("name", StringType),
+      StructField("score", DoubleType), StructField("code", StringType),
+      StructField("d", DateType), StructField("amt", DecimalType(10, 2))))
+    def mk() = MutableTable.create(spark,
+      Files.createTempDirectory("graft_mt_eq").resolve("t").toString, wide, Some("id"))
+    val (a, b) = (mk(), mk())
+    // three files of ten rows, with NULLs in name, score and code
+    (0 until 3).foreach { f =>
+      val batch = (1 to 10).map { j =>
+        val i = f * 10 + j
+        Row(i.toLong, if (i % 7 == 0) null else s"n$i", if (i % 11 == 0) null else i * 3.0,
+          Seq("7", "07", "8", "70", null)(i % 5), java.sql.Date.valueOf(s"2024-01-${1 + i % 10}"),
+          new java.math.BigDecimal(i * 225).movePointLeft(2))
+      }
+      Seq(a, b).foreach(_.insert(spark.createDataFrame(batch.asJava, wide).coalesce(1)))
+    }
+    // each manifest's delete vectors, keyed by the file's place in it:
+    // both tables wrote the same files in the same order
+    def vectors(t: MutableTable): Seq[(Int, Seq[Int])] = {
+      val m = new String(Files.readAllBytes(t.root.resolve(s"manifest-${t.currentVersion}.json")))
+      def section(key: String, open: Char, close: Char) = {
+        val o = m.indexOf(open, m.indexOf("\"" + key + "\""))
+        m.substring(o + 1, m.indexOf(close, o))
+      }
+      val files = section("files", '[', ']').split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+      val dv = DeleteVectors.parse(section("deletes", '{', '}'))
+      files.zipWithIndex.flatMap { case (f, i) => dv.get(f).map(bm => i -> bm.toArray.toSeq) }
+    }
+    // (predicate, does the driver path take it on table a?)
+    val cases = Seq(
+      "id = 3" -> true,
+      "id IN (1, 5, 9, 14)" -> true,
+      "id BETWEEN 10 AND 12" -> false, // parsed as a `between` call the micro-resolver declines
+      "name IS NULL" -> true,
+      "id = 2 OR score > 80" -> true,
+      "NOT (score > 40)" -> true, // score NULL: NOT(NULL) keeps the row
+      "code = 7" -> false, // string vs numeric: the micro-resolver declines
+      "d = DATE '2024-01-05'" -> true,
+      "amt > 50.5" -> true)
+    cases.foreach { case (p, driver) =>
+      val (ha, hb) = (a.driverDmlHits.get(), b.driverDmlHits.get())
+      val na = a.delete(expr(p))
+      val nb = b.delete(coalesce(expr(p), lit(false)))
+      assert(a.driverDmlHits.get() == ha + (if (driver) 1 else 0), s"$p: path taken on a")
+      assert(b.driverDmlHits.get() == hb, s"coalesce($p, false) must take the planned path")
+      assert(na > 0 && na == nb, s"$p: $na vs $nb rows deleted")
+      assert(vectors(a) == vectors(b), s"$p: delete vectors differ")
+      assert(a.df.orderBy("id").collect().toSeq == b.df.orderBy("id").collect().toSeq, s"$p: live rows differ")
+    }
+    assert(a.df.count() > 0, "some rows stay live")
   }
 
   test("a read of a snapshot with deletes still prunes files by their stats") {
@@ -370,7 +436,10 @@ class MutableTableSpec extends SparkTestBase {
     spark.sparkContext.addSparkListener(listener)
     try {
       counter.set(0)
-      assert(t.update(col("id") === 2L, Map("name" -> lit("B"))) == 1L)
+      val hits = t.driverDmlHits.get()
+      // an expression-valued SET: the driver path declines it
+      assert(t.update(col("id") === 2L, Map("name" -> expr("upper(name)"))) == 1L)
+      assert(t.driverDmlHits.get() == hits, "the UPDATE must take the planned path")
       Thread.sleep(300) // listener bus is async
       val updateJobs = counter.get()
       assert(updateJobs <= 3, s"point UPDATE must run <=3 jobs (discovery+count, write), ran $updateJobs")
