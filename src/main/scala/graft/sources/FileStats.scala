@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Path
-import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
@@ -10,20 +9,20 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Manifest-level per-file column statistics for the micro-lake — the
-  * Spark re-expression of what DuckLake's catalog gives the reference:
-  * its CHECKPOINT/maintenance path (maintenance/mod.rs) works against a
+/** Per-file column statistics for the micro-lake — the Spark
+  * re-expression of what DuckLake's catalog gives the reference: its
+  * CHECKPOINT/maintenance path (maintenance/mod.rs) works against a
   * catalog that knows each data file's column bounds, so a point
   * UPDATE/DELETE/read touches only candidate files instead of paying a
   * footer-and-scan pass over every live file (VERDICT r14 #4: at 100 TB
   * the discovery scan is the DML bottleneck; YCSB measured the symptom
   * as delete 341 ms vs read 77 ms).
   *
-  * Stats come from the parquet FOOTER of each file as the lake writer
-  * stages it — no extra Spark job; the writer already computed them: the
-  * driver-side writer hands over its closed footer, a Spark-written file
-  * has its footer read back — and are persisted inside the manifest, so a
-  * restarted process prunes without re-reading footers.
+  * Stats live only in each data file's parquet FOOTER — no extra Spark
+  * job; the writer already computed them. [[MutableTable.statsFor]]
+  * keeps them per file once read, and the lake writers hand theirs over
+  * as they write: the driver-side writer its closed footer, a
+  * Spark-written file its footer read back.
   *
   * [[ColStats]] carries min/max in a canonical string form tagged by a
   * comparison kind; [[FileStats.mayMatch]] is the conservative
@@ -31,20 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (resolved or unresolved): it only ever returns `false` when the
   * bounds PROVE no row can match, so pruning can never change results.
   */
-/** Process-global data-dir → table lookup for the optimizer's
-  * scan-prune rule ([[graft.plans.StatsPruneRule]]): a read plan's file
-  * paths resolve to the owning [[MutableTable]], whose manifest stats
-  * prune the scan. Keys are normalized absolute paths; entries are tiny
-  * (one per managed table) and a dropped table's stale entry is
-  * harmless — stats are per immutable data file.
-  */
-object StatsRegistry {
-  private val byDataDir = scala.collection.concurrent.TrieMap.empty[String, MutableTable]
-  private[sources] def register(t: MutableTable): Unit = byDataDir(t.dataDirKey) = t
-  def lookup(dataDir: String): Option[MutableTable] = byDataDir.get(dataDir)
-  def isEmpty: Boolean = byDataDir.isEmpty
-}
-
 final case class ColStats(
     kind: Char, // 'L' integer-comparable (int/long/date/ts) | 'D' double | 'S' utf8 | 'B' boolean
     rows: Long, // row count of the file (-1 unknown)
@@ -188,31 +173,6 @@ object FileStats {
     case 'D' => java.lang.Double.compare(a.toDouble, b.toDouble)
     case 'B' => java.lang.Boolean.compare(a.toBoolean, b.toBoolean)
     case _   => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-  }
-
-  // === manifest encoding =====================================================
-  // One flat row per (file, column): `file|colB64|kind|rows|nulls|minB64|maxB64`
-  // — base64 keeps arbitrary column names and string bounds JSON-safe
-  // without a nested-JSON parser on the commit path; '|' never occurs in
-  // base64 or the uuid file names. Empty b64 field = bound absent.
-
-  def encodeEntries(stats: Map[String, Map[String, ColStats]]): Seq[String] =
-    stats.toSeq.sortBy(_._1).flatMap { case (file, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (col, s) =>
-        val b64 = (v: String) => Base64.getEncoder.encodeToString(v.getBytes(StandardCharsets.UTF_8))
-        s"$file|${b64(col)}|${s.kind}|${s.rows}|${s.nulls}|${s.min.map(b64).getOrElse("")}|${s.max.map(b64).getOrElse("")}"
-      }
-    }
-
-  def decodeEntry(entry: String): Option[(String, String, ColStats)] = {
-    val f = entry.split("\\|", -1)
-    if (f.length != 7 || f(2).length != 1) return None
-    val un = (v: String) =>
-      if (v.isEmpty) None
-      else Some(new String(Base64.getDecoder.decode(v), StandardCharsets.UTF_8))
-    try Some((f(0), un(f(1)).getOrElse(return None),
-      ColStats(f(2).charAt(0), f(3).toLong, f(4).toLong, un(f(5)), un(f(6)))))
-    catch { case _: Exception => None } // unknown format: no stats, never prune
   }
 
   // === pruning evaluator =====================================================

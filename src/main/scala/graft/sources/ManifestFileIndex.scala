@@ -19,11 +19,16 @@ import org.apache.spark.sql.types.StructType
   * that read would plan: `HadoopFsRelation` + `ParquetFileFormat` over
   * the same file paths, no partition columns.
   *
+  * The index also carries the owning table's per-file stats lookup
+  * (`stats`, by file name: [[MutableTable.statsFor]]), by which the
+  * optimizer's scan-prune rule narrows a relation over it ([[pruned]]).
+  *
   * Equality is by file set, as `InMemoryFileIndex` compares its root
   * paths: two frames of one snapshot are `sameResult`, and the prepared
   * plan cache and the optimizer see one relation.
   */
-final class ManifestFileIndex(statuses: Seq[FileStatus]) extends FileIndex {
+final class ManifestFileIndex(statuses: Seq[FileStatus],
+    stats: String => Map[String, ColStats]) extends FileIndex {
 
   private lazy val paths: Set[HadoopPath] = statuses.iterator.map(_.getPath).toSet
 
@@ -47,6 +52,14 @@ final class ManifestFileIndex(statuses: Seq[FileStatus]) extends FileIndex {
   }
 
   override def hashCode: Int = paths.hashCode
+
+  /** This index without the files whose stats prove that no row matches
+    * `cond` ([[FileStats.mayMatch]]); itself when every file may match.
+    */
+  def pruned(cond: Expression): ManifestFileIndex = {
+    val keep = statuses.filter(s => FileStats.mayMatch(stats(s.getPath.getName), cond))
+    if (keep.length == statuses.length) this else new ManifestFileIndex(keep, stats)
+  }
 
   /** A parquet scan of these files in `session`, columns typed by
     * `schema` made nullable (as every file-source read is), without the

@@ -111,9 +111,10 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
   // makes the multi-table commit DURABLE as one atomically-moved commit
   // record before any pointer swaps — a crash between swaps rolls
   // FORWARD from the record (recoverPendingCommits), never publishing
-  // one table of two. ROLLBACK deletes every staged manifest (so vacuum
-  // can reclaim their data files) and drops tables created inside the
-  // txn.
+  // one table of two. ROLLBACK deletes every staged manifest with the
+  // data files only it names (MutableTable.discardStaged), and drops
+  // tables created inside the txn; COMMIT retires its intermediate
+  // staged manifests the same way.
   def beginTxn(): CatalogTxn = {
     val t = new CatalogTxn
     liveTxns.synchronized(liveTxns.put(t, java.lang.Boolean.TRUE))
@@ -157,8 +158,8 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     // superseded data files against every future vacuum)
     val finalsSnap = txn.staged.toMap
     val allStagedSnap = txn.allStaged.toList
-    def retireIntermediates(): Unit = allStagedSnap.foreach { case (n, v) =>
-      if (!finalsSnap.get(n).contains(v)) tables.get(n).foreach(_.discardStaged(v))
+    def retireIntermediates(): Unit = allStagedSnap.reverseIterator.foreach { case (n, v, base) =>
+      if (!finalsSnap.get(n).contains(v)) tables.get(n).foreach(_.discardStaged(v, base))
     }
     val locked = entries.flatMap { case (n, v) => tables.get(n).map(t => (n, t, v)) }
     // Hold EVERY staged table's writer monitor (sorted order — autocommit
@@ -202,9 +203,9 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
       } catch {
         case e: Throwable =>
           if (recordWritten.isEmpty) {
-            // nothing durable: discard the staged chain so its manifests
-            // don't pin data files against vacuum forever (the Session
-            // SQL path drops the txn without calling rollbackTxn)
+            // nothing durable: discard the staged chain and its data
+            // files (the Session SQL path drops the txn without calling
+            // rollbackTxn)
             rollbackStaged(txn)
             throw e
           } else {
@@ -243,10 +244,9 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     txn.clearAll()
   }}
 
-  /** Discard all staged writes — deleting their manifests so the data
-    * files they reference become vacuum-reclaimable — and drop tables
-    * created inside the txn; without any staged state this is the
-    * tolerated no-op.
+  /** Discard all staged writes — their manifests and the data files
+    * only they name — and drop tables created inside the txn; without
+    * any staged state this is the tolerated no-op.
     */
   def rollbackTxn(txn: CatalogTxn): Unit = txn.synchronized { synchronized {
     rollbackStaged(txn)
@@ -254,8 +254,8 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
 
   // callers hold both locks
   private def rollbackStaged(txn: CatalogTxn): Unit = {
-    txn.allStaged.foreach { case (n, v) =>
-      tables.get(n).foreach(_.discardStaged(v))
+    txn.allStaged.reverseIterator.foreach { case (n, v, base) =>
+      tables.get(n).foreach(_.discardStaged(v, base))
     }
     txn.created.foreach(drop)
     txn.clearAll()
@@ -419,32 +419,35 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
       txn: Option[CatalogTxn] = None): Option[Long] =
     get(name).map { t =>
       val shaped = BatchAlign.shapeParamBatch(spark, batch, t.schema, explicitCols)
-      txn match {
-        case Some(x) => stageInTxn(name, t, x)(bv => t.stageInsert(bv, shaped))
-        case None => t.insert(shaped)
-      }
+      mutate(name, t, txn)(t.insertCore(_, shaped))
     }
 
-  /** The whole read-base → stage → record sequence under the txn's own
-    * lock (see [[CatalogTxn]]): the base is the txn's staged chain head
-    * for the table, or the published version on first touch — which is
-    * also recorded as the conflict-check anchor.
+  /** Run mutation `stage` (a [[MutableTable]] core: base version in,
+    * staged (version, rows) out) on table `t`: staged into `txn`, or
+    * autocommitted. Returns the row count. In a txn, the whole read-base
+    * → stage → record sequence runs under the txn's own lock (see
+    * [[CatalogTxn]]): the base is the txn's staged chain head for the
+    * table, or the published version on first touch — which is also
+    * recorded as the conflict-check anchor.
     */
-  private def stageInTxn(name: String, t: MutableTable, x: CatalogTxn)(
-      stage: Long => (Long, Long)): Long = x.synchronized {
-    val lc = name.toLowerCase
-    val bv = x.staged.getOrElse(lc, {
-      val b = t.currentVersion
-      x.baseVersions.getOrElseUpdate(lc, b)
-      b
-    })
-    val (v, n) = stage(bv)
-    // a no-op mutation (0 affected files) returns the base itself as the
-    // "new" version — record it in the chain but never as a manifest to
-    // retire (it is the published manifest, or a prior staged one)
-    x.staged(lc) = v
-    if (v != bv) x.allStaged += ((lc, v))
-    n
+  private def mutate(name: String, t: MutableTable, txn: Option[CatalogTxn])(
+      stage: Long => (Long, Long)): Long = txn match {
+    case None => t.autocommit(stage)._2
+    case Some(x) => x.synchronized {
+      val lc = name.toLowerCase
+      val bv = x.staged.getOrElse(lc, {
+        val b = t.currentVersion
+        x.baseVersions.getOrElseUpdate(lc, b)
+        b
+      })
+      val (v, n) = t.withWriteLock(stage(bv))
+      // a no-op mutation (0 affected files) returns the base itself as the
+      // "new" version — record it in the chain but never as a manifest to
+      // retire (it is the published manifest, or a prior staged one)
+      x.staged(lc) = v
+      if (v != bv) x.allStaged += ((lc, v, bv))
+      n
+    }
   }
 
   // INSERT … VALUES keeps this regex and DriverDml's hand reader of the
@@ -465,10 +468,9 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
   def route(sql: String, txn: Option[CatalogTxn] = None): Option[Long] =
     // Within-txn mutations chain off the session's own staged version
     // (snapshot taken on first touch) — the whole base-read/stage/record
-    // sequence runs under the txn lock (stageInTxn). NON-txn mutations
-    // go through the table's atomic mutators — read-stage-publish under
-    // ONE writeLock hold, so concurrent autocommit writers never lose an
-    // update.
+    // sequence runs under the txn lock (mutate). NON-txn mutations
+    // autocommit — read-stage-publish under ONE writeLock hold, so
+    // concurrent autocommit writers never lose an update.
     graft.SqlShim.leadingKeyword(sql) match {
       case "INSERT" => routeInsert(sql, txn)
       case "UPDATE" | "DELETE" => routeParsed(sql, txn)
@@ -506,11 +508,8 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
           }
           BatchAlign.alignToSchema(named, t.schema, explicit)
         }
-        txn match {
-          case Some(x) => stageInTxn(table, t, x)(bv =>
-            direct.flatMap(t.stageInsertRows(bv, _)).getOrElse(t.stageInsert(bv, planned())))
-          case None => direct.flatMap(t.insertRowsDirect).getOrElse(t.insert(planned()))
-        }
+        mutate(table, t, txn)(bv =>
+          direct.flatMap(t.insertRowsCore(bv, _)).getOrElse(t.insertCore(bv, planned())))
       }
     case _ => None
   }
@@ -560,18 +559,11 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
             key -> column(unq(a.value))
           }.toMap
           val where = cond.map(c => column(unq(c))).getOrElse(lit(true))
-          txn match {
-            case Some(x) => stageInTxn(name, t, x)(bv => t.stageUpdate(bv, where, set))
-            case None    => t.update(where, set)
-          }
+          mutate(name, t, txn)(t.updateCore(_, where, set))
         }
       case DeleteFromTable(rel, cond) =>
         for ((name, q) <- target(rel); t <- get(name)) yield {
-          val where = column(unqualified(q)(cond))
-          txn match {
-            case Some(x) => stageInTxn(name, t, x)(bv => t.stageDelete(bv, where))
-            case None    => t.delete(where)
-          }
+          mutate(name, t, txn)(t.deleteCore(_, column(unqualified(q)(cond))))
         }
       case _ => None
     }
@@ -627,10 +619,11 @@ final class CatalogTxn private[sources] {
     */
   private[sources] val baseVersions = scala.collection.mutable.Map.empty[String, Long]
   /** EVERY staged manifest this txn wrote (not just the final chain
-    * head per table) — rollback/commit retire them so their data files
-    * become vacuum-reclaimable instead of leaking forever.
+    * head per table), as (table, version, base version), oldest first —
+    * rollback/commit retire them with the data files only they name
+    * instead of leaking both forever.
     */
-  private[sources] val allStaged = scala.collection.mutable.Buffer.empty[(String, Long)]
+  private[sources] val allStaged = scala.collection.mutable.Buffer.empty[(String, Long, Long)]
   private[sources] val created = scala.collection.mutable.Set.empty[String]
 
   private[sources] def clearAll(): Unit = {

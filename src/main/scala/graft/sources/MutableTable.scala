@@ -19,7 +19,7 @@ import org.roaringbitmap.RoaringBitmap
   * shape of DuckLake's catalog tables):
   * {{{
   *   root/data/part-<uuid>.parquet     immutable data files
-  *   root/manifest-<v>.json            files, delete vectors, stats of version v
+  *   root/manifest-<v>.json            files and delete vectors of version v
   *   root/_version                     current version pointer (atomic swap)
   * }}}
   *
@@ -43,10 +43,19 @@ import org.roaringbitmap.RoaringBitmap
   *   vectors of the files they merge back into the new file.
   * - Old manifests remain readable: `asOf(v)` is snapshot time travel.
   *
-  * Commit protocol: write manifest-v, then atomically swap `_version`.
-  * Readers resolve the pointer once and read an immutable manifest, so
-  * a concurrent commit never yields a torn read. Each manifest is parsed
-  * once while it stays in the table's manifest cache.
+  * Commit protocol (SURVEY §7.4): every mutation stages — it writes its
+  * new data files and manifest-v on top of a base version, and moves no
+  * pointer — and publishing atomically swaps `_version` to v. A
+  * transaction's statement only stages (the catalog publishes at
+  * COMMIT); an autocommit statement is the one-statement transaction:
+  * it stages on the published version and publishes under the writer
+  * monitor. A staged manifest that is never published (a failed
+  * publish, a ROLLBACK, a conflicted COMMIT, an intermediate one a
+  * COMMIT retires) is deleted with the data files it names that its base
+  * manifest does not ([[discardStaged]]). Readers resolve the pointer
+  * once and read an immutable manifest, so a concurrent commit never
+  * yields a torn read. Each manifest is parsed once while it stays in
+  * the table's manifest cache.
   *
   * Reads are built from the manifest alone. Every frame of the table —
   * `df`/`asOf` (so the catalog's view refresh on each publish), and the
@@ -58,10 +67,14 @@ import org.roaringbitmap.RoaringBitmap
   * file throws when its frame is built, and a frame whose file vanished
   * later fails at scan, so a read is never partial.
   *
-  * Writes hold the table's writer monitor. The driver-side paths write
-  * through [[DriverDml]]'s NIO parquet codec and take the new file's
-  * column stats from the writer's own footer; only the planned
-  * (Spark-job) paths re-read a footer from disk.
+  * A data file's column stats live only in its parquet footer:
+  * [[statsFor]] reads them once per file and keeps them. The writers
+  * seed that cache as they write — the driver-side paths from
+  * [[DriverDml]]'s closed footer, the planned (Spark-job) paths from the
+  * footer read as a staged file is adopted — so only a table opened by
+  * another process reads footers back, once per file.
+  *
+  * Writes hold the table's writer monitor.
   */
 final class MutableTable private (
     val spark: SparkSession,
@@ -76,8 +89,8 @@ final class MutableTable private (
   private def dataDir: Path = root.resolve("data")
   private def versionFile: Path = root.resolve("_version")
 
-  /** Normalized absolute data-dir path — the [[StatsRegistry]] key the
-    * optimizer's scan-prune rule resolves a relation's files against.
+  /** Normalized absolute path of the directory holding this table's
+    * data files, for tools that measure what the table stores.
     */
   def dataDirKey: String = dataDir.toAbsolutePath.normalize.toString
 
@@ -181,43 +194,37 @@ final class MutableTable private (
   // the stream-closing boilerplate inline)
   private def listDir(p: Path): Seq[Path] = MutableTable.listDir(p)
 
-  // Per-file column stats, keyed by data-file name. A data file is
-  // immutable once adopted, so its stats are too: entries accumulate
-  // from footers read at stage time and from manifests parsed back after
-  // a restart — any manifest mentioning a file carries the same stats.
+  // Per-file column stats, keyed by data-file name: a cache of the
+  // files' footers. A data file is immutable once adopted, so its stats
+  // are too; the writers seed entries from the footers they produce.
   private val fileStats =
     scala.collection.concurrent.TrieMap.empty[String, Map[String, ColStats]]
 
-  /** Stats for one live data file (empty when unknown — e.g. a manifest
-    * written before stats existed). Used by the catalog-style pruning
-    * here and by the optimizer's scan-prune rule via [[StatsRegistry]].
+  /** Stats for one data file, read from its footer on first use and
+    * kept (empty when the footer cannot be read: the file is then never
+    * pruned, and is read again next time). Used by the catalog-style
+    * pruning here and by the optimizer's scan-prune rule through the
+    * table's [[ManifestFileIndex]].
     */
   def statsFor(fileName: String): Map[String, ColStats] =
-    fileStats.getOrElse(fileName, Map.empty)
-
-  /** Load the published snapshot's persisted stats (idempotent; the
-    * optimizer's scan-prune rule calls this before consulting
-    * [[statsFor]] — a table `load()`ed after a restart has stats only
-    * on disk until someone reads them).
-    */
-  def ensureStatsLoaded(): Unit = manifest(currentVersion)
+    try fileStats.getOrElseUpdate(fileName, FileStats.fromFooter(dataDir.resolve(fileName)))
+    catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   // Parsed manifests by version. A written manifest never changes and
   // allocVersion never reuses a number in-process, so an entry is exact
-  // until the manifest is deleted (commitOrClean, discardStaged drop it).
+  // until the manifest is deleted (stageManifest, discardStaged drop it).
   private val manifests = new graft.LruCache[Long, Manifest](64)
 
-  /** Manifest `v`, parsed once while cached. Parsing merges its
-    * persisted stats into [[fileStats]], so a reader of `v` prunes
-    * against them.
-    */
+  /** Manifest `v`, parsed once while cached. */
   private def manifest(v: Long): Manifest =
     manifests.getOrElseUpdate(v)(parseManifest(new String(Files.readAllBytes(manifestPath(v)))))
 
   // minimal JSON, as writeManifest writes it:
-  //   {"files": ["a.parquet", ...], "deletes": {"a.parquet": "<base64>", ...}, "stats": [...]}
+  //   {"files": ["a.parquet", ...], "deletes": {"a.parquet": "<base64>", ...}}
   // the files array is the FIRST bracket pair (names contain no
-  // brackets), and neither names nor base64 hold quotes, braces or commas
+  // brackets), and neither names nor base64 hold quotes, braces or
+  // commas. A manifest written before stats moved to the footers also
+  // holds a "stats" array after these; it is not read.
   private def parseManifest(txt: String): Manifest = {
     def section(key: String, open: Char, close: Char): Option[String] = {
       val idx = txt.indexOf("\"" + key + "\"")
@@ -230,47 +237,54 @@ final class MutableTable private (
     val files = section("files", '[', ']').filter(_.nonEmpty)
       .map(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
       .getOrElse(Seq.empty)
-    section("stats", '[', ']').filter(_.nonEmpty).foreach { body =>
-      body.split(",").toSeq
-        .flatMap(raw => FileStats.decodeEntry(raw.trim.stripPrefix("\"").stripSuffix("\"")))
-        .groupBy(_._1)
-        .foreach { case (file, entries) =>
-          // a manifest always carries a file's complete column set, and a
-          // file's stats never change — first writer wins is exact
-          fileStats.putIfAbsent(file, entries.map(e => e._2 -> e._3).toMap)
-        }
-    }
     Manifest(files, section("deletes", '{', '}').map(DeleteVectors.parse).getOrElse(DeleteVectors.empty))
   }
 
   private def writeManifest(v: Long, files: Seq[String], deletes: DeleteVectors): Unit = {
     val fs = files.map(f => "\"" + f + "\"").mkString("[", ", ", "]")
-    val statEntries = FileStats.encodeEntries(
-      files.iterator.flatMap(f => fileStats.get(f).map(f -> _)).toMap)
-    val st = statEntries.map(e => "\"" + e + "\"").mkString("[", ", ", "]")
-    Files.write(manifestPath(v), s"""{"files": $fs, "deletes": ${deletes.json}, "stats": $st}""".getBytes)
+    Files.write(manifestPath(v), s"""{"files": $fs, "deletes": ${deletes.json}}""".getBytes)
     manifests.put(v, Manifest(files, deletes))
   }
 
-  /** Write manifest `nv` and, when `publishNow`, publish it — with
-    * orphan cleanup (r19 review): a publish that fails AFTER its
-    * manifest landed — or a torn manifest write — must not leave
-    * manifest-nv on disk, where it would (a) pin data files the caller's
-    * cleanup is about to delete as "live" against vacuum and (b) let
-    * restore(nv)/asOf(nv) commit a version whose reads throw. The
-    * unpublished manifest is safe to delete: no pointer references it.
+  /** Write `files` and `deletes` as a new staged manifest and return its
+    * version; nothing is published. A torn manifest write leaves no
+    * manifest behind (r19 review): on disk it would pin data files the
+    * caller's cleanup is about to delete as "live" against vacuum, and
+    * let restore/asOf of it commit a version whose reads throw. Callers
+    * hold writeLock.
     */
-  private def commitOrClean(nv: Long, files: Seq[String], deletes: DeleteVectors,
-      publishNow: Boolean): Unit =
-    try {
-      writeManifest(nv, files, deletes)
-      if (publishNow) publish(nv)
-    } catch {
+  private def stageManifest(files: Seq[String], deletes: DeleteVectors): Long = {
+    val nv = allocVersion()
+    try writeManifest(nv, files, deletes)
+    catch {
       case e: Throwable =>
         manifests.remove(nv)
         Files.deleteIfExists(manifestPath(nv))
         throw e
     }
+    nv
+  }
+
+  /** Run mutation `stage` on the published version and publish the
+    * version it staged, under the writer monitor — the autocommit
+    * statement as a one-statement transaction. Returns the staged
+    * (version, rows).
+    */
+  private[sources] def autocommit(stage: Long => (Long, Long)): (Long, Long) = locked {
+    val base = currentVersion
+    val staged = stage(base)
+    publishStaged(base, staged._1)
+    staged
+  }
+
+  /** Publish staged version `v` of base `base` (a no-op when the
+    * mutation staged nothing and `v` is the base itself). A publish that
+    * fails discards `v` ([[discardStaged]]) and rethrows.
+    */
+  private def publishStaged(base: Long, v: Long): Unit =
+    if (v != base)
+      try publish(v)
+      catch { case e: Throwable => discardStaged(v, base); throw e }
 
   /** Atomically swing the version pointer to an already-written manifest
     * — the §7.4 commit point. Used directly by the catalog's transaction
@@ -316,16 +330,17 @@ final class MutableTable private (
     * pointer rewind: version numbers stay monotonic, every manifest
     * written stays immutable, and `asOf` time travel over the rolled-back
     * interval keeps working. Requires the target manifest's files to
-    * still exist (i.e. no intervening `vacuum`).
+    * still exist (i.e. no intervening `vacuum`). The new manifest is
+    * staged on `version`, the manifest it copies, so a failed publish
+    * deletes only the copy.
     */
   def restore(version: Long): Long = locked {
     require(Files.exists(manifestPath(version)), s"unknown version $version")
-    val v = currentVersion
-    if (version == v) v
+    if (version == currentVersion) version
     else {
-      val m = manifest(version) // restored files keep their persisted stats
-      val nv = allocVersion()
-      commitOrClean(nv, m.files, m.deletes, publishNow = true)
+      val m = manifest(version)
+      val nv = stageManifest(m.files, m.deletes)
+      publishStaged(version, nv)
       nv
     }
   }
@@ -346,21 +361,17 @@ final class MutableTable private (
   private val fileStatuses =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.hadoop.fs.FileStatus]
 
-  /** The index over data files `files` (names) — the relation every
-    * frame of this table scans, and the one the optimizer's scan-prune
-    * rule narrows. Throws NoSuchFileException for a missing file.
-    */
-  private[graft] def fileIndex(files: Seq[String]): ManifestFileIndex =
-    new ManifestFileIndex(files.map(f =>
-      fileStatuses.getOrElseUpdate(f, ManifestFileIndex.stat(dataDir.resolve(f)))))
-
   /** A parquet scan of data files `files` without the rows `deletes`
     * names, in `session` (by default the internal DML session), built
-    * from the manifest alone.
+    * from the manifest alone: a relation over a [[ManifestFileIndex]] of
+    * the files, which the optimizer's scan-prune rule narrows by
+    * [[statsFor]]. Throws NoSuchFileException for a missing file.
     */
   private def scan(files: Seq[String], deletes: DeleteVectors = DeleteVectors.empty,
       session: SparkSession = dmlSession): DataFrame =
-    fileIndex(files).frame(session, schema, deletes)
+    new ManifestFileIndex(files.map(f =>
+      fileStatuses.getOrElseUpdate(f, ManifestFileIndex.stat(dataDir.resolve(f)))), statsFor)
+      .frame(session, schema, deletes)
 
   /** Move the part files of a staged spark write into data/, returning
     * their new (unique) names.
@@ -373,8 +384,7 @@ final class MutableTable private (
       val dest = dataDir.resolve(name)
       Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
       // column bounds off the footer the writer just produced — pure
-      // metadata read, no job; persisted with the next manifest so a
-      // restarted process prunes without re-reading footers
+      // metadata read, no job — seed the stats cache
       try fileStats(name) = FileStats.fromFooter(dest)
       catch { case _: Exception => () } // statless file: never pruned, still correct
       name
@@ -421,20 +431,13 @@ final class MutableTable private (
   /** Append rows; enforces the primary key when declared — duplicates in
     * the batch or against existing rows error, nothing is committed.
     */
-  def insert(data: DataFrame): Long = locked {
-    val (v, n) = insertCore(currentVersion, data, publishNow = true)
-    n
-  }
+  def insert(data: DataFrame): Long = autocommit(insertCore(_, data))._2
 
-  /** Transactional variant: append on top of `base` into a new STAGED
-    * manifest — written to disk but not published, so no other reader
-    * sees it until [[publish]]. Returns (stagedVersion, rowCount).
+  /** The INSERT of `data` on top of `base`, as a new staged manifest
+    * (see [[autocommit]]). Returns (stagedVersion, rowCount). Callers
+    * hold writeLock.
     */
-  def stageInsert(base: Long, data: DataFrame): (Long, Long) = locked {
-    insertCore(base, data, publishNow = false)
-  }
-
-  private def insertCore(base: Long, data: DataFrame, publishNow: Boolean): (Long, Long) = {
+  private[sources] def insertCore(base: Long, data: DataFrame): (Long, Long) = {
     // WRITE FIRST, then validate off the staged files' own footer stats
     // (round-15 restructure). The previous shape semi-joined the batch
     // against the WHOLE table per insert — a full-table scan per append,
@@ -446,10 +449,6 @@ final class MutableTable private (
     // files are unreferenced by any manifest until the commit below, so
     // a failed check just deletes them (vacuum would reclaim them after
     // a crash anyway).
-    // carried-over files' persisted stats must survive into the new
-    // manifest even right after a restart (writeManifest persists only
-    // what the in-memory map holds — review finding, round 15): parsing
-    // the base manifest merges them
     val m = manifest(base)
     val newFiles = stageWrite(data)
     try {
@@ -462,17 +461,8 @@ final class MutableTable private (
           if (newFiles.isEmpty) 0L
           else scan(newFiles).count()
       }
-      val nv = allocVersion()
-      commitOrClean(nv, m.files ++ newFiles, m.deletes, publishNow)
-      (nv, n)
-    } catch {
-      case e: Throwable =>
-        newFiles.foreach { f =>
-          fileStats.remove(f)
-          Files.deleteIfExists(dataDir.resolve(f))
-        }
-        throw e
-    }
+      (stageManifest(m.files ++ newFiles, m.deletes), n)
+    } catch { case e: Throwable => dropStaged(newFiles); throw e }
   }
 
   /** Driver-side small-batch INSERT (VERDICT r15 #3): rows already
@@ -483,21 +473,19 @@ final class MutableTable private (
     * footer bounds, reads the overlapping ones' keys from the row cache,
     * and falls to the planned aggregate only past the driver bound.
     * The written rows enter the row cache. None = schema unsupported (caller falls back); DuplicateKeyException
-    * propagates like the planned path's.
+    * propagates like the planned path's. Publishes as [[autocommit]] does,
+    * inline, since the core may decline.
     */
   def insertRowsDirect(rows: Seq[Array[Any]]): Option[Long] = locked {
-    insertRowsCore(currentVersion, rows, publishNow = true).map(_._2)
+    val base = currentVersion
+    insertRowsCore(base, rows).map { case (v, n) => publishStaged(base, v); n }
   }
 
-  /** Transactional variant of [[insertRowsDirect]]: append on top of
-    * `base` into a new STAGED manifest, like [[stageInsert]]. Returns
-    * (stagedVersion, rowCount), or None when the driver path declines.
+  /** The driver-side INSERT of `rows` on top of `base`, as a new staged
+    * manifest, like [[insertCore]]; None when the driver path declines.
+    * Callers hold writeLock.
     */
-  def stageInsertRows(base: Long, rows: Seq[Array[Any]]): Option[(Long, Long)] =
-    locked { insertRowsCore(base, rows, publishNow = false) }
-
-  private def insertRowsCore(base: Long, rows: Seq[Array[Any]],
-      publishNow: Boolean): Option[(Long, Long)] = {
+  private[sources] def insertRowsCore(base: Long, rows: Seq[Array[Any]]): Option[(Long, Long)] = {
     // row cap (review finding, round 16): a bulk literal batch past the
     // driver bound belongs to the planned path — parallel write, 32 MB
     // file sizing — not a single-threaded one-file parquet-mr write
@@ -535,7 +523,7 @@ final class MutableTable private (
         if (overlapping.nonEmpty && !pkClashDriverSide(overlapping, m.deletes, rows, pk))
           pkCheck(Seq(name), pk, overlapping, m.deletes)
       }
-      Some((commitCompacted(m.files :+ name, m.deletes, publishNow), rows.size.toLong))
+      Some((commitCompacted(m.files :+ name, m.deletes), rows.size.toLong))
     } catch {
       case e: Throwable =>
         dropStaged(Seq(name))
@@ -559,20 +547,21 @@ final class MutableTable private (
     Some(name)
   }
 
-  /** Commit `files` — the last one a file a driver-side DML just wrote —
+  /** Stage `files` — the last one a file a driver-side DML just wrote —
     * and `deletes` as a new version, folding the small files into one
-    * first ([[compactSmallDriverSide]]). Returns the version.
+    * first ([[compactSmallDriverSide]]). Returns the version. A fresh
+    * file the fold took in is deleted at once: no manifest names it.
     */
-  private def commitCompacted(files: Seq[String], deletes: DeleteVectors,
-      publishNow: Boolean): Long = {
+  private def commitCompacted(files: Seq[String], deletes: DeleteVectors): Long = {
     val c = compactSmallDriverSide(files, deletes)
-    val nv = allocVersion()
-    try commitOrClean(nv, c.files, c.deletes, publishNow)
-    catch {
-      case e: Throwable => // failed commit never referenced the merge
-        dropStaged(c.merged.toSeq)
-        throw e
-    }
+    if (c.merged.nonEmpty && !c.files.contains(files.last)) dropStaged(Seq(files.last))
+    val nv =
+      try stageManifest(c.files, c.deletes)
+      catch {
+        case e: Throwable => // failed commit never referenced the merge
+          dropStaged(c.merged.toSeq)
+          throw e
+      }
     graft.ServeCounters.lakeRowsRewritten.addAndGet(c.mergedRows)
     nv
   }
@@ -643,7 +632,7 @@ final class MutableTable private (
   private[sources] val driverDmlHits = new java.util.concurrent.atomic.AtomicLong()
 
   private def driverDml(base: Long, cond: Column,
-      set: Option[Map[String, Column]], publishNow: Boolean): Option[(Long, Long)] = {
+      set: Option[Map[String, Column]]): Option[(Long, Long)] = {
     if (!DriverDml.supported(schema)) return None
     val m = manifest(base)
     val resolved = quickResolve(cond).getOrElse(return None)
@@ -677,7 +666,7 @@ final class MutableTable private (
         val appended =
           if (updated.isEmpty) Seq.empty
           else Seq(writeDriverFile(updated.toSeq).getOrElse(return None))
-        try commitDml(m, hits.toMap, appended, compact = appended.nonEmpty, publishNow)
+        try commitDml(m, hits.toMap, appended, compact = appended.nonEmpty)
         catch { case e: Throwable => dropStaged(appended); throw e }
       }
     driverDmlHits.incrementAndGet()
@@ -685,21 +674,19 @@ final class MutableTable private (
     Some((nv, hits.valuesIterator.map(_.getLongCardinality).sum))
   }
 
-  /** Commit a DELETE or UPDATE on manifest `m`: the positions `hits`
+  /** Stage a DELETE or UPDATE on manifest `m`: the positions `hits`
     * join the delete vectors, a file whose every row is then deleted
     * leaves the manifest, and `appended` (an UPDATE's new rows, one per
     * position) joins it — through micro-compaction when `compact`, for a
     * driver-written file. Returns the new version.
     */
   private def commitDml(m: Manifest, hits: Map[String, RoaringBitmap], appended: Seq[String],
-      compact: Boolean, publishNow: Boolean): Long = {
+      compact: Boolean): Long = {
     val all = m.deletes.plus(hits)
     val gone = hits.keySet.filter(f => all.get(f).exists(_.getLongCardinality == rowCountOf(f)))
     val files = m.files.filterNot(gone) ++ appended
     val deletes = all.filterFiles(f => !gone(f))
-    val nv =
-      if (compact) commitCompacted(files, deletes, publishNow)
-      else { val v = allocVersion(); commitOrClean(v, files, deletes, publishNow); v }
+    val nv = if (compact) commitCompacted(files, deletes) else stageManifest(files, deletes)
     val matched = hits.valuesIterator.map(_.getLongCardinality).sum
     graft.ServeCounters.lakeRowsDeleted.addAndGet(matched)
     if (appended.nonEmpty) graft.ServeCounters.lakeRowsRewritten.addAndGet(matched)
@@ -817,8 +804,8 @@ final class MutableTable private (
   }
 
   /** MICRO-RESOLVER for the common DML predicate shapes (conjunctions /
-    * disjunctions of comparisons between a column and a literal, null
-    * tests, in SQL or DataFrame-API form): binds attributes straight off the table schema and applies
+    * disjunctions of comparisons between a column and a literal, IN,
+    * BETWEEN, null tests, in SQL or DataFrame-API form): binds attributes straight off the table schema and applies
     * the one coercion the analyzer would (up-cast the LITERAL to the
     * column type), in microseconds instead of the analyzer's ~20-30 ms —
     * which a prepared DML workload pays per execution because the router
@@ -886,13 +873,21 @@ final class MutableTable private (
       // builtin registry maps the name to one of the nodes above
       case f: UnresolvedFunction if f.nameParts.size == 1 && !f.isDistinct &&
           f.filter.isEmpty && f.orderingWithinGroup.isEmpty =>
-        scala.util.Try(FunctionRegistry.builtin.lookupFunction(
-            FunctionIdentifier(f.nameParts.head), f.arguments)).toOption
-          .filter {
-            case _: And | _: Or | _: Not | _: IsNull | _: IsNotNull | _: BinaryComparison | _: In => true
-            case _ => false
-          }
-          .flatMap(lift)
+        (f.nameParts.head.toLowerCase, f.arguments) match {
+          // SQL's `k BETWEEN lo AND hi` is a `between` call too, but the
+          // registry's builder needs resolved arguments: lift it as the
+          // two comparisons `Between` stands for, on a column input
+          case ("between", Seq(input, lo, hi)) =>
+            lift(input).collect { case a: AttributeReference => a }
+              .flatMap(_ => lift(And(GreaterThanOrEqual(input, lo), LessThanOrEqual(input, hi))))
+          case (name, args) =>
+            scala.util.Try(FunctionRegistry.builtin.lookupFunction(FunctionIdentifier(name), args)).toOption
+              .filter {
+                case _: And | _: Or | _: Not | _: IsNull | _: IsNotNull | _: BinaryComparison | _: In => true
+                case _ => false
+              }
+              .flatMap(lift)
+        }
       case _ => None
     }
     try lift(org.apache.spark.sql.graft.bridge.unresolvedExpression(cond)).filter(_.resolved)
@@ -961,22 +956,19 @@ final class MutableTable private (
     * files' delete vectors, and no data file is written; returns the
     * number of rows deleted.
     */
-  def delete(cond: Column): Long = locked {
-    deleteCore(currentVersion, cond, publishNow = true)._2
-  }
+  def delete(cond: Column): Long = autocommit(deleteCore(_, cond))._2
 
-  /** Transactional variant of [[delete]]: staged, unpublished. */
-  def stageDelete(base: Long, cond: Column): (Long, Long) = locked {
-    deleteCore(base, cond, publishNow = false)
-  }
-
-  // SQL three-valued logic holds throughout: a row is taken only where
-  // the predicate is TRUE, so a NULL-predicate row survives
-  private def deleteCore(base: Long, cond: Column, publishNow: Boolean): (Long, Long) = {
-    driverDml(base, cond, None, publishNow).foreach(return _)
+  /** The DELETE on top of `base`, staged like [[insertCore]]; a DELETE
+    * that matches nothing stages nothing and returns `base`. SQL
+    * three-valued logic holds throughout: a row is taken only where the
+    * predicate is TRUE, so a NULL-predicate row survives. Callers hold
+    * writeLock.
+    */
+  private[sources] def deleteCore(base: Long, cond: Column): (Long, Long) = {
+    driverDml(base, cond, None).foreach(return _)
     val hits = affectedPositions(base, cond)
     if (hits.isEmpty) return (base, 0L)
-    (commitDml(manifest(base), hits, Seq.empty, compact = false, publishNow),
+    (commitDml(manifest(base), hits, Seq.empty, compact = false),
       hits.valuesIterator.map(_.getLongCardinality).sum)
   }
 
@@ -997,16 +989,12 @@ final class MutableTable private (
     * `cond`, as a delete of those rows plus an append of their updated
     * copies; returns the number of rows updated.
     */
-  def update(cond: Column, set: Map[String, Column]): Long = locked {
-    updateCore(currentVersion, cond, set, publishNow = true)._2
-  }
+  def update(cond: Column, set: Map[String, Column]): Long = autocommit(updateCore(_, cond, set))._2
 
-  /** Transactional variant of [[update]]: staged, unpublished. */
-  def stageUpdate(base: Long, cond: Column, set: Map[String, Column]): (Long, Long) =
-    locked { updateCore(base, cond, set, publishNow = false) }
-
-  private def updateCore(base: Long, cond: Column, set: Map[String, Column],
-      publishNow: Boolean): (Long, Long) = {
+  /** The UPDATE on top of `base`, staged like [[deleteCore]]. Callers
+    * hold writeLock.
+    */
+  private[sources] def updateCore(base: Long, cond: Column, set: Map[String, Column]): (Long, Long) = {
     require(set.nonEmpty, "UPDATE requires at least one assignment")
     set.keys.foreach(k => require(schema.fieldNames.contains(k), s"unknown column: $k"))
     // a PK-ASSIGNING update must re-validate uniqueness (r19 review:
@@ -1014,7 +1002,7 @@ final class MutableTable private (
     // WHERE k = 6 silently committed two k=5 rows); the driver path
     // has no check, so those updates take the planned path below
     val touchesPk = primaryKey.exists(set.contains)
-    if (!touchesPk) driverDml(base, cond, Some(set), publishNow).foreach(return _)
+    if (!touchesPk) driverDml(base, cond, Some(set)).foreach(return _)
     val hits = affectedPositions(base, cond)
     if (hits.isEmpty) return (base, 0L)
     val m = manifest(base)
@@ -1038,7 +1026,7 @@ final class MutableTable private (
       // AND against the table's other live rows — the base files with
       // the updated rows deleted
       if (touchesPk) primaryKey.foreach(pk => pkCheck(appended, pk, m.files, m.deletes.plus(hits)))
-      (commitDml(m, hits, appended, compact = false, publishNow), updated)
+      (commitDml(m, hits, appended, compact = false), updated)
     } catch { case e: Throwable => dropStaged(appended); throw e }
   }
 
@@ -1046,17 +1034,18 @@ final class MutableTable private (
     * `targetFiles` files, folding the delete vectors away; data
     * unchanged, old versions still readable.
     */
-  def checkpoint(targetFiles: Int = 1): Long = locked {
-    val v = currentVersion
-    val m = manifest(v)
-    if (m.files.size <= targetFiles && m.deletes.isEmpty) return v
-    val compacted = stageWrite(df, exactFiles = Some(targetFiles))
-    val nv = allocVersion()
-    try commitOrClean(nv, compacted, DeleteVectors.empty, publishNow = true)
-    catch { case e: Throwable => dropStaged(compacted); throw e }
-    graft.ServeCounters.lakeRowsRewritten.addAndGet(compacted.map(rowCountOf).filter(_ > 0).sum)
-    nv
-  }
+  def checkpoint(targetFiles: Int = 1): Long = autocommit { base =>
+    val m = manifest(base)
+    if (m.files.size <= targetFiles && m.deletes.isEmpty) (base, 0L)
+    else {
+      val compacted = stageWrite(asOf(base), exactFiles = Some(targetFiles))
+      val nv =
+        try stageManifest(compacted, DeleteVectors.empty)
+        catch { case e: Throwable => dropStaged(compacted); throw e }
+      graft.ServeCounters.lakeRowsRewritten.addAndGet(compacted.map(rowCountOf).filter(_ > 0).sum)
+      (nv, 0L)
+    }
+  }._1
 
   def fileCount: Int = manifest(currentVersion).files.size
 
@@ -1070,19 +1059,33 @@ final class MutableTable private (
     */
   private[sources] def withWriteLock[T](f: => T): T = locked(f)
 
-  /** Delete a STAGED (never-published) manifest so the data files it
-    * references stop counting as live for [[vacuum]] — the rollback
-    * cleanup path. Refuses to touch the published version; deleting an
-    * already-absent manifest is the tolerated no-op (commit retires
-    * intermediates that rollback may also see).
+  /** Delete a STAGED (never-published) manifest `v` of base `base`,
+    * and the data files it names that its base manifest does not — the
+    * ones it staged itself, since a staged file is named only by its
+    * own chain of staged manifests — unless the published manifest
+    * names them (an intermediate manifest that COMMIT retires shares
+    * files with the published one). The one cleanup of a failed
+    * publish, a ROLLBACK, a conflicted COMMIT and a retired
+    * intermediate; a chain is discarded newest first, so each base is
+    * still there. Refuses to touch the published version; an
+    * already-absent manifest is the tolerated no-op. Never throws:
+    * cleanup must not mask the error that caused it (e.g. a
+    * drop+recreate raced the rollback into a version collision), and
+    * files it cannot decide on stay for vacuum.
     */
-  private[sources] def discardStaged(v: Long): Unit = locked {
-    // silently skip the published version: cleanup must never throw
-    // (e.g. a drop+recreate raced the rollback into a version collision)
-    if (v != currentVersion) {
-      manifests.remove(v)
-      Files.deleteIfExists(manifestPath(v))
-    }
+  private[sources] def discardStaged(v: Long, base: Long): Unit = locked {
+    try {
+      val published = currentVersion
+      if (v != published && hasManifest(v)) {
+        val only = scala.util.Try {
+          val named = manifest(base).files.toSet ++ manifest(published).files
+          manifest(v).files.filterNot(named)
+        }.getOrElse(Seq.empty)
+        manifests.remove(v)
+        Files.deleteIfExists(manifestPath(v))
+        dropStaged(only)
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** Drop data files no longer referenced by ANY retained manifest
@@ -1101,6 +1104,7 @@ final class MutableTable private (
       val name = p.getFileName.toString
       if (!live.contains(name)) {
         Files.delete(p)
+        fileStats.remove(name)
         fileStatuses.remove(name)
         RowCache.shared.remove(cacheKey, name)
         removed += 1
@@ -1108,14 +1112,6 @@ final class MutableTable private (
     }
     removed
   }
-
-  // LAST in the class body: registering earlier would publish a
-  // partially-constructed instance to the process-global registry — a
-  // concurrent optimizer pass could then touch not-yet-initialized
-  // fields (review finding, round 15). NOTE create() registers before
-  // `_version` exists on disk; StatsPruneRule guards with a catch-all
-  // for exactly that window.
-  StatsRegistry.register(this)
 }
 
 object MutableTable {

@@ -347,18 +347,46 @@ class ScenarioSpec extends SparkTestBase {
   // manifests pinned their data files against vacuum forever)
   test("ROLLBACK deletes staged manifests so vacuum reclaims their data files") {
     val cat = MutableCatalog(spark)
-    cat.create("vac_t", usersSchema)
+    val t = cat.create("vac_t", usersSchema)
     cat.route("INSERT INTO vac_t VALUES (1, 'keep', 1.0)")
+    val before = dataFiles(t)
     val txn = cat.beginTxn()
     cat.route("INSERT INTO vac_t VALUES (2, 'tmp1', 2.0)", Some(txn))
     cat.route("INSERT INTO vac_t VALUES (3, 'tmp2', 3.0)", Some(txn))
+    assert((dataFiles(t) -- before).size == 2, "each staged INSERT writes one file")
     cat.rollbackTxn(txn)
-    val removed = cat.get("vac_t").get.vacuum()
-    assert(removed >= 2,
-      s"vacuum must reclaim the two rolled-back staged files, removed $removed")
-    assert(cat.get("vac_t").get.df.collect().map(_.getString(1)).toSeq == Seq("keep"),
+    // the rollback itself takes the staged files: vacuum finds nothing
+    assert(dataFiles(t) == before,
+      s"rolled-back files left in data/: ${(dataFiles(t) -- before).mkString(", ")}")
+    assert(t.vacuum() == 0)
+    assert(t.df.collect().map(_.getString(1)).toSeq == Seq("keep"),
       "the published row is untouched")
     cat.drop("vac_t")
+  }
+
+  test("a row inserted and deleted in one transaction leaves no data file after COMMIT") {
+    val cat = MutableCatalog(spark)
+    val t = cat.create("gone_t", usersSchema)
+    cat.route("INSERT INTO gone_t VALUES (1, 'keep', 1.0)")
+    val before = dataFiles(t)
+    val txn = cat.beginTxn()
+    cat.route("INSERT INTO gone_t VALUES (2, 'tmp', 2.0)", Some(txn))
+    val staged = dataFiles(t) -- before
+    assert(staged.size == 1, "the staged INSERT writes one file")
+    assert(cat.route("DELETE FROM gone_t WHERE id = 2", Some(txn)).contains(1L))
+    cat.commitTxn(txn)
+    // the COMMIT retires the INSERT's intermediate manifest, the only
+    // one that named the row's file
+    assert(dataFiles(t) == before, s"the deleted row's file is left in data/: ${staged.mkString(", ")}")
+    assert(t.df.collect().map(_.getString(1)).toSeq == Seq("keep"))
+    cat.drop("gone_t")
+  }
+
+  /** Names of the files in a micro-lake table's data/ directory. */
+  private def dataFiles(t: graft.sources.MutableTable): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.list(t.root.resolve("data"))
+    try st.iterator().asScala.map(_.getFileName.toString).toSet finally st.close()
   }
 
   // === concurrent statements in ONE open txn (r12 ADVICE: the Flight =====

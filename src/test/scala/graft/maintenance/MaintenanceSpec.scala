@@ -129,18 +129,18 @@ class MaintenanceSpec extends SparkTestBase {
     // pk uniqueness survived the interleaving
     assert(t.df.groupBy("id").count().filter("count > 1").count() == 0)
     // stats survive a restart intact: a fresh load() prunes every live
-    // file off the PERSISTED manifest stats (the r15 durability fix under
-    // concurrency — a compaction that dropped carried-over stats would
+    // file off the stats read back from its footer (the r15 durability
+    // check under concurrency — a live file whose stats were lost would
     // leave candidateFilesExpr unable to prune)
     val reloaded = MutableTable.load(spark, t.root.toString)
     // a key outside every live bound prunes to ZERO files — which can
     // only happen if EVERY live file (compacted and carried-over alike)
-    // has persisted stats; one stats-less file would always be kept
+    // has stats; one stats-less file would always be kept
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
     def idEq(k: Long) = EqualTo(UnresolvedAttribute("id"), Literal(k))
     assert(reloaded.candidateFilesExpr(reloaded.currentVersion, idEq(99999L)).isEmpty,
-      "some live file lost its persisted stats across the storm")
+      "some live file lost its stats across the storm")
     assert(reloaded.candidateFilesExpr(reloaded.currentVersion, idEq(1005L)).nonEmpty)
     assert(reloaded.df.count() == t.df.count())
   }

@@ -362,7 +362,7 @@ class MutableTableSpec extends SparkTestBase {
     val cases = Seq(
       "id = 3" -> true,
       "id IN (1, 5, 9, 14)" -> true,
-      "id BETWEEN 10 AND 12" -> false, // parsed as a `between` call the micro-resolver declines
+      "id BETWEEN 10 AND 12" -> true, // a `between` call, lifted as its two comparisons
       "name IS NULL" -> true,
       "id = 2 OR score > 80" -> true,
       "NOT (score > 40)" -> true, // score NULL: NOT(NULL) keeps the row
@@ -395,6 +395,52 @@ class MutableTableSpec extends SparkTestBase {
       .location.inputFiles.length) == Seq(1), df.queryExecution.optimizedPlan.toString)
     assert(df.collect().toSeq == Seq(Row(21L, "b", 2.0)))
     assert(spark.sql("SELECT * FROM mt_prune WHERE id = 20").collect().isEmpty)
+  }
+
+  test("a manifest that still carries the older \"stats\" array loads, prunes and takes a DELETE") {
+    val t = mkTable()
+    (0 until 3).foreach(i => t.insert(rows((i * 10L, s"a$i", 1.0), (i * 10L + 1, s"b$i", 2.0))))
+    val v = t.currentVersion
+    val path = t.root.resolve(s"manifest-$v.json")
+    // the older writer's array: per file and column, an entry
+    // `file|colB64|kind|rows|nulls|minB64|maxB64`
+    def b64(x: String) = java.util.Base64.getEncoder.encodeToString(x.getBytes("UTF-8"))
+    val entries = t.candidateFiles(v, lit(true)).zipWithIndex.flatMap { case (f, i) =>
+      Seq(s"$f|${b64("id")}|L|2|0|${b64(s"${i * 10}")}|${b64(s"${i * 10 + 1}")}",
+        s"$f|${b64("name")}|S|2|0|${b64(s"a$i")}|${b64(s"b$i")}",
+        s"$f|${b64("score")}|D|2|0|${b64("1.0")}|${b64("2.0")}")
+    }
+    val older = new String(Files.readAllBytes(path)).trim.stripSuffix("}") +
+      entries.map("\"" + _ + "\"").mkString(", \"stats\": [", ", ", "]}")
+    Files.write(path, older.getBytes)
+    val re = MutableTable.load(spark, t.root.toString)
+    assert(re.df.count() == 6)
+    assert(re.candidateFiles(v, expr("id = 11")).size == 1)
+    assert(re.candidateFiles(v, expr("id > 100")).isEmpty)
+    assert(re.delete(expr("id = 11")) == 1L)
+    val written = new String(Files.readAllBytes(re.root.resolve(s"manifest-${re.currentVersion}.json")))
+    assert(!written.contains("\"stats\""), written)
+    assert(re.df.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 10L, 20L, 21L))
+  }
+
+  test("a one-row DELETE on a 16-file ycsb-shaped table writes a manifest under 2 KB") {
+    import scala.jdk.CollectionConverters._
+    // the ycsb usertable: a key and ten 100-character fields
+    val ycsb = StructType(StructField("ycsb_key", LongType) +:
+      (1 to 10).map(i => StructField(s"field$i", StringType)))
+    val t = MutableTable.create(spark, Files.createTempDirectory("graft_mt_ycsb")
+      .resolve("usertable").toString, ycsb, Some("ycsb_key"))
+    val rnd = new scala.util.Random(7)
+    (0 until 16).foreach { f =>
+      val batch = (0 until 60).map(j =>
+        Row.fromSeq((f * 60L + j) +: Seq.fill(10)(rnd.alphanumeric.take(100).mkString)))
+      t.insert(spark.createDataFrame(batch.asJava, ycsb).coalesce(1))
+    }
+    assert(t.fileCount == 16)
+    assert(t.delete(col("ycsb_key") === 500L) == 1L)
+    val bytes = Files.size(t.root.resolve(s"manifest-${t.currentVersion}.json"))
+    info(s"one-row DELETE manifest: $bytes bytes")
+    assert(bytes < 2048, s"one-row DELETE manifest: $bytes bytes")
   }
 
   test("checkpoint compacts files without changing data (A26)") {
